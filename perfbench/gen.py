@@ -2,11 +2,12 @@
 
 Two generators, both pure functions of their seed:
 
-- :func:`write_tables` writes the ten sf tables (``region`` …
-  ``embeddings``) in the shape of the committed TPC-H-ish test data:
-  same columns, types, value ranges and one Snappy row group per file,
-  at the sizes the caller passes. The catalog queries and their DuckDB
-  oracles read them through ``catalog.t``.
+- :func:`write_tables` writes the two sf tables the LLM-curation
+  queries read, ``documents`` and ``embeddings``, in the shape of the
+  committed test data: same columns, types, vocabulary, length and
+  duplicate mix, embedding geometry, and one Snappy row group per
+  file. The queries and their DuckDB oracles read them through
+  ``catalog.t``.
 - :class:`Nightly` produces JDE landing CSVs night by night. Night 0
   has the shape of ``plans.fixtures.generate_landing`` (including its
   edge rows); every later night applies a seeded delta that changes a
@@ -33,25 +34,8 @@ WORDS = (
 ).split()
 LANGS = ["en", "zh", "es", "fr", "de"]
 LANG_P = [0.4, 0.15, 0.15, 0.15, 0.15]
-SEGMENTS = ["MACHINERY", "AUTOMOBILE", "HOUSEHOLD", "BUILDING", "FURNITURE"]
-PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
-PART_ADJ = ["red", "new", "hot", "small", "cold", "large", "old", "blue"]
-PART_NOUN = ["bolt", "anvil", "ring", "rod", "plate", "gear", "widget", "nut"]
-PART_TYPES = ["LARGE", "MEDIUM", "ECONOMY", "PROMO", "SMALL", "STANDARD"]
-EVENT_TYPES = ["signup", "purchase", "view", "click", "error"]
-REGIONS = ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]
 EMBED_DIM = 64
 EMBED_LABELS = 10
-
-
-def _money(rng: np.random.Generator, lo: int, hi: int, n: int) -> np.ndarray:
-    """Two-decimal doubles drawn as whole cents in [lo, hi)."""
-    return rng.integers(lo, hi, n) / 100.0
-
-
-def _days(rng, start: str, span_days: int, n: int) -> np.ndarray:
-    base = np.datetime64(start, "us")
-    return base + rng.integers(0, span_days, n).astype("timedelta64[D]")
 
 
 def _documents(rng: np.random.Generator, n: int) -> pa.Table:
@@ -75,102 +59,26 @@ def _documents(rng: np.random.Generator, n: int) -> pa.Table:
 
 
 def _embeddings(rng: np.random.Generator, n: int) -> pa.Table:
-    centers = rng.normal(size=(EMBED_LABELS, EMBED_DIM))
-    labels = rng.integers(0, EMBED_LABELS, n)
-    vecs = centers[labels] + rng.normal(scale=1.5, size=(n, EMBED_DIM))
+    """Unit vectors drawn uniformly on the sphere, with labels that do
+    not depend on them: the geometry of the committed sf embeddings
+    (no cluster structure; about 0.05% of pairs at cosine >= 0.4)."""
+    vecs = rng.normal(size=(n, EMBED_DIM))
     vecs = (vecs / np.linalg.norm(vecs, axis=1, keepdims=True)).astype(np.float32)
     return pa.table({
         "vec_id": pa.array(np.arange(n), pa.int64()),
         "embedding": pa.array(list(vecs), pa.list_(pa.float32())),
-        "label": pa.array(labels, pa.int32()),
+        "label": pa.array(rng.integers(0, EMBED_LABELS, n), pa.int32()),
     })
 
 
-def _events(rng: np.random.Generator, n: int) -> pa.Table:
-    offsets = np.sort(rng.integers(0, 30 * 86_400_000_000, n))
-    return pa.table({
-        "event_id": pa.array(np.arange(n), pa.int64()),
-        "ts": pa.array(np.datetime64("2024-01-01", "us") + offsets.astype("timedelta64[us]")),
-        "user_id": pa.array(rng.integers(0, max(n * 3 // 200, 10), n), pa.int64()),
-        "event_type": pa.array(rng.choice(EVENT_TYPES, n), pa.string()),
-        "value": pa.array(np.round(rng.exponential(50.0, n), 2)),
-        "props": pa.array([f'{{"k": {k}}}' for k in rng.integers(0, 100, n)], pa.string()),
-    })
-
-
-def write_tables(out_dir: str, seed: int, sizes: dict[str, int]) -> None:
-    """Write the ten sf tables under ``out_dir``.
-
-    ``sizes`` gives rows for ``customer supplier part orders events
-    documents embeddings``; ``lineitem`` gets about four lines per order.
-    """
+def write_tables(out_dir: str, seed: int, n_documents: int, n_embeddings: int) -> None:
+    """Write ``documents.parquet`` and ``embeddings.parquet`` under
+    ``out_dir``, each one Snappy row group, as in the committed sf data."""
     rng = np.random.default_rng(seed)
     os.makedirs(out_dir, exist_ok=True)
-    n_cust, n_supp, n_part = sizes["customer"], sizes["supplier"], sizes["part"]
-    n_ord = sizes["orders"]
-    lines_per_order = np.clip(rng.poisson(4.0, n_ord), 1, 17)
-    n_line = int(lines_per_order.sum())
-    line_order = np.repeat(np.arange(n_ord), lines_per_order)
-    line_number = np.concatenate([np.arange(1, k + 1) for k in lines_per_order])
     tables = {
-        "region": pa.table({
-            "r_regionkey": pa.array(range(5), pa.int32()),
-            "r_name": pa.array(REGIONS, pa.string()),
-        }),
-        "nation": pa.table({
-            "n_nationkey": pa.array(range(25), pa.int32()),
-            "n_name": pa.array([f"NATION_{i}" for i in range(25)], pa.string()),
-            "n_regionkey": pa.array([i % 5 for i in range(25)], pa.int32()),
-        }),
-        "customer": pa.table({
-            "c_custkey": pa.array(np.arange(n_cust), pa.int64()),
-            "c_name": pa.array([f"Customer#{i:09d}" for i in range(n_cust)], pa.string()),
-            "c_nationkey": pa.array(rng.integers(0, 25, n_cust), pa.int32()),
-            "c_acctbal": pa.array(_money(rng, -99_999, 1_000_000, n_cust)),
-            "c_mktsegment": pa.array(rng.choice(SEGMENTS, n_cust), pa.string()),
-        }),
-        "supplier": pa.table({
-            "s_suppkey": pa.array(np.arange(n_supp), pa.int64()),
-            "s_name": pa.array([f"Supplier#{i:09d}" for i in range(n_supp)], pa.string()),
-            "s_nationkey": pa.array(rng.integers(0, 25, n_supp), pa.int32()),
-            "s_acctbal": pa.array(_money(rng, -99_999, 1_000_000, n_supp)),
-        }),
-        "part": pa.table({
-            "p_partkey": pa.array(np.arange(n_part), pa.int64()),
-            "p_name": pa.array(
-                [f"{PART_ADJ[a]} {PART_NOUN[b]}" for a, b in
-                 zip(rng.integers(0, 8, n_part), rng.integers(0, 8, n_part))],
-                pa.string(),
-            ),
-            "p_brand": pa.array([f"Brand#{b}" for b in rng.integers(1, 26, n_part)], pa.string()),
-            "p_type": pa.array(rng.choice(PART_TYPES, n_part), pa.string()),
-            "p_size": pa.array(rng.integers(1, 51, n_part), pa.int32()),
-            "p_retailprice": pa.array(np.round(900.0 + (np.arange(n_part) % 20_000) / 10.0, 2)),
-        }),
-        "orders": pa.table({
-            "o_orderkey": pa.array(np.arange(n_ord), pa.int64()),
-            "o_custkey": pa.array(rng.integers(0, n_cust, n_ord), pa.int64()),
-            "o_orderstatus": pa.array(rng.choice(["O", "F", "P"], n_ord), pa.string()),
-            "o_totalprice": pa.array(_money(rng, 100_000, 50_000_000, n_ord)),
-            "o_orderdate": pa.array(_days(rng, "1995-01-01", 2404, n_ord)),
-            "o_orderpriority": pa.array(rng.choice(PRIORITIES, n_ord), pa.string()),
-        }),
-        "lineitem": pa.table({
-            "l_orderkey": pa.array(line_order, pa.int64()),
-            "l_partkey": pa.array(rng.integers(0, n_part, n_line), pa.int64()),
-            "l_suppkey": pa.array(rng.integers(0, n_supp, n_line), pa.int64()),
-            "l_linenumber": pa.array(line_number, pa.int32()),
-            "l_quantity": pa.array(rng.integers(1, 51, n_line).astype(np.float64)),
-            "l_extendedprice": pa.array(_money(rng, 90_000, 10_500_000, n_line)),
-            "l_discount": pa.array(rng.integers(0, 11, n_line) / 100.0),
-            "l_tax": pa.array(rng.integers(0, 9, n_line) / 100.0),
-            "l_returnflag": pa.array(rng.choice(["N", "R", "A"], n_line), pa.string()),
-            "l_linestatus": pa.array(rng.choice(["F", "O"], n_line), pa.string()),
-            "l_shipdate": pa.array(_days(rng, "1995-01-02", 2498, n_line)),
-        }),
-        "events": _events(rng, sizes["events"]),
-        "documents": _documents(rng, sizes["documents"]),
-        "embeddings": _embeddings(rng, sizes["embeddings"]),
+        "documents": _documents(rng, n_documents),
+        "embeddings": _embeddings(rng, n_embeddings),
     }
     for name, table in tables.items():
         pq.write_table(

@@ -12,12 +12,10 @@ import glob
 import json
 import os
 import statistics
-import threading
 import time
 from dataclasses import dataclass, field
 
 TICK = os.sysconf("SC_CLK_TCK")
-PAGE_MB = os.sysconf("SC_PAGE_SIZE") / 2**20
 
 
 def _stat_fields(path: str) -> tuple[str, list[str]] | None:
@@ -96,85 +94,43 @@ def _thread_group(comm: str) -> str:
     return "other"
 
 
-class JvmThreads:
-    """JVM CPU seconds by thread role: ``task`` (executor task threads),
-    ``jit``, ``gc`` and ``other``.
-
-    Threads come and go (the JIT starts and retires compiler threads,
-    executors retire idle task threads), and an exited thread leaves
-    /proc. :meth:`sample` therefore remembers every thread's last
-    reading; call it often (the harness does, every 0.1 s) so a
-    thread's CPU is attributed to its role up to its last sample. What
-    exited threads used after their last sample counts as ``other``.
-    """
-
-    def __init__(self, pid: int):
-        self.pid = pid
-        self._last: dict[tuple[int, str], float] = {}
-        self._retired = {"task": 0.0, "jit": 0.0, "gc": 0.0, "other": 0.0}
-        self._lock = threading.Lock()
-
-    def sample(self) -> None:
-        seen = {}
-        for path in glob.glob(f"/proc/{self.pid}/task/*/stat"):
-            st = _stat_fields(path)
-            if st is not None:
-                tid = int(path.split("/")[-2])
-                seen[(tid, st[0])] = (int(st[1][11]) + int(st[1][12])) / TICK
-        with self._lock:
-            for key, cpu in seen.items():
-                old = self._last.get(key, 0.0)
-                if cpu < old:  # a new thread reused the tid: bank the old one
-                    self._retired[_thread_group(key[1])] += old
-                self._last[key] = cpu
-
-    def by_group(self) -> dict[str, float]:
-        self.sample()
-        with self._lock:
-            groups = dict(self._retired)
-            for (_, comm), cpu in self._last.items():
-                groups[_thread_group(comm)] += cpu
-        proc = _stat_fields(f"/proc/{self.pid}/stat")
-        if proc is not None:
-            total = (int(proc[1][11]) + int(proc[1][12])) / TICK
-            groups["other"] += max(total - sum(groups.values()), 0.0)
-        return groups
+def jvm_threads(pid: int) -> tuple[float, dict[tuple[int, str], float]]:
+    """CPU seconds of the JVM process, and of each of its live threads
+    keyed by ``(tid, name)``."""
+    threads = {}
+    for path in glob.glob(f"/proc/{pid}/task/*/stat"):
+        st = _stat_fields(path)
+        if st is not None:
+            threads[(int(path.split("/")[-2]), st[0])] = (int(st[1][11]) + int(st[1][12])) / TICK
+    proc = _stat_fields(f"/proc/{pid}/stat")
+    return (int(proc[1][11]) + int(proc[1][12])) / TICK, threads
 
 
-def _rss_mb(pid: int) -> float:
-    st = _stat_fields(f"/proc/{pid}/stat")
-    return int(st[1][21]) * PAGE_MB if st is not None else 0.0
+def thread_cpu_split(before, after) -> dict[str, float]:
+    """JVM CPU seconds between two :func:`jvm_threads` samples, by
+    thread role: ``task`` (executor task threads), ``jit`` and ``gc``
+    from the threads alive at ``after``; ``other`` is the rest of the
+    process's CPU, so it includes what threads that exited in between
+    used."""
+    groups = {"task": 0.0, "jit": 0.0, "gc": 0.0}
+    for key, cpu in after[1].items():
+        group = _thread_group(key[1])
+        if group in groups:
+            groups[group] += cpu - before[1].get(key, 0.0)
+    groups["other"] = after[0] - before[0] - sum(groups.values())
+    return groups
 
 
-class TreeSampler:
-    """Samples, on a background thread, the peak resident memory of a
-    process tree and, when given, the JVM's per-thread CPU."""
-
-    def __init__(self, root: int, threads: JvmThreads | None = None, interval_s: float = 0.1):
-        self.root, self.threads, self.interval_s = root, threads, interval_s
-        self.peak_mb = 0.0
-        self._stop = threading.Event()
-        self._thread = threading.Thread(target=self._run, daemon=True)
-
-    def sample(self) -> None:
-        mb = sum(_rss_mb(p) for p in process_tree(self.root))
-        self.peak_mb = max(self.peak_mb, mb)
-
-    def _run(self) -> None:
-        while not self._stop.wait(self.interval_s):
-            self.sample()
-            if self.threads is not None:
-                self.threads.sample()
-
-    def __enter__(self) -> TreeSampler:
-        self.sample()
-        self._thread.start()
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self._stop.set()
-        self._thread.join()
-        self.sample()
+def peak_rss_mb(root: int) -> float:
+    """Sum of the peak resident memory (``VmHWM``) of ``root`` and its
+    live descendants. Pages a forked Python worker still shares with
+    its parent count in both."""
+    kb = 0
+    for pid in process_tree(root):
+        with contextlib.suppress(FileNotFoundError, ProcessLookupError):
+            with open(f"/proc/{pid}/status") as fh:
+                kb += next((int(line.split()[1]) for line in fh if line.startswith("VmHWM:")), 0)
+    return kb / 1024
 
 
 class HostRecord:

@@ -22,7 +22,6 @@ import time
 T_PROCESS = time.monotonic()
 
 import argparse  # noqa: E402
-import contextlib  # noqa: E402
 import json  # noqa: E402
 import os  # noqa: E402
 import shutil  # noqa: E402
@@ -84,8 +83,8 @@ def main(argv: list[str]) -> int:
 
 def run(args, work: str) -> int:
     from perfbench.probes import (
-        HostRecord, JvmThreads, Tracer, TreeSampler, parse_event_log,
-        process_tree, self_cpu, tree_cpu,
+        HostRecord, Tracer, jvm_threads, parse_event_log, peak_rss_mb,
+        process_tree, self_cpu, thread_cpu_split, tree_cpu,
     )
     from perfbench.workloads import Outcome, make
 
@@ -110,13 +109,12 @@ def run(args, work: str) -> int:
     gateway = spark.sparkContext._gateway
     jvm = gateway.proc.pid
     tracer = Tracer(enabled=bool(args.trace))
-    threads = JvmThreads(jvm) if args.trace else None
     out = Outcome()
     steps: list[dict] = []
 
     def one_step(step: int, timed: bool) -> None:
         wl.before_step(step)
-        threads0 = threads.by_group() if threads else {}
+        threads0 = jvm_threads(jvm) if args.trace else None
         cpu0, drv0, e0, t0 = tree_cpu(jvm), self_cpu(), time.time(), time.monotonic()
         with tracer.span("step", step):
             wl.step(spark, step, tracer, out)
@@ -127,24 +125,22 @@ def run(args, work: str) -> int:
             "pyworker_cpu_s": cpu1.children - cpu0.children, "driver_py_cpu_s": drv1 - drv0,
             "window": (e0, time.time()),
         }
-        if threads:
-            threads1 = threads.by_group()
-            rec["jvm"] = {k: threads1[k] - threads0[k] for k in threads1}
+        if args.trace:
+            rec["jvm"] = thread_cpu_split(threads0, jvm_threads(jvm))
         steps.append(rec)
         print(f"step {step:3d} {'warm' if timed else 'cold'} wall_s={wall:.3f} "
               f"cpu_s={rec['cpu_s']:.2f} pyworker_cpu_s={rec['pyworker_cpu_s']:.2f}", flush=True)
 
-    sampler = TreeSampler(jvm, threads) if args.trace else contextlib.nullcontext()
     try:
-        with sampler:
-            for step in range(wl.cold_steps):
-                one_step(step, timed=False)
-            setup_s = time.monotonic() - T_PROCESS
-            t_measure, step = time.monotonic(), wl.cold_steps
-            while step - wl.cold_steps < MIN_STEPS or time.monotonic() - t_measure < args.seconds:
-                one_step(step, timed=True)
-                step += 1
-            wl.finish(spark, out)
+        for step in range(wl.cold_steps):
+            one_step(step, timed=False)
+        setup_s = time.monotonic() - T_PROCESS
+        t_measure, step = time.monotonic(), wl.cold_steps
+        while step - wl.cold_steps < MIN_STEPS or time.monotonic() - t_measure < args.seconds:
+            one_step(step, timed=True)
+            step += 1
+        wl.finish(spark, out)
+        peak_mb = peak_rss_mb(jvm)
     finally:
         _stop(spark, gateway, process_tree(jvm))
     hostrec = host.finish()
@@ -158,7 +154,7 @@ def run(args, work: str) -> int:
     if args.trace:
         spark_steps = parse_event_log(os.path.join(work, "events"),
                                       {s["step"]: s["window"] for s in timed})
-        metrics = per_layer(wl, tracer, timed, spark_steps, hostrec, session_start_s, sampler.peak_mb)
+        metrics = per_layer(wl, tracer, timed, spark_steps, hostrec, session_start_s, peak_mb)
         os.makedirs(WORK, exist_ok=True)
         span_path = os.path.join(WORK, f"spans-{args.workload}-seed{args.seed}.json")
         tracer.dump(span_path)
@@ -209,9 +205,10 @@ def _stop(spark, gateway, pids: list[int]) -> None:
                 time.sleep(0.05)
 
 
-def per_layer(wl, tracer, timed, spark_steps, hostrec, session_start_s, peak_rss_mb) -> dict:
-    """Every per-layer metric, as the median over warm steps. A metric
-    of a layer the workload does not touch reads 0."""
+def per_layer(wl, tracer, timed, spark_steps, hostrec, session_start_s, peak_mb) -> dict:
+    """Every per-layer metric, as the median over warm steps. A traced
+    run prints the whole list for either workload, so a metric of a
+    layer the workload does not call reads 0."""
     from perfbench.workloads import STAGES, WarehouseNightly
 
     names = layer_metric_names()
@@ -229,7 +226,7 @@ def per_layer(wl, tracer, timed, spark_steps, hostrec, session_start_s, peak_rss
     put("host.load_1m", hostrec["load_1m_start"])
     for group in ("task", "jit", "gc", "other"):
         put(f"jvm.{group}_cpu_s", _median(s["jvm"][group] for s in timed))
-    put("jvm.peak_rss_mb", peak_rss_mb)
+    put("jvm.peak_rss_mb", peak_mb)
     put("pyworker.cpu_s", _median(s["pyworker_cpu_s"] for s in timed))
     put("driver_py.cpu_s", _median(s["driver_py_cpu_s"] for s in timed))
     sp = [spark_steps[s] for s in steps]
