@@ -6,8 +6,7 @@ public Avro 1.12 specification alone; the reference JAVA
 implementation is IN-CONTAINER (avro-1.12.1.jar rides Spark's own
 classpath), so the tests adjudicate through it via the JVM gateway —
 Java authors every fixture and re-reads every engine-authored file,
-the same cross-pin pattern as CPython zipfile for ZIP and libbrotli
-for brotli.
+the same cross-pin pattern as CPython zipfile for ZIP.
 
 Implemented per the spec:
 
@@ -26,14 +25,13 @@ Implemented per the spec:
   unions, namespaces (dotted names, ``namespace`` attributes, and
   enclosing-namespace inheritance), named-type references; logical
   types decode as their base type by design;
-- block codecs, every one backed by an engine decoder: ``null``,
-  ``deflate`` (raw RFC 1951 through functions/png.inflate),
-  ``snappy`` (raw block + the spec's 4-byte big-endian CRC-32 of the
-  UNCOMPRESSED data), ``zstandard``, ``bzip2``, ``xz``;
-- a writer for the same surface (codecs null/deflate/snappy/
-  zstandard/bzip2; xz stays decode-only like the xz rung itself),
-  with a DETERMINISTIC sync marker derived from the schema + row
-  count so equal input yields equal bytes;
+- block codecs, all through functions/codecs: ``null``,
+  ``deflate`` (raw RFC 1951), ``snappy`` (raw block + the spec's
+  4-byte big-endian CRC-32 of the UNCOMPRESSED data),
+  ``zstandard``, ``bzip2``, ``xz``;
+- a writer for the same surface, with a DETERMINISTIC sync marker
+  derived from the schema + row count so equal input yields equal
+  bytes;
 - ``avro_block_spans``: the split-unit surface — (offset, count,
   packed size) per block, so a 100 TB ingest can fan blocks of ONE
   file across tasks exactly the way Hadoop/Spark split .avro by
@@ -55,6 +53,9 @@ from __future__ import annotations
 
 import json
 import struct
+import zlib
+
+from data_warehouse_migration_spark.functions import codecs
 
 _MAGIC = b"Obj\x01"
 _PRIMITIVES = {
@@ -226,7 +227,16 @@ def _decode(cur: _Cursor, node) -> object:
     raise ValueError(f"avro node kind {kind!r} invalid")
 
 
-# --- block codecs (engine decoders; the seam pattern applies) -----------------
+# --- block codecs (functions/codecs) -----------------------------------------
+
+#: avro.codec name → codecs format; the spec's deflate is RAW RFC 1951
+_CODECS = {
+    "deflate": "deflate",
+    "snappy": "snappy",
+    "zstandard": "zstd",
+    "bzip2": "bz2",
+    "xz": "xz",
+}
 
 
 def _codec_decode(codec: str, block: bytes, max_output: int | None) -> bytes:
@@ -234,76 +244,29 @@ def _codec_decode(codec: str, block: bytes, max_output: int | None) -> bytes:
         if max_output is not None and len(block) > max_output:
             raise ValueError("avro block exceeds caller's cap")
         return block
-    if codec == "deflate":
-        from data_warehouse_migration_spark.functions.png import inflate
-
-        out = inflate(block)
-        if max_output is not None and len(out) > max_output:
-            raise ValueError("avro block exceeds caller's cap")
-        return out
+    if codec not in _CODECS:
+        raise ValueError(f"avro codec {codec!r} unknown")
     if codec == "snappy":
-        from data_warehouse_migration_spark.functions.png import crc32
-        from data_warehouse_migration_spark.functions.snappy import (
-            snappy_decompress_raw,
-        )
-
+        # the spec appends a 4-byte big-endian CRC-32 of the
+        # UNCOMPRESSED data to each snappy block
         if len(block) < 4:
             raise ValueError("avro snappy block shorter than its CRC")
-        out = snappy_decompress_raw(block[:-4], max_output)
-        if crc32(out) != int.from_bytes(block[-4:], "big"):
+        out = codecs.decompress("snappy", block[:-4], max_output)
+        if zlib.crc32(out) != int.from_bytes(block[-4:], "big"):
             raise ValueError("avro snappy block CRC-32 mismatch")
         return out
-    if codec == "zstandard":
-        from data_warehouse_migration_spark.functions.zstd import (
-            zstd_decompress,
-        )
-
-        return zstd_decompress(block, max_output)
-    if codec == "bzip2":
-        from data_warehouse_migration_spark.functions.bz2_stream import (
-            bz2_decompress,
-        )
-
-        return bz2_decompress(block, max_output)
-    if codec == "xz":
-        from data_warehouse_migration_spark.functions.xz import xz_decompress
-
-        return xz_decompress(block, max_output)
-    raise ValueError(f"avro codec {codec!r} unknown")
+    return codecs.decompress(_CODECS[codec], block, max_output)
 
 
 def _codec_encode(codec: str, raw: bytes) -> bytes:
     if codec == "null":
         return raw
-    if codec == "deflate":
-        from data_warehouse_migration_spark.functions.png import zlib_compress
-
-        # the spec's deflate is RAW RFC 1951: strip the 2-byte zlib
-        # header and 4-byte Adler trailer off the engine's encoder
-        return zlib_compress(raw, "dynamic")[2:-4]
+    if codec not in _CODECS:
+        raise ValueError(f"avro codec {codec!r} unknown")
+    out = codecs.compress(_CODECS[codec], raw)
     if codec == "snappy":
-        from data_warehouse_migration_spark.functions.png import crc32
-        from data_warehouse_migration_spark.functions.snappy import (
-            snappy_compress_raw,
-        )
-
-        return snappy_compress_raw(raw) + crc32(raw).to_bytes(4, "big")
-    if codec == "zstandard":
-        from data_warehouse_migration_spark.functions.zstd import (
-            zstd_compress_lz,
-        )
-
-        return zstd_compress_lz(raw)
-    if codec == "bzip2":
-        from data_warehouse_migration_spark.functions.bz2_stream import (
-            bz2_compress,
-        )
-
-        return bz2_compress(raw)
-    raise ValueError(
-        f"avro codec {codec!r} has no engine encoder (xz is decode-only "
-        "by design; unknown codecs are rejected)"
-    )
+        out += zlib.crc32(raw).to_bytes(4, "big")
+    return out
 
 
 # --- container read -----------------------------------------------------------
@@ -540,11 +503,8 @@ def avro_write(
 
     if rows_per_block < 1:
         raise ValueError("avro rows_per_block under 1")
-    if codec not in ("null", "deflate", "snappy", "zstandard", "bzip2"):
-        raise ValueError(
-            f"avro codec {codec!r} has no engine encoder (xz is "
-            "decode-only by design; unknown codecs are rejected)"
-        )
+    if codec != "null" and codec not in _CODECS:
+        raise ValueError(f"avro codec {codec!r} unknown")
     schema_text = schema if isinstance(schema, str) else json.dumps(schema)
     try:
         node = _parse_schema(json.loads(schema_text), {})

@@ -17,8 +17,7 @@ Implemented from the public spec alone:
   ``/Kids``) → per-page ``/Contents`` (single or array, direct or
   indirect), stream ``/Length`` possibly indirect;
 - filters (chainable per the /Filter array form): ``FlateDecode``
-  via the engine's OWN RFC 1950/1951 decoder (functions/png) — the
-  same inflate the PNG/gzip/zip rungs attest — plus ``LZWDecode``
+  (RFC 1950 through functions/codecs), ``LZWDecode``
   (the spec's table-driven variant with EarlyChange),
   ``ASCII85Decode``, ``ASCIIHexDecode``, ``RunLengthDecode``, and
   the PNG predictors (§7.4.4.4);
@@ -59,10 +58,7 @@ from __future__ import annotations
 
 import re
 
-from data_warehouse_migration_spark.functions.png import (
-    zlib_compress,
-    zlib_decompress,
-)
+from data_warehouse_migration_spark.functions import codecs
 
 _WS = b"\x00\t\n\x0c\r "
 _DELIM = b"()<>[]{}/%"
@@ -432,7 +428,7 @@ class _Pdf:
             p = p if isinstance(p, dict) else {}
             name = str(self.obj(f))
             if name == "FlateDecode" or name == "Fl":
-                body = zlib_decompress(body)
+                body = codecs.decompress("zlib", body)
             elif name == "LZWDecode" or name == "LZW":
                 body = lzw_decode(
                     body, int(self.obj(p.get("EarlyChange", 1)))
@@ -1066,8 +1062,7 @@ def build_pdf(
 ) -> bytes:
     """A well-formed single-xref PDF: one content stream per page,
     one line per list item (positioned via ``Td``), with
-    ``FlateDecode`` streams when ``flate`` (the engine's own
-    deflate). The extracted text of the result is exactly
+    ``FlateDecode`` streams when ``flate``. The extracted text of the result is exactly
     ``'\\n'.join(lines)`` per page — the identity the gate rides —
     under every ``font_mode``:
 
@@ -1115,7 +1110,7 @@ def build_pdf(
 
     def stream_obj(raw: bytes, extra: str = "") -> bytes:
         if flate:
-            body = zlib_compress(raw, "dynamic")
+            body = codecs.compress("zlib", raw)
             head = f"<< /Length {len(body)} /Filter /FlateDecode{extra} >>"
         else:
             body = raw

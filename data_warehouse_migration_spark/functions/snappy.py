@@ -1,220 +1,49 @@
-"""Snappy (raw block format + the framing format) from scratch —
-the lake-native rung of the compression ladder: snappy is Spark's
-DEFAULT parquet codec and the standard Kafka/HBase/LevelDB wire
-compressor, so a training-data engine meets it everywhere column
-files and event streams live. Like LZ4 it is LZ77 with no entropy
-stage — tag bytes instead of token nibbles — which is why both
-directions are honest engine code here.
+"""Snappy framing format (.sz) from scratch — the lake-native rung
+of the compression ladder: snappy is Spark's DEFAULT parquet codec
+and the standard Kafka/HBase/LevelDB wire compressor, so a
+training-data engine meets it everywhere column files and event
+streams live. Raw snappy blocks are packed and unpacked by
+functions/codecs (pyarrow's bundled snappy); this module implements
+the framing spec around them:
 
-Implemented per the public Snappy format description and framing
-spec:
-
-- raw block format: the uncompressed-length varint, then tagged
-  elements — literals (length in the tag up to 60, else 1-4
-  little-endian extra bytes), copy-with-1-byte-offset (3-bit
-  length 4-11, 11-bit offset), copy-with-2-byte and
-  copy-with-4-byte offsets; overlapping copies byte-wise;
-- writer: greedy hash-chain matcher emitting 2-byte-offset copies
-  (64-byte match segments, the format's per-tag cap) with the
-  spec's literal encodings — accepted by the reference
-  implementation (pyarrow's bundled snappy, pinned in tests);
-- framing format (.sz): the sNaPpY stream-identifier chunk,
-  compressed (0x00) and uncompressed (0x01) chunks carrying masked
-  CRC-32C of the UNCOMPRESSED bytes (the same Google masking rule
-  TFRecord uses — functions/tfrecord.py supplies the primitive),
-  the 65536-byte chunk ceiling, padding (0xfe) and
-  skippable-reserved (0x80-0xfd) chunks skipped,
-  unskippable-reserved (0x02-0x7f) rejected;
+- the sNaPpY stream-identifier chunk, compressed (0x00) and
+  uncompressed (0x01) chunks carrying masked CRC-32C of the
+  UNCOMPRESSED bytes (the same Google masking rule TFRecord uses —
+  functions/tfrecord.py supplies the primitive), the 65536-byte
+  chunk ceiling, padding (0xfe) and skippable-reserved (0x80-0xfd)
+  chunks skipped, unskippable-reserved (0x02-0x7f) rejected;
 - untrusted-input hygiene: lengths bounds-checked before
-  allocation, offsets validated against decoded history, every CRC
-  verified, truncation raises ValueError — quarantine-routable
-  like the rest of the ingest stack.
+  allocation, every CRC verified, truncation raises ValueError —
+  quarantine-routable like the rest of the ingest stack.
 
 Scale posture: blobs are independent rows through one Arrow-batched
-stage, zero shuffle; in the framing format chunks are the in-file
-split unit (each carries its own CRC and is ≤64 KiB decoded).
-
-Attestation posture: landed post-seal in r14 (the window closed at
-50 first — the LZ4 r13 precedent); attestation rides
-tests/test_snappy.py (pyarrow's reference snappy pinned BOTH
-directions, truncation sweep, mutation fuzz) until the natural r15
-gate registration.
+stage, zero shuffle; chunks are the in-file split unit (each carries
+its own CRC and is ≤64 KiB decoded).
 """
 
 from __future__ import annotations
 
 import struct
 
+from data_warehouse_migration_spark.functions import codecs
 from data_warehouse_migration_spark.functions.tfrecord import masked_crc
 
 _STREAM_ID = b"\xff\x06\x00\x00sNaPpY"
 _CHUNK_MAX = 65536
 
 
-def _read_varint(data: bytes, pos: int) -> tuple[int, int]:
-    out = 0
-    shift = 0
-    while True:
-        if pos >= len(data):
-            raise ValueError("snappy varint truncated")
-        b = data[pos]
-        pos += 1
-        out |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return out, pos
-        shift += 7
-        if shift > 35:
-            raise ValueError("snappy varint overlong")
-
-
-def _write_varint(n: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = n & 0x7F
-        n >>= 7
-        if n:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-def snappy_decompress_raw(
-    data: bytes, max_output: int | None = None
-) -> bytes:
-    """Decode one raw-format snappy block, verifying the declared
-    uncompressed length exactly."""
-    n, pos = _read_varint(data, 0)
-    if max_output is not None and n > max_output:
-        raise ValueError("snappy declared size exceeds caller's cap")
-    out = bytearray()
-    size = len(data)
-    while pos < size:
-        tag = data[pos]
-        pos += 1
-        t = tag & 3
-        if t == 0:  # literal
-            ln = (tag >> 2) + 1
-            if ln > 60:
-                nb = ln - 60
-                if pos + nb > size:
-                    raise ValueError("snappy literal length truncated")
-                ln = int.from_bytes(data[pos : pos + nb], "little") + 1
-                pos += nb
-            if pos + ln > size:
-                raise ValueError("snappy literal truncated")
-            if len(out) + ln > n:
-                raise ValueError("snappy output exceeds declared size")
-            out += data[pos : pos + ln]
-            pos += ln
-            continue
-        if t == 1:  # copy, 1-byte offset
-            ln = ((tag >> 2) & 7) + 4
-            if pos >= size:
-                raise ValueError("snappy copy offset truncated")
-            off = ((tag >> 5) << 8) | data[pos]
-            pos += 1
-        elif t == 2:  # copy, 2-byte offset
-            ln = (tag >> 2) + 1
-            if pos + 2 > size:
-                raise ValueError("snappy copy offset truncated")
-            off = data[pos] | (data[pos + 1] << 8)
-            pos += 2
-        else:  # copy, 4-byte offset
-            ln = (tag >> 2) + 1
-            if pos + 4 > size:
-                raise ValueError("snappy copy offset truncated")
-            (off,) = struct.unpack_from("<I", data, pos)
-            pos += 4
-        if off == 0 or off > len(out):
-            raise ValueError("snappy copy offset outside decoded history")
-        if len(out) + ln > n:
-            raise ValueError("snappy output exceeds declared size")
-        start = len(out) - off
-        if off >= ln:
-            out += out[start : start + ln]
-        else:
-            for i in range(ln):  # overlapping copy, byte-wise
-                out.append(out[start + i])
-    if len(out) != n:
-        raise ValueError(
-            f"snappy decoded {len(out)} bytes, header says {n}"
-        )
-    return bytes(out)
-
-
-def snappy_compress_raw(data: bytes) -> bytes:
-    """Greedy raw-format encoder: 4-byte hash matches emitted as
-    2-byte-offset copies in ≤64-byte segments, literals with the
-    spec's length encodings. Valid input for any snappy decoder."""
-    n = len(data)
-    out = bytearray(_write_varint(n))
-
-    def emit_literal(start: int, end: int) -> None:
-        nonlocal out
-        while start < end:
-            ln = min(end - start, 1 << 16)  # one extra-byte tier is plenty
-            if ln <= 60:
-                out.append((ln - 1) << 2)
-            elif ln <= 256:
-                out.append(60 << 2)
-                out.append(ln - 1)
-            else:
-                out.append(61 << 2)
-                out += struct.pack("<H", ln - 1)
-            out += data[start : start + ln]
-            start += ln
-
-    table: dict[bytes, int] = {}
-    i = 0
-    anchor = 0
-    while i + 4 <= n:
-        key = bytes(data[i : i + 4])
-        j = table.get(key)
-        table[key] = i
-        if j is None or i - j > 0xFFFF:
-            i += 1
-            continue
-        length = 4
-        limit = n - i
-        while length < limit and data[j + length] == data[i + length]:
-            length += 1
-        emit_literal(anchor, i)
-        off = i - j
-        rem = length
-        while rem > 0:
-            seg = min(rem, 64)
-            if rem - seg in (1, 2, 3) and seg == 64:
-                seg = 60  # never strand a <4-byte copy tail
-            out.append(((seg - 1) << 2) | 2)
-            out += struct.pack("<H", off)
-            rem -= seg
-        i += length
-        anchor = i
-    emit_literal(anchor, n)
-    return bytes(out)
-
-
-def snappy_frame_compress(
-    data: bytes, chunk: int = _CHUNK_MAX, raw_compress=None
-) -> bytes:
+def snappy_frame_compress(data: bytes, chunk: int = _CHUNK_MAX) -> bytes:
     """The framing format: stream identifier, then per-chunk masked
     CRC-32C + body — compressed where it wins, uncompressed where it
     doesn't (the spec's requirement that compressed chunks actually
-    shrink).
-
-    ``raw_compress`` swaps the raw-block encoder (the codec seam —
-    functions/codecs: a native snappy produces interchangeable chunk
-    bodies because the framing layer only sees raw-format blocks)."""
+    shrink)."""
     if not 0 < chunk <= _CHUNK_MAX:
         raise ValueError(f"snappy frame chunk {chunk} must be 1-65536")
-    if raw_compress is None:
-        raw_compress = snappy_compress_raw
     out = bytearray(_STREAM_ID)
     for i in range(0, len(data), chunk) or [0]:
         part = data[i : i + chunk]
         crc = masked_crc(part)
-        comp = raw_compress(part)
+        comp = codecs.compress("snappy", part)
         if len(comp) < len(part):
             body = struct.pack("<I", crc) + comp
             out.append(0x00)
@@ -225,19 +54,10 @@ def snappy_frame_compress(
     return bytes(out)
 
 
-def snappy_frame_decompress(
-    data: bytes, max_output: int | None = None, raw_decompress=None
-) -> bytes:
+def snappy_frame_decompress(data: bytes, max_output: int | None = None) -> bytes:
     """Decode a framed stream, verifying every chunk's masked
     CRC-32C; padding and skippable-reserved chunks are passed over,
-    unskippable-reserved ones raise (quarantine-routable).
-
-    ``raw_decompress`` swaps the raw-block decoder (the codec seam —
-    functions/codecs); it receives ``(payload, cap)`` like
-    ``snappy_decompress_raw`` and must enforce the declared-size cap
-    the same way."""
-    if raw_decompress is None:
-        raw_decompress = snappy_decompress_raw
+    unskippable-reserved ones raise (quarantine-routable)."""
     if data[: len(_STREAM_ID)] != _STREAM_ID:
         raise ValueError("snappy stream identifier missing")
     pos = len(_STREAM_ID)
@@ -268,7 +88,7 @@ def snappy_frame_decompress(
                 cap = _CHUNK_MAX
                 if max_output is not None:
                     cap = min(cap, max_output - len(out) + 1)
-                payload = raw_decompress(payload, cap)
+                payload = codecs.decompress("snappy", payload, cap)
             if len(payload) > _CHUNK_MAX:
                 raise ValueError("snappy chunk exceeds the 64 KiB ceiling")
             if masked_crc(payload) != crc:

@@ -5,7 +5,7 @@ stores each sample as ADJACENT members sharing a basename key
 tar shards, so a loader streams samples sequentially with no index.
 This module implements the ustar layout (POSIX.1-1988 + the ustar
 magic/prefix extensions) so the engine can both CUT shards and READ
-them; ``.tar.gz`` shards compose with functions/gzip_stream.
+them; ``.tar.gz`` shards compose with gzip from functions/codecs.
 
 Implemented from the public format alone:
 

@@ -1,7 +1,7 @@
 """Minimal well-formed XML — the parser the bzip2 rung exists for:
 Wikipedia dumps (`pages-articles.xml.bz2`, the canonical open
 pretraining corpus) are multistream bzip2 around one big XML document,
-so the ingest compositions pair `functions/bz2_stream` with this
+so the ingest compositions pair bzip2 (`functions/codecs`) with this
 module (``wikidump_extract``).
 
 Scope (honest subset, enough for dump-shaped documents and strict

@@ -1,9 +1,8 @@
 """ZIP (PKWARE APPNOTE) archive framing, from scratch — the other
 container datasets actually ship in (Kaggle dumps, model bundles,
 OOXML-adjacent formats). Entries use method 0 (stored) or method 8
-(deflate — the engine's own RFC 1951 codec from functions/png), so
-the compression layer is already attested; this module adds the ZIP
-grammar: local file headers, the central directory, the end-of-
+(raw RFC 1951 deflate through functions/codecs); this module adds
+the ZIP grammar: local file headers, the central directory, the end-of-
 central-directory locator, and CRC-32 verification.
 
 Read path follows the spec's contract: find EOCD from the END of the
@@ -21,11 +20,9 @@ from __future__ import annotations
 
 import struct
 
-from data_warehouse_migration_spark.functions.png import (
-    crc32,
-    inflate_member,
-    zlib_compress,
-)
+import zlib
+
+from data_warehouse_migration_spark.functions import codecs
 
 _LOCAL_SIG = b"PK\x03\x04"
 _CENTRAL_SIG = b"PK\x01\x02"
@@ -37,14 +34,14 @@ def zip_pack(
 ) -> bytes:
     """A deterministic archive (DOS timestamps zeroed, version 20).
     ``method`` 'stored' emits method-0 entries; the deflate
-    strategies emit method-8 via the engine's own encoder."""
+    strategies emit method-8 deflate."""
     out = bytearray()
     central = bytearray()
     for name, raw in members:
         nb = name.encode("utf-8")
         comp_method = 0 if method == "stored" else 8
-        data = raw if comp_method == 0 else zlib_compress(raw, method)[2:-4]
-        crc = crc32(raw)
+        data = raw if comp_method == 0 else codecs.compress("deflate", raw, method)
+        crc = zlib.crc32(raw)
         offset = len(out)
         common = struct.pack(
             "<HHHHHIII",
@@ -126,12 +123,12 @@ def zip_members(data: bytes) -> list[tuple[str, bytes]]:
             if len(raw) != usize:
                 raise ValueError(f"stored entry size mismatch for {name!r}")
         elif comp_method == 8:
-            raw, _ = inflate_member(blob)
+            raw = codecs.decompress("deflate", blob, usize)
             if len(raw) != usize:
                 raise ValueError(f"inflated size mismatch for {name!r}")
         else:
             raise ValueError(f"unsupported compression method {comp_method}")
-        if crc32(raw) != crc:
+        if zlib.crc32(raw) != crc:
             raise ValueError(f"CRC-32 mismatch for {name!r}")
         out.append((name, raw))
     return out
@@ -166,8 +163,8 @@ def zip_pack64(
     for name, raw in members:
         nb = name.encode("utf-8")
         comp_method = 0 if method == "stored" else 8
-        data = raw if comp_method == 0 else zlib_compress(raw, method)[2:-4]
-        crc = crc32(raw)
+        data = raw if comp_method == 0 else codecs.compress("deflate", raw, method)
+        crc = zlib.crc32(raw)
         offset = len(out)
         l_extra = struct.pack("<HHQQ", 0x0001, 16, len(raw), len(data))
         out += (
@@ -321,12 +318,12 @@ def zip_members64(data: bytes) -> list[tuple[str, bytes]]:
             if len(raw) != usize:
                 raise ValueError(f"stored entry size mismatch for {name!r}")
         elif comp_method == 8:
-            raw, _ = inflate_member(blob)
+            raw = codecs.decompress("deflate", blob, usize)
             if len(raw) != usize:
                 raise ValueError(f"inflated size mismatch for {name!r}")
         else:
             raise ValueError(f"unsupported compression method {comp_method}")
-        if crc32(raw) != crc:
+        if zlib.crc32(raw) != crc:
             raise ValueError(f"CRC-32 mismatch for {name!r}")
         out.append((name, raw))
     return out

@@ -164,9 +164,9 @@ def _decode_real_asset(mime: str, payload: bytes) -> tuple[int, int, float]:
         mean_norm = float(px.mean()) / 255.0 if px.size else 0.0
         return int(px.shape[1]), int(px.shape[0]), mean_norm
     if mime == "image/png":
-        # From-scratch RFC 2083/1950/1951 tier (functions/png — r10):
-        # CRC-verified chunk walk, own full inflate (stored + fixed +
-        # dynamic Huffman + LZ77), exact filter inversion. 8-bit
+        # RFC 2083 tier (functions/png — r10): CRC-verified chunk
+        # walk, zlib IDAT through functions/codecs, exact filter
+        # inversion. 8-bit
         # gray/RGB non-interlaced; palette/alpha/16-bit/Adam7 raise
         # inside the codec with the reason.
         from data_warehouse_migration_spark.functions.png import decode_png
@@ -1265,8 +1265,8 @@ def png_roundtrip_features(ids_df: DataFrame, id_col: str = "asset_id") -> DataF
     encoded to a full PNG container (functions/png: chunk grammar +
     CRC-32, zlib wrapper + Adler-32, per-row filters CYCLING through
     all five types 0-4, stored-deflate for even ids and fixed-Huffman
-    deflate for odd ids) and decoded back by the general decoder (own
-    inflate, filter inversion), all inside one Arrow-batched
+    deflate for odd ids) and decoded back (zlib inflate through
+    functions/codecs, filter inversion), all inside one Arrow-batched
     ``mapInPandas``; the output is the DECODED pixel sum.
 
     Exactness: PNG is LOSSLESS — filters are mod-256 integer
@@ -1280,10 +1280,7 @@ def png_roundtrip_features(ids_df: DataFrame, id_col: str = "asset_id") -> DataF
     pixel color is a function of one byte, so ≤ 256 distinct colors
     always): indices + PLTE encode, index unfiltering, palette-lookup
     decode — same closed form, since the lookup reproduces the RGB
-    exactly. The inflate's generality beyond this encoder (dynamic
-    Huffman + LZ77 back-references) is pinned in
-    tests/test_png_codec.py against real ``zlib.compress`` output as
-    an independent reference. Ids ≡ 3 mod 7 route through the
+    exactly. Ids ≡ 3 mod 7 route through the
     SUB-BYTE leg (r11): 4/2/1-bit palette indices (depth by id mod
     3), MSB-first packing, filters over packed bytes, its own
     closed-form palette — real-world 2/4-bit icons are pinned against

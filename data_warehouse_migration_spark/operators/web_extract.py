@@ -221,48 +221,40 @@ def html_extract_features(docs: DataFrame) -> DataFrame:
 
 def warc_ingest_features(docs: DataFrame) -> DataFrame:
     """Gate harness for the full crawl-archive ingest path
-    (functions/gzip_stream + functions/warc + functions/html_text —
-    r11): per document, BUILD the archive a crawler would hand us —
-    the page synthesized from the doc's own text (``synth_page``),
-    framed as a full HTTP/1.1 response (Transfer-Encoding: chunked
-    with 64-byte chunks for odd ids, Content-Length for even — both
+    (functions/codecs + functions/warc + functions/html_text — r11):
+    per document, BUILD the archive a crawler would hand us — the
+    page synthesized from the doc's own text (``synth_page``), framed
+    as a full HTTP/1.1 response (Transfer-Encoding: chunked with
+    64-byte chunks for odd ids, Content-Length for even — both
     RFC 9112 framings exercised), wrapped in a WARC/1.1 ``response``
     record behind a ``warcinfo`` record, each record its OWN gzip
-    member (the Common Crawl convention; the deflate strategy rotates
-    stored/fixed/dynamic on id mod 3, so all three RFC 1951 block
-    types ship) — then READ IT ALL BACK: gzip member walk → WARC
-    record framing → HTTP de-framing → HTML extraction.
+    member (the Common Crawl convention; the deflate block strategy
+    rotates stored/fixed/dynamic on id mod 3) — then READ IT ALL
+    BACK: gzip member walk → WARC record framing → HTTP de-framing →
+    HTML extraction.
 
     The page additionally ships under a rotating HTTP
     ``Content-Encoding`` (r13 — VERDICT r12 missing #1: real captures
     store the wire bytes, so stored bodies are routinely compressed):
-    id mod 6 → identity / gzip (own RFC 1952 member) / deflate
-    (zlib-wrapped per RFC 9110) / deflate sent as a BARE RFC 1951
-    stream (the misconfigured-server shape the browser sniff exists
-    for) / zstd (RFC 8878, the engine's stored-subset writer decoded
-    by the full functions/zstd decoder) / br (RFC 7932 likewise via
-    functions/brotli_stream) — the complete coding set modern servers
-    send. The read side de-frames the transfer coding THEN undoes the
-    content coding (``parse_http_response_decoded``).
+    id mod 6 → identity / gzip / deflate (zlib-wrapped per RFC 9110)
+    / deflate sent as a BARE RFC 1951 stream (the misconfigured-server
+    shape the decoder's sniff exists for) / zstd (the engine's
+    stored-subset writer) / br — the complete coding set modern
+    servers send. The read side de-frames the transfer coding THEN
+    undoes the content coding (``parse_http_response_decoded``).
 
     Exactness: every layer is lossless and the extracted text is the
     same pure string formula ``html_extract_features`` attests, so
     the oracle needs no gzip/WARC/HTTP/HTML code anywhere. The
-    archive's structural counts (2 records, 2 members, status 200,
-    the DECODED body length = the page length, the coding token) are
-    closed forms too. A defect in member boundaries, CRC/ISIZE
-    verification, record Content-Length framing, chunk reassembly,
-    content-coding reversal, or the extraction breaks a column."""
-    from data_warehouse_migration_spark.functions.brotli_stream import (
-        brotli_compress_stored,
-    )
-    from data_warehouse_migration_spark.functions.gzip_stream import (
-        gzip_compress,
-    )
+    archive's structural counts (2 records, status 200, the DECODED
+    body length = the page length, the coding token) are closed forms
+    too. A defect in member boundaries, record Content-Length
+    framing, chunk reassembly, content-coding dispatch, or the
+    extraction breaks a column."""
+    from data_warehouse_migration_spark.functions import codecs
     from data_warehouse_migration_spark.functions.html_text import (
         html_to_text,
     )
-    from data_warehouse_migration_spark.functions.png import zlib_compress
     from data_warehouse_migration_spark.functions.warc import (
         build_http_response,
         build_warc_record,
@@ -280,17 +272,17 @@ def warc_ingest_features(docs: DataFrame) -> DataFrame:
         page = synth_page(aid, lang, text).encode("utf-8")
         leg = aid % 6
         if leg == 1:
-            coding, wire = "gzip", gzip_compress(page, method="dynamic")
+            coding, wire = "gzip", codecs.compress("gzip", page)
         elif leg == 2:
-            coding, wire = "deflate", zlib_compress(page, method="dynamic")
+            coding, wire = "deflate", codecs.compress("zlib", page)
         elif leg == 3:
             # bare RFC 1951 stream under the "deflate" token — the
             # wire shape the decoder's zlib sniff has to catch
-            coding, wire = "deflate", zlib_compress(page, method="dynamic")[2:-4]
+            coding, wire = "deflate", codecs.compress("deflate", page)
         elif leg == 4:
             coding, wire = "zstd", zstd_compress_stored(page, chunk=731)
         elif leg == 5:
-            coding, wire = "br", brotli_compress_stored(page, chunk=731)
+            coding, wire = "br", codecs.compress("br", page)
         else:
             coding, wire = "identity", page
         hdrs = {"Content-Type": "text/html; charset=utf-8"}
@@ -432,7 +424,7 @@ def webdataset_shard_features(docs: DataFrame) -> DataFrame:
     ships — ``{id:08d}.txt`` (the doc text), ``{id:08d}.cls`` (the
     label), ``{id:08d}.json`` (metadata) as adjacent tar members —
     into a tar shard (gzipped whole for odd ids: the ``.tar.gz``
-    composition over functions/gzip_stream), then READ IT BACK via
+    composition over functions/codecs), then READ IT BACK via
     the sample grouper and report structure + content digests.
 
     The shard LAYOUT rotates on id mod 3 (r13 — VERDICT r12 missing
@@ -452,10 +444,7 @@ def webdataset_shard_features(docs: DataFrame) -> DataFrame:
     header checksums, octal fields, PAX record framing, longname
     payloads, 512-byte padding, the end marker, gzip framing, or
     sample adjacency breaks a column."""
-    from data_warehouse_migration_spark.functions.gzip_stream import (
-        gzip_compress,
-        gzip_decompress,
-    )
+    from data_warehouse_migration_spark.functions import codecs
     from data_warehouse_migration_spark.functions.tar_stream import (
         tar_pack,
         webdataset_samples,
@@ -478,9 +467,9 @@ def webdataset_shard_features(docs: DataFrame) -> DataFrame:
             fmt=fmt,
         )
         tar_len = len(shard)
-        blob = gzip_compress(shard, "dynamic") if aid % 2 else shard
+        blob = codecs.compress("gzip", shard) if aid % 2 else shard
         # --- read side ---
-        raw = gzip_decompress(blob) if aid % 2 else blob
+        raw = codecs.decompress("gzip", blob) if aid % 2 else blob
         samples = webdataset_samples(raw)
         k, parts = samples[0]
         return (
@@ -531,7 +520,7 @@ def tfrecord_shard_features(docs: DataFrame) -> DataFrame:
     pack the sample a TF input pipeline ships — the doc text, the
     label, a JSON metadata record — as three length-framed records
     behind masked CRC-32C guards, gzip the shard whole for odd ids
-    (the ``.tfrecord.gz`` convention, over functions/gzip_stream),
+    (the ``.tfrecord.gz`` convention, over functions/codecs),
     then READ IT BACK verifying all six CRCs.
 
     Exactness: framing is lossless and fully deterministic, so the
@@ -546,10 +535,7 @@ def tfrecord_shard_features(docs: DataFrame) -> DataFrame:
     Shape at 100 TB: shard-per-row; TFRecord is not internally
     splittable BY DESIGN, which is why corpora ship as many shards —
     the layout operators/sharding.py already produces."""
-    from data_warehouse_migration_spark.functions.gzip_stream import (
-        gzip_compress,
-        gzip_decompress,
-    )
+    from data_warehouse_migration_spark.functions import codecs
     from data_warehouse_migration_spark.functions.tfrecord import (
         tfrecord_pack,
         tfrecord_records,
@@ -563,9 +549,9 @@ def tfrecord_shard_features(docs: DataFrame) -> DataFrame:
         ]
         shard = tfrecord_pack(recs)
         shard_len = len(shard)
-        blob = gzip_compress(shard, "dynamic") if aid % 2 else shard
+        blob = codecs.compress("gzip", shard) if aid % 2 else shard
         # --- read side ---
-        raw = gzip_decompress(blob) if aid % 2 else blob
+        raw = codecs.decompress("gzip", blob) if aid % 2 else blob
         back = tfrecord_records(raw)
         return (
             aid,
@@ -725,27 +711,22 @@ def crawl_archive_ingest_quarantine(docs: DataFrame) -> DataFrame:
       paragraph (the v7 string formula), robots-allowed by
       construction (the probe path is the named group's Allow
       subtree);
-    - 1 → last trailer byte flipped → the member-walk's ISIZE check
+    - 1 → last trailer byte flipped → the member walk's ISIZE check
       trips (``ValueError``);
-    - 2 → archive truncated 20 bytes short → inflate/trailer framing
-      trips (``ValueError``);
-    - 3 → first magic byte flipped → ``bad gzip magic``
+    - 2 → archive truncated 20 bytes short → the member ends without
+      its end marker (``ValueError``);
+    - 3 → first magic byte flipped → gzip header check
       (``ValueError``);
     - 4 → intact, body gzip-coded with ``Content-Encoding: gzip`` —
       a GOOD content-coded row: decodes bit-identical to leg 0's
       extraction;
     - 5 → header claims ``gzip`` but the body ships uncompressed
-      (the lying-server shape) → ``bad gzip magic``
-      (``ValueError``);
+      (the lying-server shape) → gzip header check (``ValueError``);
     - 6 → gzip-coded body truncated 8 bytes (the trailer) →
       ``ValueError`` from the member walk;
-    - 7 → intact, body brotli-coded with ``Content-Encoding: br``
-      (the engine's stored-subset writer, decoded by the full
-      RFC 7932 decoder — functions/brotli_stream, r13): the second
-      GOOD content-coded row. Until r13 this leg attested br as
-      detected-but-undecoded; with the rung built it attests the
-      decode path per-row instead (an unknown token still raises
-      ``ValueError`` — pinned in tests/test_gzip_warc.py).
+    - 7 → intact, body brotli-coded with ``Content-Encoding: br``:
+      the second GOOD content-coded row (an unknown token still
+      raises ``ValueError`` — pinned in tests/test_gzip_warc.py).
 
     Quarantined rows carry ``status='quarantined'``, the
     ``ExcClass: message`` reason, and null structure/text columns;
@@ -753,9 +734,7 @@ def crawl_archive_ingest_quarantine(docs: DataFrame) -> DataFrame:
     sides are closed forms over (doc_id, lang, text), which is what
     lets ONE DuckDB oracle attest fault routing and value fidelity
     together (``crawl_ingest_quarantine``)."""
-    from data_warehouse_migration_spark.functions.gzip_stream import (
-        gzip_compress,
-    )
+    from data_warehouse_migration_spark.functions import codecs
     from data_warehouse_migration_spark.functions.html_text import (
         html_blocks,
     )
@@ -782,19 +761,15 @@ def crawl_archive_ingest_quarantine(docs: DataFrame) -> DataFrame:
         wire = page
         if leg == 4:
             hdrs["Content-Encoding"] = "gzip"
-            wire = gzip_compress(page, method="dynamic")
+            wire = codecs.compress("gzip", page)
         elif leg == 5:
             hdrs["Content-Encoding"] = "gzip"  # lie: body is plain
         elif leg == 6:
             hdrs["Content-Encoding"] = "gzip"
-            wire = gzip_compress(page, method="dynamic")[:-8]
+            wire = codecs.compress("gzip", page)[:-8]
         elif leg == 7:
-            from data_warehouse_migration_spark.functions.brotli_stream import (
-                brotli_compress_stored,
-            )
-
             hdrs["Content-Encoding"] = "br"
-            wire = brotli_compress_stored(page, chunk=97)
+            wire = codecs.compress("br", page)
         http = build_http_response(
             200, "OK", hdrs,
             wire, chunked=bool(aid % 2), chunk_size=64,
@@ -969,42 +944,36 @@ def zip_bundle_features(docs: DataFrame) -> DataFrame:
 
 
 def bz2_archive_features(docs: DataFrame) -> DataFrame:
-    """Gate harness for bzip2 archives (functions/bz2_stream — r12,
-    the BWT rung of the compression ladder; the container format of
-    Wikipedia dumps and many older crawl segments): per document the
-    text is compressed with the engine's own encoder — ONE stream for
-    even ids, TWO independent concatenated streams for odd (split at
-    the byte midpoint: the pbzip2/wiki-dump multistream shape that
-    makes ``.bz2`` splittable) — then decompressed back through the
-    full decoder (block magic walk, symbol map, selector MTF,
-    delta-coded Huffman tables, RLE2→MTF→inverse-BWT→RLE1, block and
-    stream CRCs both verified).
+    """Gate harness for bzip2 archives (functions/codecs — the format
+    of Wikipedia dumps and many older crawl segments): per document
+    the text is compressed as ONE stream for even ids, TWO
+    independent concatenated streams for odd (split at the byte
+    midpoint: the pbzip2/wiki-dump multistream shape that makes
+    ``.bz2`` splittable), then decompressed back through the
+    multistream walk.
 
     Exactness: the codec is lossless, so the decoded text equals the
     document text verbatim — md5 + length are the pure formulas the
     DuckDB oracle recomputes with no codec anywhere; the stream count
     is a closed form of the id. Compressed length is real but not
     closed-form (reported, not attested — the zip deflate-leg rule).
-    Cross-engine generality (real libbz2 output: multi-table, multi-
-    block) is pinned in tests/test_bz2_stream.py.
 
     Shape at 100 TB: archives are independent rows through one
     Arrow-batched stage, zero shuffle; multistream files additionally
     split WITHIN an archive at stream headers — the gzip-member
     posture."""
-    from data_warehouse_migration_spark.functions.bz2_stream import (
-        bz2_compress,
-        bz2_decompress,
-    )
+    from data_warehouse_migration_spark.functions import codecs
 
     def per_doc(aid: int, text: str):
         raw = text.encode("utf-8")
         if aid % 2 == 0:
-            blob = bz2_compress(raw)
+            blob = codecs.compress("bz2", raw)
         else:
             mid = len(raw) // 2
-            blob = bz2_compress(raw[:mid]) + bz2_compress(raw[mid:])
-        back = bz2_decompress(blob).decode("utf-8")
+            blob = codecs.compress("bz2", raw[:mid]) + codecs.compress(
+                "bz2", raw[mid:]
+            )
+        back = codecs.decompress("bz2", blob).decode("utf-8")
         return (aid, back, len(back), 1 + aid % 2, len(blob))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1034,8 +1003,8 @@ def bz2_archive_features(docs: DataFrame) -> DataFrame:
 
 
 def wikidump_extract_features(docs: DataFrame) -> DataFrame:
-    """Gate harness for the WIKI-DUMP composition (functions/bz2_stream
-    + functions/xml_text — r12): per document, BUILD the artifact the
+    """Gate harness for the WIKI-DUMP composition (functions/codecs
+    bzip2 + functions/xml_text — r12): per document, BUILD the artifact the
     open-corpus world actually ships — a MediaWiki export XML holding
     the doc's own text as an entity-escaped ``<revision><text>`` (page
     title ``Doc {id}``, namespace ``id mod 4``, page id ``id``) plus a
@@ -1057,10 +1026,7 @@ def wikidump_extract_features(docs: DataFrame) -> DataFrame:
     production (multistream = seekable); one Arrow-batched stage,
     zero shuffle; the extracted text feeds the curation stack
     unchanged."""
-    from data_warehouse_migration_spark.functions.bz2_stream import (
-        bz2_compress,
-        bz2_decompress,
-    )
+    from data_warehouse_migration_spark.functions import codecs
     from data_warehouse_migration_spark.functions.xml_text import (
         build_wikidump,
         wikidump_pages,
@@ -1076,11 +1042,13 @@ def wikidump_extract_features(docs: DataFrame) -> DataFrame:
             ]
         ).encode("utf-8")
         if aid % 2 == 0:
-            blob = bz2_compress(xml)
+            blob = codecs.compress("bz2", xml)
         else:
             mid = len(xml) // 2
-            blob = bz2_compress(xml[:mid]) + bz2_compress(xml[mid:])
-        pages = wikidump_pages(bz2_decompress(blob).decode("utf-8"))
+            blob = codecs.compress("bz2", xml[:mid]) + codecs.compress(
+                "bz2", xml[mid:]
+            )
+        pages = wikidump_pages(codecs.decompress("bz2", blob).decode("utf-8"))
         p = pages[0]
         return (
             aid, len(pages), p["title"], p["ns"], p["page_id"],
@@ -1118,31 +1086,24 @@ def wikidump_extract_features(docs: DataFrame) -> DataFrame:
 
 
 def xz_archive_features(docs: DataFrame) -> DataFrame:
-    """Gate harness for xz archives (functions/xz — r12): DECODE-ONLY
-    against the REFERENCE encoder, the pattern real ingest lives in —
-    nobody re-compresses a crawl, they decode what upstream shipped.
-    Per document the text is compressed IN THE HARNESS by liblzma
-    (CPython's ``lzma``; preset rotating 1/6 on id parity, the
-    integrity check rotating CRC32/CRC64/SHA-256 on id mod 3) and
-    decompressed back through the engine's own decoder: stream
-    header/footer CRCs, block-header parse, LZMA2 chunk walk, the
-    full LZMA range decoder, the block check (all three algorithms,
-    incl. the from-scratch CRC-64/XZ), and index-vs-blocks
-    verification.
+    """Gate harness for xz archives (functions/codecs — r12): per
+    document the text is compressed by liblzma with the preset
+    rotating 1/6 on id parity and the integrity check rotating
+    CRC32/CRC64/SHA-256 on id mod 3, then decompressed back through
+    ``codecs.decompress("xz", …)``, which verifies whichever check
+    the stream declares.
 
     Exactness: lossless, so the decoded text equals the document text
     verbatim — md5 + length are pure formulas the DuckDB oracle
     recomputes with no codec anywhere; the check-type column is a
-    closed form of the id. Multi-chunk/uncompressed-chunk/multistream
-    generality and the corruption surface are pinned in
-    tests/test_xz.py.
+    closed form of the id.
 
     Shape at 100 TB: archives are independent rows through one
     Arrow-batched stage, zero shuffle; within a file, blocks are the
     split unit (the index records them — why the format HAS one)."""
     import lzma
 
-    from data_warehouse_migration_spark.functions.xz import xz_decompress
+    from data_warehouse_migration_spark.functions import codecs
 
     _CHECKS = (
         (lzma.CHECK_CRC32, "crc32"),
@@ -1157,7 +1118,7 @@ def xz_archive_features(docs: DataFrame) -> DataFrame:
             raw, format=lzma.FORMAT_XZ, check=check,
             preset=1 if aid % 2 else 6,
         )
-        back = xz_decompress(blob).decode("utf-8")
+        back = codecs.decompress("xz", blob).decode("utf-8")
         return (aid, back, len(back), check_name, len(blob))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1423,10 +1384,11 @@ def lz4_archive_features(docs: DataFrame) -> DataFrame:
     )
 
 
-def snappy_archive_features(docs: DataFrame, raw_codec=None) -> DataFrame:
-    """Gate harness for Snappy archives (functions/snappy — the r14
-    post-seal rung; VERDICT r14 missing #1 gives it the registry
-    slot the sealed window couldn't). Snappy is Spark's DEFAULT
+def snappy_archive_features(docs: DataFrame) -> DataFrame:
+    """Gate harness for Snappy archives (raw blocks through
+    functions/codecs, the framing format through functions/snappy —
+    the r14 post-seal rung; VERDICT r14 missing #1 gives it the
+    registry slot the sealed window couldn't). Snappy is Spark's DEFAULT
     parquet codec and the Kafka/HBase/LevelDB wire compressor — of
     the whole ladder it is the format a lake pipeline meets most
     often. The layout rotates on id mod 4 so both formats' whole
@@ -1439,22 +1401,11 @@ def snappy_archive_features(docs: DataFrame, raw_codec=None) -> DataFrame:
     alternating forced-UNCOMPRESSED (0x01) and compressed (0x00)
     encodings, a mid-stream repeated stream identifier — the shapes
     real writers emit that a round-trip through our own writer would
-    never produce. Every archive is authored by the engine's writers
-    and read back through the FULL decoder; ``n_chunks`` is COUNTED
+    never produce. Every archive is read back through the raw-block
+    decoder or the framing walk; ``n_chunks`` is COUNTED
     by walking the authored frame's chunk headers (raw format: 1),
     and the oracle recomputes it as pure ceil-division arithmetic on
     the text's byte length.
-
-    ``raw_codec`` is the codec seam (functions/codecs): a
-    :class:`~data_warehouse_migration_spark.functions.codecs.Codec`
-    for the raw block format replaces the engine encoder+decoder in
-    every leg — the framing layer only ever sees raw-format blocks,
-    so pyarrow's native snappy slots in unchanged. The identity test
-    (tests/test_codecs.py) pins row-for-row equal output engine vs
-    native; the throughput gap is measured in
-    SCALING_r15_native.json. Cross-engine pins live in
-    tests/test_snappy.py (pyarrow both directions, truncation sweep,
-    mutation fuzz).
 
     Exactness: lossless, so decoded text equals the document text
     verbatim — md5/length are pure formulas and n_chunks is
@@ -1466,19 +1417,13 @@ def snappy_archive_features(docs: DataFrame, raw_codec=None) -> DataFrame:
     self-checksummed) are the in-file split unit."""
     import struct
 
+    from data_warehouse_migration_spark.functions import codecs
     from data_warehouse_migration_spark.functions.snappy import (
         _STREAM_ID,
-        snappy_compress_raw,
-        snappy_decompress_raw,
         snappy_frame_compress,
         snappy_frame_decompress,
     )
     from data_warehouse_migration_spark.functions.tfrecord import masked_crc
-
-    if raw_codec is None:
-        comp, decomp = snappy_compress_raw, snappy_decompress_raw
-    else:
-        comp, decomp = raw_codec.compress, raw_codec.decompress
 
     def count_data_chunks(blob: bytes) -> int:
         pos, n, count = 0, len(blob), 0
@@ -1496,7 +1441,7 @@ def snappy_archive_features(docs: DataFrame, raw_codec=None) -> DataFrame:
         for idx, i in enumerate(range(0, len(raw), 256)):
             part = raw[i : i + 256]
             crc = struct.pack("<I", masked_crc(part))
-            c = comp(part)
+            c = codecs.compress("snappy", part)
             if idx % 2 == 0 or len(c) >= len(part):
                 body, ctype = crc + part, 0x01
             else:
@@ -1510,17 +1455,17 @@ def snappy_archive_features(docs: DataFrame, raw_codec=None) -> DataFrame:
         raw = text.encode("utf-8")
         leg = aid % 4
         if leg == 0:
-            blob = comp(raw)
-            back = decomp(blob, None)
+            blob = codecs.compress("snappy", raw)
+            back = codecs.decompress("snappy", blob)
             n_chunks = 1
         else:
             if leg == 1:
-                blob = snappy_frame_compress(raw, raw_compress=comp)
+                blob = snappy_frame_compress(raw)
             elif leg == 2:
-                blob = snappy_frame_compress(raw, chunk=100, raw_compress=comp)
+                blob = snappy_frame_compress(raw, chunk=100)
             else:
                 blob = hand_frame(raw)
-            back = snappy_frame_decompress(blob, raw_decompress=decomp)
+            back = snappy_frame_decompress(blob)
             n_chunks = count_data_chunks(blob)
         return (aid, back.decode("utf-8"), n_chunks, len(blob))
 

@@ -1451,24 +1451,18 @@ def media_png_decode(spark, sf_dir):
     """REAL PNG, value-attested end to end (VERDICT r9 action #5 —
     the next codec rung after baseline JPEG): per doc_id a
     deterministic 16x10 RGB raster is ENCODED to a full PNG container
-    (chunk grammar + our own CRC-32, zlib wrapper + our own Adler-32,
-    per-row filters cycling through ALL FIVE types 0-4, stored-deflate
-    for even ids / fixed-Huffman deflate for odd ids) and DECODED back
-    by the general decoder in functions/png — an own full RFC 1951
-    inflate (stored + fixed + dynamic Huffman + LZ77 back-references)
-    plus exact filter inversion — inside one Arrow-batched
-    mapInPandas.
+    (chunk grammar + CRC-32, zlib IDAT stream, per-row filters cycling
+    through ALL FIVE types 0-4, stored-deflate for even ids /
+    fixed-Huffman deflate for odd ids) and DECODED back by
+    functions/png — chunk walk, zlib inflate through functions/codecs,
+    exact filter inversion — inside one Arrow-batched mapInPandas.
 
     Exactness: PNG is lossless (mod-256 integer filters + entropy-only
     compression), so the round-trip is bit-exact for EVERY image and
     the decoded pixel sum equals the generator's closed form, which
     DuckDB recomputes with no codec anywhere. Any defect in chunk/CRC
-    parsing, either deflate block type, the Adler verify, or any
-    filter inverse breaks the equality. The inflate's generality
-    beyond our own encoders (dynamic-Huffman blocks, LZ77) is pinned
-    in tests/test_png_codec.py against real zlib.compress output as
-    an independent reference; zlib itself is never called in the
-    codec path. Ids ≡ 3 mod 7 route through the SUB-BYTE leg (r11,
+    parsing, the IDAT stream, or any filter inverse breaks the
+    equality. Ids ≡ 3 mod 7 route through the SUB-BYTE leg (r11,
     VERDICT r10 action #5): 4/2/1-bit palette indices, MSB-first
     packing, filters over the PACKED bytes, partial trailing bytes
     per Adam7 pass — the oracle's CASE branch recomputes that leg's
@@ -2021,7 +2015,7 @@ FROM built
 )
 def warc_ingest_extract(spark, sf_dir):
     """The crawl-ARCHIVE ingest path end to end under the hard gate
-    (functions/gzip_stream + functions/warc, r11 — the container a
+    (functions/codecs + functions/warc, r11 — the container a
     100 TB crawl actually arrives in): per document the harness
     BUILDS what a crawler hands us — the page synthesized from the
     doc's own text, framed as a full HTTP/1.1 response (chunked
@@ -2031,14 +2025,13 @@ def warc_ingest_extract(spark, sf_dir):
     OWN gzip member per the Common Crawl convention (deflate block
     strategy rotating stored/fixed/dynamic on id mod 3) — then READS
     IT ALL BACK: gzip member walk (RFC 1952 headers, CRC-32 + ISIZE
-    verified, reusing the PNG rung's attested RFC 1951 inflate) →
+    verified by zlib) →
     WARC Content-Length record framing → HTTP de-framing (chunk
     reassembly incl. the 0-chunk terminator) → HTTP content-coding
     reversal (r13: ``Content-Encoding`` rotates identity / gzip /
     zlib-wrapped deflate / BARE-stream deflate / zstd / br on id
     mod 6 — stored wire bytes are routinely compressed; the bare leg
-    exercises the browser-grade zlib sniff, and the zstd/br legs run
-    the round's two new rungs per-row) → HTML extraction.
+    exercises the browser-grade zlib sniff) → HTML extraction.
 
     Exactness: every layer is lossless, so the extracted text is the
     SAME pure string formula the ``html_text_extract`` gate attests,
@@ -2140,7 +2133,7 @@ def webdataset_shard_roundtrip(spark, sf_dir):
     ship in: samples as ADJACENT tar members sharing a basename
     key): per document the harness packs ``{id}.txt`` + ``{id}.cls``
     + ``{id}.json`` into a tar shard (gzipped whole for odd ids —
-    the ``.tar.gz`` composition over functions/gzip_stream), then
+    the ``.tar.gz`` composition, gzip from functions/codecs), then
     reads it back through the sample grouper. The shard layout
     rotates ustar / PAX / GNU on id mod 3 (r13): the extension legs
     put the sample key under a 160-char directory the ustar
@@ -4886,26 +4879,18 @@ FROM documents
 """,
 )
 def bz2_text_archive(spark, sf_dir):
-    """bzip2 archives under the hard gate (functions/bz2_stream —
-    r12): the BWT rung of the compression ladder, next to deflate
-    (PNG/gzip/zip), LZW (GIF/PDF), and Rice (FLAC) — and the
-    container format of Wikipedia dumps and many older crawl
-    segments. Per document the text round-trips through the engine's
-    own encoder and FULL decoder (RLE1 → BWT → MTF → RLE2 zero-runs →
-    selector-switched delta-coded Huffman; block + combined stream
-    CRCs verified, both the unreflected bzip2 CRC-32); odd ids ship
+    """bzip2 archives under the hard gate (bzip2 through
+    functions/codecs — r12): the container format of Wikipedia dumps
+    and many older crawl segments. Per document the text round-trips
+    through ``codecs.compress``/``codecs.decompress``; odd ids ship
     as TWO concatenated independent streams — the pbzip2/wiki-dump
     multistream layout that makes the format splittable, exercising
-    stream resynchronization.
+    the multistream walk.
 
     Exactness: lossless, so decoded text equals the document text
     verbatim — the oracle recomputes md5/length/stream-count with no
-    codec anywhere. Cross-engine generality is pinned in
-    tests/test_bz2_stream.py against CPython's libbz2 binding in
-    BOTH directions (we decode real multi-table multi-block libbz2
-    output; libbz2 accepts every stream we emit), plus the
-    corruption/randomized-bit raise surface the quarantine lane
-    routes.
+    codec anywhere. The corruption and truncation raise surface the
+    quarantine lane routes is pinned in tests/test_bz2_stream.py.
 
     Shape at 100 TB: archives are independent rows through one
     Arrow-batched mapInPandas, zero shuffle; multistream files split
@@ -5008,12 +4993,12 @@ FROM documents
 )
 def wikidump_extract(spark, sf_dir):
     """The WIKI-DUMP ingest composition under the hard gate
-    (functions/bz2_stream + functions/xml_text — r12): Wikipedia's
+    (bzip2 through functions/codecs + functions/xml_text — r12): Wikipedia's
     ``pages-articles.xml.bz2`` is the canonical open pretraining
     corpus, and its exact shape — multistream bzip2 around a
     MediaWiki export document — is built per document from the doc's
-    own text and read back end to end: bz2 stream-walk (both CRC
-    levels) → well-formed XML parse (prolog, two-attribute ``<text>``
+    own text and read back end to end: bz2 stream walk → well-formed
+    XML parse (prolog, two-attribute ``<text>``
     tags, entity decoding) → page extraction (title/ns/id/text from
     ``<revision><text>``).
 
@@ -5021,8 +5006,7 @@ def wikidump_extract(spark, sf_dir):
     the page text, so every output column is a pure formula over the
     documents table — the oracle recomputes them with no codec or
     parser anywhere. Parser well-formedness/adversarial pins and the
-    dump grammar live in tests/test_xml_text.py; the codec's
-    cross-engine pins in tests/test_bz2_stream.py.
+    dump grammar live in tests/test_xml_text.py.
 
     Shape at 100 TB: dumps are file-per-row here, stream-per-split in
     production (the multistream layout is WHY dump readers can seek);
@@ -5063,7 +5047,7 @@ def tfrecord_shard_roundtrip(spark, sf_dir):
     Castagnoli polynomial and the rotate+delta masking every TFRecord
     reader shares — both pinned against published check values in
     tests/test_tfrecord.py), gzipped whole for odd ids (the
-    .tfrecord.gz convention over the engine's own gzip), and read
+    .tfrecord.gz convention), and read
     back verifying all six CRCs.
 
     Exactness: framing is lossless and deterministic, so the text
@@ -5106,25 +5090,18 @@ FROM documents
 """,
 )
 def xz_text_archive(spark, sf_dir):
-    """xz/LZMA archives under the hard gate (functions/xz — r12): the
-    range-coder rung of the compression ladder (deflate = LZ77+
-    Huffman, bzip2 = BWT, LZW = dictionary, Rice = Golomb, LZMA =
-    context-modeled LZ77 under adaptive binary arithmetic coding) and
-    the container of source tarballs, kernel archives, and many dump
-    mirrors. DECODE-ONLY by design — ingest decodes what upstream
-    shipped — so the harness compresses each document's text with the
-    REFERENCE encoder (liblzma via the stdlib, presets rotating on id
-    parity, the block check rotating CRC32 / from-scratch CRC-64/XZ /
-    SHA-256 on id mod 3) and the engine's own decoder takes it all
-    the way back: stream+block header CRCs, LZMA2 chunk walk, the
-    full LZMA range decoder, block-check verification, index-vs-
-    blocks reconciliation.
+    """xz/LZMA archives under the hard gate (xz through
+    functions/codecs — r12): the container of source tarballs, kernel
+    archives, and many dump mirrors. The harness compresses each
+    document's text with liblzma (presets rotating on id parity, the
+    block check rotating CRC32 / CRC-64 / SHA-256 on id mod 3) and
+    ``codecs.decompress`` takes it back, verifying the declared
+    check.
 
     Exactness: lossless, so md5/length are pure formulas over the
     documents table the oracle recomputes with no codec anywhere.
-    Multi-chunk, uncompressed-chunk, multistream, CRC64 vectors,
-    corruption raises, and the BCJ honest-raise are pinned in
-    tests/test_xz.py.
+    Multistream, padding, check types, corruption and truncation
+    raises are pinned in tests/test_xz.py.
 
     Shape at 100 TB: archives are independent rows through one
     Arrow-batched stage, zero shuffle; blocks are the in-file split
@@ -5301,12 +5278,11 @@ def snappy_text_archive(spark, sf_dir):
     shipped codec without a per-row registry gate). Snappy is
     Spark's DEFAULT parquet codec and the Kafka/HBase/LevelDB wire
     compressor — the lake-native rung of the ladder, the format a
-    training-data pipeline meets most often. Like LZ4 it is LZ77
-    with no entropy stage (tag bytes instead of token nibbles), so
-    BOTH directions are engine code.
+    training-data pipeline meets most often.
 
-    Per document the text round-trips through the engine's own
-    writers and FULL decoder, the layout rotating on id mod 4: bare
+    Per document the text round-trips through raw snappy blocks
+    (functions/codecs, pyarrow's snappy) and the framing format
+    (functions/snappy), the layout rotating on id mod 4: bare
     raw-format block (the parquet-page shape) / framed stream at the
     default 64 KiB chunk / framed at chunk=100 so small text forces
     a real multi-chunk walk with per-chunk masked CRC-32C / a
@@ -5315,14 +5291,9 @@ def snappy_text_archive(spark, sf_dir):
     repeated mid-stream stream identifier. ``n_chunks`` is counted
     from the authored frame's chunk headers; decoded text equals the
     document text verbatim, so md5/length/chunk-count are pure
-    formulas the oracle recomputes with no codec anywhere.
-
-    The harness carries the codec seam (functions/codecs): pyarrow's
-    native snappy slots into the same raw-block call sites, pinned
-    row-for-row identical in tests/test_codecs.py and measured in
-    SCALING_r15_native.json — the native-at-scale posture as
-    evidence. Cross-engine pins live in tests/test_snappy.py
-    (pyarrow both directions, truncation sweep, mutation fuzz).
+    formulas the oracle recomputes with no codec anywhere. Framing
+    pins (truncation sweep, mutation fuzz, hostile chunks) live in
+    tests/test_snappy.py.
 
     Shape at 100 TB: archives are independent rows through one
     Arrow-batched stage, zero shuffle; framed chunks (≤64 KiB, each

@@ -3851,7 +3851,7 @@ def curation_pipeline_v8(spark, sf_dir):
        rotating on id mod 3), the response carrying a MESSY
        WARC-Target-URI.
     2. INGEST: gzip member walk → WARC record framing → HTTP
-       de-framing (functions/gzip_stream + functions/warc).
+       de-framing (functions/codecs + functions/warc).
     3. POLITENESS: canonicalize the target URI (functions/url), take
        the robots verdict on the canonical path (functions/robots —
        the id-rotating probe policy, so exactly the id mod 4 ∈ {1,3}

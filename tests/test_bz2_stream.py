@@ -1,7 +1,7 @@
-"""bzip2 codec (functions/bz2_stream): own round-trip, cross-pins
-against CPython's stdlib ``bz2`` (the reference libbz2) in BOTH
-directions, multi-block and multi-stream layouts, and the
-corruption/unsupported raise surface the quarantine lane routes."""
+"""bzip2 through functions/codecs: round-trips, real multi-block
+libbz2 streams through the chunked decode loop, multistream layouts,
+the output cap, and the corruption raise surface the quarantine lane
+routes (every failure a ValueError)."""
 
 from __future__ import annotations
 
@@ -11,17 +11,7 @@ import random
 
 import pytest
 
-from data_warehouse_migration_spark.functions.bz2_stream import (
-    _bwt_decode,
-    _bwt_encode,
-    _mtf_rle2_decode,
-    _mtf_rle2_encode,
-    _rle1_decode,
-    _rle1_encode,
-    bz2_compress,
-    bz2_crc32,
-    bz2_decompress,
-)
+from data_warehouse_migration_spark.functions import codecs
 
 CASES = [
     b"",
@@ -29,29 +19,37 @@ CASES = [
     b"banana",
     b"hello world " * 50,
     bytes(range(256)) * 3,
-    b"a" * 300,          # deep RLE1 runs (4-byte escape + count)
-    b"ababab" * 200,     # high-repetition BWT ties
+    b"a" * 300,
+    b"ababab" * 200,
     ("the quick brown fox jumps over the lazy dog " * 40).encode(),
 ]
+
+
+def bz2_compress(raw: bytes) -> bytes:
+    return codecs.compress("bz2", raw)
+
+
+def bz2_decompress(blob: bytes, max_output: int | None = None) -> bytes:
+    return codecs.decompress("bz2", blob, max_output)
 
 
 def test_own_roundtrip():
     for c in CASES:
         assert bz2_decompress(bz2_compress(c)) == c, len(c)
-    assert bz2_decompress(bz2_compress(os.urandom(2000))) is not None
+    noise = os.urandom(2000)
+    assert bz2_decompress(bz2_compress(noise)) == noise
 
 
 def test_stdlib_decodes_our_streams():
-    """libbz2 (via stdlib bz2) is the reference decoder — it must
-    accept every stream our encoder emits, including the empty one."""
+    """libbz2's one-shot decoder accepts every stream the module
+    emits, including the empty one."""
     for c in CASES:
         assert stdlib_bz2.decompress(bz2_compress(c)) == c, len(c)
 
 
 def test_we_decode_stdlib_streams():
-    """The decode side must handle REAL libbz2 output: multiple
-    Huffman tables, selector MTF, and (for the 300k case) multiple
-    blocks per stream."""
+    """Real libbz2 output at both block sizes, including the 300k case
+    that spans several blocks per stream, through the chunked loop."""
     random.seed(7)
     big = bytes(random.randrange(4) for _ in range(300_000))
     for c in CASES + [big]:
@@ -72,40 +70,10 @@ def test_multistream_concatenation():
         + stdlib_bz2.compress(b"|third")
     )
     assert bz2_decompress(blob) == b"first|second|third"
-
-
-def test_bwt_known_answer():
-    last, ptr = _bwt_encode(b"banana")
-    assert (last, ptr) == (b"nnbaaa", 3)
-    assert _bwt_decode(last, ptr) == b"banana"
-
-
-def test_rle1_escape_boundary():
-    # exactly 4 equal bytes → escape with count 0; 259 = max run
-    assert _rle1_encode(b"aaaa") == b"aaaa\x00"
-    assert _rle1_decode(b"aaaa\x00") == b"aaaa"
-    run = b"b" * 259
-    assert _rle1_decode(_rle1_encode(run)) == run
-    with pytest.raises(ValueError, match="count byte"):
-        _rle1_decode(b"cccc")  # escape truncated before its count
-
-
-def test_mtf_rle2_zero_runs():
-    # bijective base-2 RUNA/RUNB: lengths 1..6 all survive
-    used = [97, 98]
-    for k in range(1, 7):
-        data = b"a" * k + b"b"
-        syms = _mtf_rle2_encode(data, used)
-        eob = len(used) + 1
-        assert _mtf_rle2_decode(syms + [eob], used, eob) == data
-
-
-def test_crc_is_the_unreflected_variant():
-    # bzip2's CRC differs from zlib's: poly 0x04C11DB7 MSB-first
-    import zlib
-
-    assert bz2_crc32(b"123456789") == 0xFC891918
-    assert bz2_crc32(b"123456789") != zlib.crc32(b"123456789")
+    # stdlib's one-shot form silently drops bytes after the last
+    # stream; the walk refuses them
+    with pytest.raises(ValueError):
+        bz2_decompress(blob + b"BZh9junk")
 
 
 def test_corruption_raises_valueerror():
@@ -115,99 +83,64 @@ def test_corruption_raises_valueerror():
         "flipped block byte": good[:14] + bytes([good[14] ^ 0xFF]) + good[15:],
         "bad magic": b"XX" + good[2:],
         "bad level": good[:3] + b"0" + good[4:],
+        "empty": b"",
     }
     for why, blob in muts.items():
-        with pytest.raises((ValueError, NotImplementedError)), \
-             _noop_ctx(why):
+        with pytest.raises(ValueError):
             bz2_decompress(blob)
-
-
-def _noop_ctx(_why):
-    import contextlib
-
-    return contextlib.nullcontext()
+            pytest.fail(why)
 
 
 def test_randomized_bit_rejected_honestly():
-    """Set the deprecated randomized bit in a valid stream: the
-    decoder must refuse with the reason, not emit garbage. The bit
-    sits right after the 32-bit block CRC, i.e. bit 32 of the block
-    body at byte 4+6+4 = offset 14·8+... locate it via the encoder's
-    fixed layout: 4-byte header, 6-byte magic, 4-byte CRC → bit 112."""
-    good = bz2_compress(b"some text to compress")
-    bit = (4 + 6 + 4) * 8  # randomized flag position
-    byte_i, bit_i = divmod(bit, 8)
+    """Set the deprecated randomized bit in a valid stream (bit 112:
+    4-byte header, 6-byte block magic, 4-byte block CRC): the block
+    then de-randomizes to different bytes (the first flip lands at
+    offset 618, so the text is longer than that) and its CRC must
+    refuse it, not emit garbage."""
+    good = bz2_compress(b"some text to compress " * 50)
+    byte_i, bit_i = divmod((4 + 6 + 4) * 8, 8)
     flipped = (
         good[:byte_i]
         + bytes([good[byte_i] | (0x80 >> bit_i)])
         + good[byte_i + 1 :]
     )
-    with pytest.raises(NotImplementedError, match="randomized"):
+    with pytest.raises(ValueError):
         bz2_decompress(flipped)
 
 
-def test_hostile_zero_run_bounded_before_allocation():
-    """~40 RUNA symbols encode a bijective-base-2 zero run near 2^40
-    (a terabyte request from a few dozen input bytes). The decoder
-    must raise at the format's 100k·level block cap WHILE the run
-    accumulates — before any allocation — instead of OOM-killing the
-    executor (ADVICE r12)."""
-    from data_warehouse_migration_spark.functions.bz2_stream import (
-        _BLOCK_MAGIC,
-        _EOS_MAGIC,
-        _BitWriter,
-        _canonical_codes,
-    )
+#: ~40 RUNA symbols encoding a bijective-base-2 zero run near 2^40 —
+#: a terabyte request from a few dozen bytes (level-1 block, one-symbol
+#: alphabet, zeroed CRCs)
+_HOSTILE_ZERO_RUN = bytes.fromhex(
+    "425a68313141592653590000000000000040000200200020a0280000000000"
+    "c5dc914e14240000000000"
+)
 
-    syms = [0] * 40 + [2]  # 40 RUNA then EOB
-    lengths = [1, 2, 2]
-    codes = _canonical_codes(lengths)
-    bw = _BitWriter()
-    bw.write(0x425A68, 24)
-    bw.write(0x31, 8)  # level 1 → cap 100_000
-    bw.write(_BLOCK_MAGIC, 48)
-    bw.write(0, 32)  # block CRC (never reached)
-    bw.write(0, 1)  # not randomized
-    bw.write(0, 24)  # origPtr
-    bw.write(1 << 15, 16)  # MSB-first: group 0 used
-    bw.write(1 << 10, 16)  # byte 0x05 used (one-symbol alphabet)
-    bw.write(2, 3)  # nGroups
-    bw.write(1, 15)  # one selector
-    bw.write(0, 1)  # selector 0
-    for _ in range(2):
-        cur = lengths[0]
-        bw.write(cur, 5)
-        for ln in lengths:
-            while cur < ln:
-                bw.write(0b10, 2)
-                cur += 1
-            while cur > ln:
-                bw.write(0b11, 2)
-                cur -= 1
-            bw.write(0, 1)
-    for s in syms:
-        bw.write(codes[s], lengths[s])
-    bw.write(_EOS_MAGIC, 48)
-    bw.write(0, 32)
-    with pytest.raises(ValueError, match="cap"):
-        bz2_decompress(bw.getvalue())
+
+def test_hostile_zero_run_bounded_before_allocation():
+    """The decoder must refuse the run at the format's 100k·level
+    block limit instead of allocating it (ADVICE r12)."""
+    import tracemalloc
+
+    tracemalloc.start()
+    try:
+        with pytest.raises(ValueError):
+            bz2_decompress(_HOSTILE_ZERO_RUN)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < 16 << 20
 
 
 def test_legit_rle1_expansion_exceeds_cap_fine():
-    """The cap guards the BWT block, not the RLE1-expanded output: a
-    long zero run decodes to far more than 100k·level bytes and must
-    still round-trip (the post-BWT expansion is intrinsically
-    bounded)."""
+    """A long zero run decodes to far more than one 100k·level block
+    and must still round-trip, exactly at its own size as the cap."""
     data = b"\x00" * 500_000
-    blob = bz2_compress(data, level=1)
-    assert bz2_decompress(blob) == data
-    assert stdlib_bz2.decompress(blob) == data
+    blob = stdlib_bz2.compress(data, 1)
+    assert bz2_decompress(blob, max_output=len(data)) == data
 
 
 def test_output_cap_binds_during_decode():
-    """ADVICE r14: max_output threads into the RLE1 expansion, so a
-    high-amplification stream raises before allocating past the cap
-    (not after a full decode)."""
     raw = b"\x00" * (4 << 20)  # ~51x-amplifying all-runs input
     blob = stdlib_bz2.compress(raw)
     assert bz2_decompress(blob, max_output=len(raw)) == raw

@@ -81,14 +81,19 @@ def test_keep_verdict_rides_on_integer_score(spark):
     assert bad == 0
 
 
-def test_classifier_plan_is_zero_shuffle(spark):
+def test_classifier_plan_has_no_keyed_exchange(spark):
+    """Scoring is row-local: the only exchange allowed is the
+    round-robin widen of the narrow fixture scan (the WIDEN_ONLY
+    contract in tests/test_plan_guards.py), never a hash or range
+    shuffle an operator keys on."""
     from data_warehouse_migration_spark.catalog import REGISTRY
 
     df = REGISTRY["quality_classifier_scores"].spark_fn(
         spark, "/root/testdata/sf0.001"
     )
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert len(re.findall(r"Exchange", plan)) == 0
+    kinds = set(re.findall(r"\bExchange (\w+)", plan))
+    assert kinds <= {"RoundRobinPartitioning"}, plan
 
 
 # --- Hypothesis properties -------------------------------------------------

@@ -1,205 +1,161 @@
-"""The codec seam (functions/codecs — VERDICT r14 missing #2): the
-native-codec slot-in as EVIDENCE, not posture. Three layers:
+"""The codec module (functions/codecs): one compress/decompress pair
+per format on the container's native libraries (zstd/lz4 on the
+engine's own decoders). Four contracts:
 
-1. byte-level identity: engine compress → native decompress and
-   native compress → engine decompress are the identity on a mixed
-   corpus, for every format with an in-container native twin;
-2. harness identity: the snappy gate harness and read_warc_any
-   produce ROW-FOR-ROW / record-for-record identical output with the
-   native codec swapped in at the same call sites;
-3. cap contract: native decoders honor max_output like the engine's.
-
-The measured throughput gap lives in SCALING_r15_native.json
-(tools/scaling_probe_native.py)."""
+1. every format round-trips, and agrees with the reference library's
+   own one-shot API in both directions;
+2. the output cap binds DURING decode for every format: a 64 MiB
+   bomb under a 1 MiB cap raises with a memory peak of the cap plus
+   a few decode chunks, never the bomb's size;
+3. every malformed input — truncated, bit-flipped, wrong magic,
+   trailing garbage — surfaces as ValueError, never a library class;
+4. unknown formats are refused.
+"""
 
 from __future__ import annotations
 
+import bz2
+import gzip
 import random
+import tracemalloc
 
+import pyarrow as pa
 import pytest
 
-from data_warehouse_migration_spark.functions.codecs import (
-    available_cli,
-    available_native,
-    get_codec,
-)
+from data_warehouse_migration_spark.functions import codecs
 
 _RNG = random.Random(0xC0DEC)
 
 CORPUS = [
     b"",
     b"a",
-    b"hello codec seam " * 200,
+    b"hello codec module " * 200,
     bytes(range(256)) * 16,
     b"\x00" * 50_000,
     _RNG.randbytes(30_000),
     ("def f(x):\n    return x + 1\n" * 500).encode(),
 ]
 
-# engine has no xz encoder; its br encoder is the stored subset
-# (valid brotli any implementation decodes, so both directions hold)
-BOTH_DIRECTIONS = ["gzip", "snappy", "bz2", "br"]
+#: format → (reference one-shot compress, reference one-shot decompress)
+REFERENCE = {
+    "gzip": (lambda b: gzip.compress(b, mtime=0), lambda b, n: gzip.decompress(b)),
+    "bz2": (bz2.compress, lambda b, n: bz2.decompress(b)),
+    "snappy": (
+        lambda b: pa.compress(b, codec="snappy", asbytes=True),
+        lambda b, n: pa.decompress(b, n, codec="snappy", asbytes=True),
+    ),
+    "br": (
+        lambda b: pa.Codec("brotli", 5).compress(b, asbytes=True),
+        lambda b, n: pa.decompress(b, n, codec="brotli", asbytes=True),
+    ),
+}
 
 
 def test_native_twins_present_here():
-    # this container bakes in zlib/gzip, bz2, lzma, pyarrow, and the
-    # libbrotli .so pair (ctypes) — the probe and identity tests
-    # below must actually run
-    assert available_native() == ["br", "bz2", "gzip", "snappy", "xz"]
+    # every library behind the module is baked into this container
+    assert codecs.FORMATS == (
+        "deflate", "zlib", "gzip", "bz2", "xz", "br", "snappy", "zstd", "lz4",
+    )
+    for fmt in codecs.FORMATS:
+        for blob in CORPUS:
+            packed = codecs.compress(fmt, blob)
+            assert codecs.decompress(fmt, packed) == blob, (fmt, len(blob))
 
 
-@pytest.mark.parametrize("fmt", BOTH_DIRECTIONS)
+@pytest.mark.parametrize("fmt", sorted(REFERENCE))
 def test_cross_identity_both_directions(fmt):
-    eng, nat = get_codec(fmt, "engine"), get_codec(fmt, "native")
+    ref_comp, ref_decomp = REFERENCE[fmt]
     for blob in CORPUS:
-        assert nat.decompress(eng.compress(blob)) == blob, (fmt, len(blob))
-        assert eng.decompress(nat.compress(blob)) == blob, (fmt, len(blob))
+        assert ref_decomp(codecs.compress(fmt, blob), len(blob)) == blob, fmt
+        assert codecs.decompress(fmt, ref_comp(blob)) == blob, fmt
 
 
-def test_xz_native_compress_engine_decode():
-    eng, nat = get_codec("xz", "engine"), get_codec("xz", "native")
-    assert eng.compress is None  # decode-only by design
-    for blob in CORPUS:
-        packed = nat.compress(blob)
-        assert eng.decompress(packed) == blob
-        assert nat.decompress(packed) == blob
+#: the engine decoders' own output unit: a zstd block, an lz4 frame
+#: block (pyarrow's default); the library formats run at codecs.CHUNK
+_DECODE_UNIT = {"zstd": 128 << 10, "lz4": 64 << 10}
 
 
-@pytest.mark.parametrize("fmt", ["gzip", "snappy", "bz2", "xz", "br"])
+def _bomb(fmt: str, n: int) -> bytes:
+    zeros = bytes(n)
+    if fmt in _DECODE_UNIT:
+        # the engine encoders are pure Python; libzstd/liblz4 pack
+        # 64 MiB in milliseconds
+        return pa.compress(zeros, codec=fmt, asbytes=True)
+    return codecs.compress(fmt, zeros)
+
+
+def _peak(fn) -> int:
+    tracemalloc.start()
+    try:
+        fn()
+        return tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+
+
+@pytest.mark.parametrize("fmt", codecs.FORMATS)
 def test_native_cap_contract(fmt):
-    nat = get_codec(fmt, "native")
-    comp = nat.compress or get_codec(fmt, "engine").compress
-    blob = comp(b"z" * 10_000)
-    assert nat.decompress(blob, max_output=10_000) == b"z" * 10_000
+    """The cap is exact at the boundary, and binds while decoding: a
+    64 MiB stream of zeros under a 1 MiB cap must raise ValueError
+    with a tracemalloc peak of the decoder's fixed state (its window
+    and tables, measured on a tiny stream) plus the cap plus four
+    decode units — the retained last unit and the library's in-flight
+    input/output buffers. A decoder that checked only after a
+    one-shot decode would peak at 64 MiB."""
+    small = _bomb(fmt, 10_000)
+    assert codecs.decompress(fmt, small, max_output=10_000) == bytes(10_000)
     with pytest.raises(ValueError, match="cap"):
-        nat.decompress(blob, max_output=9_999)
+        codecs.decompress(fmt, small, max_output=9_999)
+
+    cap = 1 << 20
+    bomb = _bomb(fmt, 64 << 20)
+    state = _peak(lambda: codecs.decompress(fmt, _bomb(fmt, 100), cap))
+
+    def decode():
+        with pytest.raises(ValueError, match="cap"):
+            codecs.decompress(fmt, bomb, max_output=cap)
+
+    unit = _DECODE_UNIT.get(fmt, codecs.CHUNK)
+    assert _peak(decode) <= state + cap + 4 * unit
+
+
+def _sample(fmt: str) -> bytes:
+    return codecs.compress(fmt, b"error class probe, every format " * 40)
+
+
+@pytest.mark.parametrize("fmt", codecs.FORMATS)
+def test_error_class_per_format(fmt):
+    blob = _sample(fmt)
+    # every strict prefix, then wrong magic and trailing garbage
+    for cut in range(1, len(blob)):
+        with pytest.raises(ValueError):
+            codecs.decompress(fmt, blob[:cut])
+            pytest.fail(f"prefix {cut} of {len(blob)} decoded")
+    for bad in (b"\xff\xff\xff\xff" + blob[4:], blob + b"garbage!"):
+        with pytest.raises(ValueError):
+            codecs.decompress(fmt, bad)
+    # bit flips: formats without a checksum may decode to other bytes,
+    # but nothing escapes as a non-ValueError class
+    rng = random.Random(fmt)
+    for _ in range(200):
+        flipped = bytearray(blob)
+        flipped[rng.randrange(len(blob))] ^= 1 << rng.randrange(8)
+        try:
+            codecs.decompress(fmt, bytes(flipped), max_output=1 << 16)
+        except ValueError:
+            pass
 
 
 def test_unknown_codec_rejected():
-    with pytest.raises(KeyError, match="no native codec"):
-        get_codec("zstd", "native")  # no in-container binding: absent
+    with pytest.raises(ValueError, match="unknown codec format"):
+        codecs.compress("lzo", b"x")
+    with pytest.raises(ValueError, match="unknown codec format"):
+        codecs.decompress("lzo", b"x")
+    with pytest.raises(ValueError, match="block strategy"):
+        codecs.compress("bz2", b"x", "stored")
 
 
-def test_cli_twins_present_here():
-    # the reference zstd/lz4 CLIs are baked into this container (the
-    # same binaries the codec test suites cross-pin against), so the
-    # out-of-process tier below must actually run
-    assert available_cli() == ["lz4", "zstd"]
-
-
-@pytest.mark.parametrize("fmt", ["zstd", "lz4"])
-def test_cli_cross_identity_both_directions(fmt):
-    """The engine's own compressed frames decode through the vendor
-    CLI and vice versa — the out-of-process slot-in for the two
-    formats with no in-container Python binding."""
-    eng, cli = get_codec(fmt, "engine"), get_codec(fmt, "cli")
-    for blob in CORPUS:
-        assert cli.decompress(eng.compress(blob)) == blob, (fmt, len(blob))
-        assert eng.decompress(cli.compress(blob)) == blob, (fmt, len(blob))
-    packed = cli.compress(CORPUS[2])
-    assert packed == cli.compress(CORPUS[2])  # deterministic
-    assert cli.decompress(packed, max_output=len(CORPUS[2])) == CORPUS[2]
-    with pytest.raises(ValueError, match="cap"):
-        cli.decompress(packed, max_output=len(CORPUS[2]) - 1)
-
-
-def test_cli_garbage_raises_valueerror():
-    for fmt in ("zstd", "lz4"):
-        with pytest.raises(ValueError, match="failed"):
-            get_codec(fmt, "cli").decompress(b"\xff" * 64)
-
-
-def test_warc_transport_identity_engine_vs_cli():
-    """read_warc_any's zstd/lz4 transport branches consult the seam
-    too: record-for-record identical with the CLI twin swapped in."""
-    from data_warehouse_migration_spark.functions.warc import (
-        build_warc_record,
-        read_warc_any,
-    )
-
-    records = [
-        build_warc_record(
-            "response",
-            {"WARC-Target-URI": f"https://example.org/cli/{i}"},
-            f"cli transport payload {i} ".encode() * 40,
-        )
-        for i in range(5)
-    ]
-    plain = b"".join(records)
-    for fmt in ("zstd", "lz4"):
-        cli = get_codec(fmt, "cli")
-        blob = cli.compress(plain)  # upstream-ships-it direction
-        engine_out = read_warc_any(blob)
-        cli_out = read_warc_any(blob, codecs={fmt: cli})
-        assert engine_out == cli_out, fmt
-        assert len(engine_out) == 5, fmt
-
-
-def test_brotli_seam_reaches_the_large_window_extension():
-    """Both br seam implementations decode the large-window header
-    form (the engine via brotli_decompress_lw, the native twin via
-    the LARGE_WINDOW decoder parameter) — the fixture is the wbits=30
-    stream pinned in test_brotli_large_window.py."""
-    from tests.test_brotli_large_window import _PINNED_HEX, _PINNED_TEXT
-
-    blob = bytes.fromhex(_PINNED_HEX)
-    eng, nat = get_codec("br", "engine"), get_codec("br", "native")
-    assert eng.decompress(blob) == nat.decompress(blob) == _PINNED_TEXT
-
-
-def test_warc_transport_identity_engine_vs_native():
-    """read_warc_any with the native suite returns record-for-record
-    identical output on every transport with a native twin."""
-    from data_warehouse_migration_spark.functions.warc import (
-        build_warc_record,
-        read_warc_any,
-        write_warc_gz,
-    )
-
-    records = [
-        build_warc_record(
-            "response",
-            {"WARC-Target-URI": f"https://example.org/{i}"},
-            f"payload {i} ".encode() * 40,
-        )
-        for i in range(5)
-    ]
-    plain = b"".join(records)
-    suite = {f: get_codec(f, "native") for f in ("gzip", "bz2", "xz")}
-    transports = {
-        "gzip": write_warc_gz(records),
-        "bz2": get_codec("bz2", "engine").compress(plain),
-        "xz": get_codec("xz", "native").compress(plain),
-    }
-    for fmt, blob in transports.items():
-        engine_out = read_warc_any(blob)
-        native_out = read_warc_any(blob, codecs=suite)
-        assert engine_out == native_out, fmt
-        assert len(engine_out) == 5, fmt
-
-
-def test_snappy_gate_identity_engine_vs_native(spark, sf_dir):
-    """The registered gate's harness, run with pyarrow's native
-    snappy in place of the engine codec, is row-for-row identical —
-    the slot-in claim as a Spark-level pin."""
-    from data_warehouse_migration_spark.operators.web_extract import (
-        snappy_archive_features,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    key = lambda r: r["doc_id"]  # noqa: E731
-    eng_rows = sorted(snappy_archive_features(docs).collect(), key=key)
-    nat_rows = sorted(
-        snappy_archive_features(
-            docs, raw_codec=get_codec("snappy", "native")
-        ).collect(),
-        key=key,
-    )
-    assert len(eng_rows) == docs.count() > 0
-    assert eng_rows == nat_rows
-
-
-# --- property fuzz: the seam holds on arbitrary bytes, not just the
+# --- property fuzz: the module holds on arbitrary bytes, not just the
 # --- curated corpus ----------------------------------------------------------
 
 from hypothesis import HealthCheck, given, settings
@@ -216,11 +172,11 @@ _BLOBS = st.binary(min_size=0, max_size=8_192) | st.builds(
     max_examples=30, deadline=None,
     suppress_health_check=[HealthCheck.too_slow],
 )
-@given(blob=_BLOBS, fmt=st.sampled_from(BOTH_DIRECTIONS))
+@given(blob=_BLOBS, fmt=st.sampled_from(sorted(REFERENCE)))
 def test_property_cross_identity(blob, fmt):
-    eng, nat = get_codec(fmt, "engine"), get_codec(fmt, "native")
-    assert nat.decompress(eng.compress(blob)) == blob
-    assert eng.decompress(nat.compress(blob)) == blob
+    ref_comp, ref_decomp = REFERENCE[fmt]
+    assert ref_decomp(codecs.compress(fmt, blob), len(blob)) == blob
+    assert codecs.decompress(fmt, ref_comp(blob)) == blob
 
 
 @settings(
@@ -229,20 +185,20 @@ def test_property_cross_identity(blob, fmt):
 )
 @given(blob=_BLOBS, chunk=st.integers(min_value=1, max_value=65_536))
 def test_property_framed_snappy_with_native_raw_codec(blob, chunk):
-    """The framing layer is codec-agnostic: frames authored with the
-    NATIVE raw encoder decode through the ENGINE raw decoder and
-    vice versa, at any chunk size."""
+    """The framing layer round-trips at any chunk size, and every
+    compressed chunk body is a raw block the reference decodes."""
     from data_warehouse_migration_spark.functions.snappy import (
         snappy_frame_compress,
         snappy_frame_decompress,
     )
 
-    eng, nat = get_codec("snappy", "engine"), get_codec("snappy", "native")
-    framed_nat = snappy_frame_compress(blob, chunk, raw_compress=nat.compress)
-    framed_eng = snappy_frame_compress(blob, chunk, raw_compress=eng.compress)
-    for framed in (framed_nat, framed_eng):
-        assert snappy_frame_decompress(framed) == blob
-        assert (
-            snappy_frame_decompress(framed, raw_decompress=nat.decompress)
-            == blob
-        )
+    framed = snappy_frame_compress(blob, chunk)
+    assert snappy_frame_decompress(framed) == blob
+    pos = 10  # past the stream identifier
+    for i in range(0, len(blob), chunk):
+        part = blob[i : i + chunk]
+        clen = int.from_bytes(framed[pos + 1 : pos + 4], "little")
+        body = framed[pos + 8 : pos + 4 + clen]  # past the masked CRC
+        if framed[pos] == 0x00:
+            assert REFERENCE["snappy"][1](body, len(part)) == part
+        pos += 4 + clen

@@ -1,6 +1,6 @@
-"""gzip (RFC 1952) + WARC/1.1 + HTTP/1.1 framing pins. The stdlib
-``gzip``/``zlib`` modules are the independent reference for the
-compression layer (both directions); the WARC and HTTP layers are
+"""gzip (RFC 1952, through functions/codecs) + WARC/1.1 + HTTP/1.1
+framing pins. The stdlib ``gzip`` module is the independent reference
+for the member layer (both directions); the WARC and HTTP layers are
 pinned against hand-built byte layouts and adversarial framing."""
 
 from __future__ import annotations
@@ -8,15 +8,11 @@ from __future__ import annotations
 import gzip as sysgzip
 import io
 import struct
+import zlib
 
 import pytest
 
-from data_warehouse_migration_spark.functions.gzip_stream import (
-    gzip_compress,
-    gzip_decompress,
-    gzip_decompress_member,
-    gzip_members,
-)
+from data_warehouse_migration_spark.functions import codecs
 from data_warehouse_migration_spark.functions.warc import (
     build_http_response,
     build_warc_record,
@@ -34,6 +30,14 @@ BIN = bytes(range(256)) * 7
 # --- gzip ------------------------------------------------------------------
 
 
+def gzip_compress(raw: bytes, method: str = "dynamic") -> bytes:
+    return codecs.compress("gzip", raw, method)
+
+
+def gzip_decompress(blob: bytes) -> bytes:
+    return codecs.decompress("gzip", blob)
+
+
 @pytest.mark.parametrize("method", ["stored", "fixed", "dynamic"])
 def test_gzip_ours_decoded_by_stdlib(method):
     for raw in (RAW, BIN, b"", b"x"):
@@ -46,12 +50,17 @@ def test_gzip_stdlib_decoded_by_ours():
 
 
 def test_gzip_fname_both_directions():
-    blob = gzip_compress(RAW, fname="a.warc")
-    assert sysgzip.decompress(blob) == RAW
+    # a member carrying FNAME (what `gzip file` writes) decodes, and
+    # ours carries none: MTIME 0 and no name, so equal input → equal bytes
     buf = io.BytesIO()
     with sysgzip.GzipFile("crawl.warc", "wb", 6, buf, 1234.0) as f:
         f.write(RAW)
+    assert buf.getvalue()[3] & 8
     assert gzip_decompress(buf.getvalue()) == RAW
+    blob = gzip_compress(RAW)
+    assert blob[3] == 0 and blob[4:8] == b"\x00" * 4
+    assert blob == gzip_compress(RAW)
+    assert sysgzip.decompress(blob) == RAW
 
 
 def test_gzip_multi_member_walk():
@@ -60,9 +69,14 @@ def test_gzip_multi_member_walk():
         + sysgzip.compress(b"two")
         + gzip_compress(b"", "dynamic")
     )
-    assert gzip_members(blob) == [b"one", b"two", b""]
+    members = codecs.gzip_members(blob)
+    assert [m for m, _, _ in members] == [b"one", b"two", b""]
+    # member spans tile the file exactly
+    assert members[0][1] == 0 and members[-1][2] == len(blob)
+    assert all(a[2] == b[1] for a, b in zip(members, members[1:]))
     # stdlib agrees on concatenated-member semantics (§2.2)
     assert sysgzip.decompress(blob) == b"onetwo"
+    assert gzip_decompress(blob) == b"onetwo"
 
 
 def test_gzip_fextra_and_fcomment_skipped():
@@ -80,36 +94,37 @@ def test_gzip_fextra_and_fcomment_skipped():
 
 
 def test_gzip_fhcrc_verified():
-    import data_warehouse_migration_spark.functions.png as png
-
     body = gzip_compress(b"data", "fixed")
     head = b"\x1f\x8b\x08" + bytes([2]) + b"\x00" * 4 + b"\x00\xff"
-    hcrc = struct.pack("<H", png.crc32(head) & 0xFFFF)
+    hcrc = struct.pack("<H", zlib.crc32(head) & 0xFFFF)
     blob = head + hcrc + body[10:]
     assert gzip_decompress(blob) == b"data"
-    bad = head + struct.pack("<H", (png.crc32(head) & 0xFFFF) ^ 1) + body[10:]
-    with pytest.raises(ValueError, match="header CRC16"):
+    bad = head + struct.pack("<H", (zlib.crc32(head) & 0xFFFF) ^ 1) + body[10:]
+    with pytest.raises(ValueError, match="header crc"):
         gzip_decompress(bad)
 
 
 def test_gzip_malformed_raises():
     good = gzip_compress(RAW, "dynamic")
-    with pytest.raises(ValueError, match="magic"):
+    with pytest.raises(ValueError, match="header check"):
         gzip_decompress(b"\x1f\x8c" + good[2:])
-    with pytest.raises(ValueError, match="not deflate"):
+    with pytest.raises(ValueError, match="compression method"):
         gzip_decompress(good[:2] + b"\x07" + good[3:])
-    with pytest.raises(ValueError, match="reserved"):
+    with pytest.raises(ValueError, match="header flags"):
         gzip_decompress(good[:3] + b"\x40" + good[4:])
     # flip one payload bit → CRC-32 must catch it
     tampered = bytearray(good)
     tampered[12] ^= 1
     with pytest.raises(ValueError):
         gzip_decompress(bytes(tampered))
-    # wrong ISIZE
+    # wrong CRC-32, wrong ISIZE
+    bad_crc = good[:-8] + struct.pack("<I", zlib.crc32(RAW) ^ 1) + good[-4:]
+    with pytest.raises(ValueError, match="data check"):
+        gzip_decompress(bad_crc)
     bad_isize = good[:-4] + struct.pack("<I", len(RAW) + 1)
-    with pytest.raises(ValueError, match="ISIZE"):
+    with pytest.raises(ValueError, match="length check"):
         gzip_decompress(bad_isize)
-    with pytest.raises(ValueError, match="truncated"):
+    with pytest.raises(ValueError, match="end marker"):
         gzip_decompress(good[:-3])
     # trailing garbage after the last member
     with pytest.raises(ValueError):
@@ -338,9 +353,6 @@ def test_read_warc_any_dispatch():
 
     import pytest
 
-    from data_warehouse_migration_spark.functions.bz2_stream import (
-        bz2_compress,
-    )
     from data_warehouse_migration_spark.functions.lz4 import lz4_compress
     from data_warehouse_migration_spark.functions.warc import (
         build_warc_record,
@@ -359,7 +371,7 @@ def test_read_warc_any_dispatch():
     bare = rec
     variants = {
         "gzip": write_warc_gz([rec], method="dynamic"),
-        "bz2": bz2_compress(bare),
+        "bz2": codecs.compress("bz2", bare),
         "xz": lzma.compress(bare, format=lzma.FORMAT_XZ),
         "zstd": zstd_compress_stored(bare),
         "lz4": lz4_compress(bare),
@@ -428,11 +440,12 @@ def test_content_encoding_decoding():
     zlib-wrapped deflate, BARE-stream deflate (the misconfigured-
     server shape the browser sniff exists for), identity, the
     right-to-left multi-coding order, and case/whitespace laxity."""
-    from data_warehouse_migration_spark.functions.png import zlib_compress
     from data_warehouse_migration_spark.functions.warc import (
         decode_content_encoding,
-        parse_http_response_decoded,
     )
+
+    def zlib_compress(raw, method):
+        return codecs.compress("zlib", raw, method)
 
     body = b"<html><body><p>hello coded world</p></body></html>" * 4
     cases = {
@@ -446,7 +459,7 @@ def test_content_encoding_decoding():
         hdrs = {"Content-Encoding": token}
         assert decode_content_encoding(hdrs, wire) == body, token
     # bare RFC 1951 stream under the deflate token → the sniff path
-    raw_deflate = zlib_compress(body, method="dynamic")[2:-4]
+    raw_deflate = codecs.compress("deflate", body)
     assert (
         decode_content_encoding({"Content-Encoding": "deflate"}, raw_deflate)
         == body
@@ -474,17 +487,14 @@ def test_content_encoding_hostile_paths_quarantine_routable():
     )
 
     body = b"plain text that is not gzip"
-    with pytest.raises(ValueError, match="magic"):
+    with pytest.raises(ValueError, match="header check"):
         decode_content_encoding({"Content-Encoding": "gzip"}, body)
     with pytest.raises(ValueError):
         decode_content_encoding(
             {"Content-Encoding": "gzip"}, gzip_compress(body)[:-8]
         )
-    # zstd and br decode through the engine's own rungs (r13);
-    # garbage under either token still raises ValueError
-    from data_warehouse_migration_spark.functions.brotli_stream import (
-        brotli_compress_stored,
-    )
+    # zstd and br decode (r13); garbage under either token still
+    # raises ValueError
     from data_warehouse_migration_spark.functions.zstd import (
         zstd_compress_stored,
     )
@@ -499,14 +509,14 @@ def test_content_encoding_hostile_paths_quarantine_routable():
         decode_content_encoding({"Content-Encoding": "zstd"}, body)
     assert (
         decode_content_encoding(
-            {"Content-Encoding": "br"}, brotli_compress_stored(body)
+            {"Content-Encoding": "br"}, codecs.compress("br", body)
         )
         == body
     )
     with pytest.raises(ValueError):
-        # truncated stored stream: a mid-meta-block cut cannot parse
+        # truncated stream: a mid-meta-block cut cannot parse
         decode_content_encoding(
-            {"Content-Encoding": "br"}, brotli_compress_stored(body)[:-3]
+            {"Content-Encoding": "br"}, codecs.compress("br", body)[:-3]
         )
     with pytest.raises(ValueError, match="unknown content coding"):
         decode_content_encoding({"Content-Encoding": "compress"}, body)
@@ -523,15 +533,11 @@ def test_content_encoding_hostile_paths_quarantine_routable():
 
 def test_content_coding_chains_invert():
     """Random multi-coding chains (servers may stack codings; RFC
-    9110 lists them in application order): composing the engine's own
-    writers left-to-right must invert through the right-to-left
-    decode, for every chain the writers can express."""
+    9110 lists them in application order): composing the writers
+    left-to-right must invert through the right-to-left decode, for
+    every chain the writers can express."""
     import itertools
 
-    from data_warehouse_migration_spark.functions.brotli_stream import (
-        brotli_compress_stored,
-    )
-    from data_warehouse_migration_spark.functions.png import zlib_compress
     from data_warehouse_migration_spark.functions.warc import (
         decode_content_encoding,
     )
@@ -541,9 +547,9 @@ def test_content_coding_chains_invert():
 
     encoders = {
         "gzip": gzip_compress,
-        "deflate": lambda b: zlib_compress(b, method="dynamic"),
+        "deflate": lambda b: codecs.compress("zlib", b),
         "zstd": zstd_compress_stored,
-        "br": brotli_compress_stored,
+        "br": lambda b: codecs.compress("br", b),
     }
     body = b"stacked codings body " * 30
     for chain in itertools.permutations(encoders, 2):

@@ -402,10 +402,10 @@ def test_asciihex_and_runlength():
 def test_filter_chain_a85_then_flate():
     import base64
 
-    from data_warehouse_migration_spark.functions.png import zlib_compress
+    import zlib
 
     content = b"BT /F1 12 Tf 72 720 Td (chained) Tj ET"
-    stored = base64.a85encode(zlib_compress(content, "dynamic"), adobe=True)[2:]
+    stored = base64.a85encode(zlib.compress(content), adobe=True)[2:]
     pdf = bytearray(b"%PDF-1.4\n")
     objs = []
 

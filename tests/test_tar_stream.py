@@ -134,15 +134,14 @@ def test_webdataset_non_adjacent_rejected():
 
 
 def test_targz_composition():
-    from data_warehouse_migration_spark.functions.gzip_stream import (
-        gzip_compress,
-        gzip_decompress,
-    )
+    from data_warehouse_migration_spark.functions import codecs
 
     shard = tar_pack(MEMBERS)
-    assert tar_members(gzip_decompress(gzip_compress(shard, "dynamic"))) == MEMBERS
+    packed = codecs.compress("gzip", shard)
+    assert tar_members(codecs.decompress("gzip", packed)) == MEMBERS
     # stdlib reads our .tar.gz end to end
-    tf = tarfile.open(fileobj=io.BytesIO(gzip_compress(shard, "fixed")), mode="r:gz")
+    fixed = codecs.compress("gzip", shard, "fixed")
+    tf = tarfile.open(fileobj=io.BytesIO(fixed), mode="r:gz")
     assert [(m.name, tf.extractfile(m).read()) for m in tf.getmembers()] == MEMBERS
 
 

@@ -1,7 +1,7 @@
-"""xz/LZMA2/LZMA decoder (functions/xz): cross-pins against liblzma
-(CPython's ``lzma``) across presets and check types, multi-chunk and
-uncompressed-chunk LZMA2, multi-stream layout, CRC64 vectors, and the
-corruption/unsupported raise surface."""
+"""xz through functions/codecs (liblzma): every preset and check
+type, multi-chunk and uncompressed-chunk LZMA2, BCJ filter chains,
+multi-stream layout with stream padding, the output cap, and the
+corruption/truncation raise surface (every failure a ValueError)."""
 
 from __future__ import annotations
 
@@ -10,11 +10,7 @@ import os
 
 import pytest
 
-from data_warehouse_migration_spark.functions.xz import (
-    crc64_xz,
-    lzma2_decompress,
-    xz_decompress,
-)
+from data_warehouse_migration_spark.functions import codecs
 
 CASES = [
     b"",
@@ -25,20 +21,40 @@ CASES = [
     ("the quick brown fox jumps over the lazy dog " * 200).encode(),
 ]
 
+CHECKS = (lzma.CHECK_NONE, lzma.CHECK_CRC32, lzma.CHECK_CRC64, lzma.CHECK_SHA256)
+
+
+def xz_decompress(blob: bytes, max_output: int | None = None) -> bytes:
+    return codecs.decompress("xz", blob, max_output)
+
+
+def _declared_check(blob: bytes) -> int:
+    d = lzma.LZMADecompressor(lzma.FORMAT_XZ)
+    d.decompress(blob[:64], 1)
+    return d.check
+
 
 def test_decodes_liblzma_across_presets_and_checks():
     for c in CASES:
         for preset in (0, 1, 6, 9):
-            for check in (
-                lzma.CHECK_NONE,
-                lzma.CHECK_CRC32,
-                lzma.CHECK_CRC64,
-                lzma.CHECK_SHA256,
-            ):
+            for check in CHECKS:
                 blob = lzma.compress(
                     c, format=lzma.FORMAT_XZ, check=check, preset=preset
                 )
+                assert _declared_check(blob) == check
                 assert xz_decompress(blob) == c, (len(c), preset, check)
+    assert _declared_check(codecs.compress("xz", b"x")) == lzma.CHECK_CRC64
+
+
+def test_check_mismatch_raises_for_every_check_type():
+    for check in CHECKS[1:]:
+        blob = bytearray(lzma.compress(b"checked " * 50, check=check))
+        # the block check sits just before the index; flipping its
+        # last byte leaves the LZMA2 data intact
+        idx = blob.rindex(b"\x00", 0, len(blob) - 12)
+        blob[idx - 1] ^= 0x01
+        with pytest.raises(ValueError):
+            xz_decompress(bytes(blob))
 
 
 def test_multi_chunk_and_uncompressed_chunks():
@@ -61,12 +77,8 @@ def test_multistream_with_padding():
     assert xz_decompress(s1 + pad + s2) == b"first|second"
     # trailing padding after the last stream is legal if 4-aligned
     assert xz_decompress(s2 + b"\x00" * 4) == b"second"
-
-
-def test_crc64_vector():
-    # ECMA-182 reflected (CRC-64/XZ): published check value
-    assert crc64_xz(b"123456789") == 0x995DC9BBDF1939FA
-    assert crc64_xz(b"") == 0
+    with pytest.raises(ValueError, match="padding"):
+        xz_decompress(s2 + b"\x00" * 3)
 
 
 def test_corruption_raises():
@@ -77,66 +89,34 @@ def test_corruption_raises():
         "bad magic": b"XX" + good[2:],
         "flags flip": good[:7] + bytes([good[7] ^ 0x01]) + good[8:],
     }
+    muts["trailing garbage"] = good + b"garbage!"
     for why, blob in muts.items():
-        with pytest.raises((ValueError, NotImplementedError)):
+        with pytest.raises(ValueError):
             xz_decompress(blob)
+            pytest.fail(why)
 
 
-def test_bcj_chain_honest_raise():
+def test_bcj_chain_decodes():
     filt = [{"id": lzma.FILTER_X86}, {"id": lzma.FILTER_LZMA2, "preset": 6}]
-    blob = lzma.compress(
-        b"\xe8\x00\x00\x00\x00 call " * 50, format=lzma.FORMAT_XZ,
-        filters=filt,
-    )
-    with pytest.raises(NotImplementedError, match="BCJ"):
-        xz_decompress(blob)
-
-
-def test_lzma2_raw_reserved_control():
-    with pytest.raises(ValueError, match="reserved control"):
-        lzma2_decompress(b"\x7f")
-    with pytest.raises(ValueError, match="end marker"):
-        lzma2_decompress(b"")
-
-
-def test_dict_reset_restarts_position_contexts():
-    """pos_state and the lp literal context count from the LAST
-    DICTIONARY RESET (LzmaDec's processedPos), not the absolute
-    output start. liblzma never emits a mid-sequence reset, so build
-    one: an uncompressed dict-reset chunk of length k (k mod 2^pb ≠ 0)
-    followed by a liblzma raw chunk sequence whose first chunk resets
-    the dictionary again — liblzma itself adjudicates the composite
-    (ADVICE r12)."""
-    filters = [{"id": lzma.FILTER_LZMA2, "preset": 6}]
-    body = b"hello world, hello lzma, hello range coder " * 20
-    raw = lzma.compress(body, format=lzma.FORMAT_RAW, filters=filters)
-    assert raw[0] & 0xE0 == 0xE0  # first chunk: props + dict reset
-    for k in (1, 2, 3, 5, 7, 13):
-        pre = bytes([1, 0, k - 1]) + b"X" * k  # control 1 = dict reset
-        composite = pre + raw
-        ref = lzma.LZMADecompressor(
-            format=lzma.FORMAT_RAW, filters=filters
-        ).decompress(composite)
-        assert ref == b"X" * k + body  # conformant per liblzma
-        assert lzma2_decompress(composite) == ref, k
+    raw = b"\xe8\x00\x00\x00\x00 call " * 50
+    blob = lzma.compress(raw, format=lzma.FORMAT_XZ, filters=filt)
+    assert xz_decompress(blob) == raw
 
 
 def test_truncation_raises_valueerror_everywhere():
-    """Cutting a valid .xz at EVERY byte offset must raise ValueError
-    (or NotImplementedError), never IndexError/struct.error — the
-    quarantine lane attests reason classes and strict callers rely on
-    the documented exception surface (ADVICE r12)."""
+    """Cutting a valid .xz at EVERY byte offset must raise ValueError,
+    never a library class — the quarantine lane attests reason
+    classes and strict callers rely on the documented exception
+    surface (ADVICE r12)."""
     blob = lzma.compress(b"truncate me anywhere " * 30, preset=1)
     assert xz_decompress(blob)  # sanity: full blob decodes
     for cut in range(len(blob)):
-        with pytest.raises((ValueError, NotImplementedError)):
+        with pytest.raises(ValueError):
             xz_decompress(blob[:cut])
 
 
 def test_output_cap_binds_during_decode():
-    """ADVICE r14: max_output threads into the LZMA2 chunk walk and
-    is checked against each chunk's declared unpacked size before
-    the chunk expands."""
+    """ADVICE r14: the cap binds while the stream expands."""
     raw = b"\x00" * (4 << 20)
     blob = lzma.compress(raw, format=lzma.FORMAT_XZ)
     assert xz_decompress(blob, max_output=len(raw)) == raw
@@ -144,9 +124,6 @@ def test_output_cap_binds_during_decode():
         xz_decompress(blob, max_output=len(raw) - 1)
     with pytest.raises(ValueError, match="caller's cap"):
         xz_decompress(blob, max_output=1000)
-    # blocks without a declared compressed size walk the counting
-    # path — the cap threads there too (single small chunk keeps the
-    # fixture cheap)
     small = lzma.compress(b"q" * 5000, format=lzma.FORMAT_XZ)
     with pytest.raises(ValueError, match="caller's cap"):
         xz_decompress(small, max_output=4999)
