@@ -1,84 +1,18 @@
-"""Zstandard (RFC 8878) decoding from scratch — the modern corpus
-compression rung: ``.zst`` is what new public datasets actually ship
-in (HuggingFace corpora, Common Crawl index files, package mirrors),
-so a crawl engine without it mishandles the highest-frequency modern
-archive shape (VERDICT r12 missing #2). The format stacks the
-engine's existing ideas: FSE is the tabled form of the range coding
-LZMA does adaptively (functions/xz), the literal path is canonical
-Huffman like deflate (functions/png), and the LZ77 sequence layer
-adds the three-slot repeat-offset cache.
-
-The FULL decoder is the ingest surface; the engine-side WRITERS
-cover a spec subset the reference CLI accepts back: Raw/RLE block
-frames (stored), a real greedy-LZ77 encoder with — since r14 —
-HUFFMAN-COMPRESSED literal sections (canonical length-limited
-codes; tree descriptions in BOTH forms, direct 4-bit weights and
-FSE-compressed two-interleaved-state weights, so >128-symbol
-alphabets like UTF-8 text compress too; 1- and 4-stream layouts,
-RLE/raw fallbacks), per-register sequence-table SELECTION
-(Predefined / RLE / fitted FSE_Compressed by exact bit cost, 1-
-and 2-byte sequence counts, tables serialized via the ncount
-writer), dictionary-referencing frames (raw-content AND
-trained-format — `zstd_write_dictionary` authors §5 dictionaries
-whose entropy tables prime Treeless/Repeat first blocks), and the
-seekable format. A COMPETITIVE encoder (optimal parsing, lazy
-matching) stays reference territory by design — decoding is
-exactly specified, real ingest receives reference-encoder output,
-and tests cross-pin the decoder against the reference CLI across
-presets/levels/window shapes when it is present.
-
-Implemented per RFC 8878 + the zstd format notes:
-
-- frame header (descriptor flags, window descriptor exponent/
-  mantissa arithmetic, dictionary-ID fields, 1/2/4/8-byte frame
-  content size), skippable frames, multi-frame concatenation;
-- blocks: Raw, RLE, Compressed; the 128 KB block ceiling enforced
-  against hostile size fields before any allocation;
-- literals: Raw, RLE, Huffman-compressed and Treeless (table reuse),
-  single-stream and 4-stream layouts with the jump table; Huffman
-  tree descriptions both direct (4-bit weights) and FSE-compressed
-  (two interleaved states), the implied last weight recovered from
-  the power-of-two completion;
-- FSE: the variable-bit normalized-count reader (low-threshold
-  trick, zero-repeat flags), the spread-step table construction
-  ((tableSize>>1) + (tableSize>>3) + 3, "less than 1" symbols at the
-  top states), accuracy-log ceilings per register (LL 9 / ML 9 /
-  OF 8 / Huffman weights 6);
-- sequences: Predefined / RLE / FSE_Compressed / Repeat modes for
-  all three registers, the predefined distributions and baseline
-  tables from the RFC, the backward bitstream (sentinel padding
-  bit), state init order LL→OF→ML, extra-bit read order OF→ML→LL,
-  update order LL→ML→OF, and the three-slot repeat-offset rules
-  including the literals_length == 0 shift and the rep1-1 special;
-- sequence execution with overlapping matches; offsets are bounded
-  by decoded history plus, when a dictionary is supplied, the
-  dictionary content;
-- trained dictionaries (RFC 8878 §5, r14): magic/ID, the entropy
-  section (Huffman literals table, FSE tables in OF/ML/LL storage
-  order) priming the Repeat/Treeless modes of a frame's FIRST
-  block, the three initial repeat offsets (validated against the
-  content size), and content as virtual history before the frame;
-  raw-content dictionaries (no magic) are pure history. A frame
-  referencing a dictionary that was not supplied still raises
-  NotImplementedError honestly (quarantine-routable), and an ID
-  mismatch raises ValueError;
-- integrity: xxHash64 implemented from scratch (the content
-  checksum is its low 32 bits), frame content size verified.
-
-Untrusted-input hygiene: every size/count field is bounds-checked,
-reserved bits and block types raise, truncation raises ValueError —
-quarantine-routable like the rest of the ingest stack.
-
-Scale posture: archives are independent rows through one
-Arrow-batched stage, zero shuffle; within a file, frames (and the
-seekable-format skippable index, when present) are the split unit.
+"""The zstd seekable format: ordinary zstd frames plus a final
+skippable frame holding a seek table, so one large ``.zst`` splits
+into frames that independent tasks read by byte range. Each frame is
+written and read through :mod:`functions.codecs` (libzstd); this
+module only packs and parses the table, and carries ``xxh64`` for the
+table's per-frame checksums, which libzstd does not export.
 """
 
 from __future__ import annotations
 
 import struct
 
-# --- xxHash64 (from scratch — the frame checksum) ----------------------------
+from data_warehouse_migration_spark.functions import codecs
+
+# --- xxHash64 (the seek table's per-frame checksum) ----------------------------
 
 _P1 = 0x9E3779B185EBCA87
 _P2 = 0xC2B2AE3D27D4EB4F
@@ -133,1701 +67,26 @@ def xxh64(data: bytes, seed: int = 0) -> int:
     return h
 
 
-# --- bit readers --------------------------------------------------------------
-
-
-class _FwdBits:
-    """Forward little-endian LSB-first reader (FSE table descriptions)."""
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0  # bit position
-
-    def read(self, n: int) -> int:
-        end = self.pos + n
-        if end > len(self.data) * 8:
-            raise ValueError("zstd table description truncated")
-        out = 0
-        got = 0
-        p = self.pos
-        while got < n:
-            byte = self.data[p >> 3]
-            avail = 8 - (p & 7)
-            take = min(avail, n - got)
-            out |= ((byte >> (p & 7)) & ((1 << take) - 1)) << got
-            got += take
-            p += take
-        self.pos = end
-        return out
-
-    def bytes_consumed(self) -> int:
-        return (self.pos + 7) >> 3
-
-
-class _BackBits:
-    """Backward reader over a zstd bitstream: writing ends with a
-    sentinel 1 bit then zero padding to the byte, so the highest set
-    bit of the LAST byte marks where reading starts; bits are then
-    consumed downward."""
-
-    def __init__(self, data: bytes):
-        if not data:
-            raise ValueError("zstd bitstream empty")
-        if data[-1] == 0:
-            raise ValueError("zstd bitstream padding sentinel missing")
-        self.val = int.from_bytes(data, "little")
-        self.pos = (len(data) - 1) * 8 + data[-1].bit_length() - 1
-
-    def read(self, n: int) -> int:
-        self.pos -= n
-        if self.pos < 0:
-            raise ValueError("zstd bitstream over-read")
-        return (self.val >> self.pos) & ((1 << n) - 1)
-
-    def peek(self, n: int) -> int:
-        if self.pos >= n:
-            return (self.val >> (self.pos - n)) & ((1 << n) - 1)
-        return (self.val << (n - self.pos)) & ((1 << n) - 1)
-
-    def read_padded(self, n: int) -> int:
-        """Read that may run past the start (zeros shift in); the
-        caller checks ``pos`` afterwards — the FSE interleaved-state
-        termination rule needs exactly this."""
-        out = self.peek(n)
-        self.pos -= n
-        return out
-
-
-# --- FSE ----------------------------------------------------------------------
-
-
-def _fse_read_ncount(br: _FwdBits, max_symbol: int, max_log: int):
-    """Normalized counts per RFC 8878 §4.1.1: variable-bit values via
-    the low threshold trick, 2-bit zero-repeat flags after a 0."""
-    accuracy_log = br.read(4) + 5
-    if accuracy_log > max_log:
-        raise ValueError(
-            f"zstd FSE accuracy log {accuracy_log} exceeds cap {max_log}"
-        )
-    remaining = (1 << accuracy_log) + 1
-    threshold = 1 << accuracy_log
-    counts: list[int] = []
-    prev_zero = False
-    while remaining > 1:
-        if prev_zero:
-            while True:
-                rep = br.read(2)
-                counts.extend([0] * rep if rep < 3 else [0, 0, 0])
-                if rep < 3:
-                    break
-            prev_zero = False
-            if len(counts) > max_symbol + 1:
-                raise ValueError("zstd FSE counts exceed symbol range")
-            continue
-        k = threshold.bit_length() - 1  # threshold = 1 << k
-        max_small = (2 * threshold - 1) - remaining
-        low = br.read(k)
-        if low < max_small:
-            count = low
-        else:
-            extra = br.read(1)
-            full = low | (extra << k)
-            count = full - max_small if full >= threshold else full
-        count -= 1  # stored value 0 means "less than 1" (-1)
-        remaining -= 1 if count < 0 else count
-        counts.append(count)
-        if len(counts) > max_symbol + 1:
-            raise ValueError("zstd FSE counts exceed symbol range")
-        prev_zero = count == 0
-        while remaining > 1 and remaining < threshold:
-            threshold >>= 1
-    if remaining != 1:
-        raise ValueError("zstd FSE counts do not sum to table size")
-    return counts, accuracy_log
-
-
-class _FwdBitWriter:
-    """Forward little-endian LSB-first writer — the inverse of
-    :class:`_FwdBits` (FSE table descriptions are byte-padded)."""
-
-    def __init__(self):
-        self.acc = 0
-        self.n = 0
-        self.out = bytearray()
-
-    def write(self, v: int, nbits: int) -> None:
-        self.acc |= (v & ((1 << nbits) - 1)) << self.n
-        self.n += nbits
-        while self.n >= 8:
-            self.out.append(self.acc & 0xFF)
-            self.acc >>= 8
-            self.n -= 8
-
-    def finish(self) -> bytes:
-        if self.n:
-            self.out.append(self.acc & 0xFF)
-            self.acc = 0
-            self.n = 0
-        return bytes(self.out)
-
-
-def _fse_write_ncount(counts: list[int], accuracy_log: int) -> bytes:
-    """Serialize normalized counts — the exact inverse of
-    :func:`_fse_read_ncount` (r14): the low-threshold variable-bit
-    values, 2-bit zero-repeat flags after every zero, thresholds
-    shrinking as probability mass drains. Counts use the decoder's
-    convention (-1 = "less than 1"); they must sum (with -1 worth 1)
-    to ``1 << accuracy_log`` and end on the draining symbol."""
-    bw = _FwdBitWriter()
-    bw.write(accuracy_log - 5, 4)
-    remaining = (1 << accuracy_log) + 1
-    threshold = 1 << accuracy_log
-    i = 0
-    while remaining > 1:
-        if i >= len(counts):
-            raise ValueError("zstd FSE counts drain before the table fills")
-        c = counts[i]
-        i += 1
-        stored = c + 1
-        if stored < 0:
-            raise ValueError(f"zstd FSE count {c} below -1")
-        k = threshold.bit_length() - 1
-        max_small = (2 * threshold - 1) - remaining
-        if stored < max_small:
-            bw.write(stored, k)
-        elif stored < threshold:
-            bw.write(stored, k)   # low = stored >= max_small
-            bw.write(0, 1)        # extra: full = stored -> count = full
-        else:
-            full = stored + max_small
-            if full >= 2 * threshold:
-                raise ValueError(f"zstd FSE count {c} exceeds remaining")
-            bw.write(full & ((1 << k) - 1), k)
-            bw.write(full >> k, 1)
-        remaining -= 1 if c < 0 else c
-        while remaining > 1 and remaining < threshold:
-            threshold >>= 1
-        if c == 0 and remaining > 1:
-            # the reader now expects 2-bit repeat flags covering the
-            # run of FURTHER zeros (always at least one flag)
-            while True:
-                run = 0
-                while run < 3 and i < len(counts) and counts[i] == 0:
-                    run += 1
-                    i += 1
-                bw.write(run, 2)
-                if run < 3:
-                    break
-    if remaining != 1:
-        raise ValueError("zstd FSE counts do not sum to the table size")
-    return bw.finish()
-
-
-def _fse_build_table(counts: list[int], accuracy_log: int):
-    """(symbols, nbits, baseline) arrays of size 2**accuracy_log —
-    the spread-step construction, -1 symbols at the top states."""
-    size = 1 << accuracy_log
-    symbols = [0] * size
-    high = size - 1
-    for s, c in enumerate(counts):
-        if c == -1:
-            symbols[high] = s
-            high -= 1
-    step = (size >> 1) + (size >> 3) + 3
-    mask = size - 1
-    pos = 0
-    for s, c in enumerate(counts):
-        for _ in range(max(c, 0)):
-            symbols[pos] = s
-            pos = (pos + step) & mask
-            while pos > high:
-                pos = (pos + step) & mask
-    if pos != 0:
-        raise ValueError("zstd FSE table spread did not close")
-    next_state = [c if c > 0 else 1 for c in counts]
-    nbits = [0] * size
-    base = [0] * size
-    for i in range(size):
-        s = symbols[i]
-        x = next_state[s]
-        next_state[s] += 1
-        nb = accuracy_log - (x.bit_length() - 1)
-        nbits[i] = nb
-        base[i] = (x << nb) - size
-    return symbols, nbits, base
-
-
-def _fse_rle_table(symbol: int):
-    """Mode 1 (RLE): a 0-bit table pinned on one symbol."""
-    return [symbol], [0], [0]
-
-
-def _fse_table_from_stream(data: bytes, max_symbol: int, max_log: int):
-    br = _FwdBits(data)
-    counts, al = _fse_read_ncount(br, max_symbol, max_log)
-    return _fse_build_table(counts, al), al, br.bytes_consumed()
-
-
-# --- Huffman ------------------------------------------------------------------
-
-
-def _huf_table_from_weights(weights: list[int]):
-    """Prefix-peek table from explicit weights + the implied last
-    one: the 2^(w-1) mass is completed to the NEXT power of two by
-    the final symbol (RFC 8878 §4.2.1). Canonical assignment: codes
-    start at 0 for the longest length (weight 1), ascending weight,
-    natural symbol order within a weight — so the peek table fills
-    contiguously from index 0, each symbol taking 2^(w-1) cells."""
-    total = sum((1 << (w - 1)) for w in weights if w > 0)
-    if total == 0:
-        raise ValueError("zstd Huffman weights are all zero")
-    full = 1 << total.bit_length()  # strictly greater: implied w ≥ 1
-    left = full - total
-    if left & (left - 1):
-        raise ValueError("zstd Huffman implied weight is not a power of two")
-    weights = weights + [left.bit_length()]
-    max_bits = full.bit_length() - 1
-    if max_bits > 11:
-        raise ValueError(f"zstd Huffman max bits {max_bits} exceeds 11")
-    if max(weights) > max_bits:
-        raise ValueError("zstd Huffman weight exceeds table depth")
-    size = 1 << max_bits
-    table: list[tuple[int, int]] = [(-1, 0)] * size
-    pos = 0
-    for w in range(1, max_bits + 1):
-        for sym, sw in enumerate(weights):
-            if sw != w:
-                continue
-            nb = max_bits + 1 - w
-            cells = 1 << (w - 1)
-            for i in range(pos, pos + cells):
-                table[i] = (sym, nb)
-            pos += cells
-    if pos != size:
-        raise ValueError("zstd Huffman table mass mismatch")
-    return table, max_bits
-
-
-def _huf_read_tree(data: bytes):
-    """Huffman tree description → (peek table, max_bits, consumed)."""
-    if not data:
-        raise ValueError("zstd Huffman tree description truncated")
-    head = data[0]
-    if head < 128:
-        # FSE-compressed weights, two interleaved states
-        csize = head
-        if 1 + csize > len(data):
-            raise ValueError("zstd Huffman FSE weights truncated")
-        blob = data[1 : 1 + csize]
-        (syms, nbits, base), al, consumed = _fse_table_from_stream(
-            blob, 255, 6
-        )
-        bb = _BackBits(blob[consumed:])
-        s1 = bb.read(al)
-        s2 = bb.read(al)
-        weights: list[int] = []
-        while True:
-            weights.append(syms[s1])
-            v = bb.read_padded(nbits[s1])
-            if bb.pos < 0:
-                weights.append(syms[s2])
-                break
-            s1 = base[s1] + v
-            weights.append(syms[s2])
-            v = bb.read_padded(nbits[s2])
-            if bb.pos < 0:
-                weights.append(syms[s1])
-                break
-            s2 = base[s2] + v
-            if len(weights) > 255:
-                raise ValueError("zstd Huffman weight stream does not end")
-        table, max_bits = _huf_table_from_weights(weights)
-        return table, max_bits, 1 + csize
-    n = head - 127  # direct 4-bit weights
-    nbytes = (n + 1) // 2
-    if 1 + nbytes > len(data):
-        raise ValueError("zstd Huffman direct weights truncated")
-    weights = []
-    for i in range(n):
-        b = data[1 + (i >> 1)]
-        weights.append((b >> 4) if i % 2 == 0 else (b & 0x0F))
-    table, max_bits = _huf_table_from_weights(weights)
-    return table, max_bits, 1 + nbytes
-
-
-def _huf_decode_stream(table, max_bits: int, data: bytes, n_out: int) -> bytes:
-    bb = _BackBits(data)
-    out = bytearray()
-    while len(out) < n_out:
-        sym, nb = table[bb.peek(max_bits)]
-        if sym < 0:
-            raise ValueError("zstd Huffman code not in table")
-        bb.pos -= nb
-        if bb.pos < 0:
-            raise ValueError("zstd Huffman stream over-read")
-        out.append(sym)
-    if bb.pos != 0:
-        raise ValueError("zstd Huffman stream not fully consumed")
-    return bytes(out)
-
-
-# --- sequences: predefined distributions + baselines (RFC 8878) ---------------
-
-_LL_DEFAULT = (
-    [4, 3, 2, 2, 2, 2, 2, 2, 2, 2, 2, 2, 2, 1, 1, 1, 2, 2, 2, 2, 2, 2,
-     2, 2, 2, 3, 2, 1, 1, 1, 1, 1, -1, -1, -1, -1],
-    6,
-)
-_ML_DEFAULT = (
-    [1, 4, 3, 2, 2, 2, 2, 2, 2, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1,
-     1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1,
-     1, 1, -1, -1, -1, -1, -1, -1, -1],
-    6,
-)
-_OF_DEFAULT = (
-    [1, 1, 1, 1, 1, 1, 2, 2, 2, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1,
-     1, 1, -1, -1, -1, -1, -1],
-    5,
-)
-
-_LL_BASE = [0, 1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15, 16,
-            18, 20, 22, 24, 28, 32, 40, 48, 64, 128, 256, 512, 1024,
-            2048, 4096, 8192, 16384, 32768, 65536]
-_LL_BITS = [0] * 16 + [1, 1, 1, 1, 2, 2, 3, 3, 4, 6, 7, 8, 9, 10, 11,
-                       12, 13, 14, 15, 16]
-_ML_BASE = [3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15, 16, 17, 18,
-            19, 20, 21, 22, 23, 24, 25, 26, 27, 28, 29, 30, 31, 32, 33,
-            34, 35, 37, 39, 41, 43, 47, 51, 59, 67, 83, 99, 131, 259,
-            515, 1027, 2051, 4099, 8195, 16387, 32771, 65539]
-_ML_BITS = [0] * 32 + [1, 1, 1, 1, 2, 2, 3, 3, 4, 4, 5, 7, 8, 9, 10,
-                       11, 12, 13, 14, 15, 16]
-
-_MAX_LOG = {"ll": 9, "of": 8, "ml": 9}
-_MAX_SYM = {"ll": 35, "of": 31, "ml": 52}
-
-
-def _seq_table(mode: int, reg: str, data: bytes, pos: int, end: int, prev):
-    """One register's decoding table per its compression mode. Reads
-    are clamped to the BLOCK end: a malformed table description must
-    raise, never consume the next block's bytes as table data."""
-    if mode == 0:  # predefined
-        counts, al = {"ll": _LL_DEFAULT, "of": _OF_DEFAULT,
-                      "ml": _ML_DEFAULT}[reg]
-        return _fse_build_table(counts, al), al, pos
-    if mode == 1:  # RLE: one byte = the symbol
-        if pos >= end:
-            raise ValueError("zstd RLE sequence symbol truncated")
-        sym = data[pos]
-        if sym > _MAX_SYM[reg]:
-            raise ValueError(f"zstd {reg} RLE symbol {sym} out of range")
-        return _fse_rle_table(sym), 0, pos + 1
-    if mode == 2:  # FSE-compressed description
-        table, al, used = _fse_table_from_stream(
-            data[pos:end], _MAX_SYM[reg], _MAX_LOG[reg]
-        )
-        return table, al, pos + used
-    # mode 3: repeat
-    if prev is None:
-        raise ValueError(f"zstd {reg} Repeat mode with no previous table")
-    return prev[0], prev[1], pos
-
-
-def _decode_sequences(data: bytes, pos: int, end: int, frame_state: dict):
-    """Parse the sequences section of one compressed block; returns
-    (list of (ll, ml, offset_value), new pos == end)."""
-    if pos >= end:
-        raise ValueError("zstd sequences section missing")
-    b0 = data[pos]
-    pos += 1
-    if b0 == 0:
-        # RFC 8878 §3.1.1.3.2: a zero count ends the section — the
-        # reference decoder rejects trailing bytes as corruption.
-        if pos != end:
-            raise ValueError(
-                "zstd zero-sequence block has trailing bytes"
-            )
-        return [], pos
-    if b0 < 128:
-        n_seq = b0
-    elif b0 < 255:
-        if pos >= end:
-            raise ValueError("zstd sequence count truncated")
-        n_seq = ((b0 - 128) << 8) + data[pos]
-        pos += 1
-    else:
-        if pos + 2 > end:
-            raise ValueError("zstd sequence count truncated")
-        n_seq = data[pos] + (data[pos + 1] << 8) + 0x7F00
-        pos += 2
-    if pos >= end:
-        raise ValueError("zstd sequence modes byte missing")
-    modes = data[pos]
-    pos += 1
-    if modes & 0x03:
-        raise ValueError("zstd sequence modes reserved bits set")
-    ll_mode = (modes >> 6) & 3
-    of_mode = (modes >> 4) & 3
-    ml_mode = (modes >> 2) & 3
-    ll_t, ll_al, pos = _seq_table(ll_mode, "ll", data, pos, end,
-                                  frame_state.get("ll"))
-    of_t, of_al, pos = _seq_table(of_mode, "of", data, pos, end,
-                                  frame_state.get("of"))
-    ml_t, ml_al, pos = _seq_table(ml_mode, "ml", data, pos, end,
-                                  frame_state.get("ml"))
-    frame_state["ll"] = (ll_t, ll_al)
-    frame_state["of"] = (of_t, of_al)
-    frame_state["ml"] = (ml_t, ml_al)
-
-    bb = _BackBits(data[pos:end])
-    ll_s = bb.read(ll_al)
-    of_s = bb.read(of_al)
-    ml_s = bb.read(ml_al)
-    seqs = []
-    for i in range(n_seq):
-        of_code = of_t[0][of_s]
-        ml_code = ml_t[0][ml_s]
-        ll_code = ll_t[0][ll_s]
-        if of_code > 31:
-            raise ValueError(f"zstd offset code {of_code} out of range")
-        offset_value = (1 << of_code) + (bb.read(of_code) if of_code else 0)
-        ml = _ML_BASE[ml_code] + (bb.read(_ML_BITS[ml_code])
-                                  if _ML_BITS[ml_code] else 0)
-        ll = _LL_BASE[ll_code] + (bb.read(_LL_BITS[ll_code])
-                                  if _LL_BITS[ll_code] else 0)
-        seqs.append((ll, ml, offset_value))
-        if i != n_seq - 1:
-            ll_s = ll_t[2][ll_s] + bb.read(ll_t[1][ll_s])
-            ml_s = ml_t[2][ml_s] + bb.read(ml_t[1][ml_s])
-            of_s = of_t[2][of_s] + bb.read(of_t[1][of_s])
-    if bb.pos != 0:
-        raise ValueError("zstd sequence bitstream not fully consumed")
-    return seqs, end
-
-
-_BLOCK_MAX = 128 * 1024
-
-
-def _decode_literals(data: bytes, pos: int, end: int, frame_state: dict):
-    """Literals section → (literal bytes, new pos)."""
-    if pos >= end:
-        raise ValueError("zstd literals section missing")
-    b0 = data[pos]
-    ltype = b0 & 3
-    sf = (b0 >> 2) & 3
-    if ltype in (0, 1):  # Raw / RLE
-        if sf in (0, 2):
-            regen = b0 >> 3
-            hdr = 1
-        elif sf == 1:
-            if pos + 2 > end:
-                raise ValueError("zstd literals header truncated")
-            regen = (b0 >> 4) + (data[pos + 1] << 4)
-            hdr = 2
-        else:
-            if pos + 3 > end:
-                raise ValueError("zstd literals header truncated")
-            regen = (b0 >> 4) + (data[pos + 1] << 4) + (data[pos + 2] << 12)
-            hdr = 3
-        if regen > _BLOCK_MAX:
-            raise ValueError(f"zstd literals size {regen} exceeds block cap")
-        pos += hdr
-        if ltype == 0:
-            if pos + regen > end:
-                raise ValueError("zstd raw literals truncated")
-            lits = data[pos : pos + regen]
-            return bytes(lits), pos + regen
-        if pos >= end:
-            raise ValueError("zstd RLE literal byte truncated")
-        return bytes([data[pos]]) * regen, pos + 1
-    # Compressed (2) / Treeless (3)
-    if sf == 0:
-        if pos + 3 > end:
-            raise ValueError("zstd literals header truncated")
-        regen = (b0 >> 4) + ((data[pos + 1] & 0x3F) << 4)
-        csize = (data[pos + 1] >> 6) + (data[pos + 2] << 2)
-        hdr, streams = 3, 1
-    elif sf == 1:
-        if pos + 3 > end:
-            raise ValueError("zstd literals header truncated")
-        regen = (b0 >> 4) + ((data[pos + 1] & 0x3F) << 4)
-        csize = (data[pos + 1] >> 6) + (data[pos + 2] << 2)
-        hdr, streams = 3, 4
-    elif sf == 2:
-        if pos + 4 > end:
-            raise ValueError("zstd literals header truncated")
-        regen = (b0 >> 4) + (data[pos + 1] << 4) + ((data[pos + 2] & 3) << 12)
-        csize = (data[pos + 2] >> 2) + (data[pos + 3] << 6)
-        hdr, streams = 4, 4
-    else:
-        if pos + 5 > end:
-            raise ValueError("zstd literals header truncated")
-        regen = (b0 >> 4) + (data[pos + 1] << 4) + ((data[pos + 2] & 0x3F) << 12)
-        csize = (data[pos + 2] >> 6) + (data[pos + 3] << 2) + (data[pos + 4] << 10)
-        hdr, streams = 5, 4
-    if regen > _BLOCK_MAX:
-        raise ValueError(f"zstd literals size {regen} exceeds block cap")
-    pos += hdr
-    if pos + csize > end:
-        raise ValueError("zstd compressed literals truncated")
-    blob = data[pos : pos + csize]
-    off = 0
-    if ltype == 2:
-        table, max_bits, off = _huf_read_tree(blob)
-        frame_state["huf"] = (table, max_bits)
-    else:
-        if "huf" not in frame_state:
-            raise ValueError("zstd Treeless literals with no previous tree")
-        table, max_bits = frame_state["huf"]
-    body = blob[off:]
-    if streams == 1:
-        return _huf_decode_stream(table, max_bits, body, regen), pos + csize
-    if len(body) < 6:
-        raise ValueError("zstd 4-stream jump table truncated")
-    s1, s2, s3 = struct.unpack_from("<3H", body, 0)
-    parts = []
-    cut = 6
-    per = (regen + 3) >> 2
-    sizes = [s1, s2, s3, len(body) - 6 - s1 - s2 - s3]
-    if sizes[3] <= 0:
-        raise ValueError("zstd 4-stream sizes inconsistent")
-    outs = [per, per, per, regen - 3 * per]
-    if outs[3] < 0:
-        raise ValueError("zstd 4-stream regenerated sizes inconsistent")
-    for sz, n_out in zip(sizes, outs):
-        parts.append(
-            _huf_decode_stream(table, max_bits, body[cut : cut + sz], n_out)
-        )
-        cut += sz
-    return b"".join(parts), pos + csize
-
-
-def _execute(out: bytearray, frame_start: int, lits: bytes, seqs, reps):
-    consumed = 0
-    for ll, ml, offset_value in seqs:
-        if offset_value > 3:
-            offset = offset_value - 3
-            reps[2] = reps[1]
-            reps[1] = reps[0]
-            reps[0] = offset
-        else:
-            idx = offset_value - 1 + (1 if ll == 0 else 0)
-            if idx == 0:
-                offset = reps[0]
-            elif idx == 1:
-                offset = reps[1]
-                reps[1] = reps[0]
-                reps[0] = offset
-            elif idx == 2:
-                offset = reps[2]
-                reps[2] = reps[1]
-                reps[1] = reps[0]
-                reps[0] = offset
-            else:
-                offset = reps[0] - 1
-                if offset == 0:
-                    raise ValueError("zstd repeat offset underflow")
-                reps[2] = reps[1]
-                reps[1] = reps[0]
-                reps[0] = offset
-        if consumed + ll > len(lits):
-            raise ValueError("zstd sequence consumes absent literals")
-        out += lits[consumed : consumed + ll]
-        consumed += ll
-        if offset > len(out) - frame_start:
-            raise ValueError(
-                "zstd match offset reaches before the frame window"
-            )
-        # NOTE deliberately NOT enforced: offsets larger than the
-        # declared window but within decoded history. RFC 8878
-        # §3.1.1.4 makes support above Window_Size optional, and the
-        # reference decoder ACCEPTS such frames in single-shot mode
-        # (verified against the CLI in tests) — rejecting them here
-        # would refuse input the format's own decoder reads.
-        start = len(out) - offset
-        if offset >= ml:
-            out += out[start : start + ml]
-        else:
-            for i in range(ml):  # overlapping copy, byte-wise semantics
-                out.append(out[start + i])
-    out += lits[consumed:]
-
-
-# --- trained dictionaries (RFC 8878 §5) ----------------------------------------
-
-_DICT_MAGIC = 0xEC30A437
-
-
-class ZstdDictionary:
-    """A parsed dictionary: entropy-table priming, initial repeat
-    offsets, and content history. ``huf`` is ``None`` for raw-content
-    dictionaries (no entropy priming, default repeat offsets)."""
-
-    __slots__ = ("dict_id", "huf", "tables", "reps", "content")
-
-    def __init__(self, dict_id, huf, tables, reps, content):
-        self.dict_id = dict_id
-        self.huf = huf
-        self.tables = tables
-        self.reps = reps
-        self.content = content
-
-
-def parse_zstd_dictionary(blob: bytes) -> ZstdDictionary:
-    """Parse a dictionary per RFC 8878 §5: magic, Dictionary_ID,
-    entropy tables (Huffman literals, then FSE for Offsets /
-    Match_Lengths / Literal_Lengths), three 4-byte repeat offsets,
-    then content. A blob without the magic is a raw-content
-    dictionary: pure history, no priming, implicit ID 0."""
-    if len(blob) >= 8:
-        (magic,) = struct.unpack_from("<I", blob, 0)
-    else:
-        magic = None
-    if magic != _DICT_MAGIC:
-        return ZstdDictionary(0, None, {}, [1, 4, 8], bytes(blob))
-    (did,) = struct.unpack_from("<I", blob, 4)
-    pos = 8
-    huf_table, huf_bits, used = _huf_read_tree(blob[pos:])
-    pos += used
-    tables: dict = {}
-    for reg in ("of", "ml", "ll"):  # the section's storage order
-        table, al, used = _fse_table_from_stream(
-            blob[pos:], _MAX_SYM[reg], _MAX_LOG[reg]
-        )
-        tables[reg] = (table, al)
-        pos += used
-    if pos + 12 > len(blob):
-        raise ValueError("zstd dictionary repeat offsets truncated")
-    reps = list(struct.unpack_from("<3I", blob, pos))
-    pos += 12
-    content = bytes(blob[pos:])
-    for r in reps:
-        if r == 0 or r > len(content):
-            raise ValueError(
-                f"zstd dictionary repeat offset {r} exceeds content"
-            )
-    return ZstdDictionary(
-        did, (huf_table, huf_bits), tables, reps, content
-    )
-
-
-def zstd_write_dictionary(content: bytes, dict_id: int) -> bytes:
-    """Author a TRAINED-format dictionary (RFC 8878 §5, r14): magic,
-    Dictionary_ID, the entropy section — a Huffman literals table
-    fitted to the content's byte histogram (direct 4-bit weights;
-    clamped to a uniform code over the low alphabet when the
-    histogram is too deep or too wide for the direct form) and the
-    three FSE tables in OF/ML/LL storage order (the predefined
-    distributions serialized through the ncount writer — valid,
-    sane priming) — then Repeat_Offsets and the content history.
-    Parsed back by :func:`parse_zstd_dictionary` and by the
-    reference CLI under ``-D``."""
-    if not content:
-        raise ValueError("zstd dictionary content must be non-empty")
-    if not 1 <= dict_id <= 0xFFFFFFFF:
-        raise ValueError("zstd dictionary id must be a nonzero u32")
-    # add-one smoothing over the WHOLE byte alphabet: a primed
-    # Treeless block must be able to encode any literal byte, seen
-    # or not (rare ones just get long codes; the FSE-compressed
-    # weights form carries the 255-entry description compactly).
-    # Halving clamps the skew until the canonical depth fits the
-    # 11-bit ceiling — all-ones (depth 8) terminates the loop.
-    hist = {s: 1 for s in range(256)}
-    for b in content:
-        hist[b] += 1
-    built = _huf_build_weights(hist)
-    while built is None:
-        hist = {s: max(1, v // 2) for s, v in hist.items()}
-        built = _huf_build_weights(hist)
-    weights, max_bits = built
-    last = max(weights)
-    wlist = [weights.get(s, 0) for s in range(last)]
-    desc = _huf_write_tree(wlist)
-    if desc is None:
-        raise ValueError("zstd dictionary weights are not serializable")
-    out = bytearray(struct.pack("<II", _DICT_MAGIC, dict_id))
-    out += bytes(desc)
-    for counts, al in (_OF_DEFAULT, _ML_DEFAULT, _LL_DEFAULT):
-        out += _fse_write_ncount(list(counts), al)
-    reps = [min(r, len(content)) for r in (1, 4, 8)]
-    out += struct.pack("<3I", *reps)
-    out += content
-    return bytes(out)
-
-
-def _huf_encoder_from_table(table, max_bits: int) -> dict:
-    """Recover {symbol: (code, length)} from a decode peek table —
-    what encoding TREELESS literals against a dictionary's Huffman
-    table needs."""
-    enc: dict[int, tuple[int, int]] = {}
-    i = 0
-    while i < len(table):
-        sym, nb = table[i]
-        if sym < 0:
-            i += 1
-            continue
-        enc[sym] = (i >> (max_bits - nb), nb)
-        i += 1 << (max_bits - nb)
-    return enc
-
-
-def zstd_decompress(
-    data: bytes,
-    max_output: int | None = None,
-    dictionary: "ZstdDictionary | bytes | None" = None,
-) -> bytes:
-    """Decompress a (possibly multi-frame) zstd input, verifying the
-    frame content size and the xxHash64 content checksum of every
-    frame; skippable frames are skipped. ``dictionary`` (a parsed
-    ``ZstdDictionary`` or raw bytes) primes each frame's entropy
-    tables, repeat offsets, and match history per RFC 8878 §5."""
-    if isinstance(dictionary, (bytes, bytearray)):
-        dictionary = parse_zstd_dictionary(bytes(dictionary))
-    out = bytearray()
-    pos = 0
-    n = len(data)
-    saw_frame = False
-    while pos < n:
-        if pos + 4 > n:
-            raise ValueError("zstd frame magic truncated")
-        (magic,) = struct.unpack_from("<I", data, pos)
-        if (magic & 0xFFFFFFF0) == 0x184D2A50:  # skippable frame
-            if pos + 8 > n:
-                raise ValueError("zstd skippable frame header truncated")
-            (size,) = struct.unpack_from("<I", data, pos + 4)
-            if pos + 8 + size > n:
-                raise ValueError("zstd skippable frame truncated")
-            pos += 8 + size
-            continue
-        if magic != 0xFD2FB528:
-            raise ValueError(f"bad zstd frame magic {magic:#010x}")
-        saw_frame = True
-        pos += 4
-        if pos >= n:
-            raise ValueError("zstd frame header truncated")
-        fhd = data[pos]
-        pos += 1
-        if fhd & 0x08:
-            raise ValueError("zstd frame header reserved bit set")
-        single = bool(fhd & 0x20)
-        has_checksum = bool(fhd & 0x04)
-        dict_flag = fhd & 0x03
-        fcs_flag = fhd >> 6
-        window = None
-        if not single:
-            if pos >= n:
-                raise ValueError("zstd window descriptor truncated")
-            wd = data[pos]
-            pos += 1
-            window = (1 << (10 + (wd >> 3)))
-            window += (window >> 3) * (wd & 7)
-            if window > (1 << 30):
-                raise ValueError(f"zstd window {window} exceeds 1 GiB cap")
-        did = 0
-        dict_bytes = {0: 0, 1: 1, 2: 2, 3: 4}[dict_flag]
-        if dict_bytes:
-            if pos + dict_bytes > n:
-                raise ValueError("zstd dictionary ID truncated")
-            did = int.from_bytes(data[pos : pos + dict_bytes], "little")
-            pos += dict_bytes
-        if did != 0:
-            if dictionary is None:
-                raise NotImplementedError(
-                    f"zstd dictionary {did} is not supported"
-                    " without the dictionary bytes"
-                )
-            if dictionary.dict_id not in (0, did):
-                raise ValueError(
-                    f"zstd frame references dictionary {did}, "
-                    f"the supplied one is {dictionary.dict_id}"
-                )
-        fcs = None
-        fcs_bytes = {0: 1 if single else 0, 1: 2, 2: 4, 3: 8}[fcs_flag]
-        if fcs_bytes:
-            if pos + fcs_bytes > n:
-                raise ValueError("zstd frame content size truncated")
-            fcs = int.from_bytes(data[pos : pos + fcs_bytes], "little")
-            if fcs_bytes == 2:
-                fcs += 256
-            pos += fcs_bytes
-        # single-segment frames have no window descriptor: the whole
-        # content is the window (RFC 8878 §3.1.1.1.1)
-        window_cap = fcs if single else window
-
-        # With a dictionary, the frame decodes into a buffer seeded
-        # with the dictionary content: matches reach into that
-        # history exactly as if it preceded the frame (RFC 8878 §5),
-        # and the dictionary's entropy tables / repeat offsets prime
-        # the Repeat modes. Without one, the buffer IS ``out``.
-        if dictionary is not None:
-            buf = bytearray(dictionary.content)
-            frame_start = 0
-            frame_state = dict(dictionary.tables)
-            if dictionary.huf is not None:
-                frame_state["huf"] = dictionary.huf
-            reps = list(dictionary.reps)
-        else:
-            buf = out
-            frame_start = len(out)
-            frame_state = {}
-            reps = [1, 4, 8]
-        base = len(buf)
-        # Block_Maximum_Size = min(Window_Size, 128 KB) — the
-        # reference rejects blocks above it (RFC 8878 §3.1.1.2.3),
-        # and the window for single-segment frames is the content
-        # size itself (r14 strictness, adjudicated by the CLI)
-        block_cap = (
-            min(_BLOCK_MAX, window_cap)
-            if window_cap is not None
-            else _BLOCK_MAX
-        )
-        while True:
-            if pos + 3 > n:
-                raise ValueError("zstd block header truncated")
-            bh = data[pos] | (data[pos + 1] << 8) | (data[pos + 2] << 16)
-            pos += 3
-            last = bh & 1
-            btype = (bh >> 1) & 3
-            bsize = bh >> 3
-            if btype == 3:
-                raise ValueError("zstd reserved block type")
-            if btype == 0:  # raw
-                if bsize > block_cap:
-                    raise ValueError("zstd raw block exceeds block cap")
-                if pos + bsize > n:
-                    raise ValueError("zstd raw block truncated")
-                buf += data[pos : pos + bsize]
-                pos += bsize
-            elif btype == 1:  # RLE: bsize = regenerated size, 1 byte
-                if bsize > block_cap:
-                    raise ValueError("zstd RLE block exceeds block cap")
-                if pos >= n:
-                    raise ValueError("zstd RLE block byte truncated")
-                buf += bytes([data[pos]]) * bsize
-                pos += 1
-            else:  # compressed
-                if bsize > block_cap:
-                    raise ValueError("zstd compressed block exceeds cap")
-                end = pos + bsize
-                if end > n:
-                    raise ValueError("zstd compressed block truncated")
-                lits, p2 = _decode_literals(data, pos, end, frame_state)
-                seqs, _ = _decode_sequences(data, p2, end, frame_state)
-                before = len(buf)
-                _execute(buf, frame_start, lits, seqs, reps)
-                if len(buf) - before > block_cap:
-                    raise ValueError("zstd block regenerated above cap")
-                pos = end
-            if max_output is not None and (
-                len(out) + (len(buf) - base if buf is not out else 0)
-            ) > max_output:
-                raise ValueError("zstd output exceeds caller's cap")
-            if last:
-                break
-        content = bytes(buf[base:])
-        if buf is not out:
-            out += content
-        if fcs is not None and len(content) != fcs:
-            raise ValueError(
-                f"zstd decoded {len(content)} bytes, header says {fcs}"
-            )
-        if has_checksum:
-            if pos + 4 > n:
-                raise ValueError("zstd content checksum truncated")
-            (stored,) = struct.unpack_from("<I", data, pos)
-            pos += 4
-            if xxh64(content) & 0xFFFFFFFF != stored:
-                raise ValueError("zstd content checksum mismatch")
-    if not saw_frame:
-        raise ValueError("no zstd frame found")
-    return bytes(out)
-
-
-# --- writer (spec-subset: Raw/RLE block frames) -------------------------------
-
-
-def zstd_compress_stored(
-    data: bytes, checksum: bool = True, chunk: int = 64 * 1024
-) -> bytes:
-    """A valid zstd frame using Raw blocks (RLE where a chunk is one
-    repeated byte) — the store-mode subset every zstd implementation
-    decodes. Single-segment, explicit frame content size, xxHash64
-    checksum. Compressed-block ENCODING is out of scope by design
-    (see the module docstring); this writer exists so the engine can
-    author ``.zst`` artifacts and the gate can round-trip without a
-    reference binary in the execution path."""
-    if chunk <= 0 or chunk > _BLOCK_MAX:
-        raise ValueError(f"zstd chunk {chunk} outside (0, 128K]")
-    n = len(data)
-    if n < 256:
-        fhd = 0x20 | (0 << 6)  # single segment, 1-byte FCS
-        fcs = struct.pack("<B", n)
-    elif n < 0x10000 + 256:
-        fhd = 0x20 | (1 << 6)
-        fcs = struct.pack("<H", n - 256)
-    else:
-        fhd = 0x20 | (2 << 6)
-        fcs = struct.pack("<I", n)
-    if checksum:
-        fhd |= 0x04
-    head = struct.pack("<I", 0xFD2FB528) + bytes([fhd]) + fcs
-    body = bytearray()
-    if n == 0:
-        body += bytes([1, 0, 0])  # last raw block, size 0
-    else:
-        for i in range(0, n, chunk):
-            part = data[i : i + chunk]
-            last = 1 if i + chunk >= n else 0
-            if len(part) > 1 and part.count(part[0]) == len(part):
-                bh = last | (1 << 1) | (len(part) << 3)
-                body += bh.to_bytes(3, "little") + part[:1]
-            else:
-                bh = last | (0 << 1) | (len(part) << 3)
-                body += bh.to_bytes(3, "little") + part
-    tail = (
-        struct.pack("<I", xxh64(data) & 0xFFFFFFFF) if checksum else b""
-    )
-    return head + bytes(body) + tail
-
-
-def _pack_backward(pairs, total_bits: int) -> bytes:
-    """Write a zstd backward bitstream in LINEAR time: the sentinel 1
-    bit at the top, then each (value, width) pair directly below the
-    previous — exactly the layout the big-int fold produced, without
-    its quadratic shift cost. ``pairs`` are in DECODER read order."""
-    buf = bytearray((total_bits + 7) >> 3)
-    p = total_bits - 1
-    buf[p >> 3] |= 1 << (p & 7)  # the sentinel
-    for v, w in pairs:
-        p -= w
-        chunk = (v & ((1 << w) - 1)) << (p & 7)
-        idx = p >> 3
-        while chunk:
-            buf[idx] |= chunk & 0xFF
-            chunk >>= 8
-            idx += 1
-    return bytes(buf)
-
-
-# --- Huffman literals encoding (r14) --------------------------------------------
-
-
-def _huf_build_weights(freq: dict[int, int]):
-    """Canonical Huffman weights for a literal frequency table, or
-    ``None`` when no description can express the shape (deeper than
-    11 bits — the encoder falls back to raw literals, a legal
-    choice). Returns ``(weights_by_symbol, max_bits)`` matching
-    :func:`_huf_table_from_weights`'s completion rules exactly."""
-    import heapq
-
-    if len(freq) < 2:
-        return None
-    heap = [(f, s, s) for s, f in freq.items()]  # (freq, tiebreak, node)
-    heapq.heapify(heap)
-    parent: dict = {}
-    counter = 256
-    while len(heap) > 1:
-        f1, _, n1 = heapq.heappop(heap)
-        f2, _, n2 = heapq.heappop(heap)
-        parent[n1] = counter
-        parent[n2] = counter
-        heapq.heappush(heap, (f1 + f2, counter, counter))
-        counter += 1
-    depth: dict[int, int] = {}
-    for s in freq:
-        d = 0
-        node = s
-        while node in parent:
-            node = parent[node]
-            d += 1
-        depth[s] = d
-    max_bits = max(depth.values())
-    if max_bits > 11:
-        return None  # rare skew; raw fallback keeps the subset honest
-    weights = {s: max_bits + 1 - d for s, d in depth.items()}
-    return weights, max_bits
-
-
-def _huf_codes(weights: dict[int, int], max_bits: int):
-    """Canonical code values mirroring the decoder's peek-table fill:
-    ascending weight, natural symbol order within a weight, each
-    symbol spanning 2^(w-1) cells — code = cell_start >> (w-1)."""
-    code: dict[int, int] = {}
-    nbits: dict[int, int] = {}
-    pos = 0
-    for w in range(1, max_bits + 1):
-        for s in sorted(s for s, sw in weights.items() if sw == w):
-            code[s] = pos >> (w - 1)
-            nbits[s] = max_bits + 1 - w
-            pos += 1 << (w - 1)
-    return code, nbits
-
-
-def _huf_stream(lits: bytes, code: dict, nbits: dict) -> bytes:
-    total = 1 + sum(nbits[b] for b in lits)
-    return _pack_backward(((code[b], nbits[b]) for b in lits), total)
-
-
-def _encode_literals(lits: bytes) -> bytes:
-    """The literals section, best encoding wins: Raw, RLE (one
-    repeated byte), or Huffman-compressed with a direct-weights tree
-    description — 1-stream for small sections, the 4-stream jump-
-    table layout above 1023 bytes. Every form round-trips through
-    :func:`_decode_literals` and the reference decoder."""
-    n = len(lits)
-
-    def _sized_hdr(ltype: int) -> bytes:
-        if n < 32:
-            return bytes([(n << 3) | ltype])
-        if n < 4096:
-            return bytes([((n & 0xF) << 4) | (1 << 2) | ltype, n >> 4])
-        return bytes(
-            [((n & 0xF) << 4) | (3 << 2) | ltype, (n >> 4) & 0xFF, n >> 12]
-        )
-
-    raw = _sized_hdr(0) + lits
-    if n == 0:
-        return raw
-    if lits.count(lits[0]) == n:
-        return _sized_hdr(1) + lits[:1]
-    freq: dict[int, int] = {}
-    for b in lits:
-        freq[b] = freq.get(b, 0) + 1
-    built = _huf_build_weights(freq)
-    if built is None:
-        return raw
-    weights, max_bits = built
-    code, nbits = _huf_codes(weights, max_bits)
-    last = max(weights)
-    wlist = [weights.get(s, 0) for s in range(last)]  # implied: symbol `last`
-    desc = _huf_write_tree(wlist)
-    if desc is None:
-        return raw
-    if n < 1024:
-        body = bytes(desc) + _huf_stream(lits, code, nbits)
-        csize = len(body)
-        if csize > 1023 or csize >= n:
-            return raw
-        hdr = bytes(
-            [2 | ((n & 0xF) << 4),
-             ((n >> 4) & 0x3F) | ((csize & 3) << 6),
-             csize >> 2]
-        )
-        return hdr + body
-    per = (n + 3) >> 2
-    parts = [lits[0:per], lits[per : 2 * per], lits[2 * per : 3 * per],
-             lits[3 * per :]]
-    if not parts[3]:
-        return raw  # degenerate split; the decoder requires 4 streams
-    streams = [_huf_stream(p, code, nbits) for p in parts]
-    if max(len(s) for s in streams[:3]) > 0xFFFF:
-        return raw  # jump-table entries are u16
-    body = (
-        bytes(desc)
-        + struct.pack("<3H", len(streams[0]), len(streams[1]),
-                      len(streams[2]))
-        + b"".join(streams)
-    )
-    csize = len(body)
-    if csize >= n or csize >= (1 << 18):
-        return raw
-    hdr = bytes(
-        [2 | (3 << 2) | ((n & 0xF) << 4),
-         (n >> 4) & 0xFF,
-         ((n >> 12) & 0x3F) | ((csize & 3) << 6),
-         (csize >> 2) & 0xFF,
-         csize >> 10]
-    )
-    return hdr + body
-
-
-def _fse_chain(codes: list[int], table, al: int):
-    """Backward state assignment for one FSE stream: states whose
-    symbols decode to ``codes`` in order, plus the (value, width)
-    transition reads between them. ``None`` if a code is absent."""
-    cover = _fse_encode_cover(table)
-    syms, nbits, base = table
-    n = len(codes)
-    st = [0] * n
-    try:
-        st[n - 1] = syms.index(codes[n - 1])
-        for i in range(n - 2, -1, -1):
-            st[i] = cover[(codes[i], st[i + 1])]
-    except (ValueError, KeyError):
-        return None
-    trans = [
-        (st[i + 1] - base[st[i]], nbits[st[i]]) for i in range(n - 1)
-    ]
-    return st, trans
-
-
-def _huf_write_tree_fse(wlist: list[int]) -> bytes | None:
-    """The FSE-compressed Huffman-weights form (RFC 8878 §4.2.1.2,
-    head < 128): weights decode through TWO interleaved FSE states
-    with the padded-read termination rule — the encoder splits the
-    weight sequence into the two state lanes, chains each backward,
-    interleaves the transitions, and sizes the stream so the read
-    AFTER the last transition is the one that overruns. ``None``
-    when the form doesn't apply (degenerate histogram, >127-byte
-    description)."""
-    n = len(wlist)
-    if n < 2:
-        return None
-    hist: dict[int, int] = {}
-    for w in wlist:
-        hist[w] = hist.get(w, 0) + 1
-    if len(hist) < 2:
-        return None  # 0-bit states would never terminate the loop
-    best = None
-    for al in (5, 6):
-        counts = _normalize_counts(hist, al)
-        if counts is None:
-            continue
-        desc = _fse_write_ncount(counts, al)
-        table = _fse_build_table(counts, al)
-        lane1 = _fse_chain(wlist[0::2], table, al)
-        lane2 = _fse_chain(wlist[1::2], table, al)
-        if lane1 is None or lane2 is None:
-            continue
-        (s1, t1), (s2, t2) = lane1, lane2
-        pairs: list[tuple[int, int]] = [(s1[0], al), (s2[0], al)]
-        for i in range(max(len(t1), len(t2))):
-            if i < len(t1):
-                pairs.append(t1[i])
-            if i < len(t2):
-                pairs.append(t2[i])
-        total = 1 + sum(w for _, w in pairs)
-        blob = desc + _pack_backward(pairs, total)
-        if len(blob) <= 127 and (best is None or len(blob) < len(best)):
-            best = blob
-    if best is None:
-        return None
-    return bytes([len(best)]) + best
-
-
-def _huf_write_tree(wlist: list[int]) -> bytes | None:
-    """Serialize explicit Huffman weights (symbols 0..len-1; the last
-    present symbol's weight is implied) as the CHEAPER of the direct
-    4-bit form (≤128 weights) and the FSE-compressed form — both
-    read back by :func:`_huf_read_tree` and the reference decoder."""
-    direct = None
-    if len(wlist) <= 128:
-        out = bytearray([127 + len(wlist)])
-        for i in range(0, len(wlist), 2):
-            hi = wlist[i] << 4
-            lo = wlist[i + 1] if i + 1 < len(wlist) else 0
-            out.append(hi | lo)
-        direct = bytes(out)
-    fse = _huf_write_tree_fse(wlist)
-    forms = [f for f in (direct, fse) if f is not None]
-    return min(forms, key=len) if forms else None
-
-
-def _encode_literals_treeless(lits: bytes, enc: dict) -> bytes | None:
-    """Treeless (ltype 3) literals against a primed Huffman table —
-    the dictionary-priming form: no tree description, the decoder
-    reuses ``frame_state['huf']``. ``None`` when a byte falls
-    outside the table or the headers can't size it."""
-    n = len(lits)
-    if n == 0:
-        return None
-    code: dict[int, int] = {}
-    nbits: dict[int, int] = {}
-    for s, (c, w) in enc.items():
-        code[s] = c
-        nbits[s] = w
-    if any(b not in code for b in lits):
-        return None
-    if n < 1024:
-        body = _huf_stream(lits, code, nbits)
-        csize = len(body)
-        if csize > 1023:
-            return None
-        hdr = bytes(
-            [3 | ((n & 0xF) << 4),
-             ((n >> 4) & 0x3F) | ((csize & 3) << 6),
-             csize >> 2]
-        )
-        return hdr + body
-    per = (n + 3) >> 2
-    parts = [lits[0:per], lits[per : 2 * per], lits[2 * per : 3 * per],
-             lits[3 * per :]]
-    if not parts[3]:
-        return None
-    streams = [_huf_stream(p, code, nbits) for p in parts]
-    if max(len(s) for s in streams[:3]) > 0xFFFF:
-        return None
-    body = (
-        struct.pack("<3H", len(streams[0]), len(streams[1]),
-                    len(streams[2]))
-        + b"".join(streams)
-    )
-    csize = len(body)
-    if csize >= (1 << 18):
-        return None
-    hdr = bytes(
-        [3 | (3 << 2) | ((n & 0xF) << 4),
-         (n >> 4) & 0xFF,
-         ((n >> 12) & 0x3F) | ((csize & 3) << 6),
-         (csize >> 2) & 0xFF,
-         csize >> 10]
-    )
-    return hdr + body
-
-
-def _fse_encode_cover(table):
-    """Encoder companion of an FSE decode table: for (symbol, next
-    decode state v) the UNIQUE current state whose transition range
-    [base, base+2^nbits) covers v — the per-symbol ranges tile the
-    state space exactly, which is what makes FSE a bijection."""
-    syms, nbits, base = table
-    cover: dict[tuple[int, int], int] = {}
-    for i in range(len(syms)):
-        for v in range(base[i], base[i] + (1 << nbits[i])):
-            cover[(syms[i], v)] = i
-    return cover
-
-
-def _code_for(value: int, bases, bits) -> int:
-    """Largest code whose [base, base+2^bits) range holds value (the
-    ranges tile, so bisect on base is exact)."""
-    import bisect
-
-    c = bisect.bisect_right(bases, value) - 1
-    if c < 0 or value >= bases[c] + (1 << bits[c]):
-        raise ValueError(f"value {value} outside code table")
-    return c
-
-
-def _encode_sequences_predefined(seqs) -> bytes:
-    """Sequence section: predefined FSE tables for all three
-    registers (mode 0 — no table serialization), states chosen by
-    walking the decode tables backward, the whole thing folded into
-    the backward sentinel bitstream the decoder reads forward."""
-    ll_t = _fse_build_table(*_LL_DEFAULT)
-    of_t = _fse_build_table(*_OF_DEFAULT)
-    ml_t = _fse_build_table(*_ML_DEFAULT)
-    ll_cover = _fse_encode_cover(ll_t)
-    of_cover = _fse_encode_cover(of_t)
-    ml_cover = _fse_encode_cover(ml_t)
-    n = len(seqs)
-
-    codes = []
-    for ll, ml, offset_value in seqs:
-        ll_c = _code_for(ll, _LL_BASE, _LL_BITS)
-        ml_c = _code_for(ml, _ML_BASE, _ML_BITS)
-        of_c = offset_value.bit_length() - 1  # (1<<of_c) + extra
-        if of_c > 31:
-            raise ValueError("zstd offset too large to encode")
-        codes.append((ll_c, ml_c, of_c))
-
-    # states backward: seq i's state must transition to seq i+1's
-    def states(cover, table, idx):
-        syms = table[0]
-        st = [0] * n
-        last_code = codes[n - 1][idx]
-        st[n - 1] = syms.index(last_code)
-        for i in range(n - 2, -1, -1):
-            st[i] = cover[(codes[i][idx], st[i + 1])]
-        return st
-
-    ll_st = states(ll_cover, ll_t, 0)
-    ml_st = states(ml_cover, ml_t, 1)
-    of_st = states(of_cover, of_t, 2)
-
-    # reads in DECODER order; the backward writer folds them so the
-    # first decoder read sits under the sentinel bit
-    al_ll, al_of, al_ml = _LL_DEFAULT[1], _OF_DEFAULT[1], _ML_DEFAULT[1]
-    reads: list[tuple[int, int]] = [
-        (ll_st[0], al_ll), (of_st[0], al_of), (ml_st[0], al_ml)
-    ]
-    for i, (ll, ml, offset_value) in enumerate(seqs):
-        ll_c, ml_c, of_c = codes[i]
-        reads.append((offset_value - (1 << of_c), of_c))
-        reads.append((ml - _ML_BASE[ml_c], _ML_BITS[ml_c]))
-        reads.append((ll - _LL_BASE[ll_c], _LL_BITS[ll_c]))
-        if i != n - 1:
-            for st, tbl in ((ll_st, ll_t), (ml_st, ml_t), (of_st, of_t)):
-                cur = st[i]
-                reads.append((st[i + 1] - tbl[2][cur], tbl[1][cur]))
-    # Pack with the sentinel on top: the first decoder read sits
-    # directly under the last byte's highest set bit, and the stream
-    # ends exactly where the reads do (pos == 0 at the end — the
-    # decoder checks full consumption), so NO byte-padding shift.
-    total_bits = 1 + sum(w for _, w in reads)
-    if n < 128:
-        count = bytes([n])
-    elif n < 0x7F00:  # the 2-byte form: (b0-128)<<8 + b1
-        count = bytes([(n >> 8) + 128, n & 0xFF])
-    else:
-        raise ValueError("encoder subset caps at 32511 sequences per block")
-    head = count + bytes([0b00000000])  # nbSeq, modes: predefined ×3
-    return head + _pack_backward(reads, total_bits)
-
-
-def _normalize_counts(hist: dict[int, int], al: int):
-    """Largest-share normalization of a code histogram to a 2^al
-    FSE table: every present symbol keeps ≥1 state, drift lands on
-    the most frequent symbol. ``None`` when the table can't absorb
-    the correction (caller falls back to the predefined tables)."""
-    size = 1 << al
-    total = sum(hist.values())
-    if len(hist) > size:
-        return None
-    top = max(hist, key=lambda s: (hist[s], -s))
-    counts = [0] * (max(hist) + 1)
-    assigned = 0
-    for s, f in hist.items():
-        c = max(1, (f * size) // total)
-        counts[s] = c
-        assigned += c
-    diff = size - assigned
-    if counts[top] + diff < 1:
-        return None
-    counts[top] += diff
-    return counts
-
-
-def _register_plan(codes: list[int], reg: str, default, primed=None):
-    """Pick the cheapest coding mode for one sequence register:
-    RLE (one distinct code), a custom FSE table fitted to the
-    block's histogram, the predefined distribution, or — when a
-    dictionary primes the frame — Repeat mode against the primed
-    table. Exact bit accounting via the actual state chain per
-    candidate. Returns (mode, desc_bytes, table, accuracy_log,
-    states)."""
-    n = len(codes)
-    hist: dict[int, int] = {}
-    for c in codes:
-        hist[c] = hist.get(c, 0) + 1
-    if len(hist) == 1 and primed is None:
-        sym = codes[0]
-        table = _fse_rle_table(sym)
-        return 1, bytes([sym]), table, 0, [0] * n
-
-    def chain(table, al, desc):
-        cover = _fse_encode_cover(table)
-        syms = table[0]
-        st = [0] * n
-        try:
-            st[n - 1] = syms.index(codes[n - 1])
-            for i in range(n - 2, -1, -1):
-                st[i] = cover[(codes[i], st[i + 1])]
-        except (ValueError, KeyError):
-            return None
-        bits = al + sum(table[1][st[i]] for i in range(n - 1))
-        return (len(desc) * 8 + bits, desc, table, al, st)
-
-    if primed is not None:
-        # a dictionary-primed block PINS Repeat mode so the priming
-        # path is genuinely exercised (the point of the leg)
-        best = chain(primed[0], primed[1], b"")
-        if best is None:
-            raise ValueError(
-                f"zstd {reg} code outside the dictionary's primed table"
-            )
-        _, desc, table, al, st = best
-        return 3, desc, table, al, st
-    counts_d, al_d = default
-    best = chain(_fse_build_table(counts_d, al_d), al_d, b"")
-    mode = 0
-    al_c = min(_MAX_LOG[reg], max(5, max(5, (n - 1).bit_length() - 2)))
-    while (1 << al_c) < len(hist):
-        al_c += 1
-    if al_c <= _MAX_LOG[reg]:
-        counts = _normalize_counts(hist, al_c)
-        if counts is not None and len(counts) - 1 <= _MAX_SYM[reg]:
-            desc = _fse_write_ncount(counts, al_c)
-            cand = chain(_fse_build_table(counts, al_c), al_c, desc)
-            if cand is not None and (best is None or cand[0] < best[0]):
-                best = cand
-                mode = 2
-    if best is None:
-        raise ValueError(f"zstd {reg} register has no encodable table")
-    _, desc, table, al, st = best
-    return mode, desc, table, al, st
-
-
-def _encode_sequences(seqs, primed=None) -> bytes:
-    """Sequence section with per-register mode selection (r14):
-    Predefined / RLE / FSE_Compressed chosen by exact cost — or
-    Repeat mode against a dictionary's primed tables when ``primed``
-    (a {"ll"/"of"/"ml": (table, al)} map) is given — table
-    descriptions serialized via the ncount writer, states chosen by
-    walking each decode table backward. The general form of
-    :func:`_encode_sequences_predefined`, which the subset keeps for
-    layouts that pin the predefined distributions."""
-    n = len(seqs)
-    ll_codes, ml_codes, of_codes = [], [], []
-    for ll, ml, offset_value in seqs:
-        ll_codes.append(_code_for(ll, _LL_BASE, _LL_BITS))
-        ml_codes.append(_code_for(ml, _ML_BASE, _ML_BITS))
-        of_c = offset_value.bit_length() - 1
-        if of_c > 31:
-            raise ValueError("zstd offset too large to encode")
-        of_codes.append(of_c)
-
-    ll_m, ll_d, ll_t, ll_al, ll_st = _register_plan(
-        ll_codes, "ll", _LL_DEFAULT, primed and primed["ll"])
-    of_m, of_d, of_t, of_al, of_st = _register_plan(
-        of_codes, "of", _OF_DEFAULT, primed and primed["of"])
-    ml_m, ml_d, ml_t, ml_al, ml_st = _register_plan(
-        ml_codes, "ml", _ML_DEFAULT, primed and primed["ml"])
-
-    reads: list[tuple[int, int]] = [
-        (ll_st[0], ll_al), (of_st[0], of_al), (ml_st[0], ml_al)
-    ]
-    for i, (ll, ml, offset_value) in enumerate(seqs):
-        of_c = of_codes[i]
-        reads.append((offset_value - (1 << of_c), of_c))
-        reads.append((ml - _ML_BASE[ml_codes[i]], _ML_BITS[ml_codes[i]]))
-        reads.append((ll - _LL_BASE[ll_codes[i]], _LL_BITS[ll_codes[i]]))
-        if i != n - 1:
-            for st, tbl in ((ll_st, ll_t), (ml_st, ml_t), (of_st, of_t)):
-                cur = st[i]
-                reads.append((st[i + 1] - tbl[2][cur], tbl[1][cur]))
-    total_bits = 1 + sum(w for _, w in reads)
-    if n < 128:
-        count = bytes([n])
-    elif n < 0x7F00:
-        count = bytes([(n >> 8) + 128, n & 0xFF])
-    else:
-        raise ValueError("encoder subset caps at 32511 sequences per block")
-    modes = (ll_m << 6) | (of_m << 4) | (ml_m << 2)
-    return (
-        count + bytes([modes]) + ll_d + of_d + ml_d
-        + _pack_backward(reads, total_bits)
-    )
-
-
-def zstd_compress_lz(data: bytes, min_match: int = 4) -> bytes:
-    """A REAL compressed zstd frame from the spec subset the decoder
-    round-trips per-row in the gate: greedy hash-chain LZ77 into
-    sequences under the PREDEFINED FSE distributions (mode 0) with
-    raw literals — no Huffman, no custom tables, so the encoder stays
-    small while the bitstream exercises the decoder's FSE state
-    machine, extra-bit reads, and sequence execution. Blocks cap at
-    64 KiB input each (sequence counts use the format's 1- and
-    2-byte forms, so a block's matches are never artificially cut
-    short); incompressible tails fall back to raw blocks."""
-    n = len(data)
-    if n < 256:
-        fhd = 0x20 | (0 << 6)
-        fcs = struct.pack("<B", n)
-    elif n < 0x10000 + 256:
-        fhd = 0x20 | (1 << 6)
-        fcs = struct.pack("<H", n - 256)
-    else:
-        fhd = 0x20 | (2 << 6)
-        fcs = struct.pack("<I", n)
-    fhd |= 0x04  # checksum
-    head = struct.pack("<I", 0xFD2FB528) + bytes([fhd]) + fcs
-    body = bytearray()
-    pos = 0
-    CHUNK = 64 * 1024
-    if n == 0:
-        body += bytes([1, 0, 0])
-    while pos < n:
-        end = min(pos + CHUNK, n)
-        chunk = data[pos:end]
-        last = 1 if end == n else 0
-        # greedy LZ77 within the chunk (the subset keeps blocks
-        # self-contained; the format allows cross-block matches)
-        table: dict[bytes, int] = {}
-        lits = bytearray()
-        seqs: list[tuple[int, int, int]] = []
-        i = 0
-        lit_start = 0
-        while i + min_match <= len(chunk) and len(seqs) < 21845:
-            key = bytes(chunk[i : i + min_match])
-            j = table.get(key)
-            table[key] = i
-            if j is None or i - j > (1 << 20):
-                i += 1
-                continue
-            length = min_match
-            limit = len(chunk) - i
-            while length < limit and length < 65535 and \
-                    chunk[j + length] == chunk[i + length]:
-                length += 1
-            if length < 3:
-                i += 1
-                continue
-            lits += chunk[lit_start:i]
-            ll = i - lit_start
-            seqs.append((ll, length, (i - j) + 3))  # offset_value = dist+3
-            i += length
-            lit_start = i
-        lits += chunk[lit_start:]
-        block = None
-        if seqs:
-            block = (
-                _encode_literals(bytes(lits))
-                + _encode_sequences(seqs)
-            )
-        if block is None or len(block) >= len(chunk):
-            # incompressible: Block_Size must stay within the
-            # window-bounded Block_Maximum_Size, and a "compressed"
-            # block bigger than its content would breach it
-            bh = last | (0 << 1) | (len(chunk) << 3)
-            body += bh.to_bytes(3, "little") + chunk
-        else:
-            bh = last | (2 << 1) | (len(block) << 3)
-            body += bh.to_bytes(3, "little") + block
-        pos = end
-    tail = struct.pack("<I", xxh64(data) & 0xFFFFFFFF)
-    return head + bytes(body) + tail
-
-
-def zstd_compress_lz_dict(
-    data: bytes, content, min_match: int = 4
-) -> bytes:
-    """:func:`zstd_compress_lz` against a dictionary. ``content`` as
-    BYTES is a raw-content dictionary: the first block's matches may
-    reach back into it as virtual history (offsets beyond the frame
-    start — RFC 8878 §5 semantics); the frame carries no ID (raw
-    dictionaries have none) and the reference decoder accepts it
-    with ``-D <content>``. ``content`` as a parsed
-    :class:`ZstdDictionary` (r14, the trained format —
-    :func:`zstd_write_dictionary` authors one) additionally declares
-    the Dictionary_ID in the frame header and PRIMES the first
-    block: Treeless literals against the dictionary's Huffman table
-    and Repeat-mode sequence tables — the full §5 entropy-priming
-    path, in both directions. Sibling of the plain encoder, not an
-    edit to it."""
-    zdict = None
-    if isinstance(content, ZstdDictionary):
-        zdict = content
-        content = zdict.content
-    n = len(data)
-    need = len(content) + n + 16
-    e = max(10, (need - 1).bit_length())
-    if e > 30:
-        raise ValueError("dictionary + data exceed the 1 GiB window cap")
-    did_field = b""
-    dict_flag = 0
-    if zdict is not None and zdict.dict_id:
-        did_field = struct.pack("<I", zdict.dict_id)
-        dict_flag = 3
-    fhd = (2 << 6) | 0x04 | dict_flag  # 4-byte FCS + checksum, windowed
-    head = (
-        struct.pack("<I", 0xFD2FB528)
-        + bytes([fhd, (e - 10) << 3])
-        + did_field
-        + struct.pack("<I", n)
-    )
-    primed_seq = None
-    primed_huf = None
-    if zdict is not None and zdict.huf is not None:
-        primed_seq = {reg: zdict.tables[reg] for reg in ("ll", "of", "ml")}
-        primed_huf = _huf_encoder_from_table(*zdict.huf)
-    body = bytearray()
-    pos = 0
-    CHUNK = 64 * 1024
-    if n == 0:
-        body += bytes([1, 0, 0])
-    while pos < n:
-        end = min(pos + CHUNK, n)
-        last = 1 if end == n else 0
-        if pos == 0:  # only the first block sees the dictionary
-            ext = content + data[:end]
-            base = len(content)
-        else:
-            ext = data[pos:end]
-            base = 0
-        table: dict[bytes, int] = {}
-        for j in range(0, base - min_match + 1):
-            table[bytes(ext[j : j + min_match])] = j
-        lits = bytearray()
-        seqs: list[tuple[int, int, int]] = []
-        i = base
-        lit_start = base
-        while i + min_match <= len(ext) and len(seqs) < 21845:
-            key = bytes(ext[i : i + min_match])
-            j = table.get(key)
-            table[key] = i
-            if j is None or i - j > (1 << 20):
-                i += 1
-                continue
-            length = min_match
-            limit = len(ext) - i
-            while length < limit and length < 65535 and \
-                    ext[j + length] == ext[i + length]:
-                length += 1
-            lits += ext[lit_start:i]
-            ll = i - lit_start
-            seqs.append((ll, length, (i - j) + 3))
-            i += length
-            lit_start = i
-        lits += ext[lit_start:]
-        chunk_len = end - pos
-        block = None
-        if seqs:
-            if pos == 0 and primed_seq is not None:
-                # the dictionary-primed first block: Treeless
-                # literals + Repeat sequence tables (RFC 8878 §5's
-                # entropy priming, exercised from the WRITE side)
-                lit_sec = _encode_literals_treeless(
-                    bytes(lits), primed_huf
-                )
-                if lit_sec is None:
-                    lit_sec = _encode_literals(bytes(lits))
-                block = lit_sec + _encode_sequences(seqs, primed_seq)
-            else:
-                block = (
-                    _encode_literals(bytes(lits))
-                    + _encode_sequences(seqs)
-                )
-        if block is None or len(block) >= chunk_len:
-            bh = last | (0 << 1) | (chunk_len << 3)
-            body += bh.to_bytes(3, "little") + data[pos:end]
-        else:
-            bh = last | (2 << 1) | (len(block) << 3)
-            body += bh.to_bytes(3, "little") + block
-        pos = end
-    tail = struct.pack("<I", xxh64(data) & 0xFFFFFFFF)
-    return head + bytes(body) + tail
-
-
-def zstd_skippable_frame(payload: bytes, nibble: int = 0) -> bytes:
-    """A skippable frame (magic 0x184D2A5?) — the side-channel the
-    seekable format and per-shard metadata use."""
-    if not 0 <= nibble <= 15:
-        raise ValueError("skippable magic nibble outside 0-15")
-    return (
-        struct.pack("<I", 0x184D2A50 + nibble)
-        + struct.pack("<I", len(payload))
-        + payload
-    )
-
-
-# --- the seekable format (r14) --------------------------------------------------
+# --- the seekable format ------------------------------------------------------
 #
-# The public zstd seekable format (zstd contrib): ordinary
-# concatenated frames plus a FINAL skippable frame (nibble 0xE)
-# holding a seek table — per-frame compressed/decompressed sizes,
-# optional per-frame xxHash64-low32 checksums, a footer with the
-# entry count, a descriptor byte, and the 0x8F92EAB1 seekable magic.
-# This is what makes ONE large .zst splittable: a reader grabs the
-# footer, derives every frame's byte range, and hands ranges to
-# independent tasks — the in-file analogue of the gzip-member WARC
-# convention. Any plain zstd decoder still reads the whole file (it
-# skips the table), so the format degrades gracefully.
+# The public zstd seekable format (zstd contrib): the seek table holds
+# per-frame compressed/decompressed sizes, optional per-frame
+# xxHash64-low32 checksums, and a footer with the entry count, a
+# descriptor byte and the 0x8F92EAB1 seekable magic. A plain zstd
+# decoder still reads the whole file: it skips the table.
 
 _SEEKABLE_MAGIC = 0x8F92EAB1
-_SEEKABLE_SKIP_MAGIC = 0x184D2A5E
+_SEEK_TABLE_NIBBLE = 0xE
 
 
-def zstd_seekable_pack(
-    chunks: list[bytes], compressor=None, checksum: bool = True
-) -> bytes:
-    """Pack chunks as one seekable .zst: each chunk its own frame
-    (default: the engine's real LZ77 encoder), then the seek-table
-    skippable frame. Chunk boundaries become the split points."""
-    comp = compressor if compressor is not None else zstd_compress_lz
+def zstd_seekable_pack(chunks: list[bytes], checksum: bool = True) -> bytes:
+    """Pack chunks as one seekable .zst: each chunk its own frame,
+    then the seek-table skippable frame. Chunk boundaries become the
+    split points."""
     out = bytearray()
     entries = bytearray()
     for chunk in chunks:
-        frame = comp(chunk)
+        frame = codecs.compress("zstd", chunk)
         out += frame
         entries += struct.pack("<II", len(frame), len(chunk))
         if checksum:
@@ -1835,8 +94,7 @@ def zstd_seekable_pack(
     footer = struct.pack(
         "<IBI", len(chunks), 0x80 if checksum else 0x00, _SEEKABLE_MAGIC
     )
-    table = bytes(entries) + footer
-    out += struct.pack("<II", _SEEKABLE_SKIP_MAGIC, len(table)) + table
+    out += codecs.skippable_frame(bytes(entries) + footer, _SEEK_TABLE_NIBBLE)
     return bytes(out)
 
 
@@ -1871,7 +129,7 @@ def zstd_seek_table(data: bytes, file_len: int | None = None) -> list[dict]:
     if rel < 0:
         raise ValueError("zstd seekable tail slice misses the seek table")
     smagic, ssize = struct.unpack_from("<II", data, rel)
-    if smagic != _SEEKABLE_SKIP_MAGIC or ssize != table_len:
+    if smagic != 0x184D2A50 | _SEEK_TABLE_NIBBLE or ssize != table_len:
         raise ValueError("zstd seek-table skippable frame malformed")
     out: list[dict] = []
     pos = rel + 8
@@ -1904,7 +162,7 @@ def zstd_seekable_read_frame(data: bytes, entry: dict) -> bytes:
     blob = data[off : off + entry["c_size"]]
     if len(blob) != entry["c_size"]:
         raise ValueError("zstd seekable frame range outside the data")
-    raw = zstd_decompress(blob, max_output=entry["d_size"])
+    raw = codecs.decompress("zstd", blob, max_output=entry["d_size"])
     if len(raw) != entry["d_size"]:
         raise ValueError(
             f"zstd seekable frame decoded {len(raw)} bytes, "

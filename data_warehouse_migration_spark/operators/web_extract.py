@@ -238,9 +238,9 @@ def warc_ingest_features(docs: DataFrame) -> DataFrame:
     store the wire bytes, so stored bodies are routinely compressed):
     id mod 6 → identity / gzip / deflate (zlib-wrapped per RFC 9110)
     / deflate sent as a BARE RFC 1951 stream (the misconfigured-server
-    shape the decoder's sniff exists for) / zstd (the engine's
-    stored-subset writer) / br — the complete coding set modern
-    servers send. The read side de-frames the transfer coding THEN
+    shape the decoder's sniff exists for) / zstd / br — the complete
+    coding set modern servers send, every one packed and unpacked by
+    functions/codecs. The read side de-frames the transfer coding THEN
     undoes the content coding (``parse_http_response_decoded``).
 
     Exactness: every layer is lossless and the extracted text is the
@@ -262,9 +262,6 @@ def warc_ingest_features(docs: DataFrame) -> DataFrame:
         read_warc_gz,
         write_warc_gz,
     )
-    from data_warehouse_migration_spark.functions.zstd import (
-        zstd_compress_stored,
-    )
 
     _METHODS = ("stored", "fixed", "dynamic")
 
@@ -280,7 +277,7 @@ def warc_ingest_features(docs: DataFrame) -> DataFrame:
             # wire shape the decoder's zlib sniff has to catch
             coding, wire = "deflate", codecs.compress("deflate", page)
         elif leg == 4:
-            coding, wire = "zstd", zstd_compress_stored(page, chunk=731)
+            coding, wire = "zstd", codecs.compress("zstd", page)
         elif leg == 5:
             coding, wire = "br", codecs.compress("br", page)
         else:
@@ -1148,42 +1145,16 @@ def xz_archive_features(docs: DataFrame) -> DataFrame:
 
 
 def zst_archive_features(docs: DataFrame) -> DataFrame:
-    """Gate harness for zstd archives (functions/zstd — r13, VERDICT
-    r12 missing #2: the compression modern public corpora actually
-    ship in). The layout rotates on id mod 6: one multi-block stored
-    frame; TWO concatenated frames splitting the text (the
-    multi-frame walk); a skippable metadata frame BETWEEN content
-    frames (the seekable-format shape); a REAL compressed frame —
-    the engine's own LZ77 encoder emitting Compressed_Blocks with
-    predefined-FSE sequences and raw literals, so the decoder's FSE
-    state machine, extra-bit reads, repeat-offset arithmetic, and
-    sequence execution run under the hash gate per-row; and (r14,
-    VERDICT r13 action #3) a DICTIONARY leg sub-rotating raw-content
-    and TRAINED-format dictionaries — the raw half primes pure
-    history (history-seeded buffer, window check at the dictionary
-    boundary, checksum across the seam); the trained half authors a
-    full RFC 8878 §5 dictionary with the engine's own writer
-    (smoothed Huffman table, ncount-serialized FSE tables, repeat
-    offsets) whose id the frame declares and whose entropy tables
-    prime the first block's Treeless literals and Repeat sequence
-    modes — §5 BOTH directions under the hash gate per-row; and a SEEKABLE leg (the r14 split-unit
-    work's gate half): the text packs as three frames + the public
-    seek-table skippable frame and reassembles from per-frame
-    RANGED reads via the parsed table — footer/table parse, offset
-    arithmetic, and per-frame size/checksum verification under the
-    hash gate per-row (the wall-clock claim lives in
-    SCALING_r14_zstdsplit.json). Every frame is authored by the
-    engine and read back through the FULL decoder — frame/block
-    grammar, FCS and xxHash64 verification, skippable dispatch. The
-    Huffman-literals, custom-table, and TRAINED-dictionary entropy-
-    priming halves have no in-container Python encoder to harness
-    per-row, so they are pinned in tests/test_zstd.py against the
-    reference CLI across presets -1/-3/-9/-19, long-window mode,
-    trained dictionaries (``--train`` across levels), and an
-    every-offset truncation sweep; the CLI also decodes our LZ
-    frames back — including the dictionary-referencing ones under
-    ``-D`` (the format's own decoder adjudicates the encoder
-    subset).
+    """Gate harness for zstd archives. The layout rotates on id mod 6:
+    one frame; TWO concatenated frames splitting the text; a skippable
+    metadata frame BETWEEN two content frames; one frame again; a
+    DICTIONARY leg sub-rotating a raw-content dictionary (the doc's
+    own head as history) and a trained-format one
+    (:func:`codecs.zstd_dictionary`, whose id the frame declares); and
+    a SEEKABLE leg — three frames plus the seek-table skippable
+    frame, reassembled from per-frame ranged reads through the
+    parsed table. Every frame is written and read by libzstd through
+    functions/codecs; the seek table by functions/zstd.
 
     Exactness: lossless, so decoded text equals the document text
     verbatim — md5 + length are pure formulas the DuckDB oracle
@@ -1193,74 +1164,41 @@ def zst_archive_features(docs: DataFrame) -> DataFrame:
     Shape at 100 TB: archives are independent rows through one
     Arrow-batched stage, zero shuffle; within a file, frames (and
     skippable seek-table entries) are the split unit."""
+    from data_warehouse_migration_spark.functions import codecs
     from data_warehouse_migration_spark.functions.zstd import (
-        zstd_compress_lz,
-        zstd_compress_lz_dict,
-        zstd_compress_stored,
-        zstd_decompress,
-        zstd_skippable_frame,
+        zstd_seek_table,
+        zstd_seekable_pack,
+        zstd_seekable_read_frame,
     )
 
     def per_doc(aid: int, text: str):
         raw = text.encode("utf-8")
         leg = aid % 6
-        if leg == 0:
-            blob = zstd_compress_stored(raw, chunk=997)
+        dictionary = None
+        if leg in (0, 3):
+            blob = codecs.compress("zstd", raw)
             n_frames = 1
         elif leg == 1:
             cut = len(raw) // 2
-            blob = zstd_compress_stored(raw[:cut]) + zstd_compress_stored(
-                raw[cut:]
+            blob = codecs.compress("zstd", raw[:cut]) + codecs.compress(
+                "zstd", raw[cut:]
             )
             n_frames = 2
         elif leg == 2:
             cut = len(raw) // 3
             blob = (
-                zstd_compress_stored(raw[:cut])
-                + zstd_skippable_frame(f"doc={aid}".encode(), nibble=aid % 16)
-                + zstd_compress_stored(raw[cut:])
+                codecs.compress("zstd", raw[:cut])
+                + codecs.skippable_frame(f"doc={aid}".encode(), aid % 16)
+                + codecs.compress("zstd", raw[cut:])
             )
             n_frames = 2
-        elif leg == 3:
-            blob = zstd_compress_lz(raw)
-            n_frames = 1
         elif leg == 4:
-            # dictionary leg, sub-rotating on aid: even rows use a
-            # RAW-CONTENT dictionary (pure history — the doc's own
-            # head primes the window, the frame's first matches
-            # reach into it); odd rows author a TRAINED-format
-            # dictionary (zstd_write_dictionary: smoothed Huffman
-            # table + ncount-serialized FSE tables + reps + content)
-            # whose id the frame declares and whose entropy tables
-            # PRIME the first block (Treeless literals, Repeat
-            # sequence modes) — RFC 8878 §5 both directions under
-            # the hash gate per-row
-            content = raw[: max(32, len(raw) // 3)]
+            dictionary = raw[: max(32, len(raw) // 3)]
             if (aid // 6) % 2:
-                from data_warehouse_migration_spark.functions.zstd import (
-                    parse_zstd_dictionary,
-                    zstd_write_dictionary,
-                )
-
-                dblob = zstd_write_dictionary(content, dict_id=aid or 1)
-                zd = parse_zstd_dictionary(dblob)
-                blob = zstd_compress_lz_dict(raw, zd)
-                back = zstd_decompress(blob, dictionary=zd).decode("utf-8")
-            else:
-                blob = zstd_compress_lz_dict(raw, content)
-                back = zstd_decompress(blob, dictionary=content).decode(
-                    "utf-8"
-                )
-            return (aid, back, len(back), 1, len(blob))
+                dictionary = codecs.zstd_dictionary(dictionary, aid or 1)
+            blob = codecs.compress("zstd", raw, dictionary=dictionary)
+            n_frames = 1
         else:
-            # seekable archive (r14): three-way split, seek-table
-            # parse, and PER-FRAME ranged decodes reassemble the text
-            from data_warehouse_migration_spark.functions.zstd import (
-                zstd_seek_table,
-                zstd_seekable_pack,
-                zstd_seekable_read_frame,
-            )
-
             third = max(1, len(raw) // 3)
             parts = [raw[:third], raw[third : 2 * third], raw[2 * third :]]
             blob = zstd_seekable_pack(parts)
@@ -1271,7 +1209,8 @@ def zst_archive_features(docs: DataFrame) -> DataFrame:
                 for e in zstd_seek_table(blob)
             ).decode("utf-8")
             return (aid, back, len(back), 3, len(blob))
-        back = zstd_decompress(blob).decode("utf-8")
+        back = codecs.decompress("zstd", blob, dictionary=dictionary)
+        back = back.decode("utf-8")
         return (aid, back, len(back), n_frames, len(blob))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1301,25 +1240,11 @@ def zst_archive_features(docs: DataFrame) -> DataFrame:
 
 
 def lz4_archive_features(docs: DataFrame) -> DataFrame:
-    """Gate harness for LZ4 archives (functions/lz4 — the r13
-    post-seal rung; VERDICT r13 action #1 gives it the registry slot
-    the sealed window couldn't). The layout rotates on id mod 4 so
-    the decoder's whole frame surface runs under the hash gate
-    per-row: a modern frame with real greedy-compressed blocks; a
-    LEGACY frame (``lz4 -l`` / old Hadoop magic, no checksums, no
-    stored fallback); TWO concatenated frames with a skippable
-    metadata frame between them (the seek-index shape); a
-    multi-block modern frame with per-block checksums (``chunk``
-    below the declared maximum forces several blocks from small
-    text). Every archive is authored by the engine's own writers and
-    read back through the FULL decoder — descriptor flags, header
-    checksum byte, block walk, xxHash32 block/content checksums,
-    legacy chunk rules, skippable dispatch, multi-frame concat.
-
-    Cross-engine generality is pinned in tests/test_lz4.py against
-    the reference CLI in BOTH directions (presets, -BD linked
-    blocks, every block-size code, legacy incl. the >8 MiB
-    incompressible-block bound, truncation sweep, mutation fuzz).
+    """Gate harness for LZ4 archives. The layout rotates on id mod 4:
+    a modern frame; a LEGACY frame (``lz4 -l`` / old Hadoop magic);
+    TWO concatenated modern frames with a skippable metadata frame
+    between them; a modern frame again. Every frame is written and
+    read by liblz4 through functions/codecs.
 
     Exactness: lossless, so decoded text equals the document text
     verbatim — md5/length/frame-count are pure formulas the DuckDB
@@ -1328,34 +1253,26 @@ def lz4_archive_features(docs: DataFrame) -> DataFrame:
     Shape at 100 TB: archives are independent rows through one
     Arrow-batched stage, zero shuffle; with independent blocks (the
     default real pipelines use) blocks are the in-file split unit."""
-    from data_warehouse_migration_spark.functions.lz4 import (
-        lz4_compress,
-        lz4_compress_legacy,
-        lz4_decompress,
-        lz4_skippable_frame,
-    )
+    from data_warehouse_migration_spark.functions import codecs
 
     def per_doc(aid: int, text: str):
         raw = text.encode("utf-8")
         leg = aid % 4
-        if leg == 0:
-            blob = lz4_compress(raw)
+        if leg in (0, 3):
+            blob = codecs.compress("lz4", raw)
             n_frames = 1
         elif leg == 1:
-            blob = lz4_compress_legacy(raw)
+            blob = codecs.compress("lz4", raw, "legacy")
             n_frames = 1
-        elif leg == 2:
+        else:
             cut = len(raw) // 2
             blob = (
-                lz4_compress(raw[:cut])
-                + lz4_skippable_frame(f"doc={aid}".encode(), nibble=aid % 16)
-                + lz4_compress(raw[cut:], chunk_code=5)
+                codecs.compress("lz4", raw[:cut])
+                + codecs.skippable_frame(f"doc={aid}".encode(), aid % 16)
+                + codecs.compress("lz4", raw[cut:])
             )
             n_frames = 2
-        else:
-            blob = lz4_compress(raw, block_checksum=True, chunk=503)
-            n_frames = 1
-        back = lz4_decompress(blob).decode("utf-8")
+        back = codecs.decompress("lz4", blob).decode("utf-8")
         return (aid, back, len(back), n_frames, len(blob))
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

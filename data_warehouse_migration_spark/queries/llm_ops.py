@@ -5133,55 +5133,16 @@ FROM documents
 """,
 )
 def zst_text_archive(spark, sf_dir):
-    """Zstandard archives under the hard gate (functions/zstd — r13,
-    VERDICT r12 missing #2): the compression modern public corpora
-    actually ship in (``.zst`` dumps, HuggingFace corpora, Common
-    Crawl index files). The format composes the ladder's existing
-    ideas — FSE is tabled range coding (the adaptive form lives in
-    functions/xz), the literal path is canonical Huffman (deflate's
-    idea, functions/png), plus LZ77 sequences with a three-slot
-    repeat-offset cache — all implemented from RFC 8878 alone,
-    including xxHash64 from scratch for the content checksum.
-
-    Per document the text round-trips through the engine's own
-    writers and FULL decoder, with the layout rotating on id mod 6:
-    multi-block stored frame / two concatenated frames / a skippable
-    metadata frame between content frames (the seekable-format
-    shape) / a REAL compressed frame from the engine's own LZ77
-    encoder (Compressed_Blocks: predefined-FSE sequences + raw
-    literals), so the FSE state machine, extra-bit reads,
-    repeat-offset arithmetic, and sequence execution run under the
-    hash gate per-row / and (r14, VERDICT r13 action #3) a
-    DICTIONARY leg sub-rotating RAW-CONTENT and TRAINED-format
-    dictionaries: the raw half primes pure history (history-seeded
-    buffer, window check at the dictionary boundary); the trained
-    half is authored by the engine's own ``zstd_write_dictionary``
-    (smoothed Huffman + ncount-serialized FSE tables + reps), its id
-    declared in the frame header, its entropy tables priming the
-    first block's Treeless literals and Repeat sequence modes —
-    RFC 8878 §5 BOTH directions per-row, the reference CLI
-    accepting the engine's dictionaries and primed frames under
-    ``-D`` in tests / a SEEKABLE leg (the r14 split-unit work's gate half):
-    three frames + the public seek-table skippable frame,
-    reassembled from per-frame RANGED reads via the parsed table —
-    footer/table parse, offset arithmetic, and per-frame
-    size/checksum verification per-row (the wall-clock claim lives
-    in SCALING_r14_zstdsplit.json). Decoded text equals the document
-    text verbatim, so
-    md5/length/frame-count are pure formulas the oracle recomputes
-    with no codec anywhere.
-
-    The Huffman-literals, custom-table, and TRAINED-dictionary
-    entropy-priming halves of the decoder have no in-container
-    Python reference encoder to harness per-row, so they are pinned
-    in tests/test_zstd.py against the reference CLI across presets
-    -1/-3/-9/-19, --ultra -22, long-window mode, no-checksum frames,
-    trained dictionaries (``--train`` across levels, wrong-id
-    refusal, truncation + mutation fuzz under the dictionary),
-    corruption, and an every-offset truncation sweep; the CLI also
-    decodes the engine's LZ, stored, and dictionary-referencing
-    frames back (the last under ``-D``) — the format's own decoder
-    adjudicates all three writers.
+    """Zstandard archives under the hard gate: the compression modern
+    public corpora ship in (``.zst`` dumps, HuggingFace corpora,
+    Common Crawl index files). Per document the text round-trips
+    through libzstd (functions/codecs), the layout rotating on id
+    mod 6: one frame / two concatenated frames / a skippable metadata
+    frame between two content frames / one frame / a raw-content or
+    trained dictionary / a seekable archive of three frames read back
+    frame by frame through its seek table. Decoded text equals the
+    document text verbatim, so md5/length/frame-count are pure
+    formulas the oracle recomputes with no codec anywhere.
 
     Shape at 100 TB: archives are independent rows through one
     Arrow-batched stage, zero shuffle; frames (and the seekable
@@ -5212,33 +5173,15 @@ FROM documents
 """,
 )
 def lz4_text_archive(spark, sf_dir):
-    """LZ4 archives under the hard gate (functions/lz4 — VERDICT r13
-    action #1: the r13 post-seal rung was the only shipped codec
-    without a per-row registry gate). ``.lz4`` is the speed-tier
-    framing event pipelines and data lakes ship when they trade
-    ratio for throughput (Kafka, Hadoop codecs, rocksdb backups);
-    the block format is LZ77 at its most minimal — token nibbles,
-    255-run extensions, 2-byte offsets, no entropy stage — so BOTH
-    directions are engine code (a real greedy hash-chain compressor,
-    unlike zstd/brotli where encoders are reference territory).
-
-    Per document the text round-trips through the engine's own
-    writers and FULL decoder, the layout rotating on id mod 4:
-    modern frame with real compressed blocks / LEGACY frame
-    (``lz4 -l`` magic, fixed 8 MiB chunks, no stored fallback) / two
-    concatenated frames with a skippable metadata frame between /
-    multi-block modern frame with per-block xxHash32 checksums.
-    Decoded text equals the document text verbatim, so
-    md5/length/frame-count are pure formulas the oracle recomputes
-    with no codec anywhere.
-
-    Cross-engine pins live in tests/test_lz4.py: the reference CLI
-    decodes every writer shape (incl. legacy + custom chunks) and
-    the decoder reads CLI output across presets, -BD linked blocks,
-    every block-size code, legacy frames above the 8 MiB
-    incompressible-block bound (ADVICE r13), an every-offset
-    truncation sweep, and a 300-trial mutation fuzz; xxHash32 is
-    pinned via every reference trailer.
+    """LZ4 archives under the hard gate: the speed-tier framing event
+    pipelines and data lakes ship when they trade ratio for
+    throughput (Kafka, Hadoop codecs, rocksdb backups). Per document
+    the text round-trips through liblz4 (functions/codecs), the
+    layout rotating on id mod 4: modern frame / LEGACY frame
+    (``lz4 -l`` magic) / two modern frames with a skippable metadata
+    frame between / modern frame. Decoded text equals the document
+    text verbatim, so md5/length/frame-count are pure formulas the
+    oracle recomputes with no codec anywhere.
 
     Shape at 100 TB: archives are independent rows through one
     Arrow-batched stage, zero shuffle; with independent blocks (the

@@ -353,14 +353,10 @@ def test_read_warc_any_dispatch():
 
     import pytest
 
-    from data_warehouse_migration_spark.functions.lz4 import lz4_compress
     from data_warehouse_migration_spark.functions.warc import (
         build_warc_record,
         read_warc_any,
         write_warc_gz,
-    )
-    from data_warehouse_migration_spark.functions.zstd import (
-        zstd_compress_stored,
     )
 
     rec = build_warc_record(
@@ -373,8 +369,9 @@ def test_read_warc_any_dispatch():
         "gzip": write_warc_gz([rec], method="dynamic"),
         "bz2": codecs.compress("bz2", bare),
         "xz": lzma.compress(bare, format=lzma.FORMAT_XZ),
-        "zstd": zstd_compress_stored(bare),
-        "lz4": lz4_compress(bare),
+        "zstd": codecs.compress("zstd", bare),
+        "lz4": codecs.compress("lz4", bare),
+        "lz4 legacy": codecs.compress("lz4", bare, "legacy"),
         "bare": bare,
     }
     for why, blob in variants.items():
@@ -397,22 +394,19 @@ def test_decompression_bomb_caps():
         parse_http_response_decoded,
         read_warc_any,
     )
-    from data_warehouse_migration_spark.functions.zstd import (
-        zstd_compress_stored,
-    )
 
     # ~80 MiB of zeros → a few-KB .zst (RLE blocks): the default
     # transport budget (max(64 MiB, 32× archive)) must fire mid-decode
-    bomb = zstd_compress_stored(b"\x00" * (80 << 20), chunk=64 * 1024)
+    bomb = codecs.compress("zstd", b"\x00" * (80 << 20))
     assert len(bomb) < 64 << 10
     with pytest.raises(ValueError, match="caller's cap"):
         read_warc_any(bomb)
     # explicit budgets thread through
-    small = zstd_compress_stored(b"\x00" * (2 << 20))
+    small = codecs.compress("zstd", b"\x00" * (2 << 20))
     with pytest.raises(ValueError, match="caller's cap"):
         read_warc_any(small, max_output=1 << 20)
     # content-coding leg: default budget max(16 MiB, 256× wire body)
-    body = zstd_compress_stored(b"\x00" * (20 << 20))
+    body = codecs.compress("zstd", b"\x00" * (20 << 20))
     with pytest.raises(ValueError, match="caller's cap"):
         decode_content_encoding({"Content-Encoding": "zstd"}, body)
     with pytest.raises(ValueError, match="caller's cap"):
@@ -427,10 +421,10 @@ def test_decompression_bomb_caps():
     with pytest.raises(ValueError, match="caller's cap"):
         parse_http_response_decoded(resp, max_output=1 << 20)
     # a legitimate coded body still decodes under the default budget
+    page = codecs.compress("zstd", b"ok page")
     status, _, got = parse_http_response_decoded(
         b"HTTP/1.1 200 OK\r\nContent-Encoding: zstd\r\n"
-        b"Content-Length: %d\r\n\r\n"
-        % len(zstd_compress_stored(b"ok page")) + zstd_compress_stored(b"ok page")
+        b"Content-Length: %d\r\n\r\n" % len(page) + page
     )
     assert status == 200 and got == b"ok page"
 
@@ -495,13 +489,9 @@ def test_content_encoding_hostile_paths_quarantine_routable():
         )
     # zstd and br decode (r13); garbage under either token still
     # raises ValueError
-    from data_warehouse_migration_spark.functions.zstd import (
-        zstd_compress_stored,
-    )
-
     assert (
         decode_content_encoding(
-            {"Content-Encoding": "zstd"}, zstd_compress_stored(body)
+            {"Content-Encoding": "zstd"}, codecs.compress("zstd", body)
         )
         == body
     )
@@ -541,14 +531,11 @@ def test_content_coding_chains_invert():
     from data_warehouse_migration_spark.functions.warc import (
         decode_content_encoding,
     )
-    from data_warehouse_migration_spark.functions.zstd import (
-        zstd_compress_stored,
-    )
 
     encoders = {
         "gzip": gzip_compress,
         "deflate": lambda b: codecs.compress("zlib", b),
-        "zstd": zstd_compress_stored,
+        "zstd": lambda b: codecs.compress("zstd", b),
         "br": lambda b: codecs.compress("br", b),
     }
     body = b"stacked codings body " * 30

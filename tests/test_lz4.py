@@ -1,10 +1,9 @@
-"""LZ4 codec (functions/lz4 — r13): from-scratch frame+block decoder
-and real greedy-block encoder cross-pinned against the reference CLI
-in BOTH directions across frame shapes (legacy, linked blocks, every
-block-size code, no-frame-crc), xxHash32 pinned via every reference
-trailer, and the truncation/mutation raise surface the quarantine
-lane routes. Attestation rides this suite (the window sealed before
-the rung landed — module docstring has the posture)."""
+"""LZ4 through functions/codecs (liblz4): reference-CLI streams
+decoded across frame shapes (legacy, linked blocks, every block-size
+code, no-frame-crc, block checksums), our modern and legacy frames
+handed back to the CLI, hand-laid legacy blocks, and the
+truncation/mutation surface the quarantine lane routes — every
+failure a ValueError."""
 
 from __future__ import annotations
 
@@ -15,13 +14,7 @@ import subprocess
 
 import pytest
 
-from data_warehouse_migration_spark.functions.lz4 import (
-    lz4_block_compress,
-    lz4_block_decompress,
-    lz4_compress,
-    lz4_decompress,
-    xxh32,
-)
+from data_warehouse_migration_spark.functions import codecs
 
 _CLI = shutil.which("lz4") or (
     "/root/miniconda/bin/lz4"
@@ -40,6 +33,18 @@ CASES = [
 ]
 
 
+def lz4_decompress(blob, max_output=None):
+    return codecs.decompress("lz4", blob, max_output)
+
+
+def _legacy(*blocks: bytes) -> bytes:
+    """A hand-laid legacy frame: the magic, then size-prefixed blocks."""
+    out = struct.pack("<I", 0x184C2102)
+    for block in blocks:
+        out += struct.pack("<I", len(block)) + block
+    return out
+
+
 def _enc(data: bytes, *args: str) -> bytes:
     return subprocess.run(
         [_CLI, "-c", *args], input=data, stdout=subprocess.PIPE,
@@ -52,22 +57,6 @@ def _dec(data: bytes) -> bytes:
         [_CLI, "-d", "-c"], input=data, stdout=subprocess.PIPE,
         stderr=subprocess.DEVNULL, check=True,
     ).stdout
-
-
-def test_xxh32_known_answer():
-    # the canonical published empty-input vector
-    assert xxh32(b"") == 0x02CC5D05
-
-
-@pytest.mark.skipif(_CLI is None, reason="reference lz4 CLI absent")
-def test_xxh32_against_cli_content_checksums():
-    """The frame trailer IS xxh32(content, 0), so the reference
-    encoder pins our implementation across tail and stripe paths."""
-    for n in (0, 1, 3, 4, 15, 16, 17, 100, 4097):
-        data = bytes((i * 131) & 0xFF for i in range(n))
-        blob = _enc(data, "-1")
-        (stored,) = struct.unpack_from("<I", blob, len(blob) - 4)
-        assert xxh32(data) == stored, n
 
 
 @pytest.mark.skipif(_CLI is None, reason="reference lz4 CLI absent")
@@ -85,56 +74,40 @@ def test_decodes_reference_cli_across_frame_shapes():
 
 @pytest.mark.skipif(_CLI is None, reason="reference lz4 CLI absent")
 def test_cli_decodes_our_frames():
-    from data_warehouse_migration_spark.functions.lz4 import (
-        lz4_compress_legacy,
-    )
-
     for data in CASES:
-        for kwargs in (
-            {}, {"block_checksum": True}, {"chunk_code": 5},
-            {"block_checksum": True, "chunk": 503},
-        ):
-            blob = lz4_compress(data, **kwargs)
-            assert _dec(blob) == data, (len(data), kwargs)
-        assert _dec(lz4_compress_legacy(data)) == data, len(data)
+        assert _dec(codecs.compress("lz4", data)) == data, len(data)
+        assert _dec(codecs.compress("lz4", data, "legacy")) == data, len(data)
 
 
 def test_own_writer_shapes_roundtrip():
-    from data_warehouse_migration_spark.functions.lz4 import (
-        lz4_compress_legacy,
-        lz4_skippable_frame,
-    )
-
     for data in CASES:
-        assert lz4_decompress(lz4_compress_legacy(data)) == data
-        assert lz4_decompress(lz4_compress(data, chunk=503)) == data
+        assert lz4_decompress(codecs.compress("lz4", data, "legacy")) == data
         cut = len(data) // 2
         blob = (
-            lz4_compress(data[:cut])
-            + lz4_skippable_frame(b"meta", nibble=9)
-            + lz4_compress(data[cut:], chunk_code=5)
+            codecs.compress("lz4", data[:cut])
+            + codecs.skippable_frame(b"meta", nibble=9)
+            + codecs.compress("lz4", data[cut:], "legacy")
+            + codecs.compress("lz4", b"")
         )
         assert lz4_decompress(blob) == data
     with pytest.raises(ValueError, match="nibble"):
-        lz4_skippable_frame(b"", nibble=16)
-    with pytest.raises(ValueError, match="chunk"):
-        lz4_compress(b"x", chunk=0)
-    with pytest.raises(ValueError, match="chunk"):
-        lz4_compress(b"x", chunk_code=4, chunk=(64 << 10) + 1)
+        codecs.skippable_frame(b"", nibble=16)
+    with pytest.raises(ValueError):
+        codecs.compress("lz4", b"x", "stored")
+    with pytest.raises(ValueError):
+        codecs.compress("lz4", b"x", dictionary=b"history")
 
 
 def test_own_roundtrip_and_block_layer():
     for data in CASES:
-        assert lz4_decompress(lz4_compress(data)) == data
-    out = bytearray()
-    block = lz4_block_compress(b"abcabcabcabc-tail-bytes")
-    lz4_block_decompress(block, out, 0, 1 << 20)
-    assert bytes(out) == b"abcabcabcabc-tail-bytes"
-    # overlapping match (offset-1 run, extended length) decodes
-    # byte-wise; the empty token is the literals-only last sequence
-    out2 = bytearray()
-    lz4_block_decompress(b"\x1fa\x01\x00\xff\x00\x00", out2, 0, 1 << 20)
-    assert bytes(out2) == b"a" * 275
+        assert lz4_decompress(codecs.compress("lz4", data)) == data
+    # hand-laid blocks: an overlapping match (offset 1, length
+    # extended by a 255 byte) decodes byte-wise, then the
+    # literals-only last sequence
+    assert lz4_decompress(_legacy(b"\x1fa\x01\x00\xff\x00\x50tail!")) == (
+        b"a" * 275 + b"tail!"
+    )
+    assert lz4_decompress(_legacy(b"\x50abcde", b"\x30xyz")) == b"abcdexyz"
 
 
 @pytest.mark.skipif(_CLI is None, reason="reference lz4 CLI absent")
@@ -143,6 +116,7 @@ def test_multiframe_and_skippable():
     b = _enc(b"second", "-9")
     skip = struct.pack("<II", 0x184D2A53, 4) + b"meta"
     assert lz4_decompress(a + skip + b) == b"first second"
+    assert lz4_decompress(a + _enc(b"legacy ", "-l") + b) == b"first legacy second"
 
 
 @pytest.mark.skipif(_CLI is None, reason="reference lz4 CLI absent")
@@ -150,7 +124,7 @@ def test_truncation_raises_valueerror_everywhere():
     blob = _enc(b"truncate me anywhere " * 50, "-1")
     assert lz4_decompress(blob)
     for cut in range(len(blob)):
-        with pytest.raises((ValueError, NotImplementedError)):
+        with pytest.raises(ValueError):
             lz4_decompress(blob[:cut])
 
 
@@ -160,69 +134,69 @@ def test_mutation_fuzz_never_escapes_the_exception_contract():
 
     rng = random.Random(77)
     data = b"fuzz the frame gently " * 50
-    blob = bytearray(_enc(data, "-1"))
-    for _ in range(300):
-        i = rng.randrange(len(blob))
-        old = blob[i]
-        blob[i] ^= 1 << rng.randrange(8)
-        try:
-            lz4_decompress(bytes(blob), max_output=len(data) * 4)
-        except (ValueError, NotImplementedError):
-            pass
-        blob[i] = old
+    for blob in (bytearray(_enc(data, "-1")), bytearray(_enc(data, "-l"))):
+        for _ in range(300):
+            i = rng.randrange(len(blob))
+            old = blob[i]
+            blob[i] ^= 1 << rng.randrange(8)
+            try:
+                lz4_decompress(bytes(blob), max_output=len(data) * 4)
+            except ValueError:
+                pass
+            blob[i] = old
 
 
 @pytest.mark.skipif(_CLI is None, reason="reference lz4 CLI absent")
 def test_legacy_frame_incompressible_9mb():
-    """ADVICE r13: legacy blocks have NO stored fallback, so on
-    incompressible input the compressed block exceeds the 8 MiB chunk
-    size (up to LZ4_compressBound). A 9 MB noisy file through the
-    reference `lz4 -l` must decode, not quarantine."""
+    """Legacy blocks have NO stored fallback, so on incompressible
+    input the compressed block exceeds the 8 MiB chunk size (up to
+    LZ4_compressBound). A 9 MB noisy file through the reference
+    `lz4 -l` must decode, not quarantine."""
     import random
 
     data = random.Random(9).randbytes(9 << 20)
     blob = _enc(data, "-l")
-    # at least one block genuinely exceeds the old 8 MiB cap
+    # at least one block genuinely exceeds 8 MiB
     (first_bsize,) = struct.unpack_from("<I", blob, 4)
     assert first_bsize > 8 << 20
     assert lz4_decompress(blob) == data
     # the caller's cap still binds on the legacy path
-    with pytest.raises(ValueError, match="caller's cap"):
+    with pytest.raises(ValueError, match="cap"):
         lz4_decompress(blob, max_output=1 << 20)
+    with pytest.raises(ValueError, match="cap"):
+        lz4_decompress(blob, max_output=len(data) - 1)
 
 
 def test_legacy_block_bound_split_from_truncation():
-    from data_warehouse_migration_spark.functions.lz4 import _LEGACY_BOUND
-
-    over = struct.pack("<II", 0x184C2102, _LEGACY_BOUND + 1)
+    # LZ4_compressBound(8 MiB): the largest block a legacy frame holds
+    bound = (8 << 20) + (8 << 20) // 255 + 16
     with pytest.raises(ValueError, match="compress bound"):
-        lz4_decompress(over + b"\x00" * 16)
-    short = struct.pack("<II", 0x184C2102, 100) + b"\x00" * 10
+        lz4_decompress(struct.pack("<II", 0x184C2102, bound + 1) + bytes(16))
+    short = struct.pack("<II", 0x184C2102, 100) + bytes(10)
     with pytest.raises(ValueError, match="legacy block truncated"):
         lz4_decompress(short)
 
 
 def test_hostile_guards():
-    with pytest.raises(ValueError, match="magic"):
-        lz4_decompress(b"XXXXXXXX")
-    with pytest.raises(ValueError, match="no LZ4 frame"):
-        lz4_decompress(b"")
-    good = bytearray(lz4_compress(b"payload " * 10))
-    # corrupt the header-checksum byte
-    bad = bytearray(good)
-    bad[14] ^= 0xFF
-    with pytest.raises(ValueError, match="header checksum"):
-        lz4_decompress(bytes(bad))
-    # content checksum
-    bad2 = bytearray(good)
-    bad2[-1] ^= 0xFF
-    with pytest.raises(ValueError, match="content checksum"):
-        lz4_decompress(bytes(bad2))
-    # a block size above the declared maximum raises before allocation
-    frame = bytearray(lz4_compress(b"x" * 100))
-    struct.pack_into("<I", frame, 15, 0x00FFFFFF)  # huge compressed size
-    with pytest.raises(ValueError, match="exceeds declared max|truncated"):
+    for bad in (b"XXXXXXXX", b""):
+        with pytest.raises(ValueError):
+            lz4_decompress(bad)
+    good = codecs.compress("lz4", b"payload " * 10)
+    flg = good[4]
+    assert flg & 0x20 and flg & 0x10 and flg & 0x08 and flg & 0x04
+    # header-checksum byte, then the content checksum
+    for at in (14, len(good) - 1):
+        bad = bytearray(good)
+        bad[at] ^= 0xFF
+        with pytest.raises(ValueError):
+            lz4_decompress(bytes(bad))
+    # a block size above the declared maximum
+    frame = bytearray(good)
+    struct.pack_into("<I", frame, 15, 0x00FFFFFF)
+    with pytest.raises(ValueError):
         lz4_decompress(bytes(frame))
-    # offset 0 is invalid
-    with pytest.raises(ValueError, match="offset 0"):
-        lz4_block_decompress(b"\x10a\x00\x00", bytearray(), 0, 1024)
+    # legacy: a block running past the data, a match past the history
+    with pytest.raises(ValueError):
+        lz4_decompress(_legacy(b"\x50abcde")[:-1])
+    with pytest.raises(ValueError):
+        lz4_decompress(_legacy(b"\x1fa\x09\x00\xff\x00\x50tail!"))

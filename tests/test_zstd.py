@@ -1,23 +1,21 @@
-"""zstd codec (functions/zstd — r13): from-scratch RFC 8878 decoder
-cross-pinned against the reference CLI encoder across presets and
-input shapes, the stored-subset writer pinned in BOTH directions,
-xxHash64 known-answer vectors, and the truncation/corruption raise
-surface the quarantine lane routes."""
+"""zstd through functions/codecs (libzstd) and the seekable format in
+functions/zstd: reference-CLI streams decoded across presets, window
+shapes and dictionaries, our frames handed back to the CLI, xxHash64
+known-answer vectors for the seek table, and the truncation/corruption
+surface the quarantine lane routes — every failure a ValueError."""
 
 from __future__ import annotations
 
 import os
+import random
 import shutil
+import struct
 import subprocess
 
 import pytest
 
-from data_warehouse_migration_spark.functions.zstd import (
-    xxh64,
-    zstd_compress_stored,
-    zstd_decompress,
-    zstd_skippable_frame,
-)
+from data_warehouse_migration_spark.functions import codecs
+from data_warehouse_migration_spark.functions.zstd import xxh64
 
 _CLI = shutil.which("zstd") or (
     "/root/miniconda/bin/zstd"
@@ -37,6 +35,10 @@ CASES = [
 ]
 
 
+def zstd_decompress(blob, max_output=None, dictionary=None):
+    return codecs.decompress("zstd", blob, max_output, dictionary)
+
+
 def _cli_compress(data: bytes, *args: str) -> bytes:
     return subprocess.run(
         [_CLI, "-c", *args],
@@ -46,13 +48,21 @@ def _cli_compress(data: bytes, *args: str) -> bytes:
     ).stdout
 
 
-def _cli_decompress(data: bytes) -> bytes:
+def _cli_decompress(data: bytes, *args: str) -> bytes:
     return subprocess.run(
-        [_CLI, "-d", "-c"],
+        [_CLI, "-d", "-c", *args],
         input=data,
         stdout=subprocess.PIPE,
         check=True,
     ).stdout
+
+
+def _cli_refuses(data: bytes) -> bool:
+    r = subprocess.run(
+        [_CLI, "-d", "-c"], input=data,
+        stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
+    )
+    return r.returncode != 0
 
 
 def test_xxh64_known_answers():
@@ -63,10 +73,8 @@ def test_xxh64_known_answers():
 @pytest.mark.skipif(_CLI is None, reason="reference zstd CLI absent")
 def test_xxh64_against_cli_frame_checksums():
     """The frame checksum IS xxh64's low 32 bits (seed 0), so the
-    reference encoder's trailer pins our implementation across the
-    <32-byte tail paths AND the 4-lane stripe path."""
-    import struct
-
+    reference encoder's trailer pins the seek table's checksum across
+    the <32-byte tail paths AND the 4-lane stripe path."""
     for n in (0, 1, 3, 4, 7, 8, 15, 16, 31, 32, 33, 100, 1000, 4097):
         data = bytes((i * 131) & 0xFF for i in range(n))
         blob = _cli_compress(data, "-1")
@@ -78,11 +86,10 @@ def test_xxh64_against_cli_frame_checksums():
 def test_decodes_reference_cli_across_presets():
     """Every preset tier picks different block/table strategies —
     predefined vs built FSE tables, single- vs 4-stream Huffman, raw
-    vs compressed literals — so the sweep exercises the whole
-    decoder."""
-    for level in ("-1", "-3", "-9", "-19"):
+    vs compressed literals."""
+    for level in (("-1",), ("-3",), ("-9",), ("-19",), ("--ultra", "-22")):
         for data in CASES:
-            blob = _cli_compress(data, level)
+            blob = _cli_compress(data, *level)
             assert zstd_decompress(blob) == data, (level, len(data))
 
 
@@ -99,33 +106,36 @@ def test_decodes_cli_no_checksum_and_long_mode():
 def test_multi_frame_and_skippable():
     a = _cli_compress(b"first frame ", "-3")
     b = _cli_compress(b"second frame", "-1")
-    skip = zstd_skippable_frame(b"ignore me", nibble=7)
+    skip = codecs.skippable_frame(b"ignore me", nibble=7)
     assert zstd_decompress(a + skip + b) == b"first frame second frame"
 
 
 @pytest.mark.skipif(_CLI is None, reason="reference zstd CLI absent")
 def test_cli_decodes_our_stored_frames():
+    """The reference CLI reads our multi-frame files: two frames with
+    a skippable metadata frame between them."""
     for data in CASES:
-        for chunk in (64 * 1024, 1000, 7):
-            blob = zstd_compress_stored(data, chunk=chunk)
-            assert _cli_decompress(blob) == data, (len(data), chunk)
-    assert _cli_decompress(zstd_compress_stored(b"x", checksum=False)) == b"x"
+        cut = len(data) // 3
+        blob = (
+            codecs.compress("zstd", data[:cut])
+            + codecs.skippable_frame(b"meta", nibble=cut % 16)
+            + codecs.compress("zstd", data[cut:])
+        )
+        assert _cli_decompress(blob) == data, len(data)
 
 
 def test_own_stored_roundtrip():
     for data in CASES:
-        assert zstd_decompress(zstd_compress_stored(data)) == data
-        assert (
-            zstd_decompress(zstd_compress_stored(data, checksum=False))
-            == data
-        )
+        assert zstd_decompress(codecs.compress("zstd", data)) == data
     # multi-frame concat + skippable, no CLI needed
     blob = (
-        zstd_compress_stored(b"one ")
-        + zstd_skippable_frame(b"meta")
-        + zstd_compress_stored(b"two")
+        codecs.compress("zstd", b"one ")
+        + codecs.skippable_frame(b"meta")
+        + codecs.compress("zstd", b"two")
     )
     assert zstd_decompress(blob) == b"one two"
+    with pytest.raises(ValueError):
+        codecs.skippable_frame(b"", nibble=16)
 
 
 @pytest.mark.skipif(_CLI is None, reason="reference zstd CLI absent")
@@ -133,7 +143,7 @@ def test_truncation_raises_valueerror_everywhere():
     blob = _cli_compress(b"truncate me anywhere " * 50, "-3")
     assert zstd_decompress(blob)
     for cut in range(len(blob)):
-        with pytest.raises((ValueError, NotImplementedError)):
+        with pytest.raises(ValueError):
             zstd_decompress(blob[:cut])
 
 
@@ -151,54 +161,23 @@ def test_corruption_raises():
 
 
 def test_hostile_guards():
-    import struct
-
-    with pytest.raises(ValueError, match="magic"):
-        zstd_decompress(b"ZZZZZZZZ")
-    with pytest.raises(ValueError, match="no zstd frame"):
-        zstd_decompress(b"")
-    # reserved frame-header bit
-    bad = struct.pack("<I", 0xFD2FB528) + bytes([0x28, 0x00])
-    with pytest.raises(ValueError, match="reserved"):
-        zstd_decompress(bad)
-    # reserved block type inside a valid header
-    good = bytearray(zstd_compress_stored(b"hi"))
-    # block header starts right after magic(4)+fhd(1)+fcs(1)
-    good[6] |= 0x06  # block type 3
-    with pytest.raises(ValueError, match="reserved block"):
-        zstd_decompress(bytes(good))
-    # oversized raw-block size field must raise BEFORE allocation
-    huge = (0 | (0 << 1) | ((1 << 20) << 3)).to_bytes(3, "little")
-    frame = struct.pack("<I", 0xFD2FB528) + bytes([0x20, 0xFF]) + huge
-    with pytest.raises(ValueError, match="cap|truncated"):
-        zstd_decompress(frame)
-
-
-@pytest.mark.skipif(_CLI is None, reason="reference zstd CLI absent")
-def test_dictionary_detected_not_guessed(tmp_path):
-    """A frame referencing a dictionary must raise NotImplementedError
-    naming the id, not decode garbage."""
-    samples = tmp_path / "s"
-    samples.mkdir()
-    for i in range(40):
-        (samples / f"{i}.txt").write_bytes(
-            b"the common prefix of every sample " + str(i).encode()
-        )
-    dic = tmp_path / "d.dict"
-    r = subprocess.run(
-        [_CLI, "--train", *map(str, samples.iterdir()), "-o", str(dic)],
-        capture_output=True,
-    )
-    if r.returncode != 0:
-        pytest.skip("CLI cannot train a dictionary here")
-    blob = subprocess.run(
-        [_CLI, "-c", "-D", str(dic)],
-        input=b"the common prefix of every sample 99",
-        stdout=subprocess.PIPE,
-        check=True,
-    ).stdout
-    with pytest.raises(NotImplementedError, match="dictionary"):
-        zstd_decompress(blob)
+    magic = struct.pack("<I", 0xFD2FB528)
+    for bad in (
+        b"ZZZZZZZZ",                       # wrong magic
+        b"",                               # no frame at all
+        magic + bytes([0x28, 0x00]),       # reserved frame-header bit
+        # single segment, FCS 2, last block of reserved type 3
+        magic + bytes([0x20, 2]) + (1 | 3 << 1 | 2 << 3).to_bytes(3, "little")
+        + b"hi",
+        # a raw block claiming 1 MiB: over the 128 KB block cap
+        magic + bytes([0x20, 0xFF]) + ((1 << 20) << 3).to_bytes(3, "little"),
+        # a window of 2^31: over libzstd's 2^27 decoding limit
+        magic + bytes([0x00, (31 - 10) << 3]) + (1).to_bytes(3, "little"),
+    ):
+        with pytest.raises(ValueError):
+            zstd_decompress(bad)
+    ok = magic + bytes([0x20, 2]) + (1 | 2 << 3).to_bytes(3, "little") + b"hi"
+    assert zstd_decompress(ok) == b"hi"
 
 
 def _train_dict(tmp_path, texts):
@@ -217,18 +196,24 @@ def _train_dict(tmp_path, texts):
 
 
 @pytest.mark.skipif(_CLI is None, reason="reference zstd CLI absent")
-def test_trained_dictionary_decode(tmp_path):
-    """Frames compressed WITH a trained dictionary decode when it is
-    supplied (r14 — VERDICT r13 action #3): entropy priming (the
-    first block may open in Repeat/Treeless modes), repeat-offset
-    priming, and content history, pinned against the reference
-    encoder across levels; a wrong-id dictionary refuses loudly."""
-    import random
-
-    from data_warehouse_migration_spark.functions.zstd import (
-        parse_zstd_dictionary,
+def test_dictionary_detected_not_guessed(tmp_path):
+    """A frame that needs a dictionary raises ValueError when none is
+    supplied, never decodes garbage."""
+    dic = _train_dict(
+        tmp_path,
+        [b"the common prefix of every sample " + str(i).encode()
+         for i in range(40)],
     )
+    blob = _cli_compress(b"the common prefix of every sample 99", "-D", str(dic))
+    with pytest.raises(ValueError):
+        zstd_decompress(blob)
 
+
+@pytest.mark.skipif(_CLI is None, reason="reference zstd CLI absent")
+def test_trained_dictionary_decode(tmp_path):
+    """Frames compressed WITH a CLI-trained dictionary decode when it
+    is supplied, across levels; a wrong-id dictionary and no
+    dictionary both refuse."""
     rng = random.Random(21)
     words = [b"alpha", b"bravo", b"charlie", b"delta", b"echo", b"fox"]
     texts = [
@@ -237,43 +222,30 @@ def test_trained_dictionary_decode(tmp_path):
     ]
     dic = _train_dict(tmp_path, texts)
     dblob = dic.read_bytes()
-    d = parse_zstd_dictionary(dblob)
-    assert d.dict_id != 0 and d.content and d.huf is not None
-    assert all(reg in d.tables for reg in ("ll", "of", "ml"))
     blob = b""
     for level in ("-1", "-5", "-19"):
         for t in texts[:5] + [b"zeta " + texts[0]]:
-            blob = subprocess.run(
-                [_CLI, "-c", level, "-D", str(dic)],
-                input=t, stdout=subprocess.PIPE, check=True,
-            ).stdout
+            blob = _cli_compress(t, level, "-D", str(dic))
             assert zstd_decompress(blob, dictionary=dblob) == t, level
-            assert zstd_decompress(blob, dictionary=d) == t, level
     wrong = bytearray(dblob)
-    wrong[4] ^= 0xFF
-    with pytest.raises(ValueError, match="dictionary"):
+    wrong[4] ^= 0xFF  # the dictionary id
+    with pytest.raises(ValueError):
         zstd_decompress(blob, dictionary=bytes(wrong))
-    # and still refuses with no dictionary at all
-    with pytest.raises(NotImplementedError, match="dictionary"):
+    with pytest.raises(ValueError):
         zstd_decompress(blob)
 
 
 @pytest.mark.skipif(_CLI is None, reason="reference zstd CLI absent")
 def test_trained_dictionary_truncation_and_fuzz(tmp_path):
-    import random
-
     texts = [b"sample record %d with shared shape " % i * 8
              for i in range(60)]
     dic = _train_dict(tmp_path, texts)
     dblob = dic.read_bytes()
     data = texts[7] + b" and a novel tail"
-    blob = subprocess.run(
-        [_CLI, "-c", "-9", "-D", str(dic)],
-        input=data, stdout=subprocess.PIPE, check=True,
-    ).stdout
+    blob = _cli_compress(data, "-9", "-D", str(dic))
     assert zstd_decompress(blob, dictionary=dblob) == data
     for cut in range(len(blob)):
-        with pytest.raises((ValueError, NotImplementedError)):
+        with pytest.raises(ValueError):
             zstd_decompress(blob[:cut], dictionary=dblob)
     rng = random.Random(77)
     mut = bytearray(blob)
@@ -282,48 +254,32 @@ def test_trained_dictionary_truncation_and_fuzz(tmp_path):
         old = mut[i]
         mut[i] ^= 1 << rng.randrange(8)
         try:
-            zstd_decompress(
-                bytes(mut), max_output=len(data) * 4, dictionary=dblob
-            )
-        except (ValueError, NotImplementedError):
+            zstd_decompress(bytes(mut), len(data) * 4, dblob)
+        except ValueError:
             pass
         mut[i] = old
 
 
 @pytest.mark.skipif(_CLI is None, reason="reference zstd CLI absent")
-def test_raw_content_dictionary():
+def test_raw_content_dictionary(tmp_path):
     """A blob without the dictionary magic is pure history (implicit
     id 0) — the reference CLI's raw-content fallback."""
-    import tempfile
-
     history = b"the quick brown fox jumps over the lazy dog " * 40
     data = b"NEW: " + history[:600] + b" tail"
-    with tempfile.NamedTemporaryFile() as f:
-        f.write(history)
-        f.flush()
-        blob = subprocess.run(
-            [_CLI, "-c", "-5", "-D", f.name],
-            input=data, stdout=subprocess.PIPE, check=True,
-        ).stdout
+    raw = tmp_path / "raw.dict"
+    raw.write_bytes(history)
+    blob = _cli_compress(data, "-5", "-D", str(raw))
     assert zstd_decompress(blob, dictionary=history) == data
 
 
 def test_dict_lz_writer_roundtrips_and_cli_adjudicates(tmp_path):
-    """The raw-content-dictionary LZ writer (the gate's r14 leg):
-    frames whose first-block matches reach into dictionary history
-    must round-trip through our decoder AND be accepted by the
-    reference decoder under ``-D`` — the format's own decoder
-    adjudicates the virtual-history offsets and window descriptor."""
-    import random
-
-    from data_warehouse_migration_spark.functions.zstd import (
-        zstd_compress_lz_dict,
-    )
-
+    """Frames written against a raw-content dictionary, whose matches
+    reach into the dictionary's history, round-trip through our
+    decoder AND the reference decoder under ``-D``."""
     rng = random.Random(3)
     for trial in range(20):
         content = bytes(
-            rng.choice(b"abcdefg hij") for _ in range(rng.randrange(0, 2000))
+            rng.choice(b"abcdefg hij") for _ in range(rng.randrange(1, 2000))
         )
         data = (
             content[: rng.randrange(0, len(content) + 1)]
@@ -331,44 +287,37 @@ def test_dict_lz_writer_roundtrips_and_cli_adjudicates(tmp_path):
             + bytes(rng.choice(b"abcdefg hij")
                     for _ in range(rng.randrange(0, 3000)))
         )
-        blob = zstd_compress_lz_dict(data, content)
+        blob = codecs.compress("zstd", data, dictionary=content)
         assert zstd_decompress(blob, dictionary=content) == data, trial
         if _CLI is not None:
             d = tmp_path / "raw.dict"
             d.write_bytes(content)
-            r = subprocess.run(
-                [_CLI, "-d", "-c", "-D", str(d)],
-                input=blob, stdout=subprocess.PIPE,
-                stderr=subprocess.DEVNULL,
-            )
-            assert r.returncode == 0 and r.stdout == data, trial
+            assert _cli_decompress(blob, "-D", str(d)) == data, trial
     # a frame that genuinely used history must NOT decode without it
     content = b"the shared history block " * 40
-    data = content + b" tail"
-    blob = zstd_compress_lz_dict(data, content)
-    with pytest.raises(ValueError, match="frame window"):
+    blob = codecs.compress("zstd", content + b" tail", dictionary=content)
+    with pytest.raises(ValueError):
         zstd_decompress(blob)
 
 
 def test_block_cap_binds_to_the_declared_window():
-    """r14 strictness: Block_Maximum_Size = min(Window_Size, 128 KB)
-    (RFC 8878 §3.1.1.2.3) — a block above the declared window is
-    corruption, as the reference decoder treats it. Offsets LARGER
-    than the window but inside decoded history are deliberately
-    tolerated, because the reference decoder accepts them in
-    single-shot mode (adjudicated here): rejecting would refuse
-    input the format's own decoder reads."""
-    import struct
-
-    from data_warehouse_migration_spark.functions.zstd import (
-        _encode_sequences_predefined,
-    )
+    """Block_Maximum_Size = min(Window_Size, 128 KB) (RFC 8878
+    §3.1.1.2.3): a block above the declared window is corruption.
+    Offsets LARGER than the window but inside decoded history are
+    accepted, as the reference decoder does. Hand-laid frames: two
+    2000-byte raw blocks, then a compressed block of one literal and
+    one predefined-FSE sequence (literal length 1, match 4)."""
+    sequences = {  # match offset → the block's sequence section
+        1500: "0100df055908",
+        3000: "0100bb0ba010",
+        900: "010087032104",
+    }
 
     def frame(offset, wd):
         head = struct.pack("<I", 0xFD2FB528) + bytes([0x00, wd])
         raw = b"a" * 2000
         bh1 = (0 | (0 << 1) | (len(raw) << 3)).to_bytes(3, "little")
-        block = b"\x08x" + _encode_sequences_predefined([(1, 4, offset + 3)])
+        block = b"\x08x" + bytes.fromhex(sequences[offset])
         bh2 = (1 | (2 << 1) | (len(block) << 3)).to_bytes(3, "little")
         return head + bh1 + raw + bh1 + raw + bh2 + block
 
@@ -376,25 +325,19 @@ def test_block_cap_binds_to_the_declared_window():
     ok = frame(1500, 0x08)  # 2 KiB window; blocks fit
     assert zstd_decompress(ok) == expect
     over = frame(3000, 0x08)  # offset beyond window, within history
-    assert zstd_decompress(over) == expect  # reference-matching laxity
+    assert zstd_decompress(over) == expect
     small = frame(900, 0x00)  # 1 KiB window < the 2000-byte blocks
-    with pytest.raises(ValueError, match="block cap"):
+    with pytest.raises(ValueError):
         zstd_decompress(small)
     if _CLI is not None:  # the reference decoder adjudicates all three
         assert _cli_decompress(ok) == expect
         assert _cli_decompress(over) == expect
-        r = subprocess.run(
-            [_CLI, "-d", "-c"], input=small,
-            stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
-        )
-        assert r.returncode != 0
+        assert _cli_refuses(small)
 
 
 def test_zero_sequence_block_trailing_bytes_raise():
-    """VERDICT r13: a compressed block whose sequence count is 0 must
-    consume the block exactly — trailing bytes are corruption, as the
-    reference decoder treats them."""
-    import struct
+    """A compressed block whose sequence count is 0 must consume the
+    block exactly — trailing bytes are corruption."""
 
     def frame(block):
         bh = (len(block) << 3) | (2 << 1) | 1
@@ -408,28 +351,20 @@ def test_zero_sequence_block_trailing_bytes_raise():
     good = frame(b"\x28hello\x00")  # raw literals 'hello', 0 sequences
     assert zstd_decompress(good) == b"hello"
     bad = frame(b"\x28hello\x00\xaa")
-    with pytest.raises(ValueError, match="trailing"):
+    with pytest.raises(ValueError):
         zstd_decompress(bad)
     if _CLI is not None:  # the format's own decoder adjudicates both
         assert _cli_decompress(good) == b"hello"
-        r = subprocess.run(
-            [_CLI, "-d", "-c"], input=bad,
-            stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
-        )
-        assert r.returncode != 0
+        assert _cli_refuses(bad)
 
 
 def test_seekable_format_roundtrip_and_split_correctness():
-    """The seekable format (r14 — VERDICT r13 what's-missing #6):
-    one .zst, many frames, a parseable seek table. Per-frame ranged
-    reads must reproduce exactly the whole-file decode — the in-file
-    split-unit claim as an executable assertion — and a plain decoder
-    (ours and, when present, the reference CLI) must read the file
-    end-to-end, skipping the table."""
-    import struct
-
+    """One .zst, many frames, a parseable seek table. Per-frame ranged
+    reads reproduce exactly the whole-file decode, the table parses
+    from the file's tail alone, and a plain decoder (ours and, when
+    present, the reference CLI) reads the file end-to-end, skipping
+    the table."""
     from data_warehouse_migration_spark.functions.zstd import (
-        zstd_compress_stored,
         zstd_seek_table,
         zstd_seekable_pack,
         zstd_seekable_read_frame,
@@ -438,11 +373,15 @@ def test_seekable_format_roundtrip_and_split_correctness():
     chunks = [b"chunk %d body " % i * (50 + 37 * (i % 5))
               for i in range(17)] + [b""]
     whole = b"".join(chunks)
-    for kw in ({}, {"compressor": zstd_compress_stored},
-               {"checksum": False}):
-        blob = zstd_seekable_pack(chunks, **kw)
+    for checksum in (True, False):
+        blob = zstd_seekable_pack(chunks, checksum=checksum)
         table = zstd_seek_table(blob)
         assert len(table) == len(chunks)
+        # the tail holding the table is enough: no frame body is read
+        tail = len(chunks) * (12 if checksum else 8) + 17
+        assert zstd_seek_table(blob[-tail:], file_len=len(blob)) == table
+        with pytest.raises(ValueError):
+            zstd_seek_table(blob[-tail + 1 :], file_len=len(blob))
         # whole-file decode == concatenated per-frame ranged reads
         assert zstd_decompress(blob) == whole
         for e, chunk in zip(table, chunks):
@@ -472,108 +411,34 @@ def test_seekable_format_roundtrip_and_split_correctness():
 
 
 def test_dictionary_parse_guards():
-    import struct
-
-    from data_warehouse_migration_spark.functions.zstd import (
-        parse_zstd_dictionary,
-    )
-
-    d = parse_zstd_dictionary(b"just history bytes")
-    assert d.dict_id == 0 and d.huf is None
-    assert d.content == b"just history bytes" and d.reps == [1, 4, 8]
-    # structured magic with a truncated entropy section must raise
+    """A dictionary without the magic is raw content; one with the
+    magic but a truncated entropy section refuses to load."""
+    history = b"just history bytes, no magic " * 4
+    blob = codecs.compress("zstd", history, dictionary=history)
+    assert zstd_decompress(blob, dictionary=history) == history
     with pytest.raises(ValueError):
-        parse_zstd_dictionary(struct.pack("<II", 0xEC30A437, 7))
-
-
-def test_huffman_literal_sections():
-    """The r14 literal-section encoder: Huffman-compressed literals
-    (direct 4-bit weights, canonical codes matching the decoder's
-    peek-table fill, 1-stream and 4-stream layouts) are chosen when
-    they win, with RLE for single-byte runs and raw fallbacks for
-    noise / >128 alphabets / >11-bit skew — every form adjudicated
-    by our decoder and (when present) the reference CLI inside the
-    LZ frames the suite already pins."""
-    import random
-
-    from data_warehouse_migration_spark.functions.zstd import (
-        _decode_literals,
-        _encode_literals,
-    )
-
-    rng = random.Random(13)
-    cases = [
-        b"",                                  # raw, empty
-        b"\x07" * 500,                        # RLE
-        b"abracadabra alakazam " * 20,        # huffman 1-stream
-        b"abracadabra alakazam " * 200,       # huffman 4-stream
-        bytes(rng.randrange(256) for _ in range(2000)),  # raw (noise)
-        ("h\xe9llo w\xf6rld " * 100).encode("utf-8"),    # >128 -> raw
-        b"".join(bytes([255 - (i % 3)]) * (3 ** i) for i in range(9)),
-        rng.randbytes(50) * 40,               # mid-entropy
-    ]
-    saw = set()
-    for lits in cases:
-        sec = _encode_literals(lits)
-        got, used = _decode_literals(sec, 0, len(sec), {})
-        assert got == lits and used == len(sec)
-        saw.add(sec[0] & 3)
-    assert saw >= {0, 1, 2}  # raw, RLE, and compressed all exercised
-    # the compressed form actually compresses text (entropy-only
-    # layer: ~4.9 bits/byte on English; LZ matches live elsewhere)
-    text = b"the quick brown fox jumps over the lazy dog " * 30
-    assert len(_encode_literals(text)) < len(text) * 3 // 4
-
-
-def test_lz_encoder_roundtrips_own_decoder():
-    import random
-
-    rng = random.Random(5)
-    from data_warehouse_migration_spark.functions.zstd import (
-        zstd_compress_lz,
-    )
-
-    cases = CASES + [
-        bytes(rng.randrange(256) for _ in range(50_000)),
-        b" ".join(
-            rng.choice([b"alpha", b"beta", b"gamma"]) for _ in range(30_000)
-        ),
-        b"x" * 300_000,  # multi-block
-    ]
-    for data in cases:
-        assert zstd_decompress(zstd_compress_lz(data)) == data, len(data)
+        zstd_decompress(blob, dictionary=struct.pack("<II", 0xEC30A437, 7))
 
 
 @pytest.mark.skipif(_CLI is None, reason="reference zstd CLI absent")
 def test_cli_decodes_our_lz_frames():
-    """The reference implementation must accept the engine's REAL
-    compressed blocks (predefined-FSE sequences + raw literals) —
-    states, extra bits, backward-stream fold, literals sizing, and
-    the incompressible raw-block fallback all adjudicated by the
-    format's own decoder."""
-    import random
-
+    """The reference implementation accepts our frames, from short
+    literals-only inputs through multi-block incompressible ones."""
     rng = random.Random(11)
-    from data_warehouse_migration_spark.functions.zstd import (
-        zstd_compress_lz,
-    )
-
     cases = CASES + [
         bytes(rng.randrange(256) for _ in range(50_000)),
         ("mixed text with 12345 numbers and repeats " * 3000).encode(),
+        b"x" * 300_000,  # multi-block
     ]
     for data in cases:
-        assert _cli_decompress(zstd_compress_lz(data)) == data, len(data)
+        assert _cli_decompress(codecs.compress("zstd", data)) == data, len(data)
 
 
 @pytest.mark.skipif(_CLI is None, reason="reference zstd CLI absent")
 def test_mutation_fuzz_never_escapes_the_exception_contract():
-    """200 seeded single-byte corruptions of a real frame: each must
-    either decode (mutations in skippable padding can be inert) or
-    raise ValueError/NotImplementedError — never IndexError, never an
-    OverflowError, never a hang past the output cap."""
-    import random
-
+    """200 seeded single-bit corruptions of a real frame: each must
+    either decode (some header bits are inert) or raise ValueError —
+    never another class, never a hang past the output cap."""
     rng = random.Random(1234)
     data = b"fuzz me gently, said the frame " * 40
     blob = bytearray(_cli_compress(data, "-3"))
@@ -583,200 +448,26 @@ def test_mutation_fuzz_never_escapes_the_exception_contract():
         blob[i] ^= 1 << rng.randrange(8)
         try:
             zstd_decompress(bytes(blob), max_output=len(data) * 4)
-        except (ValueError, NotImplementedError):
+        except ValueError:
             pass
         blob[i] = old
 
 
-def test_fse_bijection_property_over_random_tables():
-    """For ANY valid normalized-count table (random mixes of positive
-    and 'less than 1' probabilities at random accuracy logs), the
-    per-symbol transition ranges tile the state space, so encoding by
-    walking the decode table backward and re-decoding forward is the
-    identity and consumes the bitstream exactly — the argument
-    zstd_compress_lz's sequence writer rests on, pinned beyond the
-    three predefined distributions."""
-    import random
-
-    from data_warehouse_migration_spark.functions.zstd import (
-        _BackBits,
-        _fse_build_table,
-        _fse_encode_cover,
-    )
-
-    rng = random.Random(7)
-    for _ in range(25):
-        al = rng.choice([5, 6, 7])
-        total = 1 << al
-        nsym = rng.randrange(2, 40)
-        counts = [0] * nsym
-        remaining = total
-        live = rng.sample(range(nsym), rng.randrange(2, nsym + 1))
-        for s in live[:-1]:
-            if remaining <= 1:
-                break
-            if rng.random() < 0.25:
-                counts[s] = -1
-                remaining -= 1
-            else:
-                counts[s] = rng.randrange(1, remaining)
-                remaining -= counts[s]
-        counts[live[-1]] = max(remaining, 0) or counts[live[-1]]
-        if sum(abs(c) if c < 0 else c for c in counts) != total:
-            continue  # rare degenerate draw; the next trial covers it
-        syms, nbits, base = _fse_build_table(counts, al)
-        cover = _fse_encode_cover((syms, nbits, base))
-        alphabet = [s for s, c in enumerate(counts) if c != 0]
-        seq = [rng.choice(alphabet) for _ in range(60)]
-        st = [0] * len(seq)
-        st[-1] = syms.index(seq[-1])
-        for i in range(len(seq) - 2, -1, -1):
-            st[i] = cover[(seq[i], st[i + 1])]
-        reads = [(st[0], al)]
-        for i in range(len(seq) - 1):
-            cur = st[i]
-            reads.append((st[i + 1] - base[cur], nbits[cur]))
-        acc = 1
-        for v, w in reads:
-            acc = (acc << w) | (v & ((1 << w) - 1))
-        blob = acc.to_bytes((acc.bit_length() + 7) // 8, "little")
-        bb = _BackBits(blob)
-        s = bb.read(al)
-        out = []
-        for i in range(len(seq)):
-            out.append(syms[s])
-            if i != len(seq) - 1:
-                s = base[s] + bb.read(nbits[s])
-        assert out == seq
-        assert bb.pos == 0  # fully consumed, exactly
-
-
-def test_fse_ncount_writer_roundtrips():
-    """The r14 ncount serializer is the exact inverse of the reader:
-    3000 random valid normalized-count tables (random accuracy logs,
-    zero runs, drained tails) plus the three predefined
-    distributions round-trip bit-exactly."""
-    import random
-
-    from data_warehouse_migration_spark.functions.zstd import (
-        _FwdBits,
-        _LL_DEFAULT,
-        _ML_DEFAULT,
-        _OF_DEFAULT,
-        _fse_read_ncount,
-        _fse_write_ncount,
-    )
-
-    rng = random.Random(99)
-    done = 0
-    for _ in range(3000):
-        al = rng.randrange(5, 10)
-        size = 1 << al
-        n_sym = rng.randrange(2, 54)
-        counts = [0] * n_sym
-        left = size
-        live = list(range(n_sym))
-        rng.shuffle(live)
-        for idx, s in enumerate(live):
-            if left <= 0:
-                break
-            if idx == len(live) - 1 or left == 1:
-                c = left
-            else:
-                c = rng.randrange(0, left + 1)
-                if c == 0 and rng.random() < 0.3:
-                    counts[s] = -1
-                    left -= 1
-                    continue
-            counts[s] = c
-            left -= c
-        if left > 0:
-            counts[live[0]] += left
-        try:
-            blob = _fse_write_ncount(counts, al)
-        except ValueError:
-            continue  # drains before trailing nonzeros: not serializable
-        got, gal = _fse_read_ncount(_FwdBits(blob), 60, 9)
-        assert gal == al
-        assert got == counts[: len(got)]
-        assert all(c == 0 for c in counts[len(got):])
-        done += 1
-    assert done > 2500
-    for counts, al in (_LL_DEFAULT, _ML_DEFAULT, _OF_DEFAULT):
-        blob = _fse_write_ncount(list(counts), al)
-        got, gal = _fse_read_ncount(_FwdBits(blob), 60, 9)
-        assert got == list(counts) and gal == al
-
-
-def test_custom_fse_sequence_tables_cli_adjudicated(tmp_path):
-    """The r14 mode-selecting sequence encoder (Predefined / RLE /
-    custom FSE_Compressed per register, exact-cost choice): frames
-    whose blocks carry FITTED tables must round-trip through our
-    decoder and the reference decoder, and skewed content must
-    actually select mode 2 somewhere."""
-    import random
-
-    from data_warehouse_migration_spark.functions.zstd import (
-        _encode_sequences,
-        zstd_compress_lz,
-    )
-
-    rng = random.Random(17)
-    words = [b"alpha", b"beta", b"gamma", b"delta"]
-    cases = [
-        b" ".join(rng.choice(words) for _ in range(20000)),
-        b"ab" * 40000,                       # single-code registers -> RLE mode
-        bytes(rng.randrange(64) for _ in range(30000)) * 2,
-        ("long prose with natural repetition " * 2000).encode(),
-    ]
-    saw_modes = set()
-    for t in cases:
-        blob = zstd_compress_lz(t)
-        assert zstd_decompress(blob) == t
-        if _CLI is not None:
-            r = subprocess.run(
-                [_CLI, "-d", "-c"], input=blob,
-                stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
-            )
-            assert r.returncode == 0 and r.stdout == t
-    # inspect mode bytes directly on a crafted skewed block
-    seqs = [(1, 4, 8)] * 50 + [(2, 5, 8)] * 3
-    sec = _encode_sequences(seqs)
-    n_hdr = 1 if len(seqs) < 128 else 2
-    modes = sec[n_hdr]
-    saw_modes = {(modes >> 6) & 3, (modes >> 4) & 3, (modes >> 2) & 3}
-    assert 1 in saw_modes or 2 in saw_modes  # RLE or fitted table chosen
-
-
 def test_trained_dictionary_writer_both_directions(tmp_path):
-    """r14's capstone: the engine AUTHORS a trained-format dictionary
-    (magic/id, Huffman table smoothed over the low alphabet, the
-    three FSE tables via the ncount writer, repeat offsets, content)
-    and compresses frames whose FIRST block is genuinely PRIMED —
-    Treeless literals + Repeat-mode sequence tables. Adjudication in
-    all four directions: our decoder reads our frames with the
-    dictionary; it refuses without it (the frame declares the id);
-    the REFERENCE decoder accepts our dictionary file and our primed
-    frames under ``-D``; and our decoder reads reference frames
-    compressed with OUR dictionary."""
-    import random
-
-    from data_warehouse_migration_spark.functions.zstd import (
-        parse_zstd_dictionary,
-        zstd_compress_lz_dict,
-        zstd_write_dictionary,
-    )
-
+    """``codecs.zstd_dictionary`` authors a trained-format dictionary
+    from content alone. Adjudication in four directions: our decoder
+    reads our frames with the dictionary; it refuses without it (the
+    frame declares the id); the REFERENCE decoder accepts our
+    dictionary file and our frames under ``-D``; and our decoder
+    reads reference frames compressed with OUR dictionary."""
     rng = random.Random(8)
     words = [b"alpha", b"bravo", b"charlie", b"delta"]
     content = b" ".join(rng.choice(words) for _ in range(400))
-    dblob = zstd_write_dictionary(content, dict_id=0xABCD1234)
-    d = parse_zstd_dictionary(dblob)
-    assert d.dict_id == 0xABCD1234 and d.content == content
-    assert d.huf is not None and set(d.tables) == {"ll", "of", "ml"}
+    dblob = codecs.zstd_dictionary(content, dict_id=0xABCD1234)
+    assert struct.unpack_from("<II", dblob) == (0xEC30A437, 0xABCD1234)
+    assert dblob.endswith(content)
     dfile = tmp_path / "engine.dict"
     dfile.write_bytes(dblob)
-    primed_seen = False
     for trial in range(12):
         data = (
             content[: rng.randrange(len(content))]
@@ -784,103 +475,20 @@ def test_trained_dictionary_writer_both_directions(tmp_path):
             + b" ".join(rng.choice(words)
                         for _ in range(rng.randrange(0, 800)))
         )
-        blob = zstd_compress_lz_dict(data, d)
+        blob = codecs.compress("zstd", data, dictionary=dblob)
         assert zstd_decompress(blob, dictionary=dblob) == data, trial
-        with pytest.raises(NotImplementedError, match="dictionary"):
+        with pytest.raises(ValueError):
             zstd_decompress(blob)
-        # first-block mode inspection: Treeless literals engaged
-        bh = blob[14] | (blob[15] << 8) | (blob[16] << 16)
-        if (bh >> 1) & 3 == 2 and blob[17] & 3 == 3:
-            primed_seen = True
         if _CLI is not None:
-            r = subprocess.run(
-                [_CLI, "-d", "-c", "-D", str(dfile)],
-                input=blob, stdout=subprocess.PIPE,
-                stderr=subprocess.DEVNULL,
-            )
-            assert r.returncode == 0 and r.stdout == data, trial
-            cli = subprocess.run(
-                [_CLI, "-c", "-7", "-D", str(dfile)],
-                input=data, stdout=subprocess.PIPE,
-                stderr=subprocess.DEVNULL,
-            )
-            assert cli.returncode == 0
-            assert zstd_decompress(cli.stdout, dictionary=d) == data
-    assert primed_seen
-    # hostile writer inputs refuse loudly
-    with pytest.raises(ValueError, match="non-empty"):
-        zstd_write_dictionary(b"", 7)
-    with pytest.raises(ValueError, match="nonzero"):
-        zstd_write_dictionary(b"x", 0)
-
-
-def test_fse_compressed_huffman_weights_form():
-    """r14: the FSE-compressed Huffman-weights description (head <
-    128 — two interleaved states, padded-read termination) round-
-    trips through the reader for random alphabets INCLUDING the
-    >128-symbol shapes the direct form cannot express, and UTF-8 /
-    high-byte literals now Huffman-compress inside LZ frames the
-    reference decoder accepts."""
-    import random
-
-    from data_warehouse_migration_spark.functions.zstd import (
-        _huf_build_weights,
-        _huf_read_tree,
-        _huf_table_from_weights,
-        _huf_write_tree,
-        zstd_compress_lz,
-    )
-
-    rng = random.Random(31)
-    wide_seen = 0
-    for trial in range(300):
-        nsym = rng.randrange(2, 256)
-        freq = {s: rng.randrange(1, 1000)
-                for s in rng.sample(range(256), nsym)}
-        built = _huf_build_weights(freq)
-        if built is None:
-            continue
-        weights, _mb = built
-        last = max(weights)
-        wlist = [weights.get(s, 0) for s in range(last)]
-        desc = _huf_write_tree(wlist)
-        if desc is None:
-            continue
-        table, max_bits, used = _huf_read_tree(desc)
-        assert used == len(desc), trial
-        assert (table, max_bits) == _huf_table_from_weights(wlist), trial
-        if last > 128:
-            assert desc[0] < 128  # only the FSE form can carry it
-            wide_seen += 1
-    assert wide_seen > 20
-    utf8 = ("héllo wörld ünïcode çafé " * 1500).encode()
-    blob = zstd_compress_lz(utf8)
-    assert zstd_decompress(blob) == utf8
-    assert len(blob) < len(utf8) // 50  # genuinely compressed now
+            assert _cli_decompress(blob, "-D", str(dfile)) == data, trial
+            cli = _cli_compress(data, "-7", "-D", str(dfile))
+            assert zstd_decompress(cli, dictionary=dblob) == data
+    # full-alphabet (CJK) content makes a dictionary too
+    content = ("中文 内容 样本 数据 " * 60).encode()
+    dblob = codecs.zstd_dictionary(content, 99)
+    data = content[:200] + " NEW 中文 数据 样本 ".encode() * 30
+    frame = codecs.compress("zstd", data, dictionary=dblob)
+    assert zstd_decompress(frame, dictionary=dblob) == data
     if _CLI is not None:
-        assert _cli_decompress(blob) == utf8
-        # a full-alphabet dictionary (CJK content) still loads in the
-        # reference and primes our frames
-        import tempfile
-
-        from data_warehouse_migration_spark.functions.zstd import (
-            parse_zstd_dictionary,
-            zstd_compress_lz_dict,
-            zstd_write_dictionary,
-        )
-
-        content = ("中文 内容 样本 数据 " * 60).encode()
-        dblob = zstd_write_dictionary(content, 99)
-        d = parse_zstd_dictionary(dblob)
-        data = content[:200] + " NEW 中文 数据 样本 ".encode() * 30
-        frame = zstd_compress_lz_dict(data, d)
-        assert zstd_decompress(frame, dictionary=dblob) == data
-        assert frame[17] & 3 == 3  # Treeless first block engaged
-        with tempfile.NamedTemporaryFile() as f:
-            f.write(dblob)
-            f.flush()
-            r = subprocess.run(
-                [_CLI, "-d", "-c", "-D", f.name], input=frame,
-                stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
-            )
-            assert r.returncode == 0 and r.stdout == data
+        dfile.write_bytes(dblob)
+        assert _cli_decompress(frame, "-D", str(dfile)) == data
