@@ -4,20 +4,26 @@ trainer for IVF coarse quantizers (operators/similarity.ivf_topk takes
 these centroids directly).
 
 Scale posture: each iteration is ONE pass over the corpus — assignment
-is a zero-shuffle projection against broadcast centroid literals
-(k×dim doubles, tiny), and the centroid update is one groupBy-avg
-shuffle keyed on (cluster, component). Only k×dim numbers ever reach
-the driver per iteration. Deterministic throughout: init = the k
-lowest-id vectors, ties broken by cluster index, so reruns and
-resizes agree.
+is a zero-shuffle Arrow-batched numpy pass (operators/vector_kernels;
+the k×dim centroid doubles ride in the pickled kernel), and the
+centroid update is one groupBy-avg shuffle keyed on (cluster,
+component). Only k×dim numbers ever reach the driver per iteration.
+Deterministic throughout: init = the k lowest-id vectors, ties broken
+by cluster index, so reruns and resizes agree.
 """
 
 from __future__ import annotations
 
 from contextlib import contextmanager
+from functools import partial
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
+
+from data_warehouse_migration_spark.operators.vector_kernels import (
+    nearest_centroid,
+)
 
 
 @contextmanager
@@ -89,53 +95,37 @@ def double_array_literal(a) -> Column:
     return F.expr(render(a))
 
 
-def _centroid_literal(centroids: list[list[float]]) -> Column:
-    return double_array_literal(centroids)
-
-
 def assign_clusters(
     vectors: DataFrame,
     centroids: list[list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """(id, cluster, sq_dist) — nearest centroid per vector, computed
-    against broadcast literals inside codegen; lowest cluster index
-    wins exact-distance ties.
+    """(id, vec, cluster, sq_dist) — nearest centroid per vector;
+    lowest cluster index wins exact-distance ties.
 
-    The k distances come from ONE ``transform`` lambda over a literal
-    array-of-centroids rather than k unrolled per-centroid folds: the
-    distance body is compiled once instead of k times, shrinking the
-    generated code ~k× (the unrolled form recompiled a ~k·dim-term
-    expression every Lloyd's iteration, the dominant LOCAL cost of
-    the kmeans family — r7 A/B; per-element arithmetic and its order
-    are unchanged, so distances are bit-identical). Ties: array_min
-    over struct(d, c) — lexicographic, lowest cluster on equal d,
-    exactly as before."""
-    # Squared diff via self-multiplication, not ``** 2``: Spark's power
-    # lowers to Math.pow (~1-ulp); the product is exact IEEE and matches
-    # the DuckDB oracle's (x-m)*(x-m), keeping distances bitwise
-    # comparable before rounding.
-    lit_cents = _centroid_literal(centroids)
-    vec = F.col(vec_col)
-    dist_structs = F.transform(
-        lit_cents,
-        lambda cent, i: F.struct(
-            F.aggregate(
-                F.zip_with(vec, cent, lambda a, b: a.cast("double") - b),
-                F.lit(0.0),
-                lambda acc, x: acc + x * x,
-            ).alias("d"),
-            i.cast("int").alias("c"),
-        ),
+    One zero-shuffle ``mapInArrow`` pass: the centroids (k×dim
+    doubles) travel inside the pickled kernel, and each Arrow batch is
+    one numpy computation (operators/vector_kernels.nearest_centroid).
+    The distance is Σ (v − c)·(v − c) in float64, summed left to right
+    — the arithmetic of the DuckDB oracle's (x-m)*(x-m) — so distances
+    are bitwise comparable before rounding. A NULL vector, a NULL
+    component or a length mismatch gives a NULL distance, which sorts
+    first: such a row lands in the lowest cluster whose distance is
+    NULL (cluster 0 unless the centroids differ in length), with
+    ``sq_dist`` NULL."""
+    src = vectors.select(id_col, vec_col)
+    schema = StructType(
+        src.schema.fields
+        + [StructField("cluster", IntegerType()), StructField("sq_dist", DoubleType())]
     )
-    best = F.array_min(dist_structs)
-    return vectors.select(
-        F.col(id_col),
-        F.col(vec_col),
-        best["c"].alias("cluster"),
-        best["d"].alias("sq_dist"),
+    kernel = partial(
+        nearest_centroid,
+        centroids=[[float(x) for x in c] for c in centroids],
+        id_col=id_col,
+        vec_col=vec_col,
     )
+    return src.mapInArrow(kernel, schema)
 
 
 def kmeans(

@@ -10,9 +10,12 @@ that semantic duplicates land in the SAME k-means cluster, so the
 pair search only needs to run within clusters — O(Σ cᵢ²), which the
 operator controls by choosing k so that E[cᵢ] = N/k stays bounded
 (the paper uses k ≈ 11k clusters for 100M+ docs). The cluster
-assignment itself is the zero-shuffle broadcast-centroid projection
-from operators/clustering.py, and the pair join shuffles on the
-cluster id only.
+assignment itself is the zero-shuffle Arrow-batched pass of
+operators/clustering.assign_clusters, and the pair search shuffles on
+the cluster id only: one ``groupBy("cluster").applyInArrow`` whose
+numpy kernel (operators/vector_kernels.cluster_pairs) scores each
+cluster's pairs in 512-row tiles and emits only candidates near
+``tau``; Spark applies the rounded threshold and keeps the lowest id.
 
 Scale contract (ENFORCED, r7 — previously advisory): the O(Σ cᵢ²)
 bound only holds if no single cluster grows quadratic-hot, so
@@ -28,7 +31,7 @@ bound only holds if no single cluster grows quadratic-hot, so
 - a cluster still oversized after the depth budget — the degenerate
   case, e.g. millions of bit-identical vectors that no centroid
   split can separate — RAISES with the offending sizes instead of
-  silently running an N² pair join.
+  silently running an N² pair search.
 
 The size check is a per-round ``groupBy(cluster).count().collect()``
 — bounded by the number of clusters, never by N — and splitting runs
@@ -51,15 +54,17 @@ synthetic hot-cluster data instead).
 from __future__ import annotations
 
 import math
+from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from data_warehouse_migration_spark.operators.clustering import (
     kmeans,
     static_tiny_jobs,
 )
-from data_warehouse_migration_spark.operators.similarity import dot, l2_norm
+from data_warehouse_migration_spark.operators.vector_kernels import cluster_pairs
 
 
 def derive_k(n_vectors: int, target_cluster_size: int = 1024, k_min: int = 8) -> int:
@@ -103,6 +108,48 @@ def _split_oversized(
         )
         next_id += sub_k
     return out, next_id
+
+
+def near_dup_pairs(
+    assigned: DataFrame,
+    id_col: str,
+    vec_col: str,
+    tau: float,
+    round_to: int,
+) -> DataFrame:
+    """Same-cluster pairs ``(_a_id, _b_id, cos)`` with ``_a_id <
+    _b_id`` and ``round(cos, round_to) ≥ tau``.
+
+    One ``groupBy("cluster").applyInArrow``: per cluster the numpy
+    kernel (operators/vector_kernels.cluster_pairs) computes every
+    pair's cosine — the fold of ``similarity.cosine``, bit for bit —
+    and emits only candidates within ``10**-round_to`` of ``tau``
+    (or NaN). Spark then applies the exact rounded filter, so the
+    rounding stays Spark's HALF_UP ``round``. :func:`semdedup` calls
+    it only after the enforced ``max_cluster_size`` check, which
+    bounds a cluster's kernel memory to ``PAIR_TILE ×
+    max_cluster_size`` doubles per temporary."""
+    id_type = assigned.schema[id_col].dataType
+    schema = StructType(
+        [
+            StructField("_a_id", id_type),
+            StructField("_b_id", id_type),
+            StructField("cos", DoubleType()),
+        ]
+    )
+    kernel = partial(
+        cluster_pairs,
+        id_col=id_col,
+        vec_col=vec_col,
+        threshold=tau - 10.0**-round_to,
+    )
+    return (
+        assigned.select("cluster", id_col, vec_col)
+        .groupBy("cluster")
+        .applyInArrow(kernel, schema)
+        .withColumn("cos", F.round("cos", round_to))
+        .filter(F.col("cos") >= tau)
+    )
 
 
 def semdedup(
@@ -195,32 +242,8 @@ def semdedup(
             vec_col,
             target_cluster_size,
         )
-    # Norms are a per-VECTOR quantity: compute each once before the
-    # pair join — byte-identical to cosine() (same dot/(norm·norm)
-    # expression, just not recomputed) at a third of the per-pair fold
-    # work (the LSH-verification precedent, operators/similarity.py).
-    sized = assigned.withColumn("_nrm", l2_norm(F.col(vec_col)))
-    a = sized.select(
-        "cluster",
-        F.col(id_col).alias("_a_id"),
-        F.col(vec_col).alias("_a_vec"),
-        F.col("_nrm").alias("_a_nrm"),
-    )
-    b = sized.select(
-        "cluster",
-        F.col(id_col).alias("_b_id"),
-        F.col(vec_col).alias("_b_vec"),
-        F.col("_nrm").alias("_b_nrm"),
-    )
-    den = F.col("_a_nrm") * F.col("_b_nrm")
-    cos = F.when(den == 0, F.lit(0.0)).otherwise(
-        dot(F.col("_a_vec"), F.col("_b_vec")) / den
-    )
     dup = (
-        a.join(b, "cluster")
-        .filter(F.col("_a_id") < F.col("_b_id"))
-        .withColumn("cos", F.round(cos, round_to))
-        .filter(F.col("cos") >= tau)
+        near_dup_pairs(assigned, id_col, vec_col, tau, round_to)
         .groupBy(F.col("_b_id").alias(id_col))
         .agg(F.min("_a_id").alias("dup_of"))
     )

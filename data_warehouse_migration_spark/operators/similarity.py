@@ -5,9 +5,11 @@ variant (random hyperplane signs) is the 100 TB path: candidates are
 generated inside buckets so the pairwise work drops from |Q|×N to
 |Q|×(N / 2^bits) in expectation, then exact-rescored.
 
-All math is native Column expressions — ``zip_with`` for the product,
-``aggregate`` for the (sequential, deterministic) fold — no UDFs; at
-scale these vectorize inside codegen and never leave the JVM.
+The cosine math here is native Column expressions — ``zip_with`` for
+the product, ``aggregate`` for the (sequential, deterministic) fold —
+evaluated in the JVM. Batch SemDeDup's within-cluster search runs on
+the numpy kernel in operators/vector_kernels.py instead, which sums in
+the same order, so the two agree bit for bit.
 """
 
 from __future__ import annotations
@@ -18,16 +20,19 @@ from pyspark.sql import functions as F
 
 
 def dot(a: Column, b: Column) -> Column:
-    # The fold form is deliberate (r15 optimization round, measured):
-    # higher-order array functions are CodegenFallback — ArrayAggregate
-    # runs ONE interpreted node looping over the elements — while the
-    # dim-unrolled flat tree ((0.0 + a0·b0) + a1·b1 + …), though
-    # whole-stage-codegen-eligible, lands TWICE in pair-join stages
-    # (filter-on-cosine becomes a join residual AND a project) and
-    # pushes the generated method past HotSpot's huge-method JIT limit:
-    # the stage then executes as interpreted bytecode — 2-4× SLOWER
-    # than the fold (semdedup 8.7 s vs 4.8 s, lsh rescore 7.4 s vs
-    # 3.1 s at sf0.1). The fold's cost is flat and predictable.
+    # The fold form is deliberate for the pair joins that stay on
+    # Column expressions (brute-force top-k, LSH rescore, IVF, the
+    # streaming SemDeDup probe). Higher-order array functions are
+    # CodegenFallback — ArrayAggregate runs ONE interpreted node
+    # looping over the elements — while the dim-unrolled flat tree
+    # ((0.0 + a0·b0) + a1·b1 + …), though whole-stage-codegen-eligible,
+    # lands TWICE in pair-join stages (filter-on-cosine becomes a join
+    # residual AND a project) and pushes the generated method past
+    # HotSpot's huge-method JIT limit: the stage then executes as
+    # interpreted bytecode — 2-4× SLOWER than the fold (r15, sf0.1:
+    # semdedup 8.7 s vs 4.8 s, lsh rescore 7.4 s vs 3.1 s). The fold's
+    # cost is flat and predictable. Batch SemDeDup has since moved to
+    # operators/vector_kernels.py, which sums in this same order.
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
@@ -524,32 +529,6 @@ def ivf_topk(
         .filter(F.col("rank") <= k)
         .select("q_id", "n_id", "cosine", "rank")
     )
-
-
-def cosine_pandas_udf():
-    """Arrow-batched Pandas-UDF cosine — the sanctioned escape hatch for
-    when vector math outgrows Column expressions (e.g. calling into a
-    BLAS/faiss kernel). One Python transition per Arrow batch, matrix
-    math vectorized in numpy; NEVER a row-at-a-time Python UDF.
-
-    The native :func:`cosine` stays the default (JVM-side, zero Python
-    transfer); tests pin this UDF's output to it within 1e-9 so the two
-    paths are interchangeable.
-    """
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        # float32 storage → float64 math, matching the native path's
-        # per-element double cast.
-        av = np.stack(a.to_numpy()).astype(np.float64)
-        bv = np.stack(b.to_numpy()).astype(np.float64)
-        num = (av * bv).sum(axis=1)
-        den = np.linalg.norm(av, axis=1) * np.linalg.norm(bv, axis=1)
-        return pd.Series(np.where(den == 0, 0.0, num / np.where(den == 0, 1, den)))
-
-    return _cos
 
 
 def write_ivf_index(

@@ -2782,9 +2782,9 @@ FROM af GROUP BY 1 ORDER BY 1
 def embedding_kmeans(spark, sf_dir):
     """K-means cluster profile of the embedding corpus: per-cluster
     size, member-id checksum, and mean squared distance after 3 Lloyd
-    iterations (operators/clustering.py; each iteration re-generates
-    codegen for the new centroid literals, so the gate entry keeps the
-    loop short). Doubles as the IVF index-build stage.
+    iterations (operators/clustering.py; each iteration is an eager
+    driver-side job, so the gate entry keeps the loop short). Doubles
+    as the IVF index-build stage.
 
     Value-attested end to end: the DuckDB oracle (``_kmeans_oracle``)
     re-runs the identical deterministic Lloyd's — same init, tie-break,

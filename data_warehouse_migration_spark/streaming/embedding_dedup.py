@@ -21,11 +21,12 @@ duplicates); reads cut at ``epoch < K`` so a crash replay never
 matches a batch against its own members (the ingest-dedup epoch-cutoff
 lesson).
 
-Scale posture per epoch: assignment is the zero-shuffle broadcast-
-centroid projection; the pair probe joins the batch against ONLY its
-clusters' stored members (shuffle keyed on cluster id, bounded by
-cluster occupancy) — nothing is corpus×corpus, stored vectors are
-never rescanned outside the touched clusters. Hot-cluster caps /
+Scale posture per epoch: assignment is the zero-shuffle Arrow-batched
+nearest-centroid pass (operators/clustering.assign_clusters); the
+pair probe joins the batch against ONLY its clusters' stored members
+(shuffle keyed on cluster id, bounded by cluster occupancy) — nothing
+is corpus×corpus, stored vectors are never rescanned outside the
+touched clusters. Hot-cluster caps /
 re-clustering apply as in the batch operator.
 """
 
@@ -83,8 +84,9 @@ def streaming_semdedup_ingest(
         ).select("cluster", F.col(id_col), F.col(vec_col))
         members = read_members(spark, index_dir, before_epoch=int(epoch_id))
         pool = assigned if members is None else members.unionByName(assigned)
-        # Per-vector norms before the pair join (the semdedup/LSH
-        # precedent) — byte-identical cosine, a third of the folds.
+        # Per-vector norms before the pair join (the LSH precedent) —
+        # byte-identical cosine, a third of the folds, and the same
+        # arithmetic as batch semdedup's numpy pair kernel.
         den = F.col("_m_nrm") * F.col("_b_nrm")
         cos = F.when(den == 0, F.lit(0.0)).otherwise(
             dot(F.col("_m_vec"), F.col("_b_vec")) / den

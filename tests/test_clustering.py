@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import math
+
+import pytest
 from pyspark.sql import functions as F
 
 from data_warehouse_migration_spark.operators.clustering import (
@@ -101,3 +104,162 @@ def test_double_array_literal_non_finite_values(spark):
     assert got[1] == float("inf")
     assert got[2] == float("-inf")
     assert got[3] == 1.5
+
+
+# --- the numpy assignment kernel against the fold expression it replaced.
+# ``_fold_assign`` is the higher-order-function body ``assign_clusters``
+# had before it moved to operators/vector_kernels: the reference every
+# case below must match bit for bit (float.hex), NULLs included.
+
+
+def _fold_assign(vectors, centroids, id_col="vec_id", vec_col="embedding"):
+    from data_warehouse_migration_spark.operators.clustering import (
+        double_array_literal,
+    )
+
+    vec = F.col(vec_col)
+    dist_structs = F.transform(
+        double_array_literal(centroids),
+        lambda cent, i: F.struct(
+            F.aggregate(
+                F.zip_with(vec, cent, lambda a, b: a.cast("double") - b),
+                F.lit(0.0),
+                lambda acc, x: acc + x * x,
+            ).alias("d"),
+            i.cast("int").alias("c"),
+        ),
+    )
+    best = F.array_min(dist_structs)
+    return vectors.select(
+        F.col(id_col),
+        F.col(vec_col),
+        best["c"].alias("cluster"),
+        best["d"].alias("sq_dist"),
+    )
+
+
+_NAN, _INF = float("nan"), float("inf")
+
+
+def _assign_case(name):
+    import random
+
+    rng = random.Random(7)
+    if name in ("random_float32", "random_double"):
+        rows = [
+            (i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(300)
+        ]
+        cents = [[rng.gauss(0, 0.5) for _ in range(16)] for _ in range(6)]
+        return rows, "float" if name == "random_float32" else "double", cents
+    if name == "ties":
+        # The origin is at distance 1 from four centroids, and centroid
+        # 4 duplicates centroid 0: exact ties go to the lowest index.
+        rows = [(0, [0.0, 0.0]), (1, [1.0, 0.0]), (2, [0.0, 0.5]), (3, [-1.0, 0.0])]
+        cents = [[1.0, 0.0], [-1.0, 0.0], [0.0, 1.0], [0.0, -1.0], [1.0, 0.0]]
+        return rows, "float", cents
+    if name == "zero_vector":
+        rows = [(0, [0.0, 0.0, 0.0]), (1, [0.0, 0.0, 1.0]), (2, [-0.0, 0.0, 0.0])]
+        cents = [[0.0, 0.0, 0.0], [0.0, 0.0, 1.0], [-0.0, 0.0, 0.0]]
+        return rows, "float", cents
+    if name == "non_finite":
+        rows = [
+            (0, [_NAN, 1.0, 2.0]),
+            (1, [_INF, 0.0, 0.0]),
+            (2, [-_INF, 0.0, 0.0]),
+            (3, [1.0, 2.0, 3.0]),
+            (4, [_INF, _INF, 0.0]),
+            (5, [1e200, 1e200, 0.0]),
+        ]
+        # Centroid 0's distances are all NaN, which sorts above +inf.
+        cents = [[_NAN, 0.0, 0.0], [0.0, 0.0, 0.0], [1.0, 1.0, 1.0], [_INF, 0.0, 0.0]]
+        return rows, "double", cents
+    if name == "nulls":
+        rows = [
+            (0, None),
+            (1, [1.0, None, 0.0]),
+            (2, [1.0, 1.0, 0.0]),
+            (3, [None, None, None]),
+            (4, [0.0, 0.0, 0.0]),
+        ]
+        return rows, "float", [[0.0, 0.0, 0.0], [1.0, 1.0, 1.0]]
+    if name == "ragged":
+        # Rows of every length against centroids of three lengths: a
+        # NULL distance to any centroid sorts before every number.
+        rows = [
+            (0, [1.0, 1.0]),
+            (1, [1.0, 1.0, 1.0]),
+            (2, [2.0, 2.0, 2.0, 2.0]),
+            (3, []),
+            (4, [0.5, 0.5, 0.5]),
+        ]
+        cents = [[0.0, 0.0, 0.0], [1.0, 1.0], [2.0, 2.0, 2.0, 2.0], [1.0, 1.0, 1.0]]
+        return rows, "double", cents
+    raise KeyError(name)
+
+
+def _hex(x):
+    return None if x is None else float(x).hex()
+
+
+def _assign_rows(df):
+    return sorted(
+        (
+            r.vec_id,
+            None if r.embedding is None else tuple(map(_hex, r.embedding)),
+            r.cluster,
+            _hex(r.sq_dist),
+        )
+        for r in df.collect()
+    )
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        "random_float32",
+        "random_double",
+        "ties",
+        "zero_vector",
+        "non_finite",
+        "nulls",
+        "ragged",
+    ],
+)
+def test_assign_kernel_bit_identical_to_fold(spark, case):
+    rows, elem, cents = _assign_case(case)
+    df = spark.createDataFrame(
+        rows, f"vec_id int, embedding array<{elem}>"
+    ).repartition(3)
+    kernel = assign_clusters(df, cents)
+    assert "MapInArrow" in kernel._jdf.queryExecution().executedPlan().toString()
+    assert _assign_rows(kernel) == _assign_rows(_fold_assign(df, cents))
+
+
+def test_assign_kernel_pinned_null_and_ragged_results(spark):
+    """What the fold returned, spelled out: a NULL distance (NULL
+    vector, NULL component, length mismatch) sorts first, so the row
+    goes to the lowest such cluster with ``sq_dist`` NULL; NaN sorts
+    above every number; exact ties go to the lowest index."""
+    got = {}
+    for case in ("nulls", "ragged", "non_finite", "ties"):
+        rows, elem, cents = _assign_case(case)
+        df = spark.createDataFrame(rows, f"vec_id int, embedding array<{elem}>")
+        got[case] = {
+            r.vec_id: (r.cluster, r.sq_dist)
+            for r in assign_clusters(df, cents).collect()
+        }
+    assert got["nulls"] == {
+        0: (0, None), 1: (0, None), 2: (1, 1.0), 3: (0, None), 4: (0, 0.0)
+    }
+    assert got["ragged"] == {
+        0: (0, None), 1: (1, None), 2: (0, None), 3: (0, None), 4: (1, None)
+    }
+    non_finite = got.pop("non_finite")
+    assert non_finite[0][0] == 0 and math.isnan(non_finite[0][1])
+    # NaN (every distance to centroid 0; inf − inf against centroid 3)
+    # loses to inf; 1e200² overflows to inf for the other centroids,
+    # and that tie goes to the lowest of them, cluster 1.
+    assert {i: non_finite[i] for i in (1, 2, 3, 4, 5)} == {
+        1: (1, _INF), 2: (1, _INF), 3: (2, 5.0), 4: (1, _INF), 5: (1, _INF)
+    }
+    assert got["ties"] == {0: (0, 1.0), 1: (0, 0.0), 2: (2, 0.25), 3: (1, 0.0)}

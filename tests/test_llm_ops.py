@@ -148,24 +148,33 @@ def test_ivf_topk_recall_vs_brute_force(spark, sf_dir):
     assert all(r["count"] == 5 for r in per_q.collect())
 
 
-def test_pandas_udf_cosine_matches_native(spark, sf_dir):
+def test_cosine_kernel_matches_native(spark, sf_dir):
+    """semdedup's numpy pair kernel (operators/vector_kernels) computes
+    exactly the native fold :func:`cosine`, bit for bit."""
+    import numpy as np
     from pyspark.sql import functions as F
 
-    from data_warehouse_migration_spark.operators.similarity import (
-        cosine,
-        cosine_pandas_udf,
+    from data_warehouse_migration_spark.operators.similarity import cosine
+    from data_warehouse_migration_spark.operators.vector_kernels import (
+        cosine_pairs,
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(50)
     a = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
     b = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
-    pairs = a.join(b, F.col("id_a") < F.col("id_b"))
-    udf_cos = cosine_pandas_udf()
-    out = pairs.select(
-        cosine(F.col("va"), F.col("vb")).alias("native"),
-        udf_cos(F.col("va"), F.col("vb")).alias("arrow"),
-    ).select(F.max(F.abs(F.col("native") - F.col("arrow"))).alias("max_diff"))
-    assert out.collect()[0].max_diff < 1e-9
+    native = {
+        (r.id_a, r.id_b): r.cos.hex()
+        for r in a.join(b, F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", cosine(F.col("va"), F.col("vb")).alias("cos"))
+        .collect()
+    }
+    vecs = sorted((r.vec_id, r.embedding) for r in emb.collect())
+    ids = np.array([i for i, _ in vecs])
+    rows = np.array([v for _, v in vecs], dtype=np.float32).astype(np.float64)
+    ai, bi, cos = cosine_pairs(rows, np.full(len(ids), rows.shape[1]), ids, -np.inf)
+    kernel = {(int(ids[i]), int(ids[j])): c.hex() for i, j, c in zip(ai, bi, cos)}
+    assert len(native) == len(vecs) * (len(vecs) - 1) // 2
+    assert kernel == native
 
 
 def test_lsh_candidate_near_dup_matches_exact_all_pairs(spark, sf_dir):

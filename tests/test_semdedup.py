@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_warehouse_migration_spark.operators.semdedup import semdedup
@@ -140,3 +141,177 @@ def test_derived_defaults_match_fixed_k_on_small_corpus(spark):
     fixed = semdedup(_vecs(spark, rows), k=8, max_iter=2, tau=0.95)
     assert derived.exceptAll(fixed).count() == 0
     assert fixed.exceptAll(derived).count() == 0
+
+
+# --- the numpy pair kernel against the self-join it replaced. ``_fold_pairs``
+# is semdedup's former pair stage: an a.join(b, "cluster") self-join
+# with the fold cosine of operators/similarity (per-vector norms, 0.0
+# when the denominator is 0). Every case below must match it bit for
+# bit (float.hex), both raw and after Spark's round + filter.
+
+_NAN, _INF = float("nan"), float("inf")
+
+
+def _fold_pairs(assigned, tau=None, round_to=None):
+    from data_warehouse_migration_spark.operators.similarity import dot, l2_norm
+
+    sized = assigned.withColumn("_nrm", l2_norm(F.col("embedding")))
+    a = sized.select(
+        "cluster",
+        F.col("vec_id").alias("_a_id"),
+        F.col("embedding").alias("_a_vec"),
+        F.col("_nrm").alias("_a_nrm"),
+    )
+    b = sized.select(
+        "cluster",
+        F.col("vec_id").alias("_b_id"),
+        F.col("embedding").alias("_b_vec"),
+        F.col("_nrm").alias("_b_nrm"),
+    )
+    den = F.col("_a_nrm") * F.col("_b_nrm")
+    cos = F.when(den == 0, F.lit(0.0)).otherwise(
+        dot(F.col("_a_vec"), F.col("_b_vec")) / den
+    )
+    pairs = a.join(b, "cluster").filter(F.col("_a_id") < F.col("_b_id"))
+    if round_to is None:
+        pairs = pairs.withColumn("cos", cos).filter(F.col("cos").isNotNull())
+    else:
+        pairs = pairs.withColumn("cos", F.round(cos, round_to)).filter(
+            F.col("cos") >= tau
+        )
+    return pairs.select("_a_id", "_b_id", "cos")
+
+
+def _pair_case(name):
+    """(rows of (vec_id, embedding, cluster), element type, tau)."""
+    import random
+
+    rng = random.Random(3)
+    if name == "random_float32":
+        rows = []
+        for c in range(3):
+            base = [rng.uniform(-1, 1) for _ in range(8)]
+            for i in range(60):
+                v = base if i % 3 else [rng.uniform(-1, 1) for _ in range(8)]
+                rows.append((100 * c + i, [x + rng.gauss(0, 0.05) for x in v], c))
+        return rows, "float", 0.9
+    if name == "threshold_edge":
+        # cos = tau + δ around the HALF_UP rounding boundary of round(·, 6).
+        tau = 0.4
+        rows = [(0, [1.0, 0.0], 0)]
+        for i, d in enumerate((-6e-7, -5e-7, -5.000001e-7, -4e-7, 0.0, 4e-7)):
+            c = tau + d
+            rows.append((i + 1, [c, math.sqrt(1 - c * c)], 0))
+        return rows, "double", tau
+    if name == "zero_vector":
+        rows = [(0, [0.0, 0.0, 0.0], 0), (1, [0.0, 0.0, 0.0], 0), (2, [1.0, 0.0, 0.0], 0)]
+        return rows, "float", 0.0
+    if name == "non_finite":
+        rows = [
+            (0, [_NAN, 1.0], 0),
+            (1, [1.0, 1.0], 0),
+            (2, [_INF, 0.0], 0),
+            (3, [-_INF, 0.0], 0),
+            (4, [1e200, 1e200], 0),
+            (5, [1e-200, 1e-200], 0),
+            (6, [0.0, 0.0], 0),
+        ]
+        return rows, "double", 0.4
+    if name == "nulls":
+        rows = [
+            (0, None, 0),
+            (1, [1.0, None], 0),
+            (2, [1.0, 1.0], 0),
+            (3, [1.0, 1.0], 0),
+            (None, [1.0, 1.0], 0),
+            (3, [1.0, 1.0], 0),  # a repeated id never pairs with itself
+            (4, [0.0, 0.0], 0),
+        ]
+        return rows, "float", 0.0
+    if name == "ragged":
+        # Different lengths: NULL cosine, except 0.0 when a norm is 0.
+        rows = [
+            (0, [1.0, 1.0], 0),
+            (1, [1.0, 1.0, 0.0], 0),
+            (2, [0.0, 0.0, 0.0, 0.0], 0),
+            (3, [0.0], 0),
+            (4, [], 0),
+            (5, [2.0, 2.0], 0),
+        ]
+        return rows, "double", 0.0
+    if name == "tile":
+        # One cluster wider than a 512-row tile, with planted
+        # near-duplicates inside and across the tile boundary.
+        rows = [(i, [rng.uniform(-1, 1) for _ in range(4)], 0) for i in range(700)]
+        for dup, src in ((650, 3), (511, 512), (699, 600), (20, 10)):
+            rows[dup] = (dup, [x + 1e-4 for x in rows[src][1]], 0)
+        rows += [(1000 + i, [rng.uniform(-1, 1) for _ in range(4)], 1) for i in range(5)]
+        return rows, "float", 0.999
+    raise KeyError(name)
+
+
+def _pair_rows(df):
+    return sorted((r._a_id, r._b_id, r.cos.hex()) for r in df.collect())
+
+
+_PAIR_CASES = [
+    "random_float32",
+    "threshold_edge",
+    "zero_vector",
+    "non_finite",
+    "nulls",
+    "ragged",
+    "tile",
+]
+
+
+@pytest.mark.parametrize("case", _PAIR_CASES)
+def test_pair_kernel_bit_identical_to_fold(spark, case):
+    from functools import partial
+
+    from data_warehouse_migration_spark.operators.semdedup import near_dup_pairs
+    from data_warehouse_migration_spark.operators.vector_kernels import (
+        cluster_pairs,
+    )
+
+    rows, elem, tau = _pair_case(case)
+    assigned = spark.createDataFrame(
+        rows, f"vec_id int, embedding array<{elem}>, cluster int"
+    ).repartition(2)
+    # Raw cosines of every non-NULL pair (threshold −inf keeps them all).
+    raw = assigned.groupBy("cluster").applyInArrow(
+        partial(
+            cluster_pairs, id_col="vec_id", vec_col="embedding", threshold=-_INF
+        ),
+        "_a_id int, _b_id int, cos double",
+    )
+    assert _pair_rows(raw) == _pair_rows(_fold_pairs(assigned))
+    # The wired stage: kernel candidates, then Spark's round + filter.
+    got = _pair_rows(near_dup_pairs(assigned, "vec_id", "embedding", tau, 6))
+    assert got == _pair_rows(_fold_pairs(assigned, tau, 6))
+    if case in ("random_float32", "threshold_edge", "tile"):
+        assert got  # the case exercises the filter, not just its absence
+
+
+def test_pair_kernel_tiles_match_one_block():
+    """The 512-row tiling is a memory bound only: tiled and untiled
+    runs of the same cluster emit the same pairs."""
+    import random
+
+    import numpy as np
+
+    from data_warehouse_migration_spark.operators import vector_kernels as vk
+
+    rng = random.Random(5)
+    rows = np.array([[rng.uniform(-1, 1) for _ in range(6)] for _ in range(1100)])
+    lengths = np.full(len(rows), 6)
+    ids = np.arange(len(rows))
+    tiled = vk.cosine_pairs(rows, lengths, ids, 0.5)
+    saved = vk.PAIR_TILE
+    vk.PAIR_TILE = 4096
+    try:
+        whole = vk.cosine_pairs(rows, lengths, ids, 0.5)
+    finally:
+        vk.PAIR_TILE = saved
+    key = lambda out: sorted(zip(out[0], out[1], (c.hex() for c in out[2])))  # noqa: E731
+    assert key(tiled) == key(whole) and len(tiled[0]) > 0
