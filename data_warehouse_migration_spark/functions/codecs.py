@@ -1,9 +1,10 @@
 """Stream codecs: the one module that knows how each compressed
 format is packed and unpacked. Every ingest path — WARC transports,
-HTTP content codings, Avro blocks, ZIP members, PNG IDAT, PDF
-FlateDecode, the archive gate harnesses — calls :func:`compress` /
-:func:`decompress` here, and each format has exactly one
-implementation:
+HTTP content codings, the ZIP64 writer, PNG IDAT, PDF FlateDecode,
+the archive gate harnesses — calls :func:`compress` /
+:func:`decompress` here (ZIP members read through ``zipfile``, which
+inflates with the same stdlib ``zlib``), and each format has exactly
+one implementation:
 
 ========================  ==============================================
 format                    implementation

@@ -2129,8 +2129,8 @@ FROM documents
 )
 def webdataset_shard_roundtrip(spark, sf_dir):
     """tar / WebDataset shards under the hard gate
-    (functions/tar_stream, r11 — the container large training sets
-    ship in: samples as ADJACENT tar members sharing a basename
+    (functions/tar_stream on CPython's ``tarfile`` — the container
+    large training sets ship in: samples as ADJACENT tar members sharing a basename
     key): per document the harness packs ``{id}.txt`` + ``{id}.cls``
     + ``{id}.json`` into a tar shard (gzipped whole for odd ids —
     the ``.tar.gz`` composition, gzip from functions/codecs), then
@@ -2150,12 +2150,16 @@ def webdataset_shard_roundtrip(spark, sf_dir):
     extension header + one-block payload — which the oracle
     recomputes from octet lengths alone, attesting octal fields,
     PAX record framing, longname payloads, 512-byte padding, and
-    the end-of-archive marker without a tar parser anywhere. Both
-    directions are additionally pinned against CPython's tarfile
-    (ustar, PAX_FORMAT, and GNU_FORMAT) in tests/test_tar_stream.py,
-    including >100-char and >255-char paths, unicode names, global
-    ``g`` headers, pax size overrides, hostile record grammars,
-    checksum tampering, and non-adjacent-key rejection.
+    the end-of-archive marker without a tar parser anywhere. The
+    writer lays out ``TarInfo.tobuf`` headers, padding and the end
+    marker itself (``TarFile.close()`` would pad to 10 KiB); the
+    reader is ``tarfile`` plus a guard that everything past where its
+    walk stopped is the zero end marker, since ``tarfile`` stops
+    silently at a bad header after the first.
+    tests/test_tar_stream.py pins >100-char and >255-char paths,
+    unicode names, global ``g`` headers, pax size overrides, corrupt
+    2nd/3rd headers (checksum, negative size, hostile PAX record),
+    and non-adjacent-key rejection.
 
     Shape at 100 TB: shards are the parallelism unit (one worker
     streams one shard — the WebDataset access pattern); here
@@ -2193,22 +2197,19 @@ FROM documents
 """,
 )
 def zip_bundle_roundtrip(spark, sf_dir):
-    """ZIP bundles under the hard gate (functions/zip_stream, r11 —
-    the other container datasets ship in; ZIP64 leg r15, VERDICT r14
-    missing #3): per document, ``{id:08d}.txt`` + ``.cls`` +
-    ``.json`` are packed with the layout rotating on id mod 4 —
-    classic STORED / classic dynamic RFC 1951 deflate /
-    FORCED-ZIP64 stored (saturated-field sentinels, 0x0001 extras,
-    ZIP64 EOCD record + locator; ``zip_members64`` resolves
-    sentinels with central-directory authority, and the CLASSIC
-    reader's honest-raise on ZIP64 input is asserted per-row) /
-    ZIP64 deflate — and read back through the central directory:
-    EOCD located from the end past comments, locator honored when
-    present, central entries cross-checked against local headers,
-    CRC-32 verified, unsupported features (encryption, data
-    descriptors, multi-disk) rejected. The ADVICE r14 fix rides the
-    same module: a classic archive whose EOCD count is exactly
-    0xFFFF is walked by central-directory span, not rejected.
+    """ZIP bundles under the hard gate (functions/zip_stream — the
+    other container datasets ship in): per document,
+    ``{id:08d}.txt`` + ``.cls`` + ``.json`` are packed with the
+    layout rotating on id mod 4 — classic STORED / classic deflate,
+    both written by CPython's ``zipfile`` / FORCED-ZIP64 stored
+    (saturated-field sentinels, 0x0001 extras, ZIP64 EOCD record +
+    locator, hand-laid by ``zip_pack64`` because ``zipfile`` writes
+    neither structure for a small archive) / ZIP64 deflate — and
+    every leg is read back through one ``zipfile`` reader: EOCD
+    located from the end past comments, ZIP64 locator honored,
+    central entries cross-checked against local headers, CRC-32
+    verified, each inflate bounded by the declared size, encryption
+    and unknown methods rejected as ValueError.
 
     Exactness: fixed-width names make both STORED archive lengths
     pure header arithmetic — classic
@@ -2216,9 +2217,9 @@ def zip_bundle_roundtrip(spark, sf_dir):
     ZIP64 ``Σ(50+nlen+size) + Σ(74+nlen) + 98`` = ``544 + payload``
     — which the oracle recomputes from octet lengths alone (deflate
     legs report -1: real but not closed-form); text digest and
-    label round-trip verbatim. CPython zipfile is pinned as the
-    independent reference in both directions for BOTH readers (all
-    methods, comments, tamper cases) in tests/test_zip_stream.py.
+    label round-trip verbatim. tests/test_zip_stream.py pins the
+    ZIP64 writer against ``zipfile``, the reader against real jars,
+    comments, tamper cases and a 65,535-entry classic archive.
 
     Shape at 100 TB: per-archive parallel, zero shuffle; the
     central-directory-first read is the range-request access pattern
@@ -4993,20 +4994,22 @@ FROM documents
 )
 def wikidump_extract(spark, sf_dir):
     """The WIKI-DUMP ingest composition under the hard gate
-    (bzip2 through functions/codecs + functions/xml_text — r12): Wikipedia's
-    ``pages-articles.xml.bz2`` is the canonical open pretraining
-    corpus, and its exact shape — multistream bzip2 around a
-    MediaWiki export document — is built per document from the doc's
-    own text and read back end to end: bz2 stream walk → well-formed
-    XML parse (prolog, two-attribute ``<text>``
-    tags, entity decoding) → page extraction (title/ns/id/text from
-    ``<revision><text>``).
+    (bzip2 through functions/codecs + functions/xml_text on expat):
+    Wikipedia's ``pages-articles.xml.bz2`` is the canonical open
+    pretraining corpus, and its exact shape — multistream bzip2
+    around a MediaWiki export document — is built per document from
+    the doc's own text and read back end to end: bz2 stream walk →
+    expat parse (prolog, two-attribute ``<text>`` tags, character
+    references, DTD entities refused) → page extraction
+    (title/ns/id/text from ``<revision><text>``).
 
-    Exactness: bz2 is lossless and escape∘decode is the identity on
-    the page text, so every output column is a pure formula over the
-    documents table — the oracle recomputes them with no codec or
-    parser anywhere. Parser well-formedness/adversarial pins and the
-    dump grammar live in tests/test_xml_text.py.
+    Exactness: bz2 is lossless and the writer's escaping (``\\r`` as
+    ``&#13;``, so expat's end-of-line handling cannot touch it)
+    parses back to the page text verbatim, so every output column is
+    a pure formula over the documents table — the oracle recomputes
+    them with no codec or parser anywhere. Well-formedness and
+    adversarial pins (billion laughs, control characters, CR
+    round-trips) live in tests/test_xml_text.py.
 
     Shape at 100 TB: dumps are file-per-row here, stream-per-split in
     production (the multistream layout is WHY dump readers can seek);

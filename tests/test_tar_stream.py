@@ -1,8 +1,9 @@
-"""ustar / WebDataset shard pins (functions/tar_stream — r11).
-CPython's ``tarfile`` (USTAR_FORMAT) is the independent reference in
-both directions; layout arithmetic, checksum tampering, long-name
-prefix splitting, and the WebDataset adjacency contract are pinned
-by hand."""
+"""tar / WebDataset shard pins (functions/tar_stream, on CPython's
+``tarfile``). Archives ``tarfile`` writes itself (ustar, PAX, GNU)
+read back; the layout arithmetic the gate attests, checksum
+tampering, corrupt 2nd/3rd headers that ``tarfile`` alone would
+stop at silently, long names, and the WebDataset adjacency contract
+are pinned by hand."""
 
 from __future__ import annotations
 
@@ -23,6 +24,25 @@ MEMBERS = [
     ("000018.txt", b"x" * 600),   # spans two data blocks
     ("000019.txt", b""),          # zero-length member: no data block
 ]
+
+
+def _raw_member(name: str, payload: bytes, typeflag: bytes) -> bytes:
+    """One member of any typeflag, payload padded to 512 bytes."""
+    info = tarfile.TarInfo(name)
+    info.type = typeflag
+    info.size = len(payload)
+    return (
+        info.tobuf(tarfile.USTAR_FORMAT)
+        + payload + b"\x00" * (-len(payload) % 512)
+    )
+
+
+def _reseal(header: bytes) -> bytes:
+    """Recompute a ustar header's checksum after a field edit."""
+    h = bytearray(header)
+    h[148:156] = b" " * 8
+    h[148:155] = f"{sum(h):06o}".encode() + b"\x00"
+    return bytes(h)
 
 
 def _stdlib_pack(members):
@@ -73,10 +93,21 @@ def test_checksum_verified():
         tar_members(bytes(blob))
 
 
+def test_non_utf8_name_raises():
+    blob = bytearray(tar_pack([("ab.txt", b"x")]))
+    blob[0] = 0xFF
+    blob[:512] = _reseal(blob[:512])
+    with pytest.raises(ValueError):
+        tar_members(bytes(blob))
+
+
 def test_truncated_member_raises():
     blob = tar_pack(MEMBERS)
-    with pytest.raises(ValueError, match="truncated"):
+    with pytest.raises(ValueError, match="unexpected end of data"):
         tar_members(blob[: 512 + 4])
+    # cut between two members: no end-of-archive marker
+    with pytest.raises(ValueError, match="end-of-archive"):
+        tar_members(blob[:1024])
 
 
 def test_directories_skipped_unknown_typeflags_raise():
@@ -106,11 +137,12 @@ def test_directories_skipped_unknown_typeflags_raise():
         w.addfile(ti2, io.BytesIO(b"q"))
     assert tar_members(buf2.getvalue()) == [("after.txt", b"q")]
     # a typeflag nothing implements still raises, never silently skips
-    from data_warehouse_migration_spark.functions.tar_stream import _header
-
-    bogus = _header("weird", 0, typeflag="D") + b"\x00" * 1024
+    bogus = _raw_member("weird", b"", b"D") + b"\x00" * 1024
     with pytest.raises(ValueError, match="typeflag"):
         tar_members(bogus)
+    fifo = _raw_member("pipe", b"", tarfile.FIFOTYPE) + b"\x00" * 1024
+    with pytest.raises(ValueError, match="typeflag"):
+        tar_members(fifo)
 
 
 def test_webdataset_grouping():
@@ -146,18 +178,20 @@ def test_targz_composition():
 
 
 def test_negative_size_field_rejected():
-    # ADVICE r11: int(x, 8) accepts '-N' — a crafted negative size
-    # walks the member scan backwards. Craft a header whose size field
-    # reads -12 but whose checksum is self-consistent.
+    # int(x, 8) accepts '-N', and tarfile reads the size through it:
+    # the member's data block is then taken for the next header,
+    # where the walk stops. Craft a header whose size field reads -12
+    # but whose checksum is self-consistent.
     blob = bytearray(tar_pack([("a.txt", b"x" * 12)]))
     h = bytearray(blob[:512])
     h[124:136] = b"-12".ljust(11, b" ") + b"\x00"
-    h[148:156] = b" " * 8
-    chk = sum(h)
-    h[148:155] = f"{chk:06o}".encode() + b"\x00"
-    h[155] = ord(" ")
-    blob[:512] = h
-    with pytest.raises(ValueError, match="octal size"):
+    blob[:512] = _reseal(h)
+    with pytest.raises(ValueError, match="end-of-archive"):
+        tar_members(bytes(blob))
+    # a base-256 size field no offset can hold
+    h[124:136] = b"\x80" + b"\xff" * 11
+    blob[:512] = _reseal(h)
+    with pytest.raises(ValueError):
         tar_members(bytes(blob))
 
 
@@ -198,17 +232,9 @@ def test_stdlib_pax_and_gnu_read_by_ours():
 
 
 def test_pax_global_header_applies_to_all_members():
-    from data_warehouse_migration_spark.functions.tar_stream import (
-        _header,
-        _pax_record,
-    )
-
-    rec = _pax_record("path", "renamed/by/global.txt")
-    blob = (
-        _header("g-hdr", len(rec), typeflag="g")
-        + rec + b"\x00" * (-len(rec) % 512)
-        + tar_pack([("a.txt", b"1"), ("b.txt", b"2")])
-    )
+    blob = tarfile.TarInfo.create_pax_global_header(
+        {"path": "renamed/by/global.txt"}
+    ) + tar_pack([("a.txt", b"1"), ("b.txt", b"2")])
     # the global path override applies to EVERY later member that has
     # no per-member override — both rows take the global name
     assert tar_members(blob) == [
@@ -218,42 +244,28 @@ def test_pax_global_header_applies_to_all_members():
 
 
 def test_pax_size_override_and_hostile_records():
-    from data_warehouse_migration_spark.functions.tar_stream import (
-        _header,
-        _parse_pax_records,
-        _pax_record,
-    )
-
     # pax size override: header field says 0, the record carries the
     # real size (the >8 GiB mechanism, scaled down)
     payload = b"override-sized"
-    rec = _pax_record("size", str(len(payload)))
+    info = tarfile.TarInfo("big.bin")  # octal field lies: 0
+    info.pax_headers = {"size": str(len(payload))}
     blob = (
-        _header("p-hdr", len(rec), typeflag="x")
-        + rec + b"\x00" * (-len(rec) % 512)
-        + _header("big.bin", 0)  # octal field lies: 0
+        info.tobuf(tarfile.PAX_FORMAT)
         + payload + b"\x00" * (-len(payload) % 512)
         + b"\x00" * 1024
     )
     assert tar_members(blob) == [("big.bin", payload)]
-    # round-trip the record grammar, incl. the digit-rollover fixpoint
-    for k, v in (("path", "a"), ("path", "x" * 93), ("size", "12345")):
-        r = _pax_record(k, v)
-        n = int(r.split(b" ", 1)[0])
-        assert n == len(r) and r.endswith(b"\n")
-        assert _parse_pax_records(r) == {k: v}
-    # hostile records: bad length token, overrun, missing '=',
-    # negative size
-    for bad in (b"xx path=a\n", b"999 path=a\n", b"7 patha\n"):
+    # hostile records: a negative size (the member's data is taken for
+    # the next header) and a zero record length (tarfile refuses it)
+    # stop tarfile's walk short of the end-of-archive marker; a length
+    # overrunning the header slices NUL padding into the path
+    for rec in (b"12 size=-5\n", b"0 path=a\n", b"999 path=a\n"):
         with pytest.raises(ValueError):
-            _parse_pax_records(bad)
-    evil = _pax_record("size", "-5")
-    hdr = _header("h", len(evil), typeflag="x")
-    with pytest.raises(ValueError, match="PAX size"):
-        tar_members(
-            hdr + evil + b"\x00" * (-len(evil) % 512)
-            + _header("f", 0) + b"\x00" * 1024
-        )
+            tar_members(
+                _raw_member("h", rec, tarfile.XHDTYPE)
+                + _raw_member("f", b"data", tarfile.REGTYPE)
+                + b"\x00" * 1024
+            )
 
 
 def test_pax_long_multibyte_name_without_slashes():
@@ -269,7 +281,7 @@ def test_pax_long_multibyte_name_without_slashes():
         tf = tarfile.open(fileobj=io.BytesIO(blob))
         got = [(m.name, tf.extractfile(m).read()) for m in tf.getmembers()]
         assert got == members, fmt
-    with pytest.raises(ValueError, match="too long for ustar"):
+    with pytest.raises(ValueError, match="too long"):
         tar_pack(members, fmt="ustar")
 
 
@@ -277,20 +289,12 @@ def test_pax_size_override_only_binds_regular_files():
     """ADVICE r13: directory / link members carry no data blocks, so
     a ``size`` record in their scope must not make the reader skip
     phantom payload and misparse every member after them."""
-    from data_warehouse_migration_spark.functions.tar_stream import (
-        _header,
-        _pax_record,
-    )
-
-    rec = _pax_record("size", "512")
     after = b"survives"
-    for flag in ("5", "2", "1"):
+    for flag in (tarfile.DIRTYPE, tarfile.SYMTYPE, tarfile.LNKTYPE):
         blob = (
-            _header("p", len(rec), typeflag="x")
-            + rec + b"\x00" * (-len(rec) % 512)
-            + _header("dir-or-link", 0, typeflag=flag)
-            + _header("after.txt", len(after))
-            + after + b"\x00" * (-len(after) % 512)
+            _raw_member("p", b"12 size=512\n", tarfile.XHDTYPE)
+            + _raw_member("dir-or-link", b"", flag)
+            + _raw_member("after.txt", after, tarfile.REGTYPE)
             + b"\x00" * 1024
         )
         assert tar_members(blob) == [("after.txt", after)], flag
@@ -304,14 +308,11 @@ def test_gnu_longlink_member_is_tolerated():
     """A GNU ``K`` longlink member must not derail the walk: the
     following symlink is skipped (links are never listed) and the
     members after it parse."""
-    from data_warehouse_migration_spark.functions.tar_stream import _header
-
     target = b"some/very/long/target" + b"\x00"
     blob = (
-        _header("././@LongLink", len(target), typeflag="K")
-        + target + b"\x00" * (-len(target) % 512)
-        + _header("link", 0, typeflag="2")
-        + _header("after.txt", 2) + b"ok" + b"\x00" * 510
+        _raw_member("././@LongLink", target, tarfile.GNUTYPE_LONGLINK)
+        + _raw_member("link", b"", tarfile.SYMTYPE)
+        + _raw_member("after.txt", b"ok", tarfile.REGTYPE)
         + b"\x00" * 1024
     )
     assert tar_members(blob) == [("after.txt", b"ok")]
@@ -351,3 +352,41 @@ def test_pax_gnu_roundtrip_property():
                 (m.name, tf.extractfile(m).read()) for m in tf.getmembers()
             ]
             assert got == members, fmt
+
+
+def _corrupt_checksum(header: bytes) -> bytes:
+    h = bytearray(header)
+    h[148] = ord("7") if h[148] != ord("7") else ord("6")
+    return bytes(h)
+
+
+def _negative_size(header: bytes) -> bytes:
+    h = bytearray(header)
+    h[124:136] = b"-12".ljust(11, b" ") + b"\x00"
+    return _reseal(h)
+
+
+@pytest.mark.parametrize("which", [2, 3])
+@pytest.mark.parametrize(
+    "problem", ["checksum", "negative_size", "pax_record"]
+)
+def test_corrupt_later_header_raises(problem, which):
+    """tarfile stops WITHOUT an error at a bad header after the first
+    one, handing back a shorter listing; the reader must raise. The
+    shard is three 12-byte members; the 2nd or 3rd is broken."""
+    members = [(f"{i}.txt", b"%d" % i * 12) for i in range(3)]
+    blocks = [tar_pack([m])[:-1024] for m in members]
+    k = which - 1
+    if problem == "checksum":
+        blocks[k] = _corrupt_checksum(blocks[k][:512]) + blocks[k][512:]
+    elif problem == "negative_size":
+        blocks[k] = _negative_size(blocks[k][:512]) + blocks[k][512:]
+    else:  # a PAX record declaring a negative size for the member
+        pax = _raw_member("p", b"12 size=-5\n", tarfile.XHDTYPE)
+        blocks[k] = pax + blocks[k]
+    shard = b"".join(blocks) + b"\x00" * 1024
+    # tarfile alone reads it without an error
+    with tarfile.open(fileobj=io.BytesIO(shard)) as tf:
+        assert len(tf.getmembers()) <= 3
+    with pytest.raises(ValueError):
+        tar_members(shard)

@@ -1,12 +1,14 @@
-"""ZIP archive pins (functions/zip_stream — r11, PKWARE APPNOTE).
-CPython's ``zipfile`` is the independent reference in both
-directions; EOCD comment scanning, CRC tampering, cross-check
-failures, and unsupported-feature rejection are pinned by hand."""
+"""ZIP archive pins (functions/zip_stream, on CPython's ``zipfile``).
+The hand-laid ZIP64 writer is adjudicated by ``zipfile``; the reader
+is pinned on archives ``zipfile`` writes, real jars, EOCD comment
+scanning, CRC and size tampering, and the ValueError contract for
+what it refuses."""
 
 from __future__ import annotations
 
 import io
 import struct
+import tracemalloc
 import zipfile
 
 import pytest
@@ -14,6 +16,7 @@ import pytest
 from data_warehouse_migration_spark.functions.zip_stream import (
     zip_members,
     zip_pack,
+    zip_pack64,
 )
 
 MEMBERS = [
@@ -23,7 +26,7 @@ MEMBERS = [
 ]
 
 
-@pytest.mark.parametrize("method", ["stored", "fixed", "dynamic"])
+@pytest.mark.parametrize("method", ["stored", "deflate"])
 def test_ours_read_by_stdlib(method):
     blob = zip_pack(MEMBERS, method)
     zf = zipfile.ZipFile(io.BytesIO(blob))
@@ -32,9 +35,12 @@ def test_ours_read_by_stdlib(method):
 
 
 @pytest.mark.parametrize(
-    "comp", [zipfile.ZIP_STORED, zipfile.ZIP_DEFLATED]
+    "comp",
+    [zipfile.ZIP_STORED, zipfile.ZIP_DEFLATED, zipfile.ZIP_BZIP2,
+     zipfile.ZIP_LZMA],
 )
 def test_stdlib_read_by_ours(comp):
+    # methods 12 (bzip2) and 14 (lzma) read too: zipfile has them
     buf = io.BytesIO()
     with zipfile.ZipFile(buf, "w", comp) as w:
         for name, data in MEMBERS:
@@ -43,9 +49,11 @@ def test_stdlib_read_by_ours(comp):
 
 
 def test_roundtrip_and_determinism():
-    blob = zip_pack(MEMBERS, "dynamic")
+    blob = zip_pack(MEMBERS, "deflate")
     assert zip_members(blob) == MEMBERS
-    assert blob == zip_pack(MEMBERS, "dynamic")
+    assert blob == zip_pack(MEMBERS, "deflate")
+    with pytest.raises(ValueError, match="unknown ZIP method"):
+        zip_pack(MEMBERS, "fixed")
 
 
 def test_stored_length_formula():
@@ -72,12 +80,37 @@ def test_crc_tamper_detected():
         zip_members(bytes(blob))
 
 
+def test_declared_size_bounds_inflate():
+    """The inflate stops at the entry's declared size, so a central
+    directory that understates a deflate bomb raises (its CRC covers
+    the whole member) after a bounded amount of output, not after
+    inflating it whole."""
+    bomb = bytes(64 << 20)
+    blob = bytearray(zip_pack([("bomb", bomb)], "deflate"))
+    at = blob.index(b"PK\x01\x02")
+    struct.pack_into("<I", blob, at + 24, 1000)  # uncompressed size
+    tracemalloc.start()
+    try:
+        with pytest.raises(ValueError, match="CRC-32"):
+            zip_members(bytes(blob))
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 1 << 20
+    # a member shorter than its declared size raises too
+    short = bytearray(zip_pack([("f", b"abc")], "stored"))
+    at = short.index(b"PK\x01\x02")
+    struct.pack_into("<I", short, at + 24, 4)
+    with pytest.raises(ValueError, match="declared 4 bytes"):
+        zip_members(bytes(short))
+
+
 def test_missing_eocd_and_bad_local_header():
-    with pytest.raises(ValueError, match="end-of-central-directory"):
+    with pytest.raises(ValueError, match="not a zip file"):
         zip_members(b"not a zip at all")
     blob = bytearray(zip_pack([("f", b"d")], "stored"))
     blob[0] = 0  # corrupt the local signature; central still points there
-    with pytest.raises(ValueError, match="local header"):
+    with pytest.raises(ValueError, match="file header"):
         zip_members(bytes(blob))
 
 
@@ -96,7 +129,7 @@ def test_unsupported_features_rejected():
     blob2 = bytearray(zip_pack([("f", b"d")], "stored"))
     at2 = blob2.index(b"PK\x01\x02")
     struct.pack_into("<H", blob2, at2 + 10, 99)
-    with pytest.raises(ValueError, match="method 99"):
+    with pytest.raises(ValueError, match="compression"):
         zip_members(bytes(blob2))
 
 
@@ -118,9 +151,7 @@ def test_real_world_jars(path):
     ours = dict(zip_members(data))
     zf = zipfile.ZipFile(io.BytesIO(data))
     theirs = {i.filename: zf.read(i) for i in zf.infolist()}
-    assert set(theirs) <= set(ours)
-    for name, payload in theirs.items():
-        assert ours[name] == payload, name
+    assert ours == theirs
 
 
 def test_utf8_names():
@@ -132,88 +163,66 @@ def test_utf8_names():
 
 
 def test_zip64_both_directions_adjudicated_by_stdlib():
-    """ZIP64 (r14, NEW SIBLINGS — the attested classic reader keeps
-    its honest-raise contract): `zip_pack64` forces the >4 GiB
-    layout (saturated fields, 0x0001 extras, ZIP64 EOCD record +
-    locator) so the structures are testable without 4 GiB fixtures;
-    `zip_members64` reads classic AND zip64 archives through the
-    central-directory authority. CPython zipfile adjudicates both
-    directions."""
-    import io
-    import struct
-    import zipfile
-
-    import pytest
-
-    from data_warehouse_migration_spark.functions.zip_stream import (
-        zip_members,
-        zip_members64,
-        zip_pack,
-        zip_pack64,
-    )
-
+    """`zip_pack64` forces the >4 GiB layout (saturated fields,
+    0x0001 extras, ZIP64 EOCD record + locator) so the structures
+    are testable without 4 GiB fixtures; CPython zipfile reads it,
+    and the one reader takes classic and ZIP64 archives alike."""
     members = [
         ("a.txt", b"hello zip64 " * 100),
         ("dir/b.bin", bytes(range(256)) * 10),
         ("c", b""),
     ]
-    for method in ("dynamic", "stored", "fixed"):
+    for method in ("deflate", "stored"):
         blob = zip_pack64(members, method=method)
-        assert zip_members64(blob) == members, method
+        assert zip_members(blob) == members, method
         zf = zipfile.ZipFile(io.BytesIO(blob))
         assert [(i.filename, zf.read(i)) for i in zf.infolist()] == members
-    # the classic reader refuses the sentinels rather than misreading
-    with pytest.raises(ValueError):
-        zip_members(zip_pack64(members))
-    # stdlib's forced-zip64 output reads back through the new reader
+    # stdlib's forced-zip64 output reads back through the same reader
     buf = io.BytesIO()
     with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as w:
         for n, d in members:
             with w.open(zipfile.ZipInfo(n), "w", force_zip64=True) as f:
                 f.write(d)
-    assert zip_members64(buf.getvalue()) == members
-    # classic archives read identically through the new reader
-    assert zip_members64(zip_pack(members)) == members
-    # hostile: sentinel fields with no locator / truncated z64 EOCD
-    blob = bytearray(zip_pack64(members))
+    assert zip_members(buf.getvalue()) == members
+    assert zip_members(zip_pack(members)) == members
+    # the stored ZIP64 length formula the gate attests:
+    # Σ(50+nlen+size) + Σ(74+nlen) + 98
+    nlens = sum(len(n) for n, _ in members)
+    sizes = sum(len(d) for _, d in members)
+    blob = zip_pack64(members, "stored")
+    assert len(blob) == 3 * 50 + nlens + sizes + 3 * 74 + nlens + 98
+    # hostile: sentinel fields with the locator cut out
     no_loc = blob[: len(blob) - 42] + blob[len(blob) - 22 :]
-    with pytest.raises(ValueError, match="locator|signature|missing"):
-        zip_members64(bytes(no_loc))
-    bad = bytearray(zip_pack64(members))
+    with pytest.raises(ValueError, match="central directory"):
+        zip_members(bytes(no_loc))
+    # zipfile takes the ZIP64 record from right before the locator and
+    # walks the central directory by its size: neither the locator's
+    # offset field nor the record's entry count can steer the walk
+    bad = bytearray(blob)
     struct.pack_into("<Q", bad, len(bad) - 38, 1 << 40)  # locator offset
-    with pytest.raises(ValueError, match="ZIP64|missing"):
-        zip_members64(bytes(bad))
-    # absurd entry count bounded before the walk
-    bad2 = bytearray(zip_pack64(members))
-    # n_entries lives in the z64 EOCD record (offsets from its start)
-    z64_off = len(bad2) - 22 - 20 - 56
-    assert bytes(bad2[z64_off : z64_off + 4]) == b"PK\x06\x06"
+    assert zip_members(bytes(bad)) == members
+    z64_off = len(blob) - 22 - 20 - 56
+    assert blob[z64_off : z64_off + 4] == b"PK\x06\x06"
+    bad2 = bytearray(blob)
     struct.pack_into("<Q", bad2, z64_off + 4 + 20 + 8, 1 << 50)
-    with pytest.raises(ValueError):
-        zip_members64(bytes(bad2))
+    assert zip_members(bytes(bad2)) == members
 
 
 def test_classic_65535_entries_not_mistaken_for_zip64():
-    """ADVICE r14: the 0xFFFF EOCD entry count has ZIP64 meaning only
-    when the locator/extra is present — a real 65535-entry classic
-    archive is legal per APPNOTE, so zip_members64 walks the central
-    directory's declared span instead of raising."""
-    from data_warehouse_migration_spark.functions.zip_stream import (
-        zip_members64,
-    )
-
+    """The 0xFFFF EOCD entry count has ZIP64 meaning only when the
+    locator/extra is present — a real 65535-entry classic archive is
+    legal per APPNOTE and reads in full."""
     members = [(f"{i:05d}", b"") for i in range(65535)]
     blob = zip_pack(members, "stored")
-    back = zip_members64(blob)
+    assert blob[-22:-18] == b"PK\x05\x06"
+    assert struct.unpack_from("<H", blob, len(blob) - 12)[0] == 0xFFFF
+    back = zip_members(blob)
     assert len(back) == 65535
     assert back[0] == ("00000", b"")
     assert back[-1] == ("65534", b"")
-    # the classic reader and CPython agree on the same archive
-    assert len(zip_members(blob)) == 65535
-    with zipfile.ZipFile(io.BytesIO(blob)) as z:
-        assert len(z.namelist()) == 65535
     # a genuinely saturated cd_offset without a locator still raises
     bad = bytearray(zip_pack(MEMBERS, "stored"))
     struct.pack_into("<I", bad, len(bad) - 6, 0xFFFFFFFF)
-    with pytest.raises(ValueError, match="locator"):
-        zip_members64(bytes(bad))
+    with pytest.raises(ValueError):
+        zip_members(bytes(bad))
+
