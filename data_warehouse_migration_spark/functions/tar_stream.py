@@ -21,8 +21,10 @@ its walk stopped must be the end-of-archive marker: at least one
 zero block, and nothing but zeros after it (a second zero block,
 record padding). A bad header or a shard cut between two members
 raises instead of reading as a shorter listing. Directory and link
-entries are skipped, any other non-regular member raises, and every
-failure is ``ValueError``.
+entries are skipped, any other non-regular member raises, and so do
+members that GNU sparse records (in PAX ``x`` or ``g`` headers) turn
+sparse: ``tarfile`` would fill their holes with zeros up to any size
+the records claim. Every failure is ``ValueError``.
 
 Scale posture: shards are the unit of parallelism (one worker
 streams one shard — the WebDataset access pattern); per-shard code
@@ -88,6 +90,11 @@ def tar_members(data: bytes) -> list[tuple[str, bytes]]:
                     if "\x00" in info.name:
                         raise ValueError(f"tar: NUL in name {info.name!r}")
                     info.name.encode("utf-8")
+                    # tarfile fills a sparse member's holes with zeros
+                    # up to the size its records claim, unbounded by
+                    # the shard; sparse members were never supported
+                    if info.sparse is not None:
+                        raise ValueError(f"tar: sparse member {info.name!r}")
                     out.append((info.name, tf.extractfile(info).read()))
                 elif info.type not in _SKIPPED:
                     raise ValueError(

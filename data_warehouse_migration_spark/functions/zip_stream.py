@@ -7,9 +7,11 @@ formats) — on CPython's ``zipfile``.
 give equal bytes). :func:`zip_members` reads classic and ZIP64
 archives through ``zipfile``'s central-directory walk: EOCD found
 from the end past a comment, the ZIP64 end record read from just
-before its locator, local headers cross-checked, CRC-32 verified. Each member's inflate is
-bounded by its declared size, and every library error surfaces as
-``ValueError`` — the class the quarantine lanes route on.
+before its locator, local headers cross-checked, CRC-32 verified.
+Only stored and deflate members are read, each inflate bounded by
+the member's declared size; every other method raises. Every
+library error surfaces as ``ValueError`` — the class the quarantine
+lanes route on.
 
 :func:`zip_pack64` stays hand-laid: even with ``force_zip64=True``,
 ``zipfile`` writes no central 0x0001 extras and no ZIP64
@@ -24,7 +26,6 @@ also the remote-range-request access pattern object stores want.
 from __future__ import annotations
 
 import io
-import lzma
 import struct
 import zipfile
 import zlib
@@ -37,11 +38,11 @@ _EOCD_SIG = b"PK\x05\x06"
 _METHODS = {"stored": zipfile.ZIP_STORED, "deflate": zipfile.ZIP_DEFLATED}
 
 #: what reading an archive through ``zipfile`` can raise besides
-#: ValueError: bad structure, an inflate/bz2/lzma member error, a
-#: truncated member, an unsupported method, an encrypted member, or
-#: an offset no buffer can hold
+#: ValueError: bad structure, an inflate error, a truncated member,
+#: an unsupported method, an encrypted member, or an offset no
+#: buffer can hold
 _READ_ERRORS = (
-    zipfile.BadZipFile, zlib.error, OSError, lzma.LZMAError, EOFError,
+    zipfile.BadZipFile, zlib.error, OSError, EOFError,
     NotImplementedError, RuntimeError, OverflowError,
 )
 
@@ -88,12 +89,20 @@ def _without_hiding_comment(data: bytes) -> bytes:
 def zip_members(data: bytes) -> list[tuple[str, bytes]]:
     """Walk the central directory → ``[(name, raw bytes)]`` for a
     classic or ZIP64 archive; CRC-32 verified per entry, each inflate
-    bounded by the entry's declared size."""
+    bounded by the entry's declared size. Methods other than stored
+    and deflate raise: ``zipfile`` hands each bzip2 or lzma read
+    step to a decompressor with no output limit, so a member that
+    understates its size would expand before the cut."""
     out: list[tuple[str, bytes]] = []
     try:
         buf = io.BytesIO(_without_hiding_comment(data))
         with zipfile.ZipFile(buf) as zf:
             for info in zf.infolist():
+                if info.compress_type not in _METHODS.values():
+                    raise ValueError(
+                        f"ZIP: {info.filename!r} uses unsupported"
+                        f" compression method {info.compress_type}"
+                    )
                 with zf.open(info) as member:
                     # zipfile cuts the output at the declared size and
                     # checks the CRC there; asking for a size also

@@ -268,6 +268,55 @@ def test_pax_size_override_and_hostile_records():
             )
 
 
+def _sparse_x(realsize: int) -> bytes:
+    """GNU sparse 0.1 in an ``x`` header: one empty data region, the
+    rest of ``realsize`` a hole."""
+    info = tarfile.TarInfo("hole.bin")
+    info.pax_headers = {
+        "GNU.sparse.map": "0,0", "GNU.sparse.realsize": str(realsize),
+    }
+    return info.tobuf(tarfile.PAX_FORMAT)
+
+
+def _sparse_g(realsize: int) -> bytes:
+    """The same records in a ``g`` header, ahead of a plain member."""
+    return tarfile.TarInfo.create_pax_global_header(
+        {"GNU.sparse.map": "0,0", "GNU.sparse.realsize": str(realsize)}
+    ) + _raw_member("hole.bin", b"", tarfile.REGTYPE)
+
+
+def _sparse_10(realsize: int) -> bytes:
+    """GNU sparse 1.0: the map sits in the member's first data block."""
+    info = tarfile.TarInfo("hole.bin")
+    info.size = 512
+    info.pax_headers = {
+        "GNU.sparse.major": "1", "GNU.sparse.minor": "0",
+        "GNU.sparse.realsize": str(realsize),
+    }
+    return info.tobuf(tarfile.PAX_FORMAT) + b"1\n0\n0\n".ljust(512, b"\0")
+
+
+@pytest.mark.parametrize(
+    "build", [_sparse_x, _sparse_g, _sparse_10], ids=["x", "g", "v1.0"]
+)
+def test_sparse_member_refused(build):
+    """tarfile fills a sparse member's holes with zeros up to its
+    real size, so a 2 KiB shard could claim any size; sparse members
+    raise before their payload is read."""
+    import tracemalloc
+
+    shard = build(64 << 20) + b"\x00" * 1024
+    assert len(shard) <= 3 * 1024
+    tracemalloc.start()
+    try:
+        with pytest.raises(ValueError, match="sparse"):
+            tar_members(shard)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 1 << 20
+
+
 def test_pax_long_multibyte_name_without_slashes():
     """ADVICE r13: a long all-multibyte name with NO usable slash
     split must pack as pax — the extension member's own name is
