@@ -123,8 +123,9 @@ def webdataset_samples(
     samples: list[tuple[str, dict[str, bytes]]] = []
     seen: set[str] = set()
     for name, payload in tar_members(data):
-        base, _, _ = name.partition(".")
-        ext = name[len(base) + 1 :]
+        slash = name.rfind("/") + 1
+        dot = name.find(".", slash)
+        base, ext = (name, "") if dot < 0 else (name[:dot], name[dot + 1 :])
         if samples and samples[-1][0] == base:
             samples[-1][1][ext] = payload
         else:

@@ -6,9 +6,12 @@ Design (the part that matters at 100 TB and is fully real here):
   (mime, width/height/duration, source uri) — one row per asset;
   Parquet stores the bytes column-oriented and prunes it when a query
   never touches the payload;
-- decode / feature-extract run as **Arrow-batched** ``mapInPandas``
-  over batches of payloads — the only sane shape for Python media
-  codecs on Spark (one Python transition per batch, not per row);
+- decode / feature-extract / synthesize / resize are per-asset
+  functions run through :func:`operators.rows.map_rows` — one
+  **Arrow-batched** ``mapInPandas`` stage, the only sane shape for
+  Python media codecs on Spark (one Python transition per batch, not
+  per row); each stage here is its per-row function plus its DDL
+  schema;
 - partitioning: assets are independent → embarrassingly parallel; the
   operator repartitions by a size-balanced key when asked so one giant
   video doesn't skew a task.
@@ -30,11 +33,11 @@ from __future__ import annotations
 
 import hashlib
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from data_warehouse_migration_spark.operators.rows import map_rows
 
 #: Output schema of the feature extractor (DDL form).
 MEDIA_FEATURES_SCHEMA = (
@@ -204,48 +207,20 @@ def _decode_real_asset(mime: str, payload: bytes) -> tuple[int, int, float]:
     )
 
 
-def _decode_batch(pdf: pd.DataFrame, decode_stub: bool) -> pd.DataFrame:
-    """Decode one Arrow batch of assets → features."""
-    if not decode_stub:
-        decoded = [
-            _decode_real_asset(m, bytes(p))
-            for m, p in zip(pdf["mime"], pdf["payload"])
-        ]
-        return pd.DataFrame(
-            {
-                "asset_id": pdf["asset_id"],
-                "mime": pdf["mime"],
-                "n_bytes": pdf["payload"].map(len).astype("int32"),
-                "checksum": pdf["payload"].map(
-                    lambda b: hashlib.md5(b).hexdigest()
-                ),
-                "width": pd.Series(
-                    [d[0] for d in decoded], index=pdf.index, dtype="int32"
-                ),
-                "height": pd.Series(
-                    [d[1] for d in decoded], index=pdf.index, dtype="int32"
-                ),
-                "feature_norm": pd.Series(
-                    [d[2] for d in decoded], index=pdf.index, dtype="float64"
-                ),
-            }
-        )
-    payloads = pdf["payload"]
-    n_bytes = payloads.map(len)
-    checksum = payloads.map(lambda b: hashlib.md5(b).hexdigest())
-    # deterministic fake "decoded" dimensions + feature norm
-    crc = payloads.map(lambda b: zlib.crc32(b))
-    return pd.DataFrame(
-        {
-            "asset_id": pdf["asset_id"],
-            "mime": pdf["mime"],
-            "n_bytes": n_bytes.astype("int32"),
-            "checksum": checksum,
-            "width": (crc % 1920).astype("int32"),
-            "height": (crc // 1920 % 1080).astype("int32"),
-            "feature_norm": (crc % 10_000) / 10_000.0,
-        }
+def _stub_features(aid: int, mime: str, payload: bytes) -> tuple:
+    """One asset → features without decoding: deterministic fake
+    dimensions and feature norm from the payload's CRC-32."""
+    crc = zlib.crc32(payload)
+    return (
+        aid, mime, len(payload), hashlib.md5(payload).hexdigest(),
+        crc % 1920, crc // 1920 % 1080, (crc % 10_000) / 10_000.0,
     )
+
+
+def _real_features(aid: int, mime: str, payload: bytes) -> tuple:
+    """One asset → features through :func:`_decode_real_asset`."""
+    w, h, norm = _decode_real_asset(mime, payload)
+    return (aid, mime, len(payload), hashlib.md5(payload).hexdigest(), w, h, norm)
 
 
 #: Output schema of the fault-tolerant extractor: the feature columns
@@ -255,41 +230,28 @@ MEDIA_QUARANTINE_SCHEMA = (
 )
 
 
-def _decode_batch_quarantine(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Real-decode one Arrow batch with PER-ASSET fault isolation
-    (VERDICT r11 action #1): one malformed or unsupported payload —
-    an arithmetic-coded JPEG, a truncated gzip member, an encrypted
-    PDF — must quarantine ONE ROW, not fail the task 4× and kill the
-    job, because at 100 TB corrupt inputs are a certainty, not an
-    edge case. Each asset decodes under its own catch; failures emit
-    ``status='quarantined'`` with ``reason`` = ``ExcClass: message``
-    and null features, successes emit ``status='ok'`` and the exact
-    features :func:`_decode_batch` would. The strict path (the gate
-    harnesses, where a raise IS the assertion) stays byte-identical
-    in :func:`_decode_batch`."""
-    rows = []
-    for aid, mime, payload in zip(
-        pdf["asset_id"], pdf["mime"], pdf["payload"]
-    ):
-        raw = bytes(payload)
-        base = (int(aid), str(mime), len(raw), hashlib.md5(raw).hexdigest())
-        try:
-            w, h, norm = _decode_real_asset(str(mime), raw)
-        except Exception as exc:  # noqa: BLE001 — untrusted input boundary
-            rows.append(
-                base
-                + (None, None, None, "quarantined",
-                   f"{type(exc).__name__}: {exc}")
-            )
-        else:
-            rows.append(base + (w, h, norm, "ok", None))
-    return pd.DataFrame(
-        rows,
-        columns=[
-            "asset_id", "mime", "n_bytes", "checksum",
-            "width", "height", "feature_norm", "status", "reason",
-        ],
-    )
+def _quarantine_features(aid: int, mime: str, payload: bytes) -> tuple:
+    """Real-decode one asset with PER-ASSET fault isolation (VERDICT
+    r11 action #1): one malformed, unsupported or NULL payload — an
+    arithmetic-coded JPEG, a truncated gzip member, an encrypted PDF —
+    must quarantine ONE ROW, not fail the task 4× and kill the job,
+    because at 100 TB corrupt inputs are a certainty, not an edge
+    case. Failures emit ``status='quarantined'`` with ``reason`` =
+    ``ExcClass: message`` and null features (``n_bytes``/``checksum``
+    stay whenever the payload has bytes); successes emit
+    ``status='ok'`` and the exact features :func:`_real_features`
+    would. The strict path (the gate harnesses, where a raise IS the
+    assertion) stays :func:`_real_features`."""
+    n_bytes = checksum = None
+    try:
+        n_bytes, checksum = len(payload), hashlib.md5(payload).hexdigest()
+        w, h, norm = _decode_real_asset(mime, payload)
+    except Exception as exc:  # noqa: BLE001 — untrusted input boundary
+        return (
+            aid, mime, n_bytes, checksum, None, None, None,
+            "quarantined", f"{type(exc).__name__}: {exc}",
+        )
+    return (aid, mime, n_bytes, checksum, w, h, norm, "ok", None)
 
 
 def extract_media_features_quarantine(
@@ -307,13 +269,11 @@ def extract_media_features_quarantine(
     without losing the batch."""
     if target_partitions:
         assets = assets.repartition(target_partitions, F.col("asset_id"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _decode_batch_quarantine(pdf)
-
-    return assets.select("asset_id", "mime", "payload").mapInPandas(
-        run, schema=MEDIA_QUARANTINE_SCHEMA
+    return map_rows(
+        assets,
+        ["asset_id", "mime", "payload"],
+        _quarantine_features,
+        MEDIA_QUARANTINE_SCHEMA,
     )
 
 
@@ -352,14 +312,45 @@ def extract_media_features(
         # size balance: hash the id, not the payload (no byte shuffle
         # beyond the repartition itself)
         assets = assets.repartition(target_partitions, F.col("asset_id"))
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _decode_batch(pdf, decode_stub)
-
-    return assets.select("asset_id", "mime", "payload").mapInPandas(
-        run, schema=MEDIA_FEATURES_SCHEMA
+    return map_rows(
+        assets,
+        ["asset_id", "mime", "payload"],
+        _stub_features if decode_stub else _real_features,
+        MEDIA_FEATURES_SCHEMA,
     )
+
+
+def _synth_wav(aid: int) -> bytes:
+    """Mono 16-bit PCM WAV of ``100 + id%50`` samples at ``8000 +
+    1000·(id%3)`` Hz, sample j = ``(id·31 + j·17) % 2001 − 1000``."""
+    import io
+    import wave
+
+    import numpy as np
+
+    n = 100 + aid % 50
+    samples = np.array(
+        [(aid * 31 + j * 17) % 2001 - 1000 for j in range(n)], dtype="<i2"
+    )
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as w:
+        w.setnchannels(1)
+        w.setsampwidth(2)
+        w.setframerate(8000 + 1000 * (aid % 3))
+        w.writeframes(samples.tobytes())
+    return buf.getvalue()
+
+
+def _synth_bmp(aid: int) -> bytes:
+    """4×``(2 + id%3)`` 24-bpp BMP, pixel byte p = ``(id·7 + p) % 256``."""
+    import struct
+
+    h = 2 + aid % 3
+    npx = 12 * h
+    header = struct.pack("<2sIHHI", b"BM", 54 + npx, 0, 0, 54) + struct.pack(
+        "<IiiHHIIiiII", 40, 4, h, 1, 24, 0, npx, 0, 0, 0, 0
+    )
+    return header + bytes((aid * 7 + p) % 256 for p in range(npx))
 
 
 def synthesize_assets(ids_df: DataFrame, id_col: str = "asset_id") -> DataFrame:
@@ -381,50 +372,14 @@ def synthesize_assets(ids_df: DataFrame, id_col: str = "asset_id") -> DataFrame:
     of :func:`extract_media_features` carry a value oracle
     (``media_feature_extract_real``). Runs as Arrow-batched
     ``mapInPandas`` like the decoder itself."""
-    import io
-    import struct
-    import wave
 
-    import numpy as np
+    def per_id(aid: int):
+        if aid % 2 == 0:
+            return aid, "audio/wav", _synth_wav(aid)
+        return aid, "image/bmp", _synth_bmp(aid)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, mimes, payloads = [], [], []
-            for raw in pdf[id_col]:
-                aid = int(raw)
-                if aid % 2 == 0:
-                    n = 100 + aid % 50
-                    rate = 8000 + 1000 * (aid % 3)
-                    samples = np.array(
-                        [(aid * 31 + j * 17) % 2001 - 1000 for j in range(n)],
-                        dtype="<i2",
-                    )
-                    buf = io.BytesIO()
-                    with wave.open(buf, "wb") as w:
-                        w.setnchannels(1)
-                        w.setsampwidth(2)
-                        w.setframerate(rate)
-                        w.writeframes(samples.tobytes())
-                    mimes.append("audio/wav")
-                    payloads.append(buf.getvalue())
-                else:
-                    h = 2 + aid % 3
-                    npx = 12 * h
-                    px = bytes((aid * 7 + p) % 256 for p in range(npx))
-                    header = struct.pack(
-                        "<2sIHHI", b"BM", 54 + npx, 0, 0, 54
-                    ) + struct.pack(
-                        "<IiiHHIIiiII", 40, 4, h, 1, 24, 0, npx, 0, 0, 0, 0
-                    )
-                    mimes.append("image/bmp")
-                    payloads.append(header + px)
-                ids.append(aid)
-            yield pd.DataFrame(
-                {id_col: ids, "mime": mimes, "payload": payloads}
-            )
-
-    return ids_df.select(id_col).mapInPandas(
-        gen, schema=f"{id_col} bigint, mime string, payload binary"
+    return map_rows(
+        ids_df, [id_col], per_id, f"{id_col} bigint, mime string, payload binary"
     )
 
 
@@ -457,33 +412,20 @@ def synthesize_container_assets(
         ulaw_to_linear,
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, mimes, payloads = [], [], []
-            for raw in pdf[id_col]:
-                aid = int(raw)
-                if aid % 2 == 0:
-                    n = 80 + aid % 40
-                    codes = ((aid * 11 + np.arange(n) * 7) % 256).astype(
-                        np.uint8
-                    )
-                    sig = ulaw_to_linear(codes).astype(np.int64)
-                    mimes.append("audio/basic")
-                    payloads.append(encode_au(sig, 8000, "ulaw"))
-                else:
-                    n = 60 + aid % 30
-                    j = np.arange(n).reshape(n, 1)
-                    c = np.arange(2).reshape(1, 2)
-                    sig = (aid * 13 + j * 19 + c * 37) % 4001 - 2000
-                    mimes.append("audio/aiff")
-                    payloads.append(encode_aiff(sig, 11025, 16))
-                ids.append(aid)
-            yield pd.DataFrame(
-                {id_col: ids, "mime": mimes, "payload": payloads}
-            )
+    def per_id(aid: int):
+        if aid % 2 == 0:
+            n = 80 + aid % 40
+            codes = ((aid * 11 + np.arange(n) * 7) % 256).astype(np.uint8)
+            sig = ulaw_to_linear(codes).astype(np.int64)
+            return aid, "audio/basic", encode_au(sig, 8000, "ulaw")
+        n = 60 + aid % 30
+        j = np.arange(n).reshape(n, 1)
+        c = np.arange(2).reshape(1, 2)
+        sig = (aid * 13 + j * 19 + c * 37) % 4001 - 2000
+        return aid, "audio/aiff", encode_aiff(sig, 11025, 16)
 
-    return ids_df.select(id_col).mapInPandas(
-        gen, schema=f"{id_col} bigint, mime string, payload binary"
+    return map_rows(
+        ids_df, [id_col], per_id, f"{id_col} bigint, mime string, payload binary"
     )
 
 
@@ -515,64 +457,23 @@ def synthesize_faulty_assets(
     closed forms over the id, so the DuckDB oracle attests BOTH that
     corrupt rows land in quarantine with the right reason class AND
     that good rows' values are untouched by the fault handling."""
-    import io
-    import struct
-    import wave
-
-    import numpy as np
-
     _SOF9_JPEG = (
         b"\xff\xd8\xff\xc9\x00\x0b\x08\x00\x10\x00\x10\x01\x01\x11\x00"
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, mimes, payloads = [], [], []
-            for raw in pdf[id_col]:
-                aid = int(raw)
-                leg = aid % 8
-                if leg in (0, 4):
-                    n = 100 + aid % 50
-                    rate = 8000 + 1000 * (aid % 3)
-                    samples = np.array(
-                        [(aid * 31 + j * 17) % 2001 - 1000 for j in range(n)],
-                        dtype="<i2",
-                    )
-                    buf = io.BytesIO()
-                    with wave.open(buf, "wb") as w:
-                        w.setnchannels(1)
-                        w.setsampwidth(2)
-                        w.setframerate(rate)
-                        w.writeframes(samples.tobytes())
-                    mimes.append("audio/wav")
-                    payloads.append(buf.getvalue())
-                elif leg in (2, 6):
-                    mimes.append("image/jpeg")
-                    payloads.append(_SOF9_JPEG)
-                elif leg == 7:
-                    mimes.append("application/pdf")
-                    payloads.append(f"%PDF-1.7 {aid}".encode("ascii"))
-                else:  # 1, 5 good BMP; 3 the same BMP with a broken magic
-                    h = 2 + aid % 3
-                    npx = 12 * h
-                    px = bytes((aid * 7 + p) % 256 for p in range(npx))
-                    header = struct.pack(
-                        "<2sIHHI", b"BM", 54 + npx, 0, 0, 54
-                    ) + struct.pack(
-                        "<IiiHHIIiiII", 40, 4, h, 1, 24, 0, npx, 0, 0, 0, 0
-                    )
-                    blob = header + px
-                    if leg == 3:
-                        blob = b"XX" + blob[2:]
-                    mimes.append("image/bmp")
-                    payloads.append(blob)
-                ids.append(aid)
-            yield pd.DataFrame(
-                {id_col: ids, "mime": mimes, "payload": payloads}
-            )
+    def per_id(aid: int):
+        leg = aid % 8
+        if leg in (0, 4):
+            return aid, "audio/wav", _synth_wav(aid)
+        if leg in (2, 6):
+            return aid, "image/jpeg", _SOF9_JPEG
+        if leg == 7:
+            return aid, "application/pdf", f"%PDF-1.7 {aid}".encode("ascii")
+        bmp = _synth_bmp(aid)  # 1, 5 good; 3 the same BMP with a broken magic
+        return aid, "image/bmp", (b"XX" + bmp[2:] if leg == 3 else bmp)
 
-    return ids_df.select(id_col).mapInPandas(
-        gen, schema=f"{id_col} bigint, mime string, payload binary"
+    return map_rows(
+        ids_df, [id_col], per_id, f"{id_col} bigint, mime string, payload binary"
     )
 
 
@@ -621,87 +522,50 @@ def resize_media(assets: DataFrame) -> DataFrame:
 
     Scale: assets are independent rows; one Python stage, no shuffle.
     """
+    import io
+    import wave
+
     import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "asset_id": [], "mime": [], "out_w": [], "out_h": [],
-                "checksum": [], "feature_norm": [],
-            }
-            for aid, mime, payload in zip(
-                pdf["asset_id"], pdf["mime"], pdf["payload"]
-            ):
-                if mime == "audio/wav":
-                    import io
-                    import wave
-
-                    with wave.open(io.BytesIO(bytes(payload)), "rb") as w:
-                        frames = w.readframes(w.getnframes())
-                    samples = np.frombuffer(frames, dtype="<i2")[::2]
-                    norm = round(
-                        float(
-                            np.sqrt((samples.astype("float64") ** 2).mean())
-                        )
-                        / 32768.0,
-                        6,
-                    )
-                    out_w, out_h = len(samples), 1
-                    checksum = int(samples.astype("int64").sum())
-                elif mime == "image/bmp":
-                    raw = bytes(payload)
-                    off = int.from_bytes(raw[10:14], "little")
-                    width = int.from_bytes(raw[18:22], "little", signed=True)
-                    height = int.from_bytes(raw[22:26], "little", signed=True)
-                    row_bytes = ((width * 3 + 3) // 4) * 4
-                    px = np.frombuffer(
-                        raw[off : off + row_bytes * height], dtype="u1"
-                    ).reshape(height, row_bytes)[:, : width * 3].reshape(
-                        height, width, 3
-                    )
-                    sel = px[::2, ::2, :]
-                    norm = round(float(sel.mean()) / 255.0, 6)
-                    out_h, out_w = sel.shape[0], sel.shape[1]
-                    checksum = int(sel.astype("int64").sum())
-                else:
-                    raise NotImplementedError(f"no resize for {mime}")
-                out["asset_id"].append(int(aid))
-                out["mime"].append(mime)
-                out["out_w"].append(out_w)
-                out["out_h"].append(out_h)
-                out["checksum"].append(checksum)
-                out["feature_norm"].append(norm)
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(
-        run,
-        schema=(
-            "asset_id bigint, mime string, out_w int, out_h int, "
-            "checksum bigint, feature_norm double"
-        ),
-    )
-
-
-def _codec_roundtrip_features(
-    ids_df: DataFrame, id_col: str, per_id
-) -> DataFrame:
-    """Shared harness for the codec round-trip gates (JPEG/PNG/GIF):
-    one Arrow-batched ``mapInPandas`` stage mapping each id through
-    ``per_id(aid) -> (width, height, pixel_sum)`` — the
-    generate→encode→decode→sum closure each gate supplies. One
-    definition so the batching loop, row assembly, and schema can
-    never drift apart across the codec family."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [(int(a), *per_id(int(a))) for a in pdf[id_col]]
-            yield pd.DataFrame(
-                rows, columns=[id_col, "width", "height", "pixel_sum"]
+    def per_asset(aid: int, mime: str, payload: bytes):
+        if mime == "audio/wav":
+            with wave.open(io.BytesIO(payload), "rb") as w:
+                frames = w.readframes(w.getnframes())
+            samples = np.frombuffer(frames, dtype="<i2")[::2]
+            norm = round(
+                float(np.sqrt((samples.astype("float64") ** 2).mean()))
+                / 32768.0,
+                6,
             )
+            checksum = int(samples.astype("int64").sum())
+            return aid, mime, len(samples), 1, checksum, norm
+        if mime == "image/bmp":
+            off = int.from_bytes(payload[10:14], "little")
+            width = int.from_bytes(payload[18:22], "little", signed=True)
+            height = int.from_bytes(payload[22:26], "little", signed=True)
+            row_bytes = ((width * 3 + 3) // 4) * 4
+            px = np.frombuffer(
+                payload[off : off + row_bytes * height], dtype="u1"
+            ).reshape(height, row_bytes)[:, : width * 3].reshape(height, width, 3)
+            sel = px[::2, ::2, :]
+            norm = round(float(sel.mean()) / 255.0, 6)
+            checksum = int(sel.astype("int64").sum())
+            return aid, mime, sel.shape[1], sel.shape[0], checksum, norm
+        raise NotImplementedError(f"no resize for {mime}")
 
-    return ids_df.mapInPandas(
-        run, schema=f"{id_col} bigint, width int, height int, pixel_sum bigint"
+    return map_rows(
+        assets,
+        ["asset_id", "mime", "payload"],
+        per_asset,
+        "asset_id bigint, mime string, out_w int, out_h int, "
+        "checksum bigint, feature_norm double",
     )
+
+
+def _pixel_sum_schema(id_col: str) -> str:
+    """Output schema of the image round-trip gates (JPEG/PNG/GIF/TIFF):
+    each maps an id through ``generate → encode → decode → sum``."""
+    return f"{id_col} bigint, width int, height int, pixel_sum bigint"
 
 
 def jpeg_roundtrip_features(
@@ -768,7 +632,7 @@ def jpeg_roundtrip_features(
             return 2 * ((aid * 11 + i * 3 + j * 9) % 128)
         return 2 * ((aid * 13 + i * 7 + j * 5) % 128)
 
-    def per_id(aid: int) -> tuple[int, int, int]:
+    def per_id(aid: int) -> tuple[int, int, int, int]:
         img = np.zeros((8 * tiles, 8 * tiles), dtype=np.uint8)
         for i in range(tiles):
             for j in range(tiles):
@@ -783,9 +647,9 @@ def jpeg_roundtrip_features(
                 subsample="420" if mode == "420" else "444",
             )
         dec = decode_jpeg(payload)
-        return int(dec.shape[1]), int(dec.shape[0]), int(dec.astype("int64").sum())
+        return aid, int(dec.shape[1]), int(dec.shape[0]), int(dec.astype("int64").sum())
 
-    return _codec_roundtrip_features(ids_df, id_col, per_id)
+    return map_rows(ids_df, [id_col], per_id, _pixel_sum_schema(id_col))
 
 
 def jpeg_progressive_roundtrip_features(
@@ -825,7 +689,7 @@ def jpeg_progressive_roundtrip_features(
         is_progressive_jpeg,
     )
 
-    def per_id(aid: int) -> tuple[int, int, int]:
+    def per_id(aid: int) -> tuple[int, int, int, int]:
         img = np.zeros((16, 16), dtype=np.uint8)
         for i in range(2):
             for j in range(2):
@@ -836,9 +700,9 @@ def jpeg_progressive_roundtrip_features(
         if not is_progressive_jpeg(payload):
             raise ValueError("encoder did not produce an SOF2 stream")
         dec = decode_jpeg_progressive(payload)
-        return int(dec.shape[1]), int(dec.shape[0]), int(dec.astype("int64").sum())
+        return aid, int(dec.shape[1]), int(dec.shape[0]), int(dec.astype("int64").sum())
 
-    return _codec_roundtrip_features(ids_df, id_col, per_id)
+    return map_rows(ids_df, [id_col], per_id, _pixel_sum_schema(id_col))
 
 
 def gif_roundtrip_features(ids_df: DataFrame, id_col: str = "asset_id") -> DataFrame:
@@ -873,7 +737,7 @@ def gif_roundtrip_features(ids_df: DataFrame, id_col: str = "asset_id") -> DataF
 
     H = W = 16
 
-    def per_id(aid: int) -> tuple[int, int, int]:
+    def per_id(aid: int) -> tuple[int, int, int, int]:
         y = np.arange(H).reshape(H, 1)
         x = np.arange(W).reshape(1, W)
         idx = ((aid + 3 * y + 5 * x) % 16).astype(np.uint8)
@@ -884,9 +748,9 @@ def gif_roundtrip_features(ids_df: DataFrame, id_col: str = "asset_id") -> DataF
             idx, pal, interlace=(aid % 2 == 1), local_table=(aid % 3 == 0)
         )
         dec = decode_gif(payload)
-        return int(dec.shape[1]), int(dec.shape[0]), int(dec.astype("int64").sum())
+        return aid, int(dec.shape[1]), int(dec.shape[0]), int(dec.astype("int64").sum())
 
-    return _codec_roundtrip_features(ids_df, id_col, per_id)
+    return map_rows(ids_df, [id_col], per_id, _pixel_sum_schema(id_col))
 
 
 def tiff_roundtrip_features(ids_df: DataFrame, id_col: str = "asset_id") -> DataFrame:
@@ -931,7 +795,7 @@ def tiff_roundtrip_features(ids_df: DataFrame, id_col: str = "asset_id") -> Data
     H, W = 10, 16
     _COMP = ("none", "packbits", "lzw")
 
-    def per_id(aid: int) -> tuple[int, int, int]:
+    def per_id(aid: int) -> tuple[int, int, int, int]:
         y = np.arange(H).reshape(H, 1)
         x = np.arange(W).reshape(1, W)
         comp = _COMP[aid % 3]
@@ -950,9 +814,9 @@ def tiff_roundtrip_features(ids_df: DataFrame, id_col: str = "asset_id") -> Data
             img = ((aid * 3 + y * 7 + x * 11) % 256).astype(np.uint8)
             blob = encode_tiff(img, comp, big_endian, rows_per_strip=rps)
         dec = decode_tiff(blob)
-        return int(dec.shape[1]), int(dec.shape[0]), int(dec.astype("int64").sum())
+        return aid, int(dec.shape[1]), int(dec.shape[0]), int(dec.astype("int64").sum())
 
-    return _codec_roundtrip_features(ids_df, id_col, per_id)
+    return map_rows(ids_df, [id_col], per_id, _pixel_sum_schema(id_col))
 
 
 def flac_roundtrip_features(ids_df: DataFrame, id_col: str = "asset_id") -> DataFrame:
@@ -993,7 +857,7 @@ def flac_roundtrip_features(ids_df: DataFrame, id_col: str = "asset_id") -> Data
 
     N, RATE = 96, 8000
 
-    def per_id(aid: int) -> tuple[int, int, int, int]:
+    def per_id(aid: int) -> tuple[int, int, int, int, int]:
         t = np.arange(N).reshape(N, 1)
         c = np.arange(2).reshape(1, 2)
         if aid % 5 == 0:
@@ -1013,24 +877,14 @@ def flac_roundtrip_features(ids_df: DataFrame, id_col: str = "asset_id") -> Data
             partition_order=2 if leg == 2 else 0,
         )
         dec, rate, _ = decode_flac(payload)
-        return int(dec.shape[0]), int(dec.shape[1]), rate, int(dec.sum())
+        return aid, int(dec.shape[0]), int(dec.shape[1]), rate, int(dec.sum())
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [(int(a), *per_id(int(a))) for a in pdf[id_col]]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "n_samples", "n_channels", "sample_rate", "sample_sum",
-                ],
-            )
-
-    return ids_df.mapInPandas(
-        run,
-        schema=(
-            f"{id_col} bigint, n_samples int, n_channels int,"
-            " sample_rate int, sample_sum bigint"
-        ),
+    return map_rows(
+        ids_df,
+        [id_col],
+        per_id,
+        f"{id_col} bigint, n_samples int, n_channels int,"
+        " sample_rate int, sample_sum bigint",
     )
 
 
@@ -1075,7 +929,7 @@ def video_frame_sample_features(
         encode_jpeg_gray,
     )
 
-    def per_id(aid: int) -> tuple[int, int, int, int, int]:
+    def per_id(aid: int) -> tuple[int, int, int, int, int, int]:
         n_frames = 4 + aid % 5
         frames = []
         for f in range(n_frames):
@@ -1091,24 +945,17 @@ def video_frame_sample_features(
         pixel_sum = sum(
             int(decode_jpeg(s).astype("int64").sum()) for s in sampled
         )
-        return meta["n_frames"], len(sampled), meta["width"], meta["height"], pixel_sum
+        return (
+            aid, meta["n_frames"], len(sampled), meta["width"], meta["height"],
+            pixel_sum,
+        )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [(int(a), *per_id(int(a))) for a in pdf[id_col]]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "n_frames", "n_sampled", "width", "height", "pixel_sum",
-                ],
-            )
-
-    return ids_df.mapInPandas(
-        run,
-        schema=(
-            f"{id_col} bigint, n_frames int, n_sampled int,"
-            " width int, height int, pixel_sum bigint"
-        ),
+    return map_rows(
+        ids_df,
+        [id_col],
+        per_id,
+        f"{id_col} bigint, n_frames int, n_sampled int,"
+        " width int, height int, pixel_sum bigint",
     )
 
 
@@ -1152,7 +999,7 @@ def audio_container_roundtrip_features(
 
     N, RATE = 64, 8000
 
-    def per_id(aid: int) -> tuple[str, int, int, int, int]:
+    def per_id(aid: int) -> tuple[int, str, int, int, int, int]:
         t = np.arange(N).reshape(N, 1)
         c = np.arange(2).reshape(1, 2)
         codes = ((aid * 7 + t * 13 + c * 29) % 256).astype(np.uint8)
@@ -1167,25 +1014,14 @@ def audio_container_roundtrip_features(
         else:
             dec, rate, _ = decode_au(encode_au(sig, RATE, "ulaw"))
             path = "au-ulaw"
-        return path, int(dec.shape[0]), int(dec.shape[1]), rate, int(dec.sum())
+        return aid, path, int(dec.shape[0]), int(dec.shape[1]), rate, int(dec.sum())
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [(int(a), *per_id(int(a))) for a in pdf[id_col]]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "path", "n_samples", "n_channels",
-                    "sample_rate", "sample_sum",
-                ],
-            )
-
-    return ids_df.mapInPandas(
-        run,
-        schema=(
-            f"{id_col} bigint, path string, n_samples int, n_channels int,"
-            " sample_rate int, sample_sum bigint"
-        ),
+    return map_rows(
+        ids_df,
+        [id_col],
+        per_id,
+        f"{id_col} bigint, path string, n_samples int, n_channels int,"
+        " sample_rate int, sample_sum bigint",
     )
 
 
@@ -1220,7 +1056,7 @@ def jpeg_exif_orientation_features(
         encode_jpeg_gray,
     )
 
-    def per_id(aid: int) -> tuple[int, int, int, int]:
+    def per_id(aid: int) -> tuple[int, int, int, int, int]:
         img = np.zeros((24, 16), dtype=np.uint8)
         for i in range(3):
             for j in range(2):
@@ -1235,26 +1071,19 @@ def jpeg_exif_orientation_features(
         got = parse_exif_orientation(payload)
         upright = apply_orientation(decode_jpeg_auto(payload), got)
         return (
+            aid,
             int(got),
             int(upright.shape[1]),
             int(upright.shape[0]),
             int(upright.astype("int64").sum()),
         )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [(int(a), *per_id(int(a))) for a in pdf[id_col]]
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "orientation", "width", "height", "pixel_sum"],
-            )
-
-    return ids_df.mapInPandas(
-        run,
-        schema=(
-            f"{id_col} bigint, orientation int, width int, height int,"
-            " pixel_sum bigint"
-        ),
+    return map_rows(
+        ids_df,
+        [id_col],
+        per_id,
+        f"{id_col} bigint, orientation int, width int, height int,"
+        " pixel_sum bigint",
     )
 
 
@@ -1297,7 +1126,7 @@ def png_roundtrip_features(ids_df: DataFrame, id_col: str = "asset_id") -> DataF
 
     H, W = 10, 16
 
-    def per_id(aid: int) -> tuple[int, int, int]:
+    def per_id(aid: int) -> tuple[int, int, int, int]:
         y = np.arange(H).reshape(H, 1, 1)
         x = np.arange(W).reshape(1, W, 1)
         c = np.arange(3).reshape(1, 1, 3)
@@ -1335,6 +1164,7 @@ def png_roundtrip_features(ids_df: DataFrame, id_col: str = "asset_id") -> DataF
             )
             dec = decode_png(payload)
             return (
+                aid,
                 int(dec.shape[1]),
                 int(dec.shape[0]),
                 int(dec.astype("int64").sum()),
@@ -1358,6 +1188,6 @@ def png_roundtrip_features(ids_df: DataFrame, id_col: str = "asset_id") -> DataF
                 img, deflate, filter_mode="cycle", interlace=interlace
             )
         dec = decode_png(payload)
-        return int(dec.shape[1]), int(dec.shape[0]), int(dec.astype("int64").sum())
+        return aid, int(dec.shape[1]), int(dec.shape[0]), int(dec.astype("int64").sum())
 
-    return _codec_roundtrip_features(ids_df, id_col, per_id)
+    return map_rows(ids_df, [id_col], per_id, _pixel_sum_schema(id_col))

@@ -6,7 +6,10 @@ The production shape: a crawl table carries raw HTML next to typed
 metadata; extraction runs as ONE ``mapInPandas`` stage (documents
 are the parallelism unit, zero shuffle — the codec posture), and the
 cleaned text feeds the existing curation stack (unicode
-tokenization, Gopher rules, dedup, BPE) unchanged. The gate harness
+tokenization, Gopher rules, dedup, BPE) unchanged. Every stage here
+— the extractor and each crawl/archive gate harness — is a per-row
+function plus its DDL schema, run through
+:func:`operators.rows.map_rows`. The gate harness
 (`html_extract_features`) synthesizes deterministic HTML from each
 document's own text so a DuckDB oracle can recompute the extraction
 by string formula — the synthesize-assets pattern the media gates
@@ -14,11 +17,10 @@ use."""
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from data_warehouse_migration_spark.operators.rows import map_rows
 
 
 def extract_text_from_html(
@@ -32,26 +34,19 @@ def extract_text_from_html(
         html_to_text,
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, h in zip(pdf[id_col], pdf[html_col]):
-                text = html_to_text(h)
-                n_blocks, n_boiler = boilerplate_stats(
-                    h, link_density_max=link_density_max
-                )
-                rows.append((int(i), text, n_blocks, n_boiler, len(text)))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "text", "n_blocks", "n_boilerplate", "n_chars"],
-            )
+    def per_doc(i: int, html: str):
+        text = html_to_text(html)
+        n_blocks, n_boiler = boilerplate_stats(
+            html, link_density_max=link_density_max
+        )
+        return (i, text, n_blocks, n_boiler, len(text))
 
-    return df.select(id_col, html_col).mapInPandas(
-        run,
-        schema=(
-            f"{id_col} bigint, text string, n_blocks int,"
-            " n_boilerplate int, n_chars int"
-        ),
+    return map_rows(
+        df,
+        [id_col, html_col],
+        per_doc,
+        f"{id_col} bigint, text string, n_blocks int,"
+        " n_boilerplate int, n_chars int",
     )
 
 
@@ -74,7 +69,7 @@ def synth_page(aid: int, lang: str, text: str) -> str:
         f"<style>p {{ color: red; }} /* > */</style>"
         f'<script>if (1 < 2) {{ v = "</div>"; }}</script>'
         f"</head><body><h1>{lang}</h1>"
-        f"<p>{esc(str(text))} &lt;raw&gt; &#65;&#x42;</p>"
+        f"<p>{esc(text)} &lt;raw&gt; &#65;&#x42;</p>"
         f"<!-- <p>not text {aid}</p> -->"
         f"{navs}</body></html>"
     )
@@ -98,31 +93,21 @@ def crawl_extract_main(docs: DataFrame) -> DataFrame:
         html_blocks,
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, lang, text in zip(pdf["doc_id"], pdf["lang"], pdf["text"]):
-                aid = int(i)
-                blocks = html_blocks(synth_page(aid, str(lang), str(text)))
-                content = [
-                    t for t, link, total in blocks
-                    if not (total and link / total > 0.5)
-                ]
-                n_boiler = len(blocks) - len(content)
-                main = content[-1] if content else ""
-                rows.append((aid, str(lang), main, len(blocks), n_boiler))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "lang", "main_text", "n_blocks",
-                         "n_boilerplate"],
-            )
+    def per_doc(aid: int, lang: str, text: str):
+        blocks = html_blocks(synth_page(aid, lang, text))
+        content = [
+            t for t, link, total in blocks
+            if not (total and link / total > 0.5)
+        ]
+        main = content[-1] if content else ""
+        return (aid, lang, main, len(blocks), len(blocks) - len(content))
 
-    return docs.select("doc_id", "lang", "text").mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, lang string, main_text string,"
-            " n_blocks int, n_boilerplate int"
-        ),
+    return map_rows(
+        docs,
+        ["doc_id", "lang", "text"],
+        per_doc,
+        "doc_id bigint, lang string, main_text string,"
+        " n_blocks int, n_boilerplate int",
     )
 
 
@@ -140,24 +125,20 @@ def url_canonicalize_features(docs: DataFrame) -> DataFrame:
         split_url,
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, lang in zip(pdf["doc_id"], pdf["lang"]):
-                aid = int(i)
-                url = (
-                    f"HTTP://WWW.Host{aid % 5}.COM:80/{lang}/a/b/../c/./"
-                    f"%61%2f{aid}?b={aid}&a={aid % 3}#frag{aid}"
-                )
-                canon = canonicalize_url(url, sort_query=True)
-                _, authority, _, _, _ = split_url(canon)
-                rows.append((aid, canon, authority))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "canonical_url", "host"]
-            )
+    def per_doc(aid: int, lang: str):
+        url = (
+            f"HTTP://WWW.Host{aid % 5}.COM:80/{lang}/a/b/../c/./"
+            f"%61%2f{aid}?b={aid}&a={aid % 3}#frag{aid}"
+        )
+        canon = canonicalize_url(url, sort_query=True)
+        _, authority, _, _, _ = split_url(canon)
+        return (aid, canon, authority)
 
-    return docs.select("doc_id", "lang").mapInPandas(
-        run, schema="doc_id bigint, canonical_url string, host string"
+    return map_rows(
+        docs,
+        ["doc_id", "lang"],
+        per_doc,
+        "doc_id bigint, canonical_url string, host string",
     )
 
 
@@ -187,28 +168,18 @@ def html_extract_features(docs: DataFrame) -> DataFrame:
         html_to_text,
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, lang, text in zip(pdf["doc_id"], pdf["lang"], pdf["text"]):
-                aid = int(i)
-                page = synth_page(aid, str(lang), str(text))
-                extracted = html_to_text(page)
-                n_blocks, n_boiler = boilerplate_stats(page)
-                rows.append(
-                    (aid, extracted, n_blocks, n_boiler, len(extracted))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "text", "n_blocks", "n_boilerplate", "n_chars"],
-            )
+    def per_doc(aid: int, lang: str, text: str):
+        page = synth_page(aid, lang, text)
+        extracted = html_to_text(page)
+        n_blocks, n_boiler = boilerplate_stats(page)
+        return (aid, extracted, n_blocks, n_boiler, len(extracted))
 
-    out = docs.select("doc_id", "lang", "text").mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, text string, n_blocks int,"
-            " n_boilerplate int, n_chars int"
-        ),
+    out = map_rows(
+        docs,
+        ["doc_id", "lang", "text"],
+        per_doc,
+        "doc_id bigint, text string, n_blocks int,"
+        " n_boilerplate int, n_chars int",
     )
     return out.select(
         "doc_id",
@@ -325,26 +296,12 @@ def warc_ingest_features(docs: DataFrame) -> DataFrame:
             len(archive),
         )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                per_doc(int(i), str(lg), str(tx))
-                for i, lg, tx in zip(pdf["doc_id"], pdf["lang"], pdf["text"])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_records", "status", "body_len",
-                    "content_encoding", "text", "archive_len",
-                ],
-            )
-
-    out = docs.select("doc_id", "lang", "text").mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, n_records int, status int, body_len int,"
-            " content_encoding string, text string, archive_len int"
-        ),
+    out = map_rows(
+        docs,
+        ["doc_id", "lang", "text"],
+        per_doc,
+        "doc_id bigint, n_records int, status int, body_len int,"
+        " content_encoding string, text string, archive_len int",
     )
     # archive_len is real but compression-dependent — keep it out of
     # the attested columns; assert it positive so the plan carries it.
@@ -398,20 +355,12 @@ def robots_policy_features(docs: DataFrame) -> DataFrame:
             is_allowed(robots, "randombot", path),
         )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [per_doc(int(i)) for i in pdf["doc_id"]]
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "path", "allowed_engine", "allowed_other"],
-            )
-
-    return docs.select("doc_id").mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, path string, allowed_engine boolean,"
-            " allowed_other boolean"
-        ),
+    return map_rows(
+        docs,
+        ["doc_id"],
+        per_doc,
+        "doc_id bigint, path string, allowed_engine boolean,"
+        " allowed_other boolean",
     )
 
 
@@ -481,26 +430,12 @@ def webdataset_shard_features(docs: DataFrame) -> DataFrame:
             parts["cls"].decode("utf-8"),
         )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                per_doc(int(i), str(lg), str(tx))
-                for i, lg, tx in zip(pdf["doc_id"], pdf["lang"], pdf["text"])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_samples", "n_members", "tar_len",
-                    "key_len", "text", "label",
-                ],
-            )
-
-    out = docs.select("doc_id", "lang", "text").mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, n_samples int, n_members int, tar_len int,"
-            " key_len int, text string, label string"
-        ),
+    out = map_rows(
+        docs,
+        ["doc_id", "lang", "text"],
+        per_doc,
+        "doc_id bigint, n_samples int, n_members int, tar_len int,"
+        " key_len int, text string, label string",
     )
     return out.select(
         "doc_id",
@@ -560,23 +495,12 @@ def tfrecord_shard_features(docs: DataFrame) -> DataFrame:
             back[1].decode("utf-8"),
         )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                per_doc(int(i), str(lg), str(tx))
-                for i, lg, tx in zip(pdf["doc_id"], pdf["lang"], pdf["text"])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_records", "shard_len", "text", "label"],
-            )
-
-    out = docs.select("doc_id", "lang", "text").mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, n_records int, shard_len int, text string,"
-            " label string"
-        ),
+    out = map_rows(
+        docs,
+        ["doc_id", "lang", "text"],
+        per_doc,
+        "doc_id bigint, n_records int, shard_len int, text string,"
+        " label string",
     )
     return out.select(
         "doc_id",
@@ -670,24 +594,12 @@ def crawl_archive_ingest(docs: DataFrame) -> DataFrame:
         main = content[-1] if content else ""
         return (aid, lang, True, main, len(blocks) - len(content))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                per_doc(int(i), str(lg), str(tx))
-                for i, lg, tx in zip(pdf["doc_id"], pdf["lang"], pdf["text"])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "lang", "allowed", "main_text",
-                         "n_boilerplate"],
-            )
-
-    return docs.select("doc_id", "lang", "text").mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, lang string, allowed boolean,"
-            " main_text string, n_boilerplate int"
-        ),
+    return map_rows(
+        docs,
+        ["doc_id", "lang", "text"],
+        per_doc,
+        "doc_id bigint, lang string, allowed boolean,"
+        " main_text string, n_boilerplate int",
     )
 
 
@@ -831,24 +743,12 @@ def crawl_archive_ingest_quarantine(docs: DataFrame) -> DataFrame:
             )
         return (aid, "ok", None, n_records, allowed, main)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                per_doc(int(i), str(lg), str(tx))
-                for i, lg, tx in zip(pdf["doc_id"], pdf["lang"], pdf["text"])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "status", "reason", "n_records",
-                         "allowed", "main_text"],
-            )
-
-    return docs.select("doc_id", "lang", "text").mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, status string, reason string, n_records int,"
-            " allowed boolean, main_text string"
-        ),
+    return map_rows(
+        docs,
+        ["doc_id", "lang", "text"],
+        per_doc,
+        "doc_id bigint, status string, reason string, n_records int,"
+        " allowed boolean, main_text string",
     )
 
 
@@ -903,23 +803,12 @@ def zip_bundle_features(docs: DataFrame) -> DataFrame:
             back[1][1].decode("utf-8"),
         )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                per_doc(int(i), str(lg), str(tx))
-                for i, lg, tx in zip(pdf["doc_id"], pdf["lang"], pdf["text"])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_members", "zip_len", "text", "label"],
-            )
-
-    out = docs.select("doc_id", "lang", "text").mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, n_members int, zip_len int, text string,"
-            " label string"
-        ),
+    out = map_rows(
+        docs,
+        ["doc_id", "lang", "text"],
+        per_doc,
+        "doc_id bigint, n_members int, zip_len int, text string,"
+        " label string",
     )
     return out.select(
         "doc_id",
@@ -963,23 +852,12 @@ def bz2_archive_features(docs: DataFrame) -> DataFrame:
         back = codecs.decompress("bz2", blob).decode("utf-8")
         return (aid, back, len(back), 1 + aid % 2, len(blob))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                per_doc(int(i), str(tx))
-                for i, tx in zip(pdf["doc_id"], pdf["text"])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "text", "n_chars", "n_streams", "bz2_len"],
-            )
-
-    out = docs.select("doc_id", "text").mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, text string, n_chars int, n_streams int,"
-            " bz2_len int"
-        ),
+    out = map_rows(
+        docs,
+        ["doc_id", "text"],
+        per_doc,
+        "doc_id bigint, text string, n_chars int, n_streams int,"
+        " bz2_len int",
     )
     return out.where(F.col("bz2_len") > 0).select(
         "doc_id",
@@ -1044,24 +922,12 @@ def wikidump_extract_features(docs: DataFrame) -> DataFrame:
             p["text"], len(p["text"]),
         )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                per_doc(int(i), str(tx))
-                for i, tx in zip(pdf["doc_id"], pdf["text"])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_pages", "title", "ns", "page_id",
-                         "text", "n_chars"],
-            )
-
-    out = docs.select("doc_id", "text").mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, n_pages int, title string, ns int,"
-            " page_id bigint, text string, n_chars int"
-        ),
+    out = map_rows(
+        docs,
+        ["doc_id", "text"],
+        per_doc,
+        "doc_id bigint, n_pages int, title string, ns int,"
+        " page_id bigint, text string, n_chars int",
     )
     return out.select(
         "doc_id",
@@ -1110,23 +976,12 @@ def xz_archive_features(docs: DataFrame) -> DataFrame:
         back = codecs.decompress("xz", blob).decode("utf-8")
         return (aid, back, len(back), check_name, len(blob))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                per_doc(int(i), str(tx))
-                for i, tx in zip(pdf["doc_id"], pdf["text"])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "text", "n_chars", "check_type", "xz_len"],
-            )
-
-    out = docs.select("doc_id", "text").mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, text string, n_chars int, check_type string,"
-            " xz_len int"
-        ),
+    out = map_rows(
+        docs,
+        ["doc_id", "text"],
+        per_doc,
+        "doc_id bigint, text string, n_chars int, check_type string,"
+        " xz_len int",
     )
     return out.where(F.col("xz_len") > 0).select(
         "doc_id",
@@ -1205,23 +1060,12 @@ def zst_archive_features(docs: DataFrame) -> DataFrame:
         back = back.decode("utf-8")
         return (aid, back, len(back), n_frames, len(blob))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                per_doc(int(i), str(tx))
-                for i, tx in zip(pdf["doc_id"], pdf["text"])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "text", "n_chars", "n_frames", "zst_len"],
-            )
-
-    out = docs.select("doc_id", "text").mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, text string, n_chars int, n_frames int,"
-            " zst_len int"
-        ),
+    out = map_rows(
+        docs,
+        ["doc_id", "text"],
+        per_doc,
+        "doc_id bigint, text string, n_chars int, n_frames int,"
+        " zst_len int",
     )
     return out.where(F.col("zst_len") > 0).select(
         "doc_id",
@@ -1267,23 +1111,12 @@ def lz4_archive_features(docs: DataFrame) -> DataFrame:
         back = codecs.decompress("lz4", blob).decode("utf-8")
         return (aid, back, len(back), n_frames, len(blob))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                per_doc(int(i), str(tx))
-                for i, tx in zip(pdf["doc_id"], pdf["text"])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "text", "n_chars", "n_frames", "lz4_len"],
-            )
-
-    out = docs.select("doc_id", "text").mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, text string, n_chars int, n_frames int,"
-            " lz4_len int"
-        ),
+    out = map_rows(
+        docs,
+        ["doc_id", "text"],
+        per_doc,
+        "doc_id bigint, text string, n_chars int, n_frames int,"
+        " lz4_len int",
     )
     return out.where(F.col("lz4_len") > 0).select(
         "doc_id",
@@ -1378,18 +1211,11 @@ def snappy_archive_features(docs: DataFrame) -> DataFrame:
             n_chunks = count_data_chunks(blob)
         return (aid, back.decode("utf-8"), n_chunks, len(blob))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                per_doc(int(i), str(tx))
-                for i, tx in zip(pdf["doc_id"], pdf["text"])
-            ]
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "text", "n_chunks", "sz_len"]
-            )
-
-    out = docs.select("doc_id", "text").mapInPandas(
-        run, schema="doc_id bigint, text string, n_chunks int, sz_len int"
+    out = map_rows(
+        docs,
+        ["doc_id", "text"],
+        per_doc,
+        "doc_id bigint, text string, n_chunks int, sz_len int",
     )
     return out.where(F.col("sz_len") > 0).select(
         "doc_id",
@@ -1439,27 +1265,19 @@ def pdf_extract_features(docs: DataFrame) -> DataFrame:
         extracted = pdf_extract_text(pdf)
         return (aid, extracted, len(extracted), len(pdf))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            rows = [
-                per_doc(int(i), str(lg), str(tx))
-                for i, lg, tx in zip(
-                    pdf_batch["doc_id"], pdf_batch["lang"], pdf_batch["text"]
-                )
-            ]
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "text", "n_chars", "pdf_len"]
-            )
-
-    out = docs.select("doc_id", "lang", "text").mapInPandas(
-        run,
-        schema="doc_id bigint, text string, n_chars int, pdf_len int",
+    out = map_rows(
+        docs,
+        ["doc_id", "lang", "text"],
+        per_doc,
+        "doc_id bigint, text string, n_chars int, pdf_len int",
     )
     return out.where(F.col("pdf_len") > 0).select(
         "doc_id",
         F.md5(F.col("text")).alias("text_md5"),
         "n_chars",
     )
+
+
 
 
 def mime_message_features(docs: DataFrame) -> DataFrame:
@@ -1513,23 +1331,12 @@ def mime_message_features(docs: DataFrame) -> DataFrame:
             m["parts"][0]["body"].decode("utf-8"),
         )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                per_doc(int(i), str(lg), str(tx))
-                for i, lg, tx in zip(pdf["doc_id"], pdf["lang"], pdf["text"])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "subject", "label", "n_parts", "text"],
-            )
-
-    out = docs.select("doc_id", "lang", "text").mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, subject string, label string, n_parts int,"
-            " text string"
-        ),
+    out = map_rows(
+        docs,
+        ["doc_id", "lang", "text"],
+        per_doc,
+        "doc_id bigint, subject string, label string, n_parts int,"
+        " text string",
     )
     return out.select(
         "doc_id",
@@ -1589,24 +1396,12 @@ def mbox_thread_features(docs: DataFrame) -> DataFrame:
             m2["body"].decode("latin-1"),
         )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                per_doc(int(i), str(lg), str(tx))
-                for i, lg, tx in zip(pdf["doc_id"], pdf["lang"], pdf["text"])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_messages", "subject", "re_subject",
-                         "text", "ack"],
-            )
-
-    out = docs.select("doc_id", "lang", "text").mapInPandas(
-        run,
-        schema=(
-            "doc_id bigint, n_messages int, subject string,"
-            " re_subject string, text string, ack string"
-        ),
+    out = map_rows(
+        docs,
+        ["doc_id", "lang", "text"],
+        per_doc,
+        "doc_id bigint, n_messages int, subject string,"
+        " re_subject string, text string, ack string",
     )
     return out.select(
         "doc_id",

@@ -4270,15 +4270,18 @@ def semdedup_tau_calibration(spark, sf_dir):
     convention). The grid LEFT JOIN keeps zero-survivor thresholds
     visible as explicit (tau, 0, 0) rows.
 
-    Scale: the pair table is the same O(Σ cᵢ²) cluster-restricted join
-    the operator pays (hot-cluster cap enforced upstream); the grid
-    fan-out is a constant 7× on the PAIR table, never the corpus."""
+    Scale: the pair table comes from the operator's own O(Σ cᵢ²)
+    within-cluster kernel (``semdedup.near_dup_pairs``) at the grid's
+    lowest tau; the grid fan-out is a constant 7× on the PAIR table,
+    never the corpus."""
     from data_warehouse_migration_spark.operators.clustering import kmeans
-    from data_warehouse_migration_spark.operators.semdedup import derive_k
-    from data_warehouse_migration_spark.operators.similarity import dot, l2_norm
+    from data_warehouse_migration_spark.operators.semdedup import (
+        derive_k,
+        near_dup_pairs,
+    )
 
     # Widened (r16, VERDICT r15 #6): the Lloyd's loop and the
-    # within-cluster pair join ran on the single narrow scan task —
+    # within-cluster pair search ran on the single narrow scan task —
     # the same shape semdedup() widens internally (r15, driver-
     # confirmed 1.65×); this query calls kmeans directly and missed
     # it. Count BEFORE widening (N is partitioning-independent).
@@ -4286,30 +4289,8 @@ def semdedup_tau_calibration(spark, sf_dir):
     k = derive_k(emb.count(), target_cluster_size=1024)
     emb = widen_narrow_input(emb)
     _, assigned = kmeans(emb, k=k, max_iter=3, round_centroids=7)
-    sized = assigned.withColumn("_nrm", l2_norm(F.col("embedding")))
-    a = sized.select(
-        "cluster",
-        F.col("vec_id").alias("a_id"),
-        F.col("embedding").alias("_a_vec"),
-        F.col("_nrm").alias("_a_nrm"),
-    )
-    b = sized.select(
-        "cluster",
-        F.col("vec_id").alias("b_id"),
-        F.col("embedding").alias("_b_vec"),
-        F.col("_nrm").alias("_b_nrm"),
-    )
-    den = F.col("_a_nrm") * F.col("_b_nrm")
-    cos = F.when(den == 0, F.lit(0.0)).otherwise(
-        dot(F.col("_a_vec"), F.col("_b_vec")) / den
-    )
-    pairs = (
-        a.join(b, "cluster")
-        .filter(F.col("a_id") < F.col("b_id"))
-        .withColumn("cos", F.round(cos, 6))
-        .filter(F.col("cos") >= 0.3)
-        .select("a_id", "b_id", "cos")
-    )
+    # the operator's own pair kernel, at the grid's lowest threshold
+    pairs = near_dup_pairs(assigned, "vec_id", "embedding", 0.3, 6)
     grid = spark.range(3, 10).select((F.col("id") * 10).cast("int").alias("tau_pct"))
     return (
         grid.join(
@@ -4318,7 +4299,7 @@ def semdedup_tau_calibration(spark, sf_dir):
         .groupBy("tau_pct")
         .agg(
             F.count(F.col("cos")).alias("n_pairs"),
-            F.countDistinct("b_id").alias("n_removed"),
+            F.countDistinct("_b_id").alias("n_removed"),
         )
     )
 

@@ -39,6 +39,21 @@ def read_csv(
     return reader.csv(path)
 
 
+def _project(df: DataFrame, declared: StructType | None) -> DataFrame:
+    """The declared projection: select+cast the declared columns,
+    matched case-insensitively; a missing one becomes NULL of its
+    declared type."""
+    if declared is None:
+        return df
+    have = {f.name.lower(): f.name for f in df.schema.fields}
+    cols = []
+    for field in declared.fields:
+        src = have.get(field.name.lower())
+        col = F.lit(None) if src is None else F.col(src)
+        cols.append(col.cast(field.dataType).alias(field.name))
+    return df.select(*cols)
+
+
 def read_parquet(
     spark: SparkSession,
     path: str,
@@ -48,18 +63,7 @@ def read_parquet(
     declared columns (drift = extra columns tolerated, missing column =
     NULL of declared type — matching ADF's drift posture rather than
     failing the read)."""
-    df = spark.read.parquet(path)
-    if declared is None:
-        return df
-    cols = []
-    have = {f.name.lower(): f.name for f in df.schema.fields}
-    for field in declared.fields:
-        src = have.get(field.name.lower())
-        if src is None:
-            cols.append(F.lit(None).cast(field.dataType).alias(field.name))
-        else:
-            cols.append(F.col(src).cast(field.dataType).alias(field.name))
-    return df.select(*cols)
+    return _project(spark.read.parquet(path), declared)
 
 
 def read_orc(
@@ -74,18 +78,7 @@ def read_orc(
     reader gives the same predicate pushdown + column pruning as
     parquet, which pytest pins via a round-trip through
     ``writers.write_orc``."""
-    df = spark.read.orc(path)
-    if declared is None:
-        return df
-    cols = []
-    have = {f.name.lower(): f.name for f in df.schema.fields}
-    for field in declared.fields:
-        src = have.get(field.name.lower())
-        if src is None:
-            cols.append(F.lit(None).cast(field.dataType).alias(field.name))
-        else:
-            cols.append(F.col(src).cast(field.dataType).alias(field.name))
-    return df.select(*cols)
+    return _project(spark.read.orc(path), declared)
 
 
 def read_increment(

@@ -14,7 +14,7 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_parquet(
@@ -140,16 +140,6 @@ def atomic_publish_dir(staged: str, path: str, keep_old: bool = True) -> None:
     os.rename(tmp, path)  # atomic pointer flip
     if old_target and not keep_old:
         shutil.rmtree(old_target, ignore_errors=True)
-
-
-def checkpoint_roundtrip(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
-    """Materialize-and-reread: required when a table's next state is
-    derived from its current state (SCD2: the new dim reads the old
-    dim). Spark plans lazily — writing a DataFrame that still reads
-    ``path`` into ``path`` would corrupt it, so the merge pipeline
-    stages through :func:`atomic_overwrite_parquet` and re-reads."""
-    atomic_overwrite_parquet(df, path)
-    return spark.read.parquet(path)
 
 
 def write_bucketed(

@@ -157,6 +157,19 @@ def test_webdataset_grouping():
     assert s2 == [("k", {"seg.png": b"p"})]
 
 
+def test_webdataset_key_splits_at_basename_dot():
+    # a dot in a DIRECTORY is part of the key, not the extension
+    samples = webdataset_samples(
+        tar_pack([("v1.0/a.txt", b"1"), ("v1.0/b.txt", b"2"),
+                  ("v1.0/c.d/e.seg.png", b"3")])
+    )
+    assert samples == [
+        ("v1.0/a", {"txt": b"1"}),
+        ("v1.0/b", {"txt": b"2"}),
+        ("v1.0/c.d/e", {"seg.png": b"3"}),
+    ]
+
+
 def test_webdataset_non_adjacent_rejected():
     blob = tar_pack(
         [("a.txt", b"1"), ("b.txt", b"2"), ("a.json", b"3")]
