@@ -307,6 +307,9 @@ def main() -> None:
         "runtime). The audit FAILS on CartesianProduct, non-whitelisted",
         "BroadcastNestedLoopJoin, and non-whitelisted unpartitioned Window.",
         "",
+        f"Session `defaultParallelism`: {spark.sparkContext.defaultParallelism}"
+        " (exchange counts depend on it).",
+        "",
     ]
     from data_warehouse_migration_spark.sources import writers
 
