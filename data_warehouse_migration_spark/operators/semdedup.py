@@ -122,8 +122,9 @@ def near_dup_pairs(
 
     One ``groupBy("cluster").applyInArrow``: per cluster the numpy
     kernel (operators/vector_kernels.cluster_pairs) computes every
-    pair's cosine — the fold of ``similarity.cosine``, bit for bit —
-    and emits only candidates within ``10**-round_to`` of ``tau``
+    pair's cosine — bit for bit the Spark fold kept as the test
+    reference ``_fold_pairs`` in tests/test_semdedup.py — and emits
+    only candidates within ``10**-round_to`` of ``tau``
     (or NaN). Spark then applies the exact rounded filter, so the
     rounding stays Spark's HALF_UP ``round``. :func:`semdedup` calls
     it only after the enforced ``max_cluster_size`` check, which

@@ -5,54 +5,90 @@ variant (random hyperplane signs) is the 100 TB path: candidates are
 generated inside buckets so the pairwise work drops from |Q|×N to
 |Q|×(N / 2^bits) in expectation, then exact-rescored.
 
-The cosine math here is native Column expressions — ``zip_with`` for
-the product, ``aggregate`` for the (sequential, deterministic) fold —
-evaluated in the JVM. Batch SemDeDup's within-cluster search runs on
-the numpy kernel in operators/vector_kernels.py instead, which sums in
-the same order, so the two agree bit for bit.
+Every cosine and hyperplane sign here runs on the Arrow-batched numpy
+kernels of operators/vector_kernels.py, which hold the package's one
+definition of vector arithmetic (float64, summed left to right, with
+its NULL, NaN and zero-denominator rules): :func:`with_cosine` scores
+joined candidate rows, :func:`with_band_keys` computes hyperplane
+buckets, and near-dup pairs go through ``semdedup.near_dup_pairs``.
+Spark keeps the rounding (``F.round``, HALF_UP), the thresholds and
+the rank windows.
 """
 
 from __future__ import annotations
 
-import pandas as pd  # module-level so pandas_udf type hints resolve
+from functools import partial
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    IntegerType,
+    StructField,
+    StructType,
+)
+
+from data_warehouse_migration_spark.operators import vector_kernels
 
 
-def dot(a: Column, b: Column) -> Column:
-    # The fold form is deliberate for the pair joins that stay on
-    # Column expressions (brute-force top-k, LSH rescore, IVF, the
-    # streaming SemDeDup probe). Higher-order array functions are
-    # CodegenFallback — ArrayAggregate runs ONE interpreted node
-    # looping over the elements — while the dim-unrolled flat tree
-    # ((0.0 + a0·b0) + a1·b1 + …), though whole-stage-codegen-eligible,
-    # lands TWICE in pair-join stages (filter-on-cosine becomes a join
-    # residual AND a project) and pushes the generated method past
-    # HotSpot's huge-method JIT limit: the stage then executes as
-    # interpreted bytecode — 2-4× SLOWER than the fold (r15, sf0.1:
-    # semdedup 8.7 s vs 4.8 s, lsh rescore 7.4 s vs 3.1 s). The fold's
-    # cost is flat and predictable. Batch SemDeDup has since moved to
-    # operators/vector_kernels.py, which sums in this same order.
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+def with_cosine(df: DataFrame, a_col: str, b_col: str, out_col: str) -> DataFrame:
+    """``df`` plus ``out_col``: the unrounded cosine of each row's
+    ``a_col`` and ``b_col`` vectors, in one zero-shuffle ``mapInArrow``
+    (vector_kernels.pair_cosine). Every column of ``df`` crosses into
+    the Python worker and back, so select only what the caller needs
+    first."""
+    kernel = partial(
+        vector_kernels.pair_cosine, a_col=a_col, b_col=b_col, out_col=out_col
     )
+    schema = StructType(df.schema.fields + [StructField(out_col, DoubleType())])
+    return df.mapInArrow(kernel, schema)
 
 
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+def with_band_keys(
+    df: DataFrame,
+    planes: list[list[float]],
+    band_bits: int,
+    vec_col: str,
+    out_col: str,
+) -> DataFrame:
+    """``df`` plus ``out_col``: the ``array<int>`` of banded hyperplane
+    keys of ``vec_col`` (vector_kernels.band_keys), in one zero-shuffle
+    ``mapInArrow``; the planes travel inside the pickled kernel."""
+    kernel = partial(
+        vector_kernels.band_keys,
+        planes=planes,
+        band_bits=band_bits,
+        vec_col=vec_col,
+        out_col=out_col,
     )
+    schema = StructType(
+        df.schema.fields + [StructField(out_col, ArrayType(IntegerType()))]
+    )
+    return df.mapInArrow(kernel, schema)
 
 
-def cosine(a: Column, b: Column) -> Column:
-    n = l2_norm(a) * l2_norm(b)
-    return F.when(n == 0, F.lit(0.0)).otherwise(dot(a, b) / n)
+def rescore_topk(
+    pairs: DataFrame, k: int, round_to: int = 6, keep: tuple[str, ...] = ()
+) -> DataFrame:
+    """Exact top-k of candidate rows ``(q_id, n_id, q_vec, n_vec,
+    *keep)``: ``(q_id, n_id, *keep, cosine, rank)``.
+
+    Ranking uses the *rounded* score with the neighbor id as
+    tie-break, so the result is total and reproducible across
+    engines/precisions."""
+    scored = with_cosine(
+        pairs.select("q_id", "n_id", *keep, "q_vec", "n_vec"),
+        "q_vec",
+        "n_vec",
+        "cosine",
+    ).withColumn("cosine", F.round("cosine", round_to))
+    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("q_id", "n_id", *keep, "cosine", "rank")
+    )
 
 
 def brute_force_topk(
@@ -67,10 +103,9 @@ def brute_force_topk(
     """Exact top-k cosine neighbors for each query vector.
 
     Queries are broadcast (a query set is small by construction); the
-    corpus streams through one stage computing cosine inside codegen,
-    then a per-query ``row_number`` keeps k. Ranking uses the *rounded*
-    score with the neighbor id as tie-break, so the result is total and
-    reproducible across engines/precisions.
+    corpus streams through one stage that scores every (query,
+    neighbor) pair on the cosine kernel, then a per-query
+    ``row_number`` keeps k (:func:`rescore_topk`).
 
     ``match_cols``: metadata columns that must be EQUAL between query
     and neighbor (label, language, tenant …) — filtered vector search
@@ -88,35 +123,20 @@ def brute_force_topk(
         queries.select(
             F.col(id_col).alias("q_id"),
             F.col(vec_col).alias("q_vec"),
-            l2_norm(F.col(vec_col)).alias("q_nrm"),
             *[F.col(c).alias(f"q_{c}") for c in match_cols],
         )
     )
-    # Norms are per-VECTOR: computed once on each side of the join
-    # instead of once per (query, neighbor) pair — byte-identical to
-    # cosine() (same dot/(norm·norm) expression, just not recomputed).
     # The corpus side is the probe of a broadcast join, so a narrow
     # scan would run the whole rescore on one core (no-op when wide).
     c = widen_narrow_input(vectors).select(
         F.col(id_col).alias("n_id"),
         F.col(vec_col).alias("n_vec"),
-        l2_norm(F.col(vec_col)).alias("n_nrm"),
         *match_cols,
     )
     cond = F.col("q_id") != F.col("n_id")
     for mc in match_cols:
         cond = cond & (F.col(f"q_{mc}") == F.col(mc))
-    den = F.col("q_nrm") * F.col("n_nrm")
-    cos = F.when(den == 0, F.lit(0.0)).otherwise(
-        dot(F.col("q_vec"), F.col("n_vec")) / den
-    )
-    scored = q.join(c, cond).withColumn("cosine", F.round(cos, round_to))
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "cosine", "rank")
-    )
+    return rescore_topk(q.join(c, cond), k, round_to)
 
 
 def cosine_near_dup_pairs(
@@ -126,34 +146,32 @@ def cosine_near_dup_pairs(
     vec_col: str = "embedding",
     round_to: int = 6,
 ) -> DataFrame:
-    """All pairs ``(a < b)`` with cosine ≥ threshold — embedding-space
-    near-duplicate detection (the vector twin of the text dedup family
-    in ``operators/dedup.py``).
+    """All pairs ``(id_a < id_b)`` with cosine ≥ threshold — embedding-
+    space near-duplicate detection (the vector twin of the text dedup
+    family in ``operators/dedup.py``).
 
-    Exact all-pairs: the self-join on ``id_a < id_b`` plans as a
-    broadcast nested-loop with the cosine evaluated inside codegen.
-    That is the correct *verification* kernel, but O(N²) candidate
-    generation does not survive 100 TB — at scale, generate candidates
-    first (hyperplane-LSH buckets as in :func:`hyperplane_lsh_topk`, or
-    an IVF coarse quantizer), then run THIS exact kernel only on
-    same-bucket pairs. The threshold is applied to the *rounded* score
-    so results are reproducible across engines/precisions.
+    Exact all-pairs: ``semdedup.near_dup_pairs`` over ONE group, so a
+    single kernel call scores all N² pairs in ``PAIR_TILE``-row tiles
+    (memory ``PAIR_TILE × N`` doubles per temporary). That is the
+    correct *verification* kernel for small slices; at scale, use
+    :func:`lsh_candidate_near_dup_pairs`, which runs the same kernel
+    per LSH bucket. The threshold is applied to the *rounded* score so
+    results are reproducible across engines/precisions.
     """
-    v = vectors.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-    a = v.select(F.col("id").alias("id_a"), F.col("vec").alias("vec_a"))
-    b = v.select(F.col("id").alias("id_b"), F.col("vec").alias("vec_b"))
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", F.round(cosine(F.col("vec_a"), F.col("vec_b")), round_to))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
+    from data_warehouse_migration_spark.operators.semdedup import near_dup_pairs
+
+    one = vectors.select(F.lit(0).alias("cluster"), id_col, vec_col)
+    return near_dup_pairs(one, id_col, vec_col, threshold, round_to).select(
+        F.col("_a_id").alias("id_a"),
+        F.col("_b_id").alias("id_b"),
+        F.col("cos").alias("cosine"),
     )
 
 
 def _gaussian_planes(n_planes: int, dim: int, seed: int) -> list[list[float]]:
     """Deterministic i.i.d. Gaussian hyperplanes, generated ONCE on the
-    driver and embedded in the plan as literal arrays (n_planes×dim
-    doubles — broadcast-sized; executors never ship numpy state).
+    driver and shipped inside the pickled sign kernel (n_planes×dim
+    doubles — broadcast-sized).
 
     Gaussian directions matter: correlated "pseudo-random" planes (e.g.
     sin of consecutive integers) collapse the effective number of
@@ -167,64 +185,30 @@ def _gaussian_planes(n_planes: int, dim: int, seed: int) -> list[list[float]]:
     return rng.standard_normal((n_planes, dim)).tolist()
 
 
-def _band_keys(vec: Column, planes: list[list[float]], band_bits: int) -> Column:
-    """``array<int>`` of banded LSH keys: bit i of band b is
-    sign(vec · plane[b*band_bits+i]), packed big-endian per band.
-
-    Deliberately straight-line (no shared ``bits`` array staged through a
-    nested ``transform``): each plane belongs to exactly one band, and
-    CollapseProject re-inlines single-reference projections into lambda
-    bodies where they would be re-evaluated per element.
-    """
-    from data_warehouse_migration_spark.operators.clustering import (
-        double_array_literal,
-    )
-
-    keys = []
-    for b0 in range(0, len(planes), band_bits):
-        key = F.lit(0)
-        for row in planes[b0 : b0 + band_bits]:
-            h = double_array_literal(row)
-            proj = F.aggregate(
-                F.zip_with(vec, h, lambda x, hh: x.cast("double") * hh),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            key = key * 2 + F.when(proj >= 0, F.lit(1)).otherwise(F.lit(0))
-        keys.append(key)
-    return F.array(*keys)
-
-
-def _band_keys_arrow(planes: list[list[float]], band_bits: int):
-    """Arrow-batched twin of :func:`_band_keys`: one numpy matmul per
-    batch computes every plane projection at once.
-
-    The Column-expression form evaluates ``n_planes`` interpreted
-    higher-order folds per row (Catalyst does not codegen lambda
-    functions), which measured ~13 s for 2000×128 projections at sf0.1;
-    the matmul is milliseconds. Bit semantics are identical — sign =
-    (proj >= 0), first plane of a band most significant — and
-    ``test_band_keys_arrow_matches_column`` pins the two paths equal
-    row-for-row. Kept out of the oracle surface: band keys only steer
-    candidate generation; verification is exact either way.
-    """
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    mat = np.asarray(planes, dtype=np.float64)
-    n_bands = len(planes) // band_bits
-    weights = 2 ** np.arange(band_bits - 1, -1, -1)
-
-    @pandas_udf("array<int>")
-    def _keys(vs: pd.Series) -> pd.Series:
-        import numpy as np
-
-        v = np.stack(vs.to_numpy()).astype(np.float64)
-        bits = (v @ mat.T >= 0).astype(np.int64)
-        keys = (bits.reshape(len(v), n_bands, band_bits) * weights).sum(axis=2)
-        return pd.Series(list(keys.astype(np.int32)))
-
-    return _keys
+def _lsh_buckets(
+    vectors: DataFrame,
+    dim: int,
+    id_col: str,
+    vec_col: str,
+    band_bits: int,
+    n_bands: int,
+    seed: int,
+    max_bucket_size: int | None,
+) -> DataFrame:
+    """``(id, vec, band, key)``: one row per vector and band, ``key``
+    the band's hyperplane signs (:func:`with_band_keys`); buckets over
+    ``max_bucket_size`` members are dropped."""
+    planes = _gaussian_planes(n_bands * band_bits, dim, seed)
+    sigs = with_band_keys(
+        vectors.select(id_col, vec_col), planes, band_bits, vec_col, "__keys"
+    ).select(id_col, vec_col, F.posexplode("__keys").alias("band", "key"))
+    if max_bucket_size is not None:
+        sizes = sigs.groupBy("band", "key").agg(F.count(F.lit(1)).alias("__n"))
+        sigs = (
+            sigs.join(sizes.filter(F.col("__n") <= max_bucket_size), ["band", "key"])
+            .drop("__n")
+        )
+    return sigs
 
 
 def lsh_candidate_pairs(
@@ -237,26 +221,16 @@ def lsh_candidate_pairs(
     seed: int = 42,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
-    """Banded-LSH CANDIDATE pairs (``id_a < id_b``, distinct) — the
-    generation stage of :func:`lsh_candidate_near_dup_pairs`, exposed
-    separately so its pruning power is measurable: candidate count /
-    (N·(N−1)/2) is the fraction of the all-pairs work the banding
-    actually admits (``test_lsh_pruning.py`` bounds it at production
-    thresholds). Every pair that shares ≥1 (band, key) bucket appears
-    exactly once; no stage touches the N² cross product.
+    """Banded-LSH CANDIDATE pairs (``id_a < id_b``, distinct): every
+    pair that shares ≥1 (band, key) bucket appears exactly once, and
+    no stage touches the N² cross product. Exposed so the banding's
+    pruning power is measurable: candidate count / (N·(N−1)/2) is the
+    fraction of the all-pairs work it admits (``test_lsh_pruning.py``
+    bounds it at production thresholds).
     """
-    planes = _gaussian_planes(n_bands * band_bits, dim, seed)
-    keys = _band_keys_arrow(planes, band_bits)
-    sigs = vectors.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(keys(F.col(vec_col))).alias("band", "key"),
-    )
-    if max_bucket_size is not None:
-        sizes = sigs.groupBy("band", "key").agg(F.count(F.lit(1)).alias("__n"))
-        sigs = (
-            sigs.join(sizes.filter(F.col("__n") <= max_bucket_size), ["band", "key"])
-            .drop("__n")
-        )
+    sigs = _lsh_buckets(
+        vectors, dim, id_col, vec_col, band_bits, n_bands, seed, max_bucket_size
+    ).select(F.col(id_col).alias("id"), "band", "key")
     a, b = sigs.alias("a"), sigs.alias("b")
     return (
         a.join(
@@ -282,30 +256,32 @@ def lsh_candidate_near_dup_pairs(
     round_to: int = 6,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
-    """Embedding near-dup pairs via banded-LSH candidate generation +
-    exact rescore — the 100 TB shape for what
+    """Embedding near-dup pairs via banded LSH with exact rescoring
+    inside each bucket — the 100 TB shape for what
     :func:`cosine_near_dup_pairs` computes all-pairs.
 
-    ``max_bucket_size`` is the hot-bucket guard for skewed corpora: a
-    bucket of B vectors contributes B² candidate pairs, so one
-    degenerate bucket (near-duplicate floods, zero vectors, an
-    uninformative band) can recreate the quadratic blow-up this
-    operator exists to avoid. Buckets over the cap are DROPPED before
-    the self-join — standard LSH-dedup hygiene: members of a flooded
-    bucket almost always co-occur in another, smaller bucket (that is
-    what multiple bands are for), so the recall cost is marginal while
-    the worst-case join size becomes n_buckets·cap². Verification-side
-    exactness is unaffected (false positives stay impossible). None
-    disables the cap (the oracle-matched exact-recall configuration).
+    Shape: each vector emits ``n_bands`` (band, key) rows carrying the
+    vector; one ``semdedup.near_dup_pairs`` then treats every bucket
+    (cluster ``band·2^band_bits + key``) as one kernel group, scores
+    its pairs exactly and keeps ``round(cos, round_to) ≥ threshold``;
+    a ``distinct`` folds pairs that share several buckets. A pair gets
+    the same cosine bits in every bucket it shares, so the result is
+    exactly the verified candidate set. Shuffled bytes per vector are
+    constant (``n_bands`` copies of the vector); no stage materializes
+    the N² cross product, and false positives are impossible — recall
+    is the only approximation, tuned by (band_bits, n_bands).
 
-    Shape: each vector emits ``n_bands`` (band, key) rows → equi-join on
-    (band, key) with ``id_a < id_b`` residual (a hash/sort-merge join,
-    never a nested loop over N²) → ``distinct`` pair set → two hash
-    joins fetch the vectors → exact cosine verification. Shuffled bytes
-    per vector are constant (n_bands keys + the vector itself, twice);
-    no stage materializes the N² cross product. Verification of every
-    candidate means false positives are impossible; recall is the only
-    approximation and is tuned by (band_bits, n_bands).
+    ``max_bucket_size`` is the hot-bucket guard for skewed corpora: a
+    bucket of B vectors costs B²/2 pair evaluations, and it is one
+    kernel group, so its memory is ``PAIR_TILE × B`` doubles per
+    temporary (as ``near_dup_pairs`` says for clusters). One degenerate
+    bucket (near-duplicate floods, zero vectors, an uninformative band)
+    could recreate the quadratic blow-up this operator exists to avoid.
+    Buckets over the cap are DROPPED — standard LSH-dedup hygiene:
+    members of a flooded bucket almost always co-occur in another,
+    smaller bucket (that is what multiple bands are for), so the recall
+    cost is marginal. None disables the cap (the oracle-matched
+    exact-recall configuration).
 
     Recall physics: P(bit agrees) = 1 − θ/π. At production near-dup
     thresholds (cosine ≥ 0.8, p ≥ 0.8/bit) defaults like b=8/L=16 prune
@@ -319,58 +295,31 @@ def lsh_candidate_near_dup_pairs(
     from data_warehouse_migration_spark.operators.layout import (
         widen_narrow_input,
     )
+    from data_warehouse_migration_spark.operators.semdedup import near_dup_pairs
 
-    # One narrow parquet split would serialize banding AND the probe
-    # side of the rescore's broadcast joins on one core; no-op at
-    # production input widths (operators/layout.widen_narrow_input).
-    # Adjudicated KEPT decisively (r16, VERDICT r15 #1): interleaved
-    # same-session A/B at sf0.1, 5 runs/tree — widened min 1.847
-    # (runs 1.85-2.05) vs narrow min 3.215 (runs 3.2-4.7), a 1.74×
-    # win the r15 driver's contended 0.76× ratio had masked.
-    vectors = widen_narrow_input(vectors)
-    cand = lsh_candidate_pairs(
-        vectors,
+    # One narrow parquet split would serialize the banding kernel on
+    # one core; no-op at production input widths
+    # (operators/layout.widen_narrow_input).
+    buckets = _lsh_buckets(
+        widen_narrow_input(vectors),
         dim,
-        id_col=id_col,
-        vec_col=vec_col,
-        band_bits=band_bits,
-        n_bands=n_bands,
-        seed=seed,
-        max_bucket_size=max_bucket_size,
-    )
-    # Verification: norms are a per-VECTOR quantity, so compute each one
-    # once here instead of twice per candidate pair — byte-identical to
-    # cosine() (same dot/(norm·norm) expression, just not recomputed),
-    # at a third of the per-pair fold work.
-    v = vectors.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        l2_norm(F.col(vec_col)).alias("nrm"),
-    )
-    den = F.col("nrm_a") * F.col("nrm_b")
-    cos = F.when(den == 0, F.lit(0.0)).otherwise(
-        dot(F.col("vec_a"), F.col("vec_b")) / den
+        id_col,
+        vec_col,
+        band_bits,
+        n_bands,
+        seed,
+        max_bucket_size,
+    ).withColumn(
+        "cluster", F.col("band").cast("long") * (1 << band_bits) + F.col("key")
     )
     return (
-        cand.join(
-            v.select(
-                F.col("id").alias("id_a"),
-                F.col("vec").alias("vec_a"),
-                F.col("nrm").alias("nrm_a"),
-            ),
-            "id_a",
+        near_dup_pairs(buckets, id_col, vec_col, threshold, round_to)
+        .select(
+            F.col("_a_id").alias("id_a"),
+            F.col("_b_id").alias("id_b"),
+            F.col("cos").alias("cosine"),
         )
-        .join(
-            v.select(
-                F.col("id").alias("id_b"),
-                F.col("vec").alias("vec_b"),
-                F.col("nrm").alias("nrm_b"),
-            ),
-            "id_b",
-        )
-        .withColumn("cosine", F.round(cos, round_to))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
+        .distinct()
     )
 
 
@@ -388,12 +337,12 @@ def hyperplane_lsh_topk(
     """Approximate top-k: random-hyperplane LSH buckets + exact rescoring.
 
     Signature bit i = sign(v · h_i) with h_i a seeded Gaussian hyperplane
-    generated once on the driver and embedded as plan literals (see
-    :func:`_gaussian_planes` for why Gaussian, not cheaper correlated
-    directions). Same-bucket candidates are exact-rescored; recall is
-    tunable via ``n_planes`` (fewer planes → bigger buckets → higher
-    recall & cost). The bucket join shuffles only (bucket, id) pairs —
-    the 100 TB-safe shape.
+    generated once on the driver (see :func:`_gaussian_planes` for why
+    Gaussian, not cheaper correlated directions); the bucket is all
+    ``n_planes`` bits, packed 31 to an int. Same-bucket candidates are
+    exact-rescored; recall is tunable via ``n_planes`` (fewer planes →
+    bigger buckets → higher recall & cost). The bucket join shuffles
+    only (bucket, id) pairs — the 100 TB-safe shape.
 
     ``dim`` is required: it is fixed by the embedding model, and
     inferring it would cost a driver action inside what must stay a
@@ -401,44 +350,20 @@ def hyperplane_lsh_topk(
     """
     planes = _gaussian_planes(n_planes, dim, seed)
 
-    def signature(vec: Column) -> Column:
-        from data_warehouse_migration_spark.operators.clustering import (
-            double_array_literal,
+    def bucketed(df: DataFrame, side: str) -> DataFrame:
+        vec = f"{side}_vec"
+        return with_band_keys(
+            df.select(F.col(id_col).alias(f"{side}_id"), F.col(vec_col).alias(vec)),
+            planes,
+            31,
+            vec,
+            "bucket",
         )
 
-        bits = []
-        for row in planes:
-            comps = double_array_literal(row)
-            proj = F.aggregate(
-                F.zip_with(vec, comps, lambda x, h: x.cast("double") * h),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            bits.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
-        return F.concat(*bits)
-
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("q_id"),
-            F.col(vec_col).alias("q_vec"),
-            signature(F.col(vec_col)).alias("bucket"),
-        )
-    )
-    c = vectors.select(
-        F.col(id_col).alias("n_id"),
-        F.col(vec_col).alias("n_vec"),
-        signature(F.col(vec_col)).alias("bucket"),
-    )
-    scored = (
-        q.join(c, (F.col("q_id") != F.col("n_id")) & (q["bucket"] == c["bucket"]))
-        .withColumn("cosine", F.round(cosine(F.col("q_vec"), F.col("n_vec")), round_to))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "cosine", "rank")
-    )
+    q = F.broadcast(bucketed(queries, "q"))
+    c = bucketed(vectors, "n")
+    pairs = q.join(c, (F.col("q_id") != F.col("n_id")) & (q["bucket"] == c["bucket"]))
+    return rescore_topk(pairs, k, round_to)
 
 
 def _centroid_frame(spark, centroids: list[list[float]]) -> DataFrame:
@@ -456,8 +381,7 @@ def _assign_nearest(
     """Nearest ``keep`` centroids per row (cosine, lowest-id ties)."""
     w = Window.partitionBy(side_id).orderBy(F.col("__sim").desc(), F.col("c_id"))
     return (
-        df.join(c, how="cross")
-        .withColumn("__sim", cosine(F.col(side_vec), F.col("c_vec")))
+        with_cosine(df.join(c, how="cross"), side_vec, "c_vec", "__sim")
         .withColumn("__cr", F.row_number().over(w))
         .filter(F.col("__cr") <= keep)
         .select(side_id, side_vec, F.col("c_id").alias("cluster"))
@@ -516,19 +440,8 @@ def ivf_topk(
         c, "q_id", "q_vec", keep=n_probe,
     )
 
-    scored = (
-        probes.join(corpus, "cluster")
-        .filter(F.col("q_id") != F.col("n_id"))
-        .withColumn(
-            "cosine", F.round(cosine(F.col("q_vec"), F.col("n_vec")), round_to)
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "cosine", "rank")
-    )
+    pairs = probes.join(corpus, "cluster").filter(F.col("q_id") != F.col("n_id"))
+    return rescore_topk(pairs, k, round_to)
 
 
 def write_ivf_index(
@@ -617,18 +530,10 @@ def ivf_topk_from_index(
         lists = spark.read.parquet(f"{index_dir}/lists").filter(
             F.col("cluster").isin(probed)
         )
-        scored = (
-            probes.join(lists, "cluster")
-            .filter(F.col("q_id") != F.col("n_id"))
-            .withColumn(
-                "cosine", F.round(cosine(F.col("q_vec"), F.col("n_vec")), round_to)
-            )
-        )
-        w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id"))
-        out = (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("q_id", "n_id", "cosine", "rank")
+        out = rescore_topk(
+            probes.join(lists, "cluster").filter(F.col("q_id") != F.col("n_id")),
+            k,
+            round_to,
         )
         rows = out.collect()
         return spark.createDataFrame(rows, out.schema)

@@ -1,29 +1,50 @@
-"""Arrow-batched numpy kernels for k-means assignment and SemDeDup's
-within-cluster pair search.
+"""Arrow-batched numpy kernels: the package's only vector arithmetic.
 
-Both replace Spark higher-order-function folds (``transform`` /
-``zip_with`` / ``aggregate``). Spark never generates code for those:
-each row ran one interpreted lambda per component. Here a whole Arrow
-batch (or one cluster) is one float64 matrix, and every arithmetic
-step is one numpy operation over all of its rows. The callers wire
-them in: ``clustering.assign_clusters`` through ``mapInArrow``,
-``semdedup.semdedup`` through ``groupBy("cluster").applyInArrow``.
-They take Arrow rather than pandas because the pandas conversion of a
-list column turns a NULL component into NaN, and the two must differ.
-
-The results are bit-identical to the fold expressions they replace
-(pinned in tests/test_clustering.py and tests/test_semdedup.py):
+Every dot product, norm, cosine and hyperplane sign that an operator
+computes runs here, on one definition:
 
 - components widen to float64 exactly, as ``cast("double")`` does;
 - every sum starts at ``0.0`` and adds one component product at a
   time, left to right, in a Python loop over the dimension that is
-  vectorised over rows: the order of ``aggregate``. ``np.sum``, ``@``,
-  ``np.dot`` and ``np.linalg.norm`` are never used, because they sum
-  pairwise or in BLAS order and differ in the last bits;
-- a NULL vector, a NULL component or a length mismatch makes a fold
-  NULL, because ``zip_with`` pads the shorter side with NULL;
-- comparisons follow Spark SQL ordering: NULL sorts first, NaN sorts
-  above +inf and equals itself.
+  vectorised over rows. ``np.sum``, ``@``, ``np.dot`` and
+  ``np.linalg.norm`` are never used, because they sum pairwise or in
+  BLAS order (with fused multiply-adds) and differ in the last bits;
+- ``cos = dot / (‖a‖·‖b‖)`` with ``‖a‖ = sqrt(Σ a_j·a_j)``; it is
+  ``0.0`` when that denominator is 0;
+- a NULL vector or a NULL component makes a sum NULL, and so does a
+  length mismatch, except that a cosine whose denominator is 0 stays
+  ``0.0``;
+- NaN and ±inf propagate as IEEE arithmetic says; comparisons follow
+  Spark SQL ordering: NULL sorts first, NaN sorts above +inf and
+  equals itself, so a NaN projection passes ``proj >= 0``.
+
+These are the rules of the Spark higher-order folds the kernels
+replaced (``aggregate(zip_with(a, b, x·y), 0.0, acc + x)``, which
+``zip_with`` makes NULL by padding the shorter side with NULL). The
+folds stay as test references, and every kernel is pinned to them bit
+for bit (``float.hex``) in tests/test_clustering.py,
+tests/test_semdedup.py and tests/test_similarity_kernels.py. Spark
+never generates code for a fold: each row ran one interpreted lambda
+per component. Here a whole Arrow batch (or one group) is one float64
+matrix, and every arithmetic step is one numpy operation over all of
+its rows.
+
+Callers wire the kernels in:
+
+- :func:`nearest_centroid` through ``mapInArrow`` in
+  ``clustering.assign_clusters`` (k-means, IVF-PQ codebooks);
+- :func:`cluster_pairs` through ``groupBy(...).applyInArrow`` in
+  ``semdedup.near_dup_pairs`` (batch SemDeDup, exact and LSH-bucketed
+  embedding near-dup pairs);
+- :func:`pair_cosine` through ``mapInArrow`` in
+  ``similarity.with_cosine`` (brute-force, LSH, IVF and SQ8 top-k
+  rescoring, IVF centroid probes, hard negatives, the streaming
+  SemDeDup probe);
+- :func:`band_keys` through ``mapInArrow`` in
+  ``similarity.with_band_keys`` (hyperplane-LSH buckets).
+
+They take Arrow rather than pandas because the pandas conversion of a
+list column turns a NULL component into NaN, and the two must differ.
 
 Rows are zero-padded to the longest vector of the batch. Padding never
 changes a sum that is kept: an accumulator that starts at ``0.0`` is
@@ -71,6 +92,10 @@ def _matrix(col) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return rows, lengths, valid
 
 
+def _padded(rows: np.ndarray, width: int) -> np.ndarray:
+    return np.pad(rows, ((0, 0), (0, width - rows.shape[1])))
+
+
 def _spark_less(x: np.ndarray, y: np.ndarray) -> np.ndarray:
     """``x < y`` under Spark's double ordering (NaN above +inf)."""
     return (x < y) | (np.isnan(y) & ~np.isnan(x))
@@ -95,8 +120,7 @@ def nearest_centroid(
     for batch in batches:
         rows, lengths, valid = _matrix(batch.column(vec_col))
         width = max(rows.shape[1], c_rows.shape[1])
-        rows = np.pad(rows, ((0, 0), (0, width - rows.shape[1])))
-        cmat = np.pad(c_rows, ((0, 0), (0, width - c_rows.shape[1])))
+        rows, cmat = _padded(rows, width), _padded(c_rows, width)
         dist = np.zeros((len(rows), k))
         with np.errstate(all="ignore"):
             for j in range(width):
@@ -189,3 +213,67 @@ def cluster_pairs(table, *, id_col, vec_col, threshold):
             "cos": pa.array(cos, pa.float64()),
         }
     )
+
+
+def pair_cosine(batches, *, a_col: str, b_col: str, out_col: str):
+    """``mapInArrow`` body over joined rows: every input column, then
+    ``out_col``, the unrounded cosine of the row's ``a_col`` and
+    ``b_col`` vectors. NULL for a NULL vector, a NULL component or a
+    length mismatch, except ``0.0`` when the denominator is 0."""
+    for batch in batches:
+        a, a_len, a_ok = _matrix(batch.column(a_col))
+        b, b_len, b_ok = _matrix(batch.column(b_col))
+        width = max(a.shape[1], b.shape[1])
+        a, b = _padded(a, width), _padded(b, width)
+        dot = np.zeros(len(a))
+        with np.errstate(all="ignore"):
+            for j in range(width):
+                dot += a[:, j] * b[:, j]
+            den = _norms(a) * _norms(b)
+            zero = den == 0
+            cos = np.where(zero, 0.0, dot / den)
+        null = ~(a_ok & b_ok) | ~(zero | (a_len == b_len))
+        yield pa.RecordBatch.from_arrays(
+            [*batch.columns, pa.array(cos, pa.float64(), mask=null)],
+            [*batch.schema.names, out_col],
+        )
+
+
+def projections(rows: np.ndarray, planes: np.ndarray) -> np.ndarray:
+    """``(rows, planes)`` matrix of ``Σ v_j · h_j``, summed left to
+    right; ``planes`` is float64 of shape ``(n_planes, dim)``."""
+    width = max(rows.shape[1], planes.shape[1])
+    rows, planes = _padded(rows, width), _padded(planes, width)
+    proj = np.zeros((len(rows), len(planes)))
+    with np.errstate(all="ignore"):
+        for j in range(width):
+            proj += rows[:, j, None] * planes[None, :, j]
+    return proj
+
+
+def band_keys(batches, *, planes, band_bits: int, vec_col: str, out_col: str):
+    """``mapInArrow`` body: every input column, then ``out_col``, the
+    ``array<int>`` of banded hyperplane keys. Bit ``i`` of band ``b``
+    is ``proj >= 0`` for plane ``b·band_bits + i``, the band's first
+    plane most significant. A NULL projection (invalid vector, or a
+    length other than the planes') is bit 0; NaN is bit 1."""
+    h = np.asarray(planes, dtype=np.float64)
+    for batch in batches:
+        rows, lengths, valid = _matrix(batch.column(vec_col))
+        proj = projections(rows, h)
+        bits = ((proj >= 0) | np.isnan(proj)) & (
+            valid & (lengths == h.shape[1])
+        )[:, None]
+        keys = []
+        for b0 in range(0, len(h), band_bits):
+            key = np.zeros(len(rows), dtype=np.int64)
+            for i in range(b0, min(b0 + band_bits, len(h))):
+                key = key * 2 + bits[:, i]
+            keys.append(key)
+        n_bands = len(keys)
+        flat = np.stack(keys, axis=1).reshape(-1).astype(np.int32)
+        offsets = np.arange(0, (len(rows) + 1) * n_bands, n_bands, dtype=np.int32)
+        yield pa.RecordBatch.from_arrays(
+            [*batch.columns, pa.ListArray.from_arrays(offsets, flat)],
+            [*batch.schema.names, out_col],
+        )

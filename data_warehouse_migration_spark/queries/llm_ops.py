@@ -537,13 +537,14 @@ WHERE round(list_cosine_similarity(a.emb, b.emb), 6) >= 0.4
 """,
 )
 def dedup_embedding_cosine(spark, sf_dir):
-    """Banded-LSH candidate generation + exact cosine rescore — the plan
-    is a hash join on (band, key), never a nested loop over N². The
-    oracle is the exact all-pairs answer: b=4/L=32 is sized so recall is
-    exact on this corpus (verified by the hash-match; every candidate is
-    exactly verified, so false positives are impossible by construction).
-    ``cosine_near_dup_pairs`` remains the O(N²) verification twin for
-    small slices. dim=64 is fixed by the embeddings table schema.
+    """Banded-LSH buckets + exact cosine rescore inside each bucket —
+    the plan shuffles on (band, key) and never builds a nested loop
+    over N². The oracle is the exact all-pairs answer: b=4/L=32 is
+    sized so recall is exact on this corpus (verified by the
+    hash-match; every pair is exactly verified, so false positives are
+    impossible by construction). ``cosine_near_dup_pairs`` remains the
+    O(N²) verification twin for small slices. dim=64 is fixed by the
+    embeddings table schema.
     """
     from data_warehouse_migration_spark.operators.similarity import (
         lsh_candidate_near_dup_pairs,
@@ -4434,8 +4435,7 @@ def hard_negative_mining(spark, sf_dir):
     scale the same contract runs over ANN candidates (LSH/IVF buckets
     from `operators/similarity.py`) with the label predicate applied
     at bucket-probe time — identical output contract."""
-    from data_warehouse_migration_spark.operators.similarity import cosine
-    from pyspark.sql import Window
+    from data_warehouse_migration_spark.operators.similarity import rescore_topk
 
     emb = t(spark, sf_dir, "embeddings")
     q = F.broadcast(
@@ -4450,17 +4450,12 @@ def hard_negative_mining(spark, sf_dir):
         F.col("label").alias("neg_label"),
         F.col("embedding").alias("n_vec"),
     )
-    scored = q.join(
+    pairs = q.join(
         c,
         (F.col("n_id") != F.col("q_id"))
         & (F.col("neg_label") != F.col("q_label")),
-    ).withColumn("cosine", F.round(cosine(F.col("q_vec"), F.col("n_vec")), 6))
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("q_id", "n_id", "neg_label", "cosine", "rank")
     )
+    return rescore_topk(pairs, 3, 6, keep=("neg_label",))
 
 
 def _bpe_step_sql(k: int, sfx: str = "") -> str:

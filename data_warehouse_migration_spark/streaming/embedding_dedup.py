@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
 from data_warehouse_migration_spark.operators.clustering import assign_clusters
-from data_warehouse_migration_spark.operators.similarity import dot, l2_norm
+from data_warehouse_migration_spark.operators.similarity import with_cosine
 from data_warehouse_migration_spark.sources.writers import (
     overwrite_partitions_dynamic,
 )
@@ -84,31 +84,27 @@ def streaming_semdedup_ingest(
         ).select("cluster", F.col(id_col), F.col(vec_col))
         members = read_members(spark, index_dir, before_epoch=int(epoch_id))
         pool = assigned if members is None else members.unionByName(assigned)
-        # Per-vector norms before the pair join (the LSH precedent) —
-        # byte-identical cosine, a third of the folds, and the same
-        # arithmetic as batch semdedup's numpy pair kernel.
-        den = F.col("_m_nrm") * F.col("_b_nrm")
-        cos = F.when(den == 0, F.lit(0.0)).otherwise(
-            dot(F.col("_m_vec"), F.col("_b_vec")) / den
-        )
-        cand = (
+        # The cosine kernel of batch semdedup (vector_kernels), row-wise
+        # over the joined pairs: the same arithmetic, bit for bit.
+        pairs = (
             pool.select(
                 "cluster",
                 F.col(id_col).alias("_m_id"),
                 F.col(vec_col).alias("_m_vec"),
-                l2_norm(F.col(vec_col)).alias("_m_nrm"),
             )
             .join(
                 assigned.select(
                     "cluster",
                     F.col(id_col).alias("_b_id"),
                     F.col(vec_col).alias("_b_vec"),
-                    l2_norm(F.col(vec_col)).alias("_b_nrm"),
                 ),
                 "cluster",
             )
             .filter(F.col("_m_id") < F.col("_b_id"))
-            .withColumn("cos", F.round(cos, round_to))
+        )
+        cand = (
+            with_cosine(pairs, "_m_vec", "_b_vec", "cos")
+            .withColumn("cos", F.round("cos", round_to))
             .filter(F.col("cos") >= tau)
             .groupBy(F.col("_b_id").alias(id_col))
             .agg(F.min("_m_id").alias("dup_of"))

@@ -150,11 +150,12 @@ def test_ivf_topk_recall_vs_brute_force(spark, sf_dir):
 
 def test_cosine_kernel_matches_native(spark, sf_dir):
     """semdedup's numpy pair kernel (operators/vector_kernels) computes
-    exactly the native fold :func:`cosine`, bit for bit."""
+    exactly the native fold ``cosine`` (tests/vector_folds.py), bit for
+    bit."""
     import numpy as np
     from pyspark.sql import functions as F
+    from vector_folds import cosine
 
-    from data_warehouse_migration_spark.operators.similarity import cosine
     from data_warehouse_migration_spark.operators.vector_kernels import (
         cosine_pairs,
     )
@@ -407,26 +408,6 @@ def test_incremental_dedup_statuses(spark):
     assert got[14] == ("near_corpus", 1)  # J = 17/19 shared shingles ≈ 0.89
     assert got[15] == ("new", None)
     assert len(got) == 6
-
-
-def test_band_keys_arrow_matches_column(spark, sf_dir):
-    from data_warehouse_migration_spark.operators.similarity import (
-        _band_keys,
-        _band_keys_arrow,
-        _gaussian_planes,
-    )
-
-    vecs = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(200)
-    planes = _gaussian_planes(32 * 4, 64, seed=42)
-    col_keys = vecs.select(
-        "vec_id", _band_keys(F.col("embedding"), planes, 4).alias("k")
-    )
-    arrow_keys = vecs.select(
-        "vec_id", _band_keys_arrow(planes, 4)(F.col("embedding")).alias("k")
-    )
-    a = {r.vec_id: r.k for r in col_keys.collect()}
-    b = {r.vec_id: r.k for r in arrow_keys.collect()}
-    assert a == b
 
 
 def test_sq8_roundtrip_error_bound_and_exact_recall(spark, sf_dir):

@@ -183,3 +183,19 @@ def test_window_is_exactly_fifty_unique(spark):
     assert len(_FIRST) == 50, len(_FIRST)
     assert len(set(_FIRST)) == 50
     assert names[:50] == list(_FIRST)
+
+
+def test_plan_audit_lists_name_registered_queries(spark):
+    """Every name in tools/plan_audit.py's whitelists and extra-audit
+    list must be a registered query: a stale entry audits nothing and
+    would silently sanction a future query that reuses the name."""
+    import importlib.util
+    import pathlib
+
+    path = pathlib.Path(__file__).resolve().parents[1] / "tools" / "plan_audit.py"
+    spec = importlib.util.spec_from_file_location("plan_audit", path)
+    audit = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(audit)
+    for name in ("BNLJ_WHITELIST", "GLOBAL_WINDOW_WHITELIST", "EXTRA_AUDIT"):
+        stale = sorted(set(getattr(audit, name)) - set(REGISTRY))
+        assert not stale, f"{name} names unregistered queries: {stale}"

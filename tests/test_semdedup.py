@@ -145,7 +145,7 @@ def test_derived_defaults_match_fixed_k_on_small_corpus(spark):
 
 # --- the numpy pair kernel against the self-join it replaced. ``_fold_pairs``
 # is semdedup's former pair stage: an a.join(b, "cluster") self-join
-# with the fold cosine of operators/similarity (per-vector norms, 0.0
+# with the fold cosine of tests/vector_folds.py (per-vector norms, 0.0
 # when the denominator is 0). Every case below must match it bit for
 # bit (float.hex), both raw and after Spark's round + filter.
 
@@ -153,7 +153,7 @@ _NAN, _INF = float("nan"), float("inf")
 
 
 def _fold_pairs(assigned, tau=None, round_to=None):
-    from data_warehouse_migration_spark.operators.similarity import dot, l2_norm
+    from vector_folds import dot, l2_norm
 
     sized = assigned.withColumn("_nrm", l2_norm(F.col("embedding")))
     a = sized.select(

@@ -34,7 +34,6 @@ DRIVER_WINDOW = 50
 # (O(n·1), not O(n²)).
 BNLJ_WHITELIST = {
     "similarity_topk",        # exact brute-force top-k: all query×corpus pairs
-    "dedup_embedding_cosine_exact",  # exact all-pairs verification twin
     "training_data_pipeline", # 1-row corpus token total broadcast to the split
     "token_budget_sample_per_lang",  # 1-row budget scalar broadcast
     "funnel_click_to_purchase",      # k 1-row stage counts cross-joined
