@@ -430,14 +430,18 @@ def sq8_topk(
     principle as ADC, and directly comparable to the exact cosine
     ranking (`similarity.brute_force_topk`). Plan shape == brute force
     with 4× smaller corpus rows: the query batch cross-broadcasts, the
-    corpus streams once and decodes in a ``zip_with``, every pair is
-    scored on the cosine kernel (similarity.rescore_topk, the same
-    arithmetic as the exact ranking), top-k is a per-query window.
+    corpus streams once, decodes in a ``zip_with`` and is scored
+    against the queries on the cosine kernel (similarity.cross_cosine,
+    the same arithmetic as the exact ranking), top-k is a per-query
+    window.
     Near-lossless (8 bits/dim):
     recall vs the exact ranking is ~1.0, unlike the coarser PQ/LSH
     paths — SQ8 is the "just fit in memory" step before those become
     necessary."""
-    from data_warehouse_migration_spark.operators.similarity import rescore_topk
+    from data_warehouse_migration_spark.operators.similarity import (
+        cross_cosine,
+        top_k,
+    )
 
     scale = _sq8_scale(lo, hi)
     lo_lit = F.array(*[F.lit(x) for x in lo])
@@ -451,5 +455,5 @@ def sq8_topk(
         F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
     )
     n = codes.select(F.col(id_col).alias("n_id"), decoded.alias("n_vec"))
-    pairs = n.crossJoin(F.broadcast(q)).filter(F.col("q_id") != F.col("n_id"))
-    return rescore_topk(pairs, k, round_to)
+    scored = cross_cosine(n, q, "n_vec", "q_vec", "cosine", ["q_id", "n_id"])
+    return top_k(scored.filter(F.col("q_id") != F.col("n_id")), k, round_to)

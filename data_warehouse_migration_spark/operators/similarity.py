@@ -8,9 +8,11 @@ generated inside buckets so the pairwise work drops from |Q|×N to
 Every cosine and hyperplane sign here runs on the Arrow-batched numpy
 kernels of operators/vector_kernels.py, which hold the package's one
 definition of vector arithmetic (float64, summed left to right, with
-its NULL, NaN and zero-denominator rules): :func:`with_cosine` scores
-joined candidate rows, :func:`with_band_keys` computes hyperplane
-buckets, and near-dup pairs go through ``semdedup.near_dup_pairs``.
+its NULL, NaN and zero-denominator rules): :func:`cross_cosine`
+scores a streamed corpus against a driver-sized query or centroid set
+held in the kernel, :func:`with_cosine` scores equi-joined candidate
+rows, :func:`with_band_keys` computes hyperplane buckets, and near-dup
+pairs go through ``semdedup.near_dup_pairs``.
 Spark keeps the rounding (``F.round``, HALF_UP), the thresholds and
 the rank windows.
 """
@@ -68,27 +70,65 @@ def with_band_keys(
     return df.mapInArrow(kernel, schema)
 
 
-def rescore_topk(
-    pairs: DataFrame, k: int, round_to: int = 6, keep: tuple[str, ...] = ()
+def cross_cosine(
+    df: DataFrame,
+    small: DataFrame,
+    vec_col: str,
+    small_vec: str,
+    out_col: str,
+    names: list[str],
+    top: int | None = None,
 ) -> DataFrame:
-    """Exact top-k of candidate rows ``(q_id, n_id, q_vec, n_vec,
-    *keep)``: ``(q_id, n_id, *keep, cosine, rank)``.
+    """Every pair of a ``df`` row and a ``small`` row (queries,
+    centroids): columns ``names`` (each from ``df``, else from
+    ``small``) plus ``out_col``, the unrounded cosine of ``vec_col``
+    and ``small_vec``; with ``top``, only each ``df`` row's ``top``
+    best pairs (vector_kernels.cross_cosine). ``small`` is collected
+    to the driver here, when the plan is built, so it must be
+    driver-sized; it travels inside the pickled kernel, and ``df``
+    streams through one ``mapInArrow``, with no join, no shuffle and
+    no vector per pair."""
+    kernel = partial(
+        vector_kernels.cross_cosine,
+        small=small.toArrow(),
+        vec_col=vec_col,
+        small_vec=small_vec,
+        names=names,
+        out_col=out_col,
+        top=top,
+    )
+    fields = {f.name: f for f in small.schema.fields + df.schema.fields}
+    schema = StructType(
+        [fields[c] for c in names] + [StructField(out_col, DoubleType())]
+    )
+    return df.mapInArrow(kernel, schema)
+
+
+def top_k(
+    scored: DataFrame, k: int, round_to: int = 6, keep: tuple[str, ...] = ()
+) -> DataFrame:
+    """Per-query top-k of scored rows ``(q_id, n_id, *keep, cosine)``:
+    ``(q_id, n_id, *keep, cosine, rank)`` with the cosine rounded.
 
     Ranking uses the *rounded* score with the neighbor id as
     tie-break, so the result is total and reproducible across
     engines/precisions."""
-    scored = with_cosine(
-        pairs.select("q_id", "n_id", *keep, "q_vec", "n_vec"),
-        "q_vec",
-        "n_vec",
-        "cosine",
-    ).withColumn("cosine", F.round("cosine", round_to))
+    scored = scored.withColumn("cosine", F.round("cosine", round_to))
     w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("q_id", "n_id", *keep, "cosine", "rank")
     )
+
+
+def rescore_topk(pairs: DataFrame, k: int, round_to: int = 6) -> DataFrame:
+    """Exact top-k of equi-joined candidate rows ``(q_id, n_id, q_vec,
+    n_vec)``, scored row by row (:func:`with_cosine`, :func:`top_k`)."""
+    scored = with_cosine(
+        pairs.select("q_id", "n_id", "q_vec", "n_vec"), "q_vec", "n_vec", "cosine"
+    )
+    return top_k(scored, k, round_to)
 
 
 def brute_force_topk(
@@ -102,15 +142,15 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
-    Queries are broadcast (a query set is small by construction); the
-    corpus streams through one stage that scores every (query,
-    neighbor) pair on the cosine kernel, then a per-query
-    ``row_number`` keeps k (:func:`rescore_topk`).
+    Queries are collected to the driver (a query set is small by
+    construction) and held in the cosine kernel; the corpus streams
+    through it once (:func:`cross_cosine`), and a per-query
+    ``row_number`` keeps k (:func:`top_k`).
 
     ``match_cols``: metadata columns that must be EQUAL between query
     and neighbor (label, language, tenant …) — filtered vector search
-    done as PRE-filtering: the predicate joins into candidate
-    generation, so top-k is computed over the eligible set. The
+    done as PRE-filtering: the predicate drops scored pairs before
+    the ranking window, so top-k is computed over the eligible set. The
     post-filter alternative (search first, drop mismatches after)
     silently returns < k or misses eligible neighbors — the classic
     filtered-ANN recall trap.
@@ -119,24 +159,26 @@ def brute_force_topk(
         widen_narrow_input,
     )
 
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias("q_id"),
-            F.col(vec_col).alias("q_vec"),
-            *[F.col(c).alias(f"q_{c}") for c in match_cols],
-        )
+    q_match = [f"q_{c}" for c in match_cols]
+    q = queries.select(
+        F.col(id_col).alias("q_id"),
+        F.col(vec_col).alias("q_vec"),
+        *[F.col(c).alias(qc) for c, qc in zip(match_cols, q_match)],
     )
-    # The corpus side is the probe of a broadcast join, so a narrow
-    # scan would run the whole rescore on one core (no-op when wide).
+    # The corpus streams through the kernel, so a narrow scan would
+    # score every pair on one core (no-op when wide).
     c = widen_narrow_input(vectors).select(
         F.col(id_col).alias("n_id"),
         F.col(vec_col).alias("n_vec"),
         *match_cols,
     )
+    scored = cross_cosine(
+        c, q, "n_vec", "q_vec", "cosine", ["q_id", "n_id", *q_match, *match_cols]
+    )
     cond = F.col("q_id") != F.col("n_id")
-    for mc in match_cols:
-        cond = cond & (F.col(f"q_{mc}") == F.col(mc))
-    return rescore_topk(q.join(c, cond), k, round_to)
+    for mc, qc in zip(match_cols, q_match):
+        cond = cond & (F.col(qc) == F.col(mc))
+    return top_k(scored.filter(cond), k, round_to)
 
 
 def cosine_near_dup_pairs(
@@ -280,8 +322,12 @@ def lsh_candidate_near_dup_pairs(
     Buckets over the cap are DROPPED — standard LSH-dedup hygiene:
     members of a flooded bucket almost always co-occur in another,
     smaller bucket (that is what multiple bands are for), so the recall
-    cost is marginal. None disables the cap (the oracle-matched
-    exact-recall configuration).
+    cost is marginal. None disables the cap and bounds nothing: it is
+    for test-sized inputs only (the oracle-matched exact-recall
+    configuration of ``dedup_embedding_cosine``, whose largest bucket
+    at sf0.1 holds 220 vectors). All-zero vectors, for one, share a
+    bucket in every band, so an uncapped production run can hold an
+    unbounded group in one Python worker; pass a cap there.
 
     Recall physics: P(bit agrees) = 1 − θ/π. At production near-dup
     thresholds (cosine ≥ 0.8, p ≥ 0.8/bit) defaults like b=8/L=16 prune
@@ -367,11 +413,11 @@ def hyperplane_lsh_topk(
 
 
 def _centroid_frame(spark, centroids: list[list[float]]) -> DataFrame:
-    return F.broadcast(
-        spark.createDataFrame(
-            [(i, [float(x) for x in v]) for i, v in enumerate(centroids)],
-            "c_id int, c_vec array<double>",
-        )
+    """The codebook as ``(c_id, c_vec)`` rows in ``c_id`` order, which
+    is the order :func:`cross_cosine` breaks ties in."""
+    return spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(centroids)],
+        "c_id int, c_vec array<double>",
     )
 
 
@@ -379,13 +425,9 @@ def _assign_nearest(
     df: DataFrame, c: DataFrame, side_id: str, side_vec: str, keep: int
 ) -> DataFrame:
     """Nearest ``keep`` centroids per row (cosine, lowest-id ties)."""
-    w = Window.partitionBy(side_id).orderBy(F.col("__sim").desc(), F.col("c_id"))
-    return (
-        with_cosine(df.join(c, how="cross"), side_vec, "c_vec", "__sim")
-        .withColumn("__cr", F.row_number().over(w))
-        .filter(F.col("__cr") <= keep)
-        .select(side_id, side_vec, F.col("c_id").alias("cluster"))
-    )
+    return cross_cosine(
+        df, c, side_vec, "c_vec", "__sim", [side_id, side_vec, "c_id"], top=keep
+    ).select(side_id, side_vec, F.col("c_id").alias("cluster"))
 
 
 def ivf_topk(

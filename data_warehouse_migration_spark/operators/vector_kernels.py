@@ -36,10 +36,14 @@ Callers wire the kernels in:
 - :func:`cluster_pairs` through ``groupBy(...).applyInArrow`` in
   ``semdedup.near_dup_pairs`` (batch SemDeDup, exact and LSH-bucketed
   embedding near-dup pairs);
+- :func:`cross_cosine` through ``mapInArrow`` in
+  ``similarity.cross_cosine`` (exact and SQ8 top-k, hard negatives,
+  IVF centroid assignment and probes): the small side (queries or
+  centroids) rides in the pickled closure, as ``nearest_centroid``'s
+  centroids do, and the corpus streams through once;
 - :func:`pair_cosine` through ``mapInArrow`` in
-  ``similarity.with_cosine`` (brute-force, LSH, IVF and SQ8 top-k
-  rescoring, IVF centroid probes, hard negatives, the streaming
-  SemDeDup probe);
+  ``similarity.with_cosine`` (LSH and IVF list rescoring, the
+  streaming SemDeDup probe: pairs from an equi-join);
 - :func:`band_keys` through ``mapInArrow`` in
   ``similarity.with_band_keys`` (hyperplane-LSH buckets).
 
@@ -236,6 +240,62 @@ def pair_cosine(batches, *, a_col: str, b_col: str, out_col: str):
         yield pa.RecordBatch.from_arrays(
             [*batch.columns, pa.array(cos, pa.float64(), mask=null)],
             [*batch.schema.names, out_col],
+        )
+
+
+def cross_cosine(
+    batches,
+    *,
+    small: pa.Table,
+    vec_col: str,
+    small_vec: str,
+    names: list[str],
+    out_col: str,
+    top: int | None = None,
+):
+    """``mapInArrow`` body: the cosine of each row's ``vec_col`` with
+    every row of ``small`` (queries or centroids, held in the pickled
+    closure), one ``(batch rows × small rows)`` matrix per batch. One
+    row per pair, or with ``top`` only each row's ``top`` best pairs
+    in Spark's ``ORDER BY cos DESC`` (NULLs last, NaN first, ``-0.0 ==
+    0.0``), ties to the earlier ``small`` row. Columns: ``names``, each
+    from the batch or else from ``small``, then ``out_col``, the
+    unrounded cosine under :func:`pair_cosine`'s rules."""
+    cols = {c: small.column(c).combine_chunks() for c in small.column_names}
+    s, s_len, s_ok = _matrix(cols[small_vec])
+    s_nrm = _norms(s)
+    m = len(s)
+    for batch in batches:
+        rows, lengths, valid = _matrix(batch.column(vec_col))
+        width = max(rows.shape[1], s.shape[1])
+        a, b = _padded(rows, width), _padded(s, width)
+        dot = np.zeros((len(a), m))
+        with np.errstate(all="ignore"):
+            for j in range(width):
+                dot += a[:, j, None] * b[None, :, j]
+            den = _norms(a)[:, None] * s_nrm[None, :]
+            zero = den == 0
+            cos = np.where(zero, 0.0, dot / den)
+        null = ~(valid[:, None] & s_ok[None, :]) | ~(
+            zero | (lengths[:, None] == s_len[None, :])
+        )
+        si = np.tile(np.arange(m), (len(a), 1))
+        if top is not None:
+            nan = np.isnan(cos) & ~null
+            key = np.where(nan | null, 0.0, -cos)
+            si = np.lexsort((si, key, ~nan, null))[:, :top]
+        ri = np.repeat(np.arange(len(a)), si.shape[1])
+        si = si.ravel()
+        ri_arr, si_arr = pa.array(ri), pa.array(si)
+        yield pa.RecordBatch.from_arrays(
+            [
+                batch.column(c).take(ri_arr)
+                if c in batch.schema.names
+                else cols[c].take(si_arr)
+                for c in names
+            ]
+            + [pa.array(cos[ri, si], pa.float64(), mask=null[ri, si])],
+            [*names, out_col],
         )
 
 

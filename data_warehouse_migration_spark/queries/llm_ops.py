@@ -3940,8 +3940,8 @@ def rag_retrieval_pipeline(spark, sf_dir):
     deterministic stub, the container ships no encoder; the plumbing
     is real and byte-attested), and held-out query documents retrieve
     their exact top-3 chunks by cosine
-    (operators/similarity.brute_force_topk, queries broadcast, corpus
-    streamed once). Swap the stub for an Arrow-batched pandas_udf
+    (operators/similarity.brute_force_topk, queries held in the cosine
+    kernel, corpus streamed once). Swap the stub for an Arrow-batched pandas_udf
     encoder and everything downstream is unchanged — and at corpus
     scale the brute-force stage swaps for the LSH/IVF/PQ index path
     (similarity_*_topk), same contract.
@@ -4425,37 +4425,38 @@ def hard_negative_mining(spark, sf_dir):
     DPR/SimCSE data-prep step): for each anchor, the top-3 most
     similar vectors with a DIFFERENT label — the negatives that sit
     closest to the decision boundary and carry the training signal
-    random negatives lack. The label-inequality predicate joins into
-    candidate generation (the filtered-search pre-filter posture:
+    random negatives lack. The label-inequality predicate drops scored
+    pairs before ranking (the filtered-search pre-filter posture:
     post-filtering would silently return < k). Ranking on the rounded
     cosine with id tie-break — total and engine-stable.
 
-    Scale: anchors broadcast over one corpus stream (the sanctioned
-    `similarity_topk` exact-baseline shape, whitelisted); at corpus
+    Scale: anchors held in the cosine kernel over one corpus stream
+    (the `similarity_topk` exact-baseline shape, no join); at corpus
     scale the same contract runs over ANN candidates (LSH/IVF buckets
     from `operators/similarity.py`) with the label predicate applied
     at bucket-probe time — identical output contract."""
-    from data_warehouse_migration_spark.operators.similarity import rescore_topk
+    from data_warehouse_migration_spark.operators.similarity import (
+        cross_cosine,
+        top_k,
+    )
 
     emb = t(spark, sf_dir, "embeddings")
-    q = F.broadcast(
-        emb.filter(F.col("vec_id") < 8).select(
-            F.col("vec_id").alias("q_id"),
-            F.col("label").alias("q_label"),
-            F.col("embedding").alias("q_vec"),
-        )
+    q = emb.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("q_id"),
+        F.col("label").alias("q_label"),
+        F.col("embedding").alias("q_vec"),
     )
     c = emb.select(
         F.col("vec_id").alias("n_id"),
         F.col("label").alias("neg_label"),
         F.col("embedding").alias("n_vec"),
     )
-    pairs = q.join(
-        c,
-        (F.col("n_id") != F.col("q_id"))
-        & (F.col("neg_label") != F.col("q_label")),
+    scored = cross_cosine(
+        c, q, "n_vec", "q_vec", "cosine", ["q_id", "n_id", "neg_label", "q_label"]
+    ).filter(
+        (F.col("n_id") != F.col("q_id")) & (F.col("neg_label") != F.col("q_label"))
     )
-    return rescore_topk(pairs, 3, 6, keep=("neg_label",))
+    return top_k(scored, 3, 6, keep=("neg_label",))
 
 
 def _bpe_step_sql(k: int, sfx: str = "") -> str:

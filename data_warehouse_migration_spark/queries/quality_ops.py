@@ -885,15 +885,15 @@ def similarity_filtered_topk(spark, sf_dir):
     """Filtered vector search — top-k neighbors restricted to the
     query's metadata cohort (same label; production: language, tenant,
     license class). Done as PRE-filtering: the equality predicate
-    joins into candidate generation (`brute_force_topk(match_cols=…)`)
+    filters the scored pairs before ranking (`brute_force_topk(match_cols=…)`)
     so the top-k ranks over the ELIGIBLE set — the post-filter
     alternative (search, then drop mismatches) silently under-fills k
     and misses eligible neighbors, the classic filtered-ANN recall
     trap. Exact oracle (DuckDB recomputes the filtered ranking), no
     recall floor needed.
 
-    Shape at 100 TB: same broadcast-queries scan as `similarity_topk`
-    with the predicate fused into the join; the IVF/LSH variants
+    Shape at 100 TB: same queries-in-the-kernel scan as `similarity_topk`
+    with the predicate applied before ranking; the IVF/LSH variants
     compose the same way — filter the corpus before bucketing."""
     from data_warehouse_migration_spark.operators.similarity import (
         brute_force_topk,

@@ -1,7 +1,7 @@
-"""The row-wise cosine and hyperplane-sign kernels
-(operators/vector_kernels.pair_cosine / band_keys) against the Spark
-folds they replaced (tests/vector_folds.py): bit for bit by
-``float.hex``, with NULLs in the same positions."""
+"""The cosine and hyperplane-sign kernels
+(operators/vector_kernels.pair_cosine / cross_cosine / band_keys)
+against the Spark folds they replaced (tests/vector_folds.py): bit for
+bit by ``float.hex``, with NULLs in the same positions."""
 
 from __future__ import annotations
 
@@ -9,6 +9,7 @@ import random
 
 import numpy as np
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 from vector_folds import band_keys, cosine, projection
 
@@ -16,6 +17,7 @@ from data_warehouse_migration_spark.operators import vector_kernels
 from data_warehouse_migration_spark.operators.similarity import (
     _gaussian_planes,
     brute_force_topk,
+    cross_cosine,
     with_band_keys,
     with_cosine,
 )
@@ -113,11 +115,67 @@ def test_pair_cosine_bit_identical_to_fold(spark, case):
     assert len(got) == len(rows)
 
 
+@pytest.mark.parametrize(
+    "case",
+    ["random_float32", "random_double", "ties", "zero_vector", "non_finite", "nulls", "ragged"],
+)
+def test_cross_cosine_bit_identical_to_fold(spark, case):
+    """Every ``a`` of the case against every ``b`` held in the kernel."""
+    rows, elem = _cosine_case(case)
+    rows = rows[:40]
+    a = spark.createDataFrame(
+        [(i, x) for i, x, _ in rows], f"a_id int, a array<{elem}>"
+    ).repartition(2)
+    b = spark.createDataFrame([(i, y) for i, _, y in rows], f"b_id int, b array<{elem}>")
+    got = {
+        (r.a_id, r.b_id): _hex(r.cos)
+        for r in cross_cosine(a, b, "a", "b", "cos", ["a_id", "b_id"]).collect()
+    }
+    want = {
+        (r.a_id, r.b_id): _hex(r.cos)
+        for r in a.crossJoin(b)
+        .select("a_id", "b_id", cosine(F.col("a"), F.col("b")).alias("cos"))
+        .collect()
+    }
+    assert got == want
+    assert len(got) == len(rows) ** 2
+
+
+def test_cross_cosine_top_is_spark_order(spark):
+    """``top`` keeps what ``row_number() OVER (ORDER BY cos DESC,
+    b_id)`` keeps: NaN first, NULL last, exact ties to the lower id."""
+    small = [
+        (0, [1.0, 2.0, 0.0]),
+        (1, [2.0, 4.0, 0.0]),  # ties with 0
+        (2, [_NAN, 1.0, 0.0]),  # NaN
+        (3, [1.0, 1.0]),  # NULL: other length
+        (4, [-1.0, 0.0, 0.5]),
+        (5, None),  # NULL
+        (6, [0.0, 0.0, 0.0]),  # 0.0
+        (7, [0.5, 1.0, 0.0]),  # ties with 0
+    ]
+    a = spark.createDataFrame(
+        [(0, [1.0, 2.0, 0.0]), (1, [-2.0, 0.0, 1.0]), (2, [0.0, 0.0, 0.0]), (3, None)],
+        "a_id int, a array<double>",
+    )
+    b = spark.createDataFrame(small, "b_id int, b array<double>")
+    w = Window.partitionBy("a_id").orderBy(F.col("cos").desc(), F.col("b_id"))
+    ranked = (
+        a.crossJoin(b)
+        .withColumn("cos", cosine(F.col("a"), F.col("b")))
+        .withColumn("r", F.row_number().over(w))
+    )
+    for top in (1, 3, 8):
+        got = cross_cosine(a, b, "a", "b", "cos", ["a_id", "b_id"], top=top)
+        want = ranked.filter(F.col("r") <= top)
+        assert sorted((r.a_id, r.b_id, _hex(r.cos)) for r in got.collect()) == sorted(
+            (r.a_id, r.b_id, _hex(r.cos)) for r in want.collect()
+        )
+
+
 def test_brute_force_topk_matches_fold_ranking(spark, sf_dir):
     """The wired exact top-k: same neighbors, rounded cosine bits and
     ranks as the fold it ran on before."""
-    from pyspark.sql import Window
-
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q = emb.filter(F.col("vec_id") < 8)
     got = sorted(

@@ -33,27 +33,12 @@ DRIVER_WINDOW = 50
 # scale path is a separate query), or joins a broadcast 1-ROW aggregate
 # (O(n·1), not O(n²)).
 BNLJ_WHITELIST = {
-    "similarity_topk",        # exact brute-force top-k: all query×corpus pairs
     "training_data_pipeline", # 1-row corpus token total broadcast to the split
     "token_budget_sample_per_lang",  # 1-row budget scalar broadcast
     "funnel_click_to_purchase",      # k 1-row stage counts cross-joined
     "data_quality_checks",    # 1-row rule aggregates combined
     "table_profile_orders",   # 1-row per-column profiles combined
     "doc_perplexity_filter",  # 1-row corpus log-prob total broadcast
-    "similarity_ivf_topk",    # N×C centroid assignment, C = driver-sized codebook
-    "similarity_ivf_pq_topk", # same coarse-assignment shape over residuals
-    "similarity_lsh_topk",    # r4 recall-summary gate: recomputes the exact
-    "similarity_pq_topk",     #   top-k baseline (sanctioned similarity_topk
-                              #   shape) to attest ANN recall; the ANN legs
-                              #   themselves stay equi-join/bucketed
-    "hard_negative_mining",   # anchors broadcast over one corpus stream —
-                              #   the sanctioned similarity_topk exact-
-                              #   baseline shape with a label-inequality
-                              #   residual (pre-filtered hard negatives)
-    "similarity_sq8_topk",    # same recall-gate shape; additionally the SQ8
-                              #   scoring leg IS a broadcast-|Q| exact scan
-                              #   over decoded codes (brute force with 4×
-                              #   smaller rows — the operator's semantics)
     "histogram_order_values", # 1-row min/max bounds broadcast (O(n·1))
     "q11_important_parts",    # 1-row grand-total scalar broadcast (the
                               #   TPC-H Q11 HAVING threshold; group
@@ -93,11 +78,6 @@ BNLJ_WHITELIST = {
                               #   corpus — the substring predicate is
                               #   non-equi by nature (O(n·|eval|), the
                               #   decontamination-family justification)
-    "rag_retrieval_pipeline", # exact brute-force retrieval baseline
-                              #   (sanctioned similarity_topk shape —
-                              #   queries broadcast, corpus streamed);
-                              #   at corpus scale the same contract
-                              #   runs on the LSH/IVF/PQ index path
     "q22_dormant_high_balance",  # 1-row (total, count) scalar broadcast
                               #   cross-multiplied into the balance
                               #   filter (exact-integer form of the
