@@ -422,12 +422,15 @@ def _centroid_frame(spark, centroids: list[list[float]]) -> DataFrame:
 
 
 def _assign_nearest(
-    df: DataFrame, c: DataFrame, side_id: str, side_vec: str, keep: int
+    vectors: DataFrame, c: DataFrame, side: str, keep: int, id_col: str, vec_col: str
 ) -> DataFrame:
-    """Nearest ``keep`` centroids per row (cosine, lowest-id ties)."""
+    """``({side}_id, {side}_vec, cluster)``: each vector's ``keep``
+    nearest centroids of ``c`` (cosine, lowest-id ties)."""
+    sid, svec = f"{side}_id", f"{side}_vec"
+    df = vectors.select(F.col(id_col).alias(sid), F.col(vec_col).alias(svec))
     return cross_cosine(
-        df, c, side_vec, "c_vec", "__sim", [side_id, side_vec, "c_id"], top=keep
-    ).select(side_id, side_vec, F.col("c_id").alias("cluster"))
+        df, c, svec, "c_vec", "__sim", [sid, svec, "c_id"], top=keep
+    ).select(sid, svec, F.col("c_id").alias("cluster"))
 
 
 def ivf_topk(
@@ -450,8 +453,8 @@ def ivf_topk(
     ``train_iters`` sweeps — per-iteration driver traffic is k×dim
     floats only), or pass ``centroids`` to reuse a trained/offline
     codebook. Every corpus vector is assigned to its nearest centroid
-    (one N×C cosine pass, C tiny, centroids broadcast as plan
-    literals). Query: probe the ``n_probe`` nearest centroid lists and
+    (one N×C cosine pass, C tiny, centroids held in the cosine
+    kernel). Query: probe the ``n_probe`` nearest centroid lists and
     exact-rescore only those — expected cost |Q| × N × n_probe/
     n_centroids instead of |Q| × N. (Training minimizes Euclidean
     distance while probing ranks by cosine — the classic IVF-flat
@@ -473,14 +476,8 @@ def ivf_topk(
         )
     c = _centroid_frame(vectors.sparkSession, centroids)
 
-    corpus = _assign_nearest(
-        vectors.select(F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec")),
-        c, "n_id", "n_vec", keep=1,
-    )
-    probes = _assign_nearest(
-        queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")),
-        c, "q_id", "q_vec", keep=n_probe,
-    )
+    corpus = _assign_nearest(vectors, c, "n", 1, id_col, vec_col)
+    probes = _assign_nearest(queries, c, "q", n_probe, id_col, vec_col)
 
     pairs = probes.join(corpus, "cluster").filter(F.col("q_id") != F.col("n_id"))
     return rescore_topk(pairs, k, round_to)
@@ -512,22 +509,15 @@ def write_ivf_index(
             vectors, k=n_centroids, max_iter=train_iters,
             id_col=id_col, vec_col=vec_col,
         )
-    spark = vectors.sparkSession
-    c = _centroid_frame(spark, centroids)
-    assigned = _assign_nearest(
-        vectors.select(F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec")),
-        c, "n_id", "n_vec", keep=1,
-    )
+    c = _centroid_frame(vectors.sparkSession, centroids)
+    assigned = _assign_nearest(vectors, c, "n", 1, id_col, vec_col)
     (
         assigned.repartition("cluster")
         .write.mode("overwrite")
         .partitionBy("cluster")
         .parquet(f"{index_dir}/lists")
     )
-    spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(centroids)],
-        "c_id int, c_vec array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/centroids")
+    c.coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/centroids")
     return centroids
 
 
@@ -547,8 +537,8 @@ def ivf_topk_from_index(
     round_to: int = 6,
 ) -> DataFrame:
     """Probe a persisted :func:`write_ivf_index`: rank centroids per
-    query (codebook is k×dim plan literals), collect the UNION of
-    probed cluster ids (≤ n_centroids ints — driver-sized by
+    query (the k×dim codebook rides in the cosine kernel), collect the
+    UNION of probed cluster ids (≤ n_centroids ints — driver-sized by
     construction), and scan ``lists/`` with ``cluster IN (…)`` so
     partition pruning skips every unprobed list's files
     (test-asserted via the scanned-file set). Scoring/top-k math is
@@ -561,10 +551,7 @@ def ivf_topk_from_index(
     # Persist the (small) probe assignment: it feeds BOTH the probed-
     # cluster-id collect and the scoring join — unpersisted, the
     # query×centroid assignment ran twice per lookup (review finding).
-    probes = _assign_nearest(
-        queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")),
-        c, "q_id", "q_vec", keep=n_probe,
-    ).persist()
+    probes = _assign_nearest(queries, c, "q", n_probe, id_col, vec_col).persist()
     try:
         probed = sorted(
             {r["cluster"] for r in probes.select("cluster").distinct().collect()}

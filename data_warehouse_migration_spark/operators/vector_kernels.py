@@ -97,7 +97,7 @@ def _matrix(col) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
 
 
 def _padded(rows: np.ndarray, width: int) -> np.ndarray:
-    return np.pad(rows, ((0, 0), (0, width - rows.shape[1])))
+    return np.pad(rows, [(0, 0)] * (rows.ndim - 1) + [(0, width - rows.shape[-1])])
 
 
 def _spark_less(x: np.ndarray, y: np.ndarray) -> np.ndarray:
@@ -150,11 +150,28 @@ def nearest_centroid(
 
 
 def _norms(rows: np.ndarray) -> np.ndarray:
-    acc = np.zeros(len(rows))
+    acc = np.zeros(rows.shape[:-1])
     with np.errstate(all="ignore"):
-        for j in range(rows.shape[1]):
-            acc += rows[:, j] * rows[:, j]
+        for j in range(rows.shape[-1]):
+            acc += rows[..., j] * rows[..., j]
         return np.sqrt(acc)
+
+
+def _cosine(a, b) -> tuple[np.ndarray, np.ndarray]:
+    """``(cos, null)`` of two :func:`_matrix` triples whose rows
+    broadcast against each other: row by row, or ``(n, 1)`` rows
+    against ``(1, m)`` for every pair."""
+    (a, a_len, a_ok), (b, b_len, b_ok) = a, b
+    width = max(a.shape[-1], b.shape[-1])
+    a, b = _padded(a, width), _padded(b, width)
+    dot = np.zeros(np.broadcast_shapes(a.shape[:-1], b.shape[:-1]))
+    with np.errstate(all="ignore"):
+        for j in range(width):
+            dot += a[..., j] * b[..., j]
+        den = _norms(a) * _norms(b)
+        zero = den == 0
+        cos = np.where(zero, 0.0, dot / den)
+    return cos, ~(a_ok & b_ok) | ~(zero | (a_len == b_len))
 
 
 def cosine_pairs(
@@ -225,18 +242,7 @@ def pair_cosine(batches, *, a_col: str, b_col: str, out_col: str):
     ``b_col`` vectors. NULL for a NULL vector, a NULL component or a
     length mismatch, except ``0.0`` when the denominator is 0."""
     for batch in batches:
-        a, a_len, a_ok = _matrix(batch.column(a_col))
-        b, b_len, b_ok = _matrix(batch.column(b_col))
-        width = max(a.shape[1], b.shape[1])
-        a, b = _padded(a, width), _padded(b, width)
-        dot = np.zeros(len(a))
-        with np.errstate(all="ignore"):
-            for j in range(width):
-                dot += a[:, j] * b[:, j]
-            den = _norms(a) * _norms(b)
-            zero = den == 0
-            cos = np.where(zero, 0.0, dot / den)
-        null = ~(a_ok & b_ok) | ~(zero | (a_len == b_len))
+        cos, null = _cosine(_matrix(batch.column(a_col)), _matrix(batch.column(b_col)))
         yield pa.RecordBatch.from_arrays(
             [*batch.columns, pa.array(cos, pa.float64(), mask=null)],
             [*batch.schema.names, out_col],
@@ -262,29 +268,16 @@ def cross_cosine(
     from the batch or else from ``small``, then ``out_col``, the
     unrounded cosine under :func:`pair_cosine`'s rules."""
     cols = {c: small.column(c).combine_chunks() for c in small.column_names}
-    s, s_len, s_ok = _matrix(cols[small_vec])
-    s_nrm = _norms(s)
-    m = len(s)
+    s = [x[None] for x in _matrix(cols[small_vec])]
     for batch in batches:
-        rows, lengths, valid = _matrix(batch.column(vec_col))
-        width = max(rows.shape[1], s.shape[1])
-        a, b = _padded(rows, width), _padded(s, width)
-        dot = np.zeros((len(a), m))
-        with np.errstate(all="ignore"):
-            for j in range(width):
-                dot += a[:, j, None] * b[None, :, j]
-            den = _norms(a)[:, None] * s_nrm[None, :]
-            zero = den == 0
-            cos = np.where(zero, 0.0, dot / den)
-        null = ~(valid[:, None] & s_ok[None, :]) | ~(
-            zero | (lengths[:, None] == s_len[None, :])
-        )
-        si = np.tile(np.arange(m), (len(a), 1))
+        r = [x[:, None] for x in _matrix(batch.column(vec_col))]
+        cos, null = _cosine(r, s)
+        si = np.tile(np.arange(cos.shape[1]), (len(cos), 1))
         if top is not None:
             nan = np.isnan(cos) & ~null
             key = np.where(nan | null, 0.0, -cos)
             si = np.lexsort((si, key, ~nan, null))[:, :top]
-        ri = np.repeat(np.arange(len(a)), si.shape[1])
+        ri = np.repeat(np.arange(len(cos)), si.shape[1])
         si = si.ravel()
         ri_arr, si_arr = pa.array(ri), pa.array(si)
         yield pa.RecordBatch.from_arrays(

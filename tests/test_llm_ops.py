@@ -497,10 +497,7 @@ def test_ivf_index_at_rest_matches_fresh_and_prunes_lists(spark, sf_dir, tmp_pat
     )
 
     c = _centroid_frame(spark, stored)
-    probes = _assign_nearest(
-        queries.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")),
-        c, "q_id", "q_vec", keep=1,
-    )
+    probes = _assign_nearest(queries, c, "q", 1, "vec_id", "embedding")
     probed = sorted({r["cluster"] for r in probes.select("cluster").distinct().collect()})
     pruned = spark.read.parquet(f"{idx_dir}/lists").filter(
         F.col("cluster").isin(probed)
