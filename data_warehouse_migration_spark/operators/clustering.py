@@ -1,15 +1,21 @@
 """K-means clustering over an embedding column — the iterative-algorithm
 shape (driver-coordinated fixed-point loop over DataFrame ops), and the
-trainer for IVF coarse quantizers (operators/similarity.ivf_topk takes
-these centroids directly).
+package's one Lloyd's trainer: :func:`train_codebooks` trains the
+k-means centroids here (IVF coarse quantizers included:
+operators/similarity.ivf_topk takes them directly) and the PQ codebooks
+of operators/quantization.py, which are the same loop keyed by
+subspace.
 
-Scale posture: each iteration is ONE pass over the corpus — assignment
-is a zero-shuffle Arrow-batched numpy pass (operators/vector_kernels;
-the k×dim centroid doubles ride in the pickled kernel), and the
-centroid update is one groupBy-avg shuffle keyed on (cluster,
-component). Only k×dim numbers ever reach the driver per iteration.
-Deterministic throughout: init = the k lowest-id vectors, ties broken
-by cluster index, so reruns and resizes agree.
+Scale posture: each epoch is ONE zero-shuffle pass over the persisted
+input and one collect. An Arrow-batched numpy kernel
+(operators/vector_kernels.lloyd_partials; the codebooks ride in the
+pickled kernel) assigns every vector and emits its partition's
+per-(subspace, code, component) partial sums and non-NULL counts; the
+driver adds the partials in partition order and divides. Only k×dim
+numbers of each reach the driver per epoch, and the means do not
+depend on shuffle fetch order. Deterministic throughout: init = the k
+lowest-id vectors, ties broken by cluster index, so reruns and resizes
+agree.
 """
 
 from __future__ import annotations
@@ -17,34 +23,28 @@ from __future__ import annotations
 from contextlib import contextmanager
 from functools import partial
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+import numpy as np
+from pyspark.sql import DataFrame
 from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
-from data_warehouse_migration_spark.operators.vector_kernels import (
-    nearest_centroid,
-)
+from data_warehouse_migration_spark.operators import vector_kernels
 
 
 @contextmanager
 def static_tiny_jobs(spark):
-    """Plan the k-bounded driver-loop jobs statically (AQE off), then
+    """Plan k-bounded driver-side jobs statically (AQE off), then
     restore the caller's setting.
 
-    Lloyd's-style loops run several SEQUENTIAL tiny jobs per epoch
-    (init collect, per-iteration means collect, sizes collect) whose
-    results are k-bounded — k×dim doubles or k counts, INDEPENDENT of
-    corpus size. AQE's per-shuffle runtime replanning is pure driver
-    round-trip latency for such jobs at any scale: there is nothing
-    data-sized for it to adapt (the post-shuffle side is always tiny
-    by construction), while each extra query-stage materialization
-    costs a scheduling floor the loop pays once per iteration.
-    Measured r16 (sf0.1, interleaved same-session): the semdedup
-    kmeans loop's eager phases drop 2.09 → 1.72 s with AQE off, with
-    bit-identical rounded centroids (the round_centroids contract
-    absorbs partial-sum order, which is the only thing that moves).
-    The LAZY assignment a caller gets back is planned at the caller's
-    action under the restored conf — corpus-sized work keeps AQE.
+    For semdedup's cluster-sizes collect and ``quantization.sq8_train``,
+    each one shuffle whose post-shuffle side is k (or 2·dim) rows
+    whatever the corpus size, so AQE's replanning only adds a
+    query-stage round trip (r16, sf0.1: semdedup's eager phases 2.09 →
+    1.72 s with AQE off); and for the trainer's init collect, whose
+    read fills the cache inside the job instead of in a cache query
+    stage of its own. The trainer's epochs need no scope: they plan no
+    exchange above the cached scan. A LAZY frame a caller gets back is
+    planned at its action under the restored conf — corpus-sized work
+    keeps AQE.
     """
     key = "spark.sql.adaptive.enabled"
     prev = spark.conf.get(key)
@@ -53,46 +53,6 @@ def static_tiny_jobs(spark):
         yield
     finally:
         spark.conf.set(key, prev)
-
-
-def double_array_literal(a) -> Column:
-    """An arbitrarily nested Python float structure as ONE
-    ``array(array(...))`` SQL expression instead of one ``F.lit`` /
-    ``F.array`` call per element.
-
-    Why (r15 optimization round, measured): every ``F.lit``/``F.array``
-    is a py4j round trip, so the per-component form spent ~0.3 s of
-    pure DRIVER wall per Lloyd's rebuild at k=8, dim=64 (512 literals)
-    — rebuilt once per iteration, it dominated the kmeans loop after
-    the executor side was parallelized (PQ training paid 2× more:
-    m·k·(dim/m) literals per epoch). One ``F.expr`` ships the whole
-    matrix in a single call and the JVM parser does the rest.
-
-    Bit-identity: components are rendered with ``repr`` (Python's
-    shortest round-trip form) and a ``D`` suffix, which
-    ``Double.parseDouble`` parses back to the identical IEEE double —
-    the resulting Literal nodes equal the old per-component ones.
-    """
-
-    def render(x) -> str:
-        if isinstance(x, (list, tuple)):
-            return "array(" + ", ".join(render(v) for v in x) + ")"
-        v = float(x)
-        # Non-finite repr ('nan'/'inf') is not a SQL double literal —
-        # the parser would resolve it as a COLUMN name and fail with a
-        # confusing AnalysisException (ADVICE r15 #1; reachable when a
-        # NaN embedding component propagates through a centroid avg).
-        # CAST('NaN'/'Infinity' AS DOUBLE) parses to the identical
-        # IEEE value the old per-component F.lit path produced.
-        if v != v:
-            return "CAST('NaN' AS DOUBLE)"
-        if v == float("inf"):
-            return "CAST('Infinity' AS DOUBLE)"
-        if v == float("-inf"):
-            return "CAST('-Infinity' AS DOUBLE)"
-        return repr(v) + "D"
-
-    return F.expr(render(a))
 
 
 def assign_clusters(
@@ -104,15 +64,12 @@ def assign_clusters(
     """(id, vec, cluster, sq_dist) — nearest centroid per vector;
     lowest cluster index wins exact-distance ties.
 
-    One zero-shuffle ``mapInArrow`` pass: the centroids (k×dim
-    doubles) travel inside the pickled kernel, and each Arrow batch is
-    one numpy computation (operators/vector_kernels.nearest_centroid).
-    The distance is Σ (v − c)·(v − c) in float64, summed left to right
-    — the arithmetic of the DuckDB oracle's (x-m)*(x-m) — so distances
-    are bitwise comparable before rounding. A NULL vector, a NULL
-    component or a length mismatch gives a NULL distance, which sorts
-    first: such a row lands in the lowest cluster whose distance is
-    NULL (cluster 0 unless the centroids differ in length), with
+    One zero-shuffle ``mapInArrow`` pass with the centroids inside the
+    kernel (operators/vector_kernels.nearest_centroid). The distance is
+    Σ (v − c)·(v − c) in float64, summed left to right — the arithmetic
+    of the DuckDB oracle's (x-m)*(x-m). A NULL vector, a NULL component
+    or a length mismatch gives a NULL distance, which sorts first: such
+    a row lands in the lowest cluster whose distance is NULL, with
     ``sq_dist`` NULL."""
     src = vectors.select(id_col, vec_col)
     schema = StructType(
@@ -120,7 +77,7 @@ def assign_clusters(
         + [StructField("cluster", IntegerType()), StructField("sq_dist", DoubleType())]
     )
     kernel = partial(
-        nearest_centroid,
+        vector_kernels.nearest_centroid,
         centroids=[[float(x) for x in c] for c in centroids],
         id_col=id_col,
         vec_col=vec_col,
@@ -136,72 +93,100 @@ def kmeans(
     vec_col: str = "embedding",
     round_centroids: int | None = None,
 ) -> tuple[list[list[float]], DataFrame]:
-    """Lloyd's algorithm; returns (centroids, assignments).
+    """Lloyd's algorithm (:func:`train_codebooks` on whole vectors);
+    returns (centroids, assignments). Init: the ``k`` lowest-id vectors
+    (raw components, never rounded); an emptied cluster keeps its
+    previous centroid.
 
-    Deterministic init: the ``k`` lowest-id vectors. An emptied cluster
-    keeps its previous centroid (no resurrection randomness).
-
-    ``round_centroids``: round every updated centroid component to this
-    many decimals. Partition-order float summation makes a raw ``avg``
-    differ across engines (and cluster sizes) in the last ulps; rounding
-    to 7 decimals absorbs that noise so a re-implementation (the DuckDB
-    oracle, or a rerun at different parallelism) reproduces bit-equal
-    centroids — and therefore identical assignments — unless a true
-    value sits within ~1e-15 of a rounding boundary. The init centroids
-    are raw vector components (exact float32 widenings), never rounded.
+    ``round_centroids``: round every updated component to this many
+    decimals. Partition-order float summation makes a raw mean differ
+    across engines and partitionings in the last ulps; rounding to 7
+    absorbs that, so the DuckDB oracle or a rerun at another
+    parallelism reproduces bit-equal centroids — unless a true value
+    sits within ~1e-15 of a rounding boundary.
     """
-    # The loop re-scans the input once per iteration (assignment is
-    # recomputed from the new centroids) — persist for the training
-    # epochs, release before returning the lazy final assignment.
-    src = vectors.select(id_col, vec_col).persist()
-    try:
-        # The whole training loop is sequential k-bounded collects —
-        # plan them statically (see static_tiny_jobs: AQE replanning
-        # is a per-iteration driver round trip that cannot help a
-        # collect whose size is independent of the corpus).
-        with static_tiny_jobs(vectors.sparkSession):
-            centroids = _lloyd_iterations(
-                src, k, max_iter, id_col, vec_col, round_centroids
-            )
-    finally:
-        src.unpersist()
+    [centroids] = train_codebooks(
+        vectors, k, 1, None, max_iter, id_col, vec_col, round_centroids
+    )
     return centroids, assign_clusters(vectors, centroids, id_col, vec_col)
 
 
-def _lloyd_iterations(
-    src: DataFrame,
+def train_codebooks(
+    vectors: DataFrame,
     k: int,
+    m: int,
+    d: int | None,
     max_iter: int,
     id_col: str,
     vec_col: str,
+    round_centroids: int | None = None,
+) -> list[list[list[float]]]:
+    """Lloyd's algorithm keyed by subspace: ``m`` codebooks of up to
+    ``k`` centroids, initialised from subspace ``j`` of the ``k``
+    lowest-id vectors. Subspace ``j`` is ``slice(vec, j·d + 1, d)``; ``d``
+    None means the whole vector (k-means, ``m`` = 1). The input is
+    persisted for the epochs and released before returning."""
+    src = vectors.select(id_col, vec_col).persist()
+    try:
+        # The first read fills the cache. Under AQE that is a cache
+        # query stage, one job more than filling it inside the collect.
+        with static_tiny_jobs(vectors.sparkSession):
+            init = [r[vec_col] for r in src.orderBy(id_col).limit(k).collect()]
+        books = [
+            [list(v if d is None else v[j * d : (j + 1) * d]) for v in init]
+            for j in range(m)
+        ]
+        return lloyd(src, books, d, max_iter, vec_col, round_centroids)
+    finally:
+        src.unpersist()
+
+
+def _pad(a, width: int) -> np.ndarray:
+    return np.pad(np.asarray(a, dtype=np.float64), (0, width - len(a)))
+
+
+def lloyd(
+    src: DataFrame,
+    books: list[list[list[float]]],
+    d: int | None,
+    max_iter: int,
+    vec_col: str,
     round_centroids: int | None,
-) -> list[list[float]]:
-    """The eager Lloyd's training loop of :func:`kmeans` (same jobs,
-    same arithmetic — split out so the conf scope around it reads as
-    one block)."""
-    centroids = [
-        list(r[vec_col])
-        for r in src.orderBy(id_col).limit(k).collect()
-    ]
-    assigned = assign_clusters(src, centroids, id_col, vec_col)
+) -> list[list[list[float]]]:
+    """The epochs of :func:`train_codebooks`, from ``books``.
+
+    An epoch is one ``mapInArrow`` of vector_kernels.lloyd_partials
+    over ``src`` — no exchange above the scan, so AQE has nothing to
+    replan — and one collect, which returns the partials in partition
+    order. Per (subspace, code) the driver adds them in that order from
+    0.0, and component ``p`` of the new centroid is sum / count, NULL
+    for a count of 0: what ``posexplode`` + ``avg`` over the same rows
+    gives, on one partition bit for bit. A code no subvector reaches
+    keeps its centroid; the loop stops early when an epoch changes
+    nothing."""
     for _ in range(max_iter):
-        means = (
-            assigned.select("cluster", F.posexplode(vec_col).alias("pos", "x"))
-            .groupBy("cluster", "pos")
-            .agg(F.avg("x").alias("m"))
-            .collect()
+        kernel = partial(
+            vector_kernels.lloyd_partials,
+            books=[[[float(x) for x in c] for c in book] for book in books],
+            d=d,
+            vec_col=vec_col,
         )
-        new_centroids = [list(c) for c in centroids]
-        by_cluster: dict[int, dict[int, float]] = {}
-        for r in means:
-            by_cluster.setdefault(r.cluster, {})[r.pos] = r.m
-        for ci, comps in by_cluster.items():
-            vals = [comps[p] for p in sorted(comps)]
+        parts: dict[tuple[int, int], list] = {}
+        for r in src.mapInArrow(kernel, _PARTIALS).collect():
+            parts.setdefault((r.j, r.code), []).append((r.sums, r.counts))
+        new_books = [[list(c) for c in book] for book in books]
+        for (j, code), ps in parts.items():
+            w = max(len(p[0]) for p in ps)
+            s, n = (sum((_pad(p[i], w) for p in ps), np.zeros(w)) for i in (0, 1))
+            with np.errstate(all="ignore"):
+                vals = [v if c else None for v, c in zip((s / n).tolist(), n)]
             if round_centroids is not None:
                 vals = [round(v, round_centroids) for v in vals]
-            new_centroids[ci] = vals
-        if new_centroids == centroids:
+            new_books[j][code] = vals
+        if new_books == books:
             break
-        centroids = new_centroids
-        assigned = assign_clusters(src, centroids, id_col, vec_col)
-    return centroids
+        books = new_books
+    return books
+
+
+_PARTIALS = "j long, code long, sums array<double>, counts array<double>"

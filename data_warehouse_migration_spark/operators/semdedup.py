@@ -209,10 +209,9 @@ def semdedup(
     # raise if the depth budget runs out. The collect is k-bounded.
     next_id = k
     for depth in range(max_split_depth + 1):
-        # k-bounded collect: statically planned for the same reason as
-        # the Lloyd's loop (clustering.static_tiny_jobs — AQE replan
-        # is a wasted driver round trip on corpus-size-independent
-        # results).
+        # k-bounded collect over one shuffle: statically planned
+        # (clustering.static_tiny_jobs — AQE replan is a wasted driver
+        # round trip on corpus-size-independent results).
         with static_tiny_jobs(assigned.sparkSession):
             sizes = {
                 r["cluster"]: r["n"]

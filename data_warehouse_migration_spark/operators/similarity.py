@@ -78,12 +78,14 @@ def cross_cosine(
     out_col: str,
     names: list[str],
     top: int | None = None,
+    decode: tuple[list[float], list[float]] | None = None,
 ) -> DataFrame:
     """Every pair of a ``df`` row and a ``small`` row (queries,
     centroids): columns ``names`` (each from ``df``, else from
     ``small``) plus ``out_col``, the unrounded cosine of ``vec_col``
     and ``small_vec``; with ``top``, only each ``df`` row's ``top``
-    best pairs (vector_kernels.cross_cosine). ``small`` is collected
+    best pairs; with ``decode``, ``vec_col`` holds SQ8 codes decoded in
+    the kernel (vector_kernels.cross_cosine). ``small`` is collected
     to the driver here, when the plan is built, so it must be
     driver-sized; it travels inside the pickled kernel, and ``df``
     streams through one ``mapInArrow``, with no join, no shuffle and
@@ -96,6 +98,7 @@ def cross_cosine(
         names=names,
         out_col=out_col,
         top=top,
+        decode=decode,
     )
     fields = {f.name: f for f in small.schema.fields + df.schema.fields}
     schema = StructType(
@@ -105,20 +108,23 @@ def cross_cosine(
 
 
 def top_k(
-    scored: DataFrame, k: int, round_to: int = 6, keep: tuple[str, ...] = ()
+    scored: DataFrame, k: int, round_to: int = 6, keep: tuple[str, ...] = (),
+    score: str = "cosine", descending: bool = True,
 ) -> DataFrame:
-    """Per-query top-k of scored rows ``(q_id, n_id, *keep, cosine)``:
-    ``(q_id, n_id, *keep, cosine, rank)`` with the cosine rounded.
+    """Per-query top-k of scored rows ``(q_id, n_id, *keep, score)``:
+    ``(q_id, n_id, *keep, score, rank)`` with the score rounded.
 
-    Ranking uses the *rounded* score with the neighbor id as
+    Ranking uses the *rounded* score, highest first (lowest first when
+    not ``descending``, as for a distance), with the neighbor id as
     tie-break, so the result is total and reproducible across
     engines/precisions."""
-    scored = scored.withColumn("cosine", F.round("cosine", round_to))
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("n_id"))
+    scored = scored.withColumn(score, F.round(score, round_to))
+    order = F.col(score).desc() if descending else F.col(score).asc()
+    w = Window.partitionBy("q_id").orderBy(order, F.col("n_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", *keep, "cosine", "rank")
+        .select("q_id", "n_id", *keep, score, "rank")
     )
 
 

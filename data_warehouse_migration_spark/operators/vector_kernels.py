@@ -1,7 +1,7 @@
 """Arrow-batched numpy kernels: the package's only vector arithmetic.
 
-Every dot product, norm, cosine and hyperplane sign that an operator
-computes runs here, on one definition:
+Every dot product, norm, cosine, squared distance and hyperplane sign
+that an operator computes runs here, on one definition:
 
 - components widen to float64 exactly, as ``cast("double")`` does;
 - every sum starts at ``0.0`` and adds one component product at a
@@ -23,7 +23,8 @@ replaced (``aggregate(zip_with(a, b, x·y), 0.0, acc + x)``, which
 ``zip_with`` makes NULL by padding the shorter side with NULL). The
 folds stay as test references, and every kernel is pinned to them bit
 for bit (``float.hex``) in tests/test_clustering.py,
-tests/test_semdedup.py and tests/test_similarity_kernels.py. Spark
+tests/test_semdedup.py, tests/test_similarity_kernels.py and
+tests/test_pq_kernels.py. Spark
 never generates code for a fold: each row ran one interpreted lambda
 per component. Here a whole Arrow batch (or one group) is one float64
 matrix, and every arithmetic step is one numpy operation over all of
@@ -32,7 +33,13 @@ its rows.
 Callers wire the kernels in:
 
 - :func:`nearest_centroid` through ``mapInArrow`` in
-  ``clustering.assign_clusters`` (k-means, IVF-PQ codebooks);
+  ``clustering.assign_clusters`` (k-means and IVF-PQ coarse lists);
+- :func:`lloyd_partials` through ``mapInArrow`` in ``clustering.lloyd``
+  (the one Lloyd's trainer: k-means centroids and PQ codebooks);
+- :func:`pq_codes`, :func:`residuals` and :func:`adc` through
+  ``mapInArrow`` in ``operators/quantization.py`` (PQ encode, IVF-PQ
+  residuals, ADC), the ADC tables and IVF-PQ probes built on the
+  driver by :func:`lookup_tables` and held in the kernel;
 - :func:`cluster_pairs` through ``groupBy(...).applyInArrow`` in
   ``semdedup.near_dup_pairs`` (batch SemDeDup, exact and LSH-bucketed
   embedding near-dup pairs);
@@ -66,43 +73,105 @@ import pyarrow as pa
 PAIR_TILE = 512
 
 
-def _matrix(col) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """``(rows, lengths, valid)`` of a list-of-number column: rows as
-    float64 zero-padded to the longest valid vector; ``valid`` is False
-    for a NULL vector and for one with a NULL component."""
+def _components(col):
+    """``(vals, ok, lengths, present)`` of a list-of-number column:
+    ``vals`` as float64 zero-padded to the longest vector, with 0.0 for
+    a NULL component; ``ok`` marks the non-NULL components inside each
+    row's length; ``present`` is False for a NULL vector, whose length
+    counts as 0."""
     if isinstance(col, pa.ChunkedArray):
         col = col.combine_chunks()
     offsets = col.offsets.to_numpy().astype(np.int64)
-    lengths = np.diff(offsets)
+    present = ~np.asarray(col.is_null().to_numpy(zero_copy_only=False), dtype=bool)
+    lengths = np.where(present, np.diff(offsets), 0)
     values = col.values
-    vals = np.asarray(values.to_numpy(zero_copy_only=False), dtype=np.float64)
-    valid = ~np.asarray(col.is_null().to_numpy(zero_copy_only=False), dtype=bool)
-    if values.null_count:
-        nulls = np.concatenate(
-            ([0], np.cumsum(values.is_null().to_numpy(zero_copy_only=False)))
-        )
-        valid &= nulls[offsets[1:]] == nulls[offsets[:-1]]
-    lens = lengths[valid]
-    width = int(lens.max()) if len(lens) else 0
+    flat = np.asarray(values.to_numpy(zero_copy_only=False), dtype=np.float64)
+    flat_ok = ~np.asarray(values.is_null().to_numpy(zero_copy_only=False), dtype=bool)
     n = len(col)
-    if valid.all() and (lengths == width).all():
-        rows = vals[offsets[0] : offsets[-1]].reshape(n, width)
-    else:
-        rows = np.zeros((n, width))
-        pos = np.arange(int(lens.sum())) - np.repeat(np.cumsum(lens) - lens, lens)
-        rows[np.repeat(np.flatnonzero(valid), lens), pos] = vals[
-            np.repeat(offsets[:-1][valid], lens) + pos
-        ]
-    return rows, lengths, valid
+    starts = np.cumsum(lengths) - lengths
+    pos = np.arange(int(lengths.sum())) - np.repeat(starts, lengths)
+    row, src = np.repeat(np.arange(n), lengths), np.repeat(offsets[:-1], lengths) + pos
+    vals = np.zeros((n, int(lengths.max()) if n else 0))
+    ok = np.zeros(vals.shape, dtype=bool)
+    ok[row, pos] = flat_ok[src]
+    vals[row, pos] = np.where(flat_ok[src], flat[src], 0.0)
+    return vals, ok, lengths, present
+
+
+def _matrix(col) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """``(rows, lengths, valid)`` of a list-of-number column: the
+    :func:`_components` rows, and ``valid`` False for a NULL vector and
+    for one with a NULL component."""
+    vals, ok, lengths, present = _components(col)
+    return vals, lengths, present & (ok.sum(axis=1) == lengths)
 
 
 def _padded(rows: np.ndarray, width: int) -> np.ndarray:
     return np.pad(rows, [(0, 0)] * (rows.ndim - 1) + [(0, width - rows.shape[-1])])
 
 
-def _spark_less(x: np.ndarray, y: np.ndarray) -> np.ndarray:
-    """``x < y`` under Spark's double ordering (NaN above +inf)."""
-    return (x < y) | (np.isnan(y) & ~np.isnan(x))
+def _slice(comp, start: int, size: int):
+    """``slice(vec, start + 1, size)`` of :func:`_components` rows."""
+    vals, ok, lengths, present = comp
+    cut = [_padded(x[:, start : start + size], size) for x in (vals, ok)]
+    return (*cut, np.clip(lengths - start, 0, size), present)
+
+
+def _centroid_rows(centroids: list[list[float]]) -> tuple[np.ndarray, np.ndarray]:
+    """``(rows, lengths)``: the centroids as float64, zero-padded."""
+    c_len = np.array([len(c) for c in centroids], dtype=np.int64)
+    rows = np.zeros((len(centroids), int(c_len.max())))
+    for i, c in enumerate(centroids):
+        rows[i, : len(c)] = c
+    return rows, c_len
+
+
+def _sq_dists(comp, cents) -> tuple[np.ndarray, np.ndarray]:
+    """``(dist, null)``, one row per vector and one column per centroid
+    of ``cents`` (:func:`_centroid_rows`): ``Σ (v_j − c_j) · (v_j −
+    c_j)`` folded left to right, NULL for a NULL vector, a NULL
+    component or a length other than the centroid's."""
+    vals, ok, lengths, present = comp
+    c_rows, c_len = cents
+    width = max(vals.shape[1], c_rows.shape[1])
+    rows, cmat = _padded(vals, width), _padded(c_rows, width)
+    dist = np.zeros((len(rows), len(cmat)))
+    with np.errstate(all="ignore"):
+        for j in range(width):
+            t = rows[:, j, None] - cmat[None, :, j]
+            dist += t * t
+    valid = present & (ok.sum(axis=1) == lengths)
+    return dist, ~valid[:, None] | (lengths[:, None] != c_len[None, :])
+
+
+def _ascending(dist: np.ndarray, null: np.ndarray) -> np.ndarray:
+    """Per row, the columns of ``dist`` in Spark's ascending order: NULL
+    first, NaN last, the lower column on a tie."""
+    nan = np.isnan(dist) & ~null
+    return np.lexsort((np.where(nan | null, 0.0, dist), nan, ~null))
+
+
+def _nearest(comp, cents):
+    """``(code, dist, null)`` per vector: its first centroid in
+    :func:`_ascending` order of :func:`_sq_dists`, that distance, and
+    whether the distance is NULL."""
+    dist, null = _sq_dists(comp, cents)
+    code = _ascending(dist, null)[:, 0]
+    r = np.arange(len(code))
+    return code, dist[r, code], null[r, code]
+
+
+def _residual(comp, cents, cluster: np.ndarray):
+    """Each vector minus its centroid ``cluster``, as ``zip_with(vec, c,
+    x − y)`` computes it: as long as the longer side, NULL where either
+    side has no component, NULL for a NULL vector."""
+    vals, ok, lengths, present = comp
+    c_rows, c_len = cents
+    width, c_len = max(vals.shape[1], c_rows.shape[1]), c_len[cluster]
+    with np.errstate(all="ignore"):
+        diff = _padded(vals, width) - _padded(c_rows, width)[cluster]
+    ok = _padded(ok, width) & (np.arange(width) < c_len[:, None])
+    return diff, ok, np.where(present, np.maximum(lengths, c_len), 0), present
 
 
 def nearest_centroid(
@@ -116,36 +185,155 @@ def nearest_centroid(
     component, or a length other than the centroid's) sorts before
     every number, so such a row goes to the lowest cluster whose
     distance is NULL, with ``sq_dist`` NULL."""
-    k = len(centroids)
-    c_len = np.array([len(c) for c in centroids], dtype=np.int64)
-    c_rows = np.zeros((k, int(c_len.max())))
-    for i, c in enumerate(centroids):
-        c_rows[i, : len(c)] = c
+    cents = _centroid_rows(centroids)
     for batch in batches:
-        rows, lengths, valid = _matrix(batch.column(vec_col))
-        width = max(rows.shape[1], c_rows.shape[1])
-        rows, cmat = _padded(rows, width), _padded(c_rows, width)
-        dist = np.zeros((len(rows), k))
-        with np.errstate(all="ignore"):
-            for j in range(width):
-                t = rows[:, j, None] - cmat[None, :, j]
-                dist += t * t
-        null = ~valid[:, None] | (lengths[:, None] != c_len[None, :])
-        cluster = np.zeros(len(rows), dtype=np.int32)
-        best, best_null = dist[:, 0].copy(), null[:, 0].copy()
-        for c in range(1, k):
-            better = ~best_null & (null[:, c] | _spark_less(dist[:, c], best))
-            cluster[better] = c
-            best[better] = dist[better, c]
-            best_null |= better & null[:, c]
+        cluster, best, null = _nearest(_components(batch.column(vec_col)), cents)
         yield pa.RecordBatch.from_arrays(
             [
                 batch.column(id_col),
                 batch.column(vec_col),
                 pa.array(cluster, pa.int32()),
-                pa.array(best, pa.float64(), mask=best_null),
+                pa.array(best, pa.float64(), mask=null),
             ],
             [id_col, vec_col, "cluster", "sq_dist"],
+        )
+
+
+def lloyd_partials(batches, *, books, d: int | None, vec_col: str):
+    """``mapInArrow`` body of one Lloyd's epoch over a partition: one
+    row ``(j, code, sums, counts)`` per subspace ``j`` and code that a
+    subvector with a component reaches. Subspace ``j`` is ``slice(vec,
+    j·d + 1, d)`` (the whole vector when ``d`` is None); it goes to
+    its :func:`_nearest` code of ``books[j]``. ``sums[p]`` is 0.0 plus
+    the code's non-NULL ``p``-th components in row order, ``counts[p]``
+    how many there are, up to its longest subvector: what ``posexplode``
+    + ``avg`` sums and counts."""
+    cents = [_centroid_rows(book) for book in books]
+    parts = [
+        [np.zeros((len(rows), 0)), np.zeros((len(rows), 0)), np.zeros(len(rows), int)]
+        for rows, _ in cents
+    ]
+    for batch in batches:
+        comp = _components(batch.column(vec_col))
+        for j, c in enumerate(cents):
+            sub = comp if d is None else _slice(comp, j * d, d)
+            code = _nearest(sub, c)[0]
+            sums, counts, longest = parts[j]
+            w = max(sums.shape[1], sub[0].shape[1])
+            sums, counts, vals, ok = (_padded(x, w) for x in (sums, counts, *sub[:2]))
+            with np.errstate(all="ignore"):
+                np.add.at(sums, code, vals)
+            np.add.at(counts, code, ok)
+            np.maximum.at(longest, code, sub[2])
+            parts[j] = [sums, counts, longest]
+    rows = [
+        dict(j=j, code=c, sums=sums[c, :n].tolist(), counts=counts[c, :n].tolist())
+        for j, (sums, counts, longest) in enumerate(parts)
+        for c, n in enumerate(longest.tolist())
+        if n
+    ]
+    if rows:
+        yield pa.RecordBatch.from_pylist(rows)
+
+
+def _int_lists(mat: np.ndarray) -> pa.ListArray:
+    """The ``array<int>`` column of a matrix's rows."""
+    offsets = np.arange(0, mat.size + 1, max(mat.shape[1], 1), dtype=np.int32)
+    return pa.ListArray.from_arrays(offsets, mat.reshape(-1).astype(np.int32))
+
+
+def _with_column(batch, drop: str | None, name: str, col) -> pa.RecordBatch:
+    """``batch`` without column ``drop``, then ``col`` as ``name``."""
+    keep = [c for c in batch.schema.names if c != drop]
+    return pa.RecordBatch.from_arrays(
+        [batch.column(c) for c in keep] + [col], [*keep, name]
+    )
+
+
+def pq_codes(batches, *, books, vec_col: str, out_col: str):
+    """``mapInArrow`` body: ``vec_col`` replaced by ``out_col``, the
+    ``array<int>`` of each subspace's :func:`_nearest` code:
+    ``slice(vec, j·d + 1, d)`` against ``books[j]``."""
+    cents = [_centroid_rows(book) for book in books]
+    d = len(books[0][0])
+    for batch in batches:
+        comp = _components(batch.column(vec_col))
+        codes = [_nearest(_slice(comp, j * d, d), c)[0] for j, c in enumerate(cents)]
+        yield _with_column(batch, vec_col, out_col, _int_lists(np.stack(codes, 1)))
+
+
+def residuals(batches, *, centroids, vec_col: str, cluster_col: str, out_col: str):
+    """``mapInArrow`` body: ``vec_col`` replaced by ``out_col``, each
+    vector minus its ``cluster_col`` centroid (:func:`_residual`)."""
+    cents = _centroid_rows(centroids)
+    for batch in batches:
+        cluster = batch.column(cluster_col).to_numpy(zero_copy_only=False)
+        vals, ok, lengths, present = _residual(
+            _components(batch.column(vec_col)), cents, cluster
+        )
+        inside = np.arange(vals.shape[1]) < lengths[:, None]
+        offsets = np.concatenate(([0], np.cumsum(lengths))).astype(np.int32)
+        res = pa.ListArray.from_arrays(
+            pa.array(offsets),
+            pa.array(vals[inside], pa.float64(), mask=~ok[inside]),
+            mask=pa.array(~present),
+        )
+        yield _with_column(batch, vec_col, out_col, res)
+
+
+def lookup_tables(queries: pa.Table, *, vec_col: str, books, coarse=None, n_probe=0):
+    """``(query, probe, luts, null)`` for :func:`adc`: table row ``p``
+    is query row ``query[p]``, and ``luts[p, j, c]`` (NULL where
+    ``null``) its :func:`_sq_dists` from ``slice(q, j·d + 1, d)`` to
+    centroid ``c`` of ``books[j]``. With ``coarse`` centroids, a query
+    has one row per centroid ``probe[p]`` among its ``n_probe``
+    nearest (:func:`_ascending`), and ``q`` is its residual to it."""
+    comp = _components(queries.column(vec_col))
+    query, probe = np.arange(queries.num_rows), None
+    if coarse is not None:
+        cents = _centroid_rows(coarse)
+        order = _ascending(*_sq_dists(comp, cents))[:, :n_probe]
+        query, probe = np.repeat(query, order.shape[1]), order.reshape(-1)
+        comp = _residual(tuple(x[query] for x in comp), cents, probe)
+    d = len(books[0][0])
+    tables = [
+        _sq_dists(_slice(comp, j * d, d), _centroid_rows(book))
+        for j, book in enumerate(books)
+    ]
+    luts, null = (np.stack(x, axis=1) for x in zip(*tables))
+    return query, probe, luts, null
+
+
+def adc(batches, *, q_ids: pa.Array, probe, luts, null, id_col: str):
+    """``mapInArrow`` body: ``(q_id, n_id, adc_dist)`` for each
+    :func:`lookup_tables` row ``p`` and each corpus row with ``codes``
+    (as :func:`pq_codes` writes them) in list ``probe[p]`` of its
+    ``cluster`` (any list when ``probe`` is None). ``adc_dist`` is
+    0.0 plus ``luts[p, j, code_j]`` for ``j = 0..m−1`` without the NULL
+    terms, NULL when all are: Spark's sum over the row's exploded codes
+    joined to the table."""
+    for batch in batches:
+        codes, _, _, pair = _components(batch.column("codes"))
+        codes = codes.astype(np.int64)
+        acc = np.zeros((len(codes), len(luts)))
+        seen = np.zeros(acc.shape, dtype=bool)
+        with np.errstate(all="ignore"):
+            for j in range(luts.shape[1]):
+                skip = null[:, j, codes[:, j]].T
+                acc += np.where(skip, 0.0, luts[:, j, codes[:, j]].T)
+                seen |= ~skip
+        pair = np.repeat(pair[:, None], len(luts), axis=1)
+        if probe is not None:
+            cluster = batch.column("cluster").to_numpy(zero_copy_only=False)
+            pair &= cluster[:, None] == probe[None, :]
+        ri, pi = np.nonzero(pair)
+        yield pa.RecordBatch.from_arrays(
+            [
+                q_ids.take(pa.array(pi)),
+                batch.column(id_col).take(pa.array(ri)),
+                pa.array(acc[ri, pi], pa.float64(), mask=~seen[ri, pi]),
+            ],
+            ["q_id", "n_id", "adc_dist"],
         )
 
 
@@ -258,6 +446,7 @@ def cross_cosine(
     names: list[str],
     out_col: str,
     top: int | None = None,
+    decode: tuple[list[float], list[float]] | None = None,
 ):
     """``mapInArrow`` body: the cosine of each row's ``vec_col`` with
     every row of ``small`` (queries or centroids, held in the pickled
@@ -266,12 +455,20 @@ def cross_cosine(
     in Spark's ``ORDER BY cos DESC`` (NULLs last, NaN first, ``-0.0 ==
     0.0``), ties to the earlier ``small`` row. Columns: ``names``, each
     from the batch or else from ``small``, then ``out_col``, the
-    unrounded cosine under :func:`pair_cosine`'s rules."""
+    unrounded cosine under :func:`pair_cosine`'s rules. With ``decode
+    = (scale, lo)``, ``vec_col`` holds SQ8 codes and the row's vector
+    is ``code_d · scale_d + lo_d`` (NULL unless it has ``len(lo)``
+    codes)."""
     cols = {c: small.column(c).combine_chunks() for c in small.column_names}
     s = [x[None] for x in _matrix(cols[small_vec])]
     for batch in batches:
-        r = [x[:, None] for x in _matrix(batch.column(vec_col))]
-        cos, null = _cosine(r, s)
+        r = _matrix(batch.column(vec_col))
+        if decode is not None:
+            scale, lo = (np.asarray(x, dtype=np.float64) for x in decode)
+            rows, lengths, valid = r
+            rows = _padded(rows[:, : len(lo)], len(lo)) * scale + lo
+            r = rows, np.full(len(rows), len(lo)), valid & (lengths == len(lo))
+        cos, null = _cosine([x[:, None] for x in r], s)
         si = np.tile(np.arange(cos.shape[1]), (len(cos), 1))
         if top is not None:
             nan = np.isnan(cos) & ~null
@@ -323,10 +520,4 @@ def band_keys(batches, *, planes, band_bits: int, vec_col: str, out_col: str):
             for i in range(b0, min(b0 + band_bits, len(h))):
                 key = key * 2 + bits[:, i]
             keys.append(key)
-        n_bands = len(keys)
-        flat = np.stack(keys, axis=1).reshape(-1).astype(np.int32)
-        offsets = np.arange(0, (len(rows) + 1) * n_bands, n_bands, dtype=np.int32)
-        yield pa.RecordBatch.from_arrays(
-            [*batch.columns, pa.ListArray.from_arrays(offsets, flat)],
-            [*batch.schema.names, out_col],
-        )
+        yield _with_column(batch, None, out_col, _int_lists(np.stack(keys, axis=1)))

@@ -60,10 +60,7 @@ def test_double_array_literal_bit_identical_to_per_component_lits(spark):
     per-component F.lit form did — repr round-trips through the SQL
     parser's Double.parseDouble."""
     from pyspark.sql import functions as F
-
-    from data_warehouse_migration_spark.operators.clustering import (
-        double_array_literal,
-    )
+    from vector_folds import double_array_literal
 
     tricky = [
         [0.1, -0.0, 1e-300, -1.5e308, 3.1234567],  # round(…, 7)-shaped + extremes
@@ -94,9 +91,7 @@ def test_double_array_literal_non_finite_values(spark):
     per-component F.lit path produced."""
     import math
 
-    from data_warehouse_migration_spark.operators.clustering import (
-        double_array_literal,
-    )
+    from vector_folds import double_array_literal
 
     vals = [float("nan"), float("inf"), float("-inf"), 1.5]
     got = spark.range(1).select(double_array_literal(vals).alias("a")).first()["a"]
@@ -113,9 +108,7 @@ def test_double_array_literal_non_finite_values(spark):
 
 
 def _fold_assign(vectors, centroids, id_col="vec_id", vec_col="embedding"):
-    from data_warehouse_migration_spark.operators.clustering import (
-        double_array_literal,
-    )
+    from vector_folds import double_array_literal
 
     vec = F.col(vec_col)
     dist_structs = F.transform(
@@ -263,3 +256,129 @@ def test_assign_kernel_pinned_null_and_ragged_results(spark):
         1: (1, _INF), 2: (1, _INF), 3: (2, 5.0), 4: (1, _INF), 5: (1, _INF)
     }
     assert got["ties"] == {0: (0, 1.0), 1: (0, 0.0), 2: (2, 0.25), 3: (1, 0.0)}
+
+
+# --- the one Lloyd's trainer (clustering.lloyd) against the two loops it
+# replaced (tests/vector_folds.py): on one partition Spark's ``avg`` sums
+# in row order, so the centroids must match bit for bit.
+
+_CASES = [
+    "random_float32",
+    "random_double",
+    "ties",
+    "zero_vector",
+    "non_finite",
+    "nulls",
+    "ragged",
+]
+# (m, d) of the PQ split of each case.
+_SPLIT = {
+    "random_float32": (4, 4),
+    "random_double": (4, 4),
+    "ties": (2, 1),
+    "zero_vector": (3, 1),
+    "non_finite": (3, 1),
+    "nulls": (3, 1),
+    "ragged": (2, 2),
+}
+
+
+def _one_partition(spark, case):
+    rows, elem, cents = _assign_case(case)
+    df = spark.createDataFrame(rows, f"vec_id int, embedding array<{elem}>")
+    return df.coalesce(1), cents
+
+
+def _hex_books(books):
+    return [[None if c is None else [_hex(x) for x in c] for c in b] for b in books]
+
+
+def _books(cents, m, d):
+    return [[list(c[j * d : (j + 1) * d]) for c in cents] for j in range(m)]
+
+
+@pytest.mark.parametrize("case", _CASES)
+def test_trainer_bit_identical_to_kmeans_means_loop(spark, case):
+    from vector_folds import lloyd_means_loop
+
+    from data_warehouse_migration_spark.operators.clustering import lloyd
+
+    df, cents = _one_partition(spark, case)
+    for rnd in (None, 7):
+        got = lloyd(df, [cents], None, 4, "embedding", rnd)
+        want = lloyd_means_loop(df, cents, 4, round_centroids=rnd)
+        assert _hex_books(got) == _hex_books([want]), rnd
+
+
+@pytest.mark.parametrize("case", _CASES)
+def test_pq_trainer_bit_identical_to_pq_loop(spark, case):
+    """Keyed by subspace, the trainer is k-means on each slice (the
+    subspaces are independent problems). The old PQ loop agrees on
+    every case but two: on a subvector whose every distance is NULL
+    (``nulls``) it raised, and on short subvectors (``ragged``) its
+    ``array_min`` skipped the NULL distances, so they went to the
+    nearest full-length code instead of the lowest NULL one."""
+    from vector_folds import lloyd_means_loop, train_pq_epochs
+
+    from data_warehouse_migration_spark.operators.clustering import lloyd
+
+    df, cents = _one_partition(spark, case)
+    m, d = _SPLIT[case]
+    books = _books(cents, m, d)
+    got = _hex_books(lloyd(df, books, d, 3, "embedding", None))
+    per_subspace = [
+        lloyd_means_loop(
+            df.select("vec_id", F.slice("embedding", j * d + 1, d).alias("embedding")),
+            books[j],
+            3,
+        )
+        for j in range(m)
+    ]
+    assert got == _hex_books(per_subspace)
+    if case == "nulls":
+        with pytest.raises(TypeError):
+            train_pq_epochs(df, books, 3)
+    elif case == "ragged":
+        assert got != _hex_books(train_pq_epochs(df, books, 3))
+    else:
+        assert got == _hex_books(train_pq_epochs(df, books, 3))
+
+
+def test_trainer_rounded_equal_to_means_loop_on_partitions(spark, sf_dir):
+    """Across partitions the partial sums add in another order than a
+    shuffle's, so only the rounded centroids must agree."""
+    from vector_folds import lloyd_means_loop
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").repartition(3, "vec_id")
+    init = [list(r.embedding) for r in emb.orderBy("vec_id").limit(4).collect()]
+    got, _ = kmeans(emb, k=4, max_iter=3, round_centroids=7)
+    assert got == lloyd_means_loop(emb, init, 3, round_centroids=7)
+
+
+def test_pq_training_null_component_takes_code_zero(spark):
+    """A NULL component makes every distance of its subvector NULL, so
+    the subvector goes to code 0 (k-means' rule, as pq_encode assigns)
+    and its non-NULL components count there. The old PQ loop got a
+    NULL code back and raised a bare TypeError on the driver."""
+    from data_warehouse_migration_spark.operators.quantization import (
+        pq_encode,
+        train_pq_codebooks,
+    )
+
+    rows = [
+        (0, [0.0, 0.0, 0.0, 0.0]),
+        (1, [4.0, 4.0, 4.0, 4.0]),
+        (2, [0.5, 0.0, 3.5, 4.0]),
+        (9, [1.0, None, 2.0, 3.0]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
+    books = train_pq_codebooks(df, dim=4, m=2, k=2, train_iters=2)
+    # Subspace 0: code 0 holds rows 0, 2 and 9 (component 1 of row 9
+    # is NULL, so it counts nowhere); subspace 1: rows 2, 9 and 1 are
+    # nearer code 1.
+    assert books == [
+        [[0.5, 0.0], [4.0, 4.0]],
+        [[0.0, 0.0], [3.1666666666666665, 3.6666666666666665]],
+    ]
+    codes = {r.vec_id: r.codes for r in pq_encode(df, books).collect()}
+    assert codes[9] == [0, 1]

@@ -8,7 +8,11 @@ claims — and FAIL (exit 1) on scale-killers:
   (brute-force verification baselines and 1-row broadcast totals,
   where a nested loop is the point or is O(n)·1);
 - an UNPARTITIONED ``Window`` (every row through one task) outside the
-  whitelisted driver-sized tails.
+  whitelisted driver-sized tails;
+- a whitelisted query that no longer plans its sanctioned operator (a
+  stale entry would silently sanction a regression later).
+
+Every whitelisted query is audited, in or out of the window.
 
 Usage: python tools/plan_audit.py [sf_dir] [out_md] [--window N]
 """
@@ -34,10 +38,6 @@ DRIVER_WINDOW = 50
 # (O(n·1), not O(n²)).
 BNLJ_WHITELIST = {
     "training_data_pipeline", # 1-row corpus token total broadcast to the split
-    "token_budget_sample_per_lang",  # 1-row budget scalar broadcast
-    "funnel_click_to_purchase",      # k 1-row stage counts cross-joined
-    "data_quality_checks",    # 1-row rule aggregates combined
-    "table_profile_orders",   # 1-row per-column profiles combined
     "doc_perplexity_filter",  # 1-row corpus log-prob total broadcast
     "histogram_order_values", # 1-row min/max bounds broadcast (O(n·1))
     "q11_important_parts",    # 1-row grand-total scalar broadcast (the
@@ -176,16 +176,15 @@ EXTRA_AUDIT = (
     "wikidump_extract",
     "tfrecord_shard_roundtrip",
     "xz_text_archive",
+    "similarity_pq_topk",
+    "similarity_ivf_pq_topk",
+    "embedding_kmeans",
 )
 
 # Queries allowed an unpartitioned Window: driver-sized inputs by
 # construction (≤ thousands of rows after aggregation) where a global
 # ordering is the semantics being computed.
 GLOBAL_WINDOW_WHITELIST = {
-    "dim_date",               # 7,671-row calendar: global day sequence
-    "word_frequency_topk",    # top-k over an aggregated vocabulary
-    "tfidf_top_terms",        # rank within doc over aggregated terms
-    "dataset_mix_by_lang",    # 5-row per-language shares
     "weighted_doc_sample",    # rank over the k rows REMAINING after
                               #   the TakeOrderedAndProject limit
     "heavy_hitters_cms",      # top-k over the aggregated vocabulary
@@ -273,7 +272,11 @@ def main() -> None:
     names = list(REGISTRY)
     audited = [
         n for i, n in enumerate(names)
-        if i < window or REGISTRY[n].headline or n in EXTRA_AUDIT
+        if i < window
+        or REGISTRY[n].headline
+        or n in EXTRA_AUDIT
+        or n in BNLJ_WHITELIST
+        or n in GLOBAL_WINDOW_WHITELIST
     ]
 
     lines = [
@@ -281,10 +284,12 @@ def main() -> None:
         "",
         f"Generated by `python tools/plan_audit.py {sf_dir}` over the first",
         f"{window} registry entries (the driver's correctness window) plus",
-        "all bench headliners. Shows, per query: scan-level pushdown/pruning",
-        "and the join/exchange skeleton Catalyst chose (AQE may re-plan at",
-        "runtime). The audit FAILS on CartesianProduct, non-whitelisted",
-        "BroadcastNestedLoopJoin, and non-whitelisted unpartitioned Window.",
+        "all bench headliners, the extra-audit list and every whitelisted",
+        "query. Shows, per query: scan-level pushdown/pruning and the",
+        "join/exchange skeleton Catalyst chose (AQE may re-plan at runtime).",
+        "The audit FAILS on CartesianProduct, non-whitelisted",
+        "BroadcastNestedLoopJoin, non-whitelisted unpartitioned Window, and",
+        "a whitelisted query that no longer plans its whitelisted operator.",
         "",
         f"Session `defaultParallelism`: {spark.sparkContext.defaultParallelism}"
         " (exchange counts depend on it).",
@@ -331,6 +336,12 @@ def main() -> None:
         if facts["global_windows"] and name not in GLOBAL_WINDOW_WHITELIST:
             violations.append(
                 f"{name}: {facts['global_windows']} unpartitioned Window(s)"
+            )
+        if name in BNLJ_WHITELIST and not facts["bnlj"]:
+            violations.append(f"{name}: BNLJ-whitelisted but plans none (stale entry)")
+        if name in GLOBAL_WINDOW_WHITELIST and not facts["global_windows"]:
+            violations.append(
+                f"{name}: global-window-whitelisted but plans none (stale entry)"
             )
 
         flags = []
