@@ -21,13 +21,21 @@ Two entry points:
   change, ``lead`` to close intervals) — the classical formulation the
   reference's lookup+split encoding approximates one batch at a time.
 
-100 TB posture: both are single-shuffle-per-window/join operators keyed
-on the business key; no driver-side loops, no collect. ``scd2_merge``
-broadcasts nothing by default (dim and snapshot can both be large) —
-AQE picks BHJ when the active-dim side is small.
+100 TB posture: both are one hash exchange on the business key and no
+join; no driver-side loops, no collect. ``scd2_merge`` scans the dim
+once and the snapshot once (hashing it once), unions them tagged, and
+runs one window per key ordered by row hash: the key's active-version
+and snapshot-row counts, its hash range, and each snapshot row's count
+of active versions with an equal hash decide which versions expire and
+how many each snapshot row opens. Its plan is union → exchange on the
+key → sort → window → generate; ``scd2_from_history`` is exchange →
+sort → two windows on the same spec. Neither broadcasts, so dim and
+snapshot can both be large.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -90,7 +98,15 @@ def scd2_merge(
     148-152``): NEW (key absent from active dim) and CHANGED (hash
     differs) get fresh open versions; CHANGED additionally expires the
     old active version (``ValidTo=now, IsActive=false``); NO-CHANGE and
-    all already-expired history pass through untouched.
+    all already-expired history pass through untouched. The routing
+    counts versions, so inputs the chain never produces keep defined
+    results: each copy of a repeated snapshot key is routed on its own;
+    a key with several active versions expires all of them when any
+    copy differs from any of them, and a differing copy opens one
+    version per active version it differs from; a NULL key part never
+    matches (its versions survive, its snapshot rows are new); a
+    version whose ``IsActive`` is NULL is dropped. ``RowHash`` must
+    not be NULL (``row_hash`` never is).
 
     ``first_version_from``: effective-from for a key's FIRST version
     (both initial load and later-arriving new keys). The reference
@@ -103,7 +119,7 @@ def scd2_merge(
     load-time semantics.
     """
     keys = [keys] if isinstance(keys, str) else list(keys)
-    now = now if isinstance(now, Column) else F.lit(now)
+    now = (now if isinstance(now, Column) else F.lit(now)).cast("timestamp")
     first_from = (
         now
         if first_version_from is None
@@ -111,53 +127,81 @@ def scd2_merge(
             first_version_from
             if isinstance(first_version_from, Column)
             else F.lit(first_version_from)
-        )
+        ).cast("timestamp")
     )
 
     snap = snapshot.select(*keys, *attrs).withColumn("RowHash", row_hash(*attrs))
 
     if dim is None:
         return (
-            snap.withColumn("ValidFrom", first_from.cast("timestamp"))
+            snap.withColumn("ValidFrom", first_from)
             .withColumn("ValidTo", F.lit(None).cast("timestamp"))
             .withColumn("IsActive", F.lit(True))
         )
 
-    active = dim.filter(F.col("IsActive"))
-    inactive = dim.filter(~F.col("IsActive"))
-
-    # Route the snapshot against active versions on the business key.
-    lookup = active.select(*keys, F.col("RowHash").alias("__cur_hash"))
-    routed = snap.join(lookup, keys, "left")
-    incoming = routed.filter(
-        F.col("__cur_hash").isNull() | (F.col("__cur_hash") != F.col("RowHash"))
-    )
-    new_versions = (
-        incoming.withColumn(
-            "ValidFrom",
-            F.when(F.col("__cur_hash").isNull(), first_from.cast("timestamp"))
-            .otherwise(now.cast("timestamp")),
-        )
-        .drop("__cur_hash")
-        .withColumn("ValidTo", F.lit(None).cast("timestamp"))
-        .withColumn("IsActive", F.lit(True))
-    )
-
-    # Expire active versions whose key arrived with a different hash.
-    changed_keys = incoming.filter(F.col("__cur_hash").isNotNull()).select(*keys)
-    expired = (
-        active.join(changed_keys, keys, "left_semi")
-        .withColumn("ValidTo", now.cast("timestamp"))
-        .withColumn("IsActive", F.lit(False))
-    )
-    surviving_active = active.join(changed_keys, keys, "left_anti")
-
+    # One input: every dim version and every snapshot row, tagged. A
+    # version whose IsActive is NULL is neither active nor expired, and
+    # is dropped.
     out_cols = [*keys, *attrs, *SCD2_COLS]
-    return (
-        inactive.select(out_cols)
-        .unionByName(expired.select(out_cols))
-        .unionByName(surviving_active.select(out_cols))
-        .unionByName(new_versions.select(out_cols))
+    rows = (
+        dim.filter(F.col("IsActive").isNotNull())
+        .select(*out_cols, F.lit(False).alias("__snap"))
+        .unionByName(
+            snap.select(
+                *keys, *attrs, "RowHash",
+                F.lit(None).cast("timestamp").alias("ValidFrom"),
+                F.lit(None).cast("timestamp").alias("ValidTo"),
+                F.lit(True).alias("IsActive"),
+                F.lit(True).alias("__snap"),
+            )
+        )
+    )
+    is_snap = F.col("__snap")
+    # A NULL key part never equals anything, so such a version is never
+    # matched (it survives) and such a snapshot row is always new.
+    matchable = reduce(lambda a, b: a & b, [F.col(k).isNotNull() for k in keys])
+    is_active = ~is_snap & F.col("IsActive") & matchable
+
+    # One window per key, ordered by hash: the whole key for the counts
+    # and the hash range, the rows of equal hash for a snapshot row's
+    # active versions that already carry its attributes.
+    by_key = Window.partitionBy(*keys).orderBy("RowHash")
+    whole = by_key.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    same_hash = by_key.rangeBetween(Window.currentRow, Window.currentRow)
+    live_hash = F.when(is_active | is_snap, F.col("RowHash"))
+    n_active = F.count(F.when(is_active, 1)).over(whole)
+    n_snap = F.count(F.when(is_snap, 1)).over(whole)
+    hashes_differ = F.min(live_hash).over(whole) != F.max(live_hash).over(whole)
+    n_active_same = F.count(F.when(is_active, 1)).over(same_hash)
+
+    counted = rows.select(
+        "*",
+        n_active.alias("__n_active"),
+        (is_active & (n_snap > 0) & hashes_differ).alias("__expire"),
+        (n_active - n_active_same).alias("__n_differ"),
+    )
+    # A snapshot row opens one version per active version of its key
+    # whose hash differs (one, from first_from, for a new key) — almost
+    # always zero or one; every dim version is kept once.
+    copies = (
+        F.when(~is_snap, 1)
+        .when(F.col("__n_active") == 0, 1)
+        .otherwise(F.col("__n_differ"))
+        .cast("int")
+    )
+    expire = F.col("__expire")
+    return counted.withColumn(
+        "__copy", F.explode(F.array_repeat(F.lit(True), copies))
+    ).select(
+        *keys,
+        *attrs,
+        "RowHash",
+        F.when(is_snap & (F.col("__n_active") == 0), first_from)
+        .when(is_snap, now)
+        .otherwise(F.col("ValidFrom"))
+        .alias("ValidFrom"),
+        F.when(expire, now).otherwise(F.col("ValidTo")).alias("ValidTo"),
+        F.when(expire, F.lit(False)).otherwise(F.col("IsActive")).alias("IsActive"),
     )
 
 

@@ -18,6 +18,15 @@ This is the end-to-end parity showcase for
 
 Every stage is a function over (spark, layout, run timestamp) so the
 orchestrator (plans.pipeline) sequences them like PL_Master.
+
+Jobs: every table the chain reads it wrote itself, so each read goes
+through ``writers.read_back`` with the schema recorded at the write and
+runs no footer-merge job (only a prior ``Dim_Customer`` written by
+another process is inferred). The verification counts are the live
+files' Parquet-footer row counts (``readers.parquet_row_count``), read
+on the driver. What is left is the work: one write per table, the
+SCD2 merge's key and surrogate-key exchanges, the point-in-time join
+and the top-10 star query.
 """
 
 from __future__ import annotations
@@ -41,9 +50,11 @@ from data_warehouse_migration_spark.operators.scd2 import (
     scd2_merge,
 )
 from data_warehouse_migration_spark.sources.medallion import MedallionLayout
+from data_warehouse_migration_spark.sources.readers import parquet_row_count
 from data_warehouse_migration_spark.sources.registry import SourceEntry, ingest_bronze
 from data_warehouse_migration_spark.sources.writers import (
     atomic_overwrite_parquet,
+    read_back,
     write_parquet,
 )
 
@@ -67,7 +78,7 @@ MONEY = DecimalType(18, 2)
 
 def silver_clean_f4211(spark: SparkSession, layout: MedallionLayout) -> DataFrame:
     """DF_Clean_JDE: decode + rename F4211 → Silver CleanSalesOrders."""
-    bronze = spark.read.parquet(layout.bronze("jde/F4211"))
+    bronze = read_back(spark, layout.bronze("jde/F4211"))
     order_date = julian_to_date("SDTRDJ")
     qty = implicit_decimal("SDUORG")
     amount = implicit_decimal("SDAEXP")
@@ -88,12 +99,12 @@ def silver_clean_f4211(spark: SparkSession, layout: MedallionLayout) -> DataFram
         unit_price.alias("UnitPrice"),
     )
     write_parquet(silver, layout.silver("CleanSalesOrders"))
-    return spark.read.parquet(layout.silver("CleanSalesOrders"))
+    return read_back(spark, layout.silver("CleanSalesOrders"))
 
 
 def silver_clean_f0101(spark: SparkSession, layout: MedallionLayout) -> DataFrame:
     """Customer snapshot: decoded business view of F0101."""
-    bronze = spark.read.parquet(layout.bronze("jde/F0101"))
+    bronze = read_back(spark, layout.bronze("jde/F0101"))
     silver = bronze.select(
         F.col("ABAN8").alias("CustomerID"),
         F.col("ABALPH").alias("CustomerName"),
@@ -102,13 +113,13 @@ def silver_clean_f0101(spark: SparkSession, layout: MedallionLayout) -> DataFram
         julian_to_date("ABUPMJ").alias("UpdatedDate"),
     )
     write_parquet(silver, layout.silver("CleanCustomers"))
-    return spark.read.parquet(layout.silver("CleanCustomers"))
+    return read_back(spark, layout.silver("CleanCustomers"))
 
 
 def gold_dim_date(spark: SparkSession, layout: MedallionLayout) -> DataFrame:
     dim = build_dim_date(spark)
     write_parquet(dim, layout.gold("Dim_Date"))
-    return spark.read.parquet(layout.gold("Dim_Date"))
+    return read_back(spark, layout.gold("Dim_Date"))
 
 
 def gold_dim_customer(
@@ -121,9 +132,9 @@ def gold_dim_customer(
     Incremental and idempotent-per-snapshot: re-running with an
     unchanged snapshot adds zero versions (hash-driven routing).
     """
-    snapshot = spark.read.parquet(layout.silver("CleanCustomers"))
+    snapshot = read_back(spark, layout.silver("CleanCustomers"))
     path = layout.gold("Dim_Customer")
-    existing = spark.read.parquet(path) if os.path.exists(path) else None
+    existing = read_back(spark, path) if os.path.exists(path) else None
     attrs = ["CustomerName", "SearchType", "CategoryCode"]
     merged = scd2_merge(
         existing,
@@ -140,7 +151,7 @@ def gold_dim_customer(
     )
     # The next state reads the current state → stage and swap atomically.
     atomic_overwrite_parquet(dim, path)
-    return spark.read.parquet(path)
+    return read_back(spark, path)
 
 
 def gold_fact_sales(
@@ -151,11 +162,11 @@ def gold_fact_sales(
     """Point-in-time fact load (DF_Load_FactSales + fact_sales.sql:11-13):
     each sale attributed to the customer version valid at order time;
     DateKey validated against Dim_Date by left-semi check."""
-    silver = spark.read.parquet(layout.silver("CleanSalesOrders"))
-    dim_c = spark.read.parquet(layout.gold("Dim_Customer")).select(
+    silver = read_back(spark, layout.silver("CleanSalesOrders"))
+    dim_c = read_back(spark, layout.gold("Dim_Customer")).select(
         "CustomerID", "CustomerKey", "ValidFrom", "ValidTo"
     )
-    dim_d = spark.read.parquet(layout.gold("Dim_Date")).select("DateKey")
+    dim_d = read_back(spark, layout.gold("Dim_Date")).select("DateKey")
 
     # PIT on the *date* axis (reference wraps ValidFrom/To in toDate,
     # DF_Load_FactSales.json:119) — compare dates, not timestamps.
@@ -181,19 +192,20 @@ def gold_fact_sales(
     )
     fact = assign_surrogate_keys(fact, "SalesKey", order_by=["OrderNumber"])
     write_parquet(fact, layout.gold("Fact_Sales"))
-    return spark.read.parquet(layout.gold("Fact_Sales"))
+    return read_back(spark, layout.gold("Fact_Sales"))
 
 
 def verification(spark: SparkSession, layout: MedallionLayout) -> dict:
     """The reference's warehouse checks (load_gold_data.sql:101-128):
-    per-table counts + top-10 star join by ExtendedAmount."""
+    per-table counts (from the Parquet footers, no Spark job) + top-10
+    star join by ExtendedAmount."""
     counts = {
-        name: spark.read.parquet(layout.gold(name)).count()
+        name: parquet_row_count(layout.gold(name))
         for name in ["Dim_Date", "Dim_Customer", "Fact_Sales"]
     }
-    fact = spark.read.parquet(layout.gold("Fact_Sales"))
-    dim_c = spark.read.parquet(layout.gold("Dim_Customer"))
-    dim_d = spark.read.parquet(layout.gold("Dim_Date"))
+    fact = read_back(spark, layout.gold("Fact_Sales"))
+    dim_c = read_back(spark, layout.gold("Dim_Customer"))
+    dim_d = read_back(spark, layout.gold("Dim_Date"))
     top = (
         fact.join(F.broadcast(dim_c), "CustomerKey")
         .join(F.broadcast(dim_d), "DateKey")

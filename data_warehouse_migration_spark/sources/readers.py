@@ -9,6 +9,8 @@ column pruning effective (the select reaches the scan).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -64,6 +66,31 @@ def read_parquet(
     NULL of declared type — matching ADF's drift posture rather than
     failing the read)."""
     return _project(spark.read.parquet(path), declared)
+
+
+def parquet_row_count(path: str) -> int:
+    """Row count of the Parquet table at ``path``, summed from the
+    footers of its live files on the driver: no Spark job.
+
+    Live files are the ones a scan lists: the tree under ``path``
+    (symlinks followed, partition directories included) minus hidden
+    names, those starting with ``.`` or with ``_`` (unless they hold a
+    ``key=value`` partition). Each footer holds its row groups' row
+    counts, the same numbers ``DataFrame.count()`` adds up. Local
+    filesystems only, like the atomic swap in ``sources.writers``.
+    """
+    import pyarrow.parquet as pq
+
+    def live(name: str) -> bool:
+        return not name.startswith(".") and (not name.startswith("_") or "=" in name)
+
+    total = 0
+    for dirpath, dirnames, filenames in os.walk(os.path.realpath(path)):
+        dirnames[:] = [d for d in dirnames if live(d)]
+        for name in filenames:
+            if live(name):
+                total += pq.read_metadata(os.path.join(dirpath, name)).num_rows
+    return total
 
 
 def read_orc(

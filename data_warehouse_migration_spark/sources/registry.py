@@ -6,7 +6,8 @@ ForEach of Copy activities with ``batchCount: 4``
 (PL_Ingest_Bronze.json:7-113). Here: dataclass entries + a driver loop
 (optionally a 4-thread pool — Spark jobs from different threads run
 concurrently on the same session, the local analogue of parallel Copy
-activities).
+activities; each pool thread carries the caller's job group, local
+properties and tags).
 """
 
 from __future__ import annotations
@@ -15,9 +16,10 @@ import json
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+from pyspark.util import inheritable_thread_target
 
 from data_warehouse_migration_spark.sources.medallion import MedallionLayout
 from data_warehouse_migration_spark.sources.readers import read_csv
@@ -57,24 +59,28 @@ def ingest_bronze(
 
     Output is Hive-partitioned by ``ingest_date`` (the run date) so
     downstream reads prune to one date. Returns row counts per entry
-    (the reference's Copy activity reports the same metric).
+    (the reference's Copy activity reports the same metric), observed
+    on the write itself: no second parse of the CSV to count it.
     """
     run_date = MedallionLayout.run_date(run_date)
 
     def copy(entry: SourceEntry) -> tuple[str, int]:
         df = read_csv(spark, layout.landing(entry.source_file), schema=entry.schema)
-        out = df.withColumn("ingest_date", F.lit(run_date))
+        rows = Observation(f"ingest_bronze:{entry.sink_path}")
+        out = df.withColumn("ingest_date", F.lit(run_date)).observe(
+            rows, F.count(F.lit(1)).alias("rows")
+        )
         write_parquet(
             out,
             layout.bronze(entry.sink_path),
             mode="overwrite",
             partition_by=["ingest_date"],
         )
-        return entry.sink_path, df.count()
+        return entry.sink_path, rows.get["rows"]
 
     if max_parallel > 1 and len(entries) > 1:
         with ThreadPoolExecutor(max_workers=max_parallel) as pool:
-            results = list(pool.map(copy, entries))
+            results = list(pool.map(inheritable_thread_target(spark)(copy), entries))
     else:
         results = [copy(e) for e in entries]
     return dict(results)

@@ -14,7 +14,8 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def write_parquet(
@@ -33,6 +34,64 @@ def write_parquet(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
+    # Only a whole-table overwrite leaves files of this one schema; an
+    # append or a dynamic partition overwrite keeps older files.
+    if mode == "overwrite" and not (
+        partition_by
+        and df.sparkSession.conf.get("spark.sql.sources.partitionOverwriteMode")
+        .lower() == "dynamic"
+    ):
+        _record_schema(df, path, partition_by)
+
+
+#: Data schema of each Parquet table this process wrote whole, keyed by
+#: absolute path, with the stamp of the ``_SUCCESS`` marker that write
+#: committed (see :func:`read_back`).
+_WRITTEN: dict[str, tuple[StructType, tuple[int, int]]] = {}
+
+
+def _success_stamp(path: str) -> tuple[int, int] | None:
+    """Inode and mtime of the commit marker of the table live at
+    ``path`` (symlinks followed); ``None`` when there is none. Every
+    Spark write commits a new marker, so a rewrite by any writer,
+    whole or partial, changes the stamp."""
+    try:
+        st = os.stat(os.path.join(path, "_SUCCESS"))
+    except OSError:
+        return None
+    return st.st_ino, st.st_mtime_ns
+
+
+def _record_schema(
+    df: DataFrame, path: str, partition_by: list[str] | None = None
+) -> None:
+    stamp = _success_stamp(path)
+    if stamp is None:
+        return
+    parts = set(partition_by or [])
+    data = StructType([f for f in df.schema.fields if f.name not in parts])
+    _WRITTEN[os.path.abspath(path)] = (data, stamp)
+
+
+def read_back(spark: SparkSession, path: str) -> DataFrame:
+    """Read a Parquet table, passing its schema when this process wrote
+    it whole and nobody has committed to it since.
+
+    ``spark.read.parquet(path)`` without a schema runs one Spark job to
+    read and merge file footers (even with ``mergeSchema`` off). A table
+    written through :func:`write_parquet` (overwrite),
+    :func:`atomic_overwrite_parquet` or :func:`stage_to_parquet` has
+    its data schema on record, so the read-back runs no job. Partition
+    columns are left out of the record: the file listing types them on
+    the driver, as inference does (a ``'2024-01-01'`` value reads back
+    as DATE whatever type was written), so both reads give the same
+    schema. Any other table, or one whose ``_SUCCESS`` marker changed
+    since the recorded write, is read with inference.
+    """
+    known = _WRITTEN.get(os.path.abspath(path))
+    if known is not None and known[1] == _success_stamp(path):
+        return spark.read.schema(known[0]).parquet(path)
+    return spark.read.parquet(path)
 
 
 def overwrite_partitions_dynamic(
@@ -120,6 +179,7 @@ def atomic_overwrite_parquet(
     version = os.path.join(parent, f".{base}.__v_{uuid.uuid4().hex[:8]}")
     df.write.mode("overwrite").option("compression", "snappy").parquet(version)
     atomic_publish_dir(version, path, keep_old=keep_old)
+    _record_schema(df, path)
 
 
 def atomic_publish_dir(staged: str, path: str, keep_old: bool = True) -> None:
@@ -286,11 +346,11 @@ def stage_to_parquet(df: DataFrame, name: str, scope: str | None = None) -> Data
             f"consumer's read-back)"
         )
     path = os.path.join(root, key)
-    df.write.mode("overwrite").option("compression", "snappy").parquet(path)
+    write_parquet(df, path)
     # Record only AFTER the write succeeds: a failed stage must not
     # poison the key and block a corrected retry under the same name.
     _STAGED_KEYS[key] = fingerprint
-    return df.sparkSession.read.parquet(path)
+    return read_back(df.sparkSession, path)
 
 
 _STAGED_KEYS: dict[str, int] = {}

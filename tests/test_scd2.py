@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_warehouse_migration_spark.operators.scd2 import (
@@ -162,3 +163,112 @@ def test_inferred_members_stub_and_empty_cases(spark):
     # dim fully covers facts → no stubs
     full = spark.createDataFrame([(1,), (2,), (3,)], "k int")
     assert inferred_members(facts, full, key="k", defaults={}).count() == 0
+
+
+# ---------------------------------------------------------------------------
+# The one-pass merge against the four-branch merge it replaced
+# (tests/scd2_reference.py): the same rows, round after round.
+# ---------------------------------------------------------------------------
+
+FIRST = dt.datetime(1900, 1, 1)
+
+
+def _state(spark, df):
+    """Materialize a round's output, as the writer's swap does."""
+    return spark.createDataFrame(df.collect(), df.schema)
+
+
+def _sorted_rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def _assert_rounds_match(spark, rounds, first_version_from, dim=None):
+    """Run both merges round by round from the same state; every round's
+    output must be the same multiset of rows with the same columns."""
+    from scd2_reference import scd2_merge_reference
+
+    for now, snapshot in rounds:
+        kw = dict(keys="CustomerID", attrs=["Name", "Cat"], now=now,
+                  first_version_from=first_version_from)
+        got = scd2_merge(dim, snapshot, **kw)
+        want = scd2_merge_reference(dim, snapshot, **kw)
+        assert got.dtypes == want.dtypes
+        assert _sorted_rows(got) == _sorted_rows(want), now
+        dim = _state(spark, want)
+    return dim
+
+
+@pytest.mark.parametrize("first_version_from", [None, FIRST])
+def test_one_pass_matches_reference_new_changed_unchanged_absent(
+    spark, first_version_from
+):
+    rounds = [
+        (T1, snap(spark, [(1, "Acme", "100"), (2, "Bob", "200"), (3, "Cara", "300")])),
+        # 1 unchanged, 2 changed, 3 absent, 4 new
+        (T2, snap(spark, [(1, "Acme", "100"), (2, "Bob", "250"), (4, "Dan", "400")])),
+        # A→B→A: 2 returns to its first value; 3 comes back changed
+        (T3, snap(spark, [(2, "Bob", "200"), (3, "Cara", "301")])),
+    ]
+    dim = _assert_rounds_match(spark, rounds, first_version_from)
+    assert dim.count() == 7
+
+
+@pytest.mark.parametrize("first_version_from", [None, FIRST])
+def test_one_pass_matches_reference_repeated_snapshot_key(spark, first_version_from):
+    """Each copy of a repeated key opens a version and the old version
+    is expired once; the next round then meets two active versions of
+    that key, each differing copy opening one more."""
+    rounds = [
+        (T1, snap(spark, [(1, "Acme", "100"), (2, "Bob", "200"), (5, "Eve", "1"),
+                          (5, "Eve", "1")])),
+        (T2, snap(spark, [(1, "Acme", "999"), (1, "Acme", "999"), (1, "Acme", "100"),
+                          (2, "Bob", "201"), (2, "Bob", "202")])),
+        (T3, snap(spark, [(1, "Acme", "999"), (2, "Bob", "203"), (5, "Eve", "2")])),
+    ]
+    _assert_rounds_match(spark, rounds, first_version_from)
+
+
+@pytest.mark.parametrize("first_version_from", [None, FIRST])
+def test_one_pass_matches_reference_null_key_and_null_attrs(spark, first_version_from):
+    """A NULL key never matches: its versions survive every round and
+    each NULL-key snapshot row opens a new version. NULL and '' hash
+    equal, so switching between them is no change."""
+    rounds = [
+        (T1, snap(spark, [(None, "Nil", "0"), (1, None, "100"), (2, "", "200"),
+                          (3, "Cara", None)])),
+        (T2, snap(spark, [(None, "Nil", "0"), (None, "Nil2", "0"), (1, "", "100"),
+                          (2, None, "200"), (3, "Cara", "")])),
+        (T3, snap(spark, [(None, "Nil", "1"), (1, "Acme", "100"), (3, "Cara", None)])),
+    ]
+    _assert_rounds_match(spark, rounds, first_version_from)
+
+
+def test_one_pass_matches_reference_on_a_chain_dim(spark):
+    """A dim as the chain stores it: an extra surrogate-key column,
+    expired history, and a version whose IsActive is NULL (dropped by
+    both merges)."""
+    dim = spark.createDataFrame(
+        [
+            (1, "Acme", "100", "h1", FIRST, T1, False, 1),
+            (1, "Acme", "200", "h2", T1, None, True, 2),
+            (2, "Bob", "200", "h3", FIRST, None, True, 3),
+            (3, "Cara", "300", "h4", FIRST, None, None, 4),
+        ],
+        "CustomerID int, Name string, Cat string, RowHash string,"
+        " ValidFrom timestamp, ValidTo timestamp, IsActive boolean, CustomerKey int",
+    )
+    rounds = [(T2, snap(spark, [(1, "Acme", "200"), (2, "Bob", "200"), (3, "Cara", "300")]))]
+    _assert_rounds_match(spark, rounds, FIRST, dim=dim)
+
+
+def test_one_pass_plan_scans_each_input_once(spark):
+    """One scan of the dim, one of the snapshot, one exchange on the key."""
+    dim = scd2_merge(None, snap(spark, [(1, "Acme", "100")]),
+                     keys="CustomerID", attrs=["Name", "Cat"], now=T1)
+    dim = _state(spark, dim)
+    merged = scd2_merge(dim, snap(spark, [(1, "Acme", "200")]),
+                        keys="CustomerID", attrs=["Name", "Cat"], now=T2)
+    plan = merged._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Scan ExistingRDD") == 2, plan
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "BroadcastExchange" not in plan and "Join" not in plan, plan

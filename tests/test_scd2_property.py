@@ -2,7 +2,8 @@
 the state machine'). Random snapshot sequences over a small key/value
 domain; after every merge round the dim must satisfy the SCD2
 invariants regardless of arrival pattern (new / changed / unchanged /
-re-changed / absent keys)."""
+re-changed / absent keys), and hold the same rows as the four-branch
+reference merge (tests/scd2_reference.py)."""
 
 from __future__ import annotations
 
@@ -12,6 +13,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from data_warehouse_migration_spark.operators.scd2 import scd2_merge
+from scd2_reference import scd2_merge_reference
 
 KEYS = [1, 2, 3]
 VALUES = ["a", "b", "c"]
@@ -52,10 +54,15 @@ def test_scd2_invariants_hold_for_any_snapshot_sequence(rounds):
         snap = spark.createDataFrame(
             [(k, v) for k, v in snap_dict.items()], "CustomerID int, Name string"
         )
+        want = scd2_merge_reference(dim, snap, keys="CustomerID", attrs=["Name"], now=now)
         dim = scd2_merge(dim, snap, keys="CustomerID", attrs=["Name"], now=now)
         # Materialize each round: the merge is defined over the *state*,
         # not the lineage (mirrors the writer's swap between rounds).
         rows = dim.collect()
+        # Same rows as the four-branch merge the one-pass merge replaced.
+        assert sorted(map(tuple, rows), key=repr) == sorted(
+            map(tuple, want.collect()), key=repr
+        )
         dim = spark.createDataFrame(rows, dim.schema)
 
         for k, v in snap_dict.items():

@@ -230,3 +230,66 @@ def test_stage_root_sweep_removes_only_dead_pid_dirs(tmp_path):
     assert (base / f"pid{os.getpid()}").exists()
     assert (base / "pid1").exists()
     assert (base / "not_a_pid_dir").exists()
+
+
+def _clear_job_group(sc):
+    for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+        sc.setLocalProperty(key, None)
+
+
+def test_ingest_bronze_jobs_carry_the_callers_job_group(spark, tmp_path):
+    """The pool threads inherit the caller's job group: every Bronze
+    write is in it, none is ungrouped, and the CSV is not re-parsed
+    for the row counts (one write job per entry)."""
+    from data_warehouse_migration_spark.plans import jde_warehouse as W
+    from data_warehouse_migration_spark.plans.fixtures import generate_landing
+    from data_warehouse_migration_spark.sources.medallion import MedallionLayout
+    from data_warehouse_migration_spark.sources.registry import ingest_bronze
+
+    root = str(tmp_path)
+    want = generate_landing(root, n_customers=12, n_orders=30, seed=3)
+    sc, st = spark.sparkContext, spark.sparkContext.statusTracker()
+    ungrouped = set(st.getJobIdsForGroup(None))
+    sc.setJobGroup("test:ingest_bronze", "ingest_bronze")
+    try:
+        counts = ingest_bronze(spark, MedallionLayout(root), W.SOURCES, "2024-01-01")
+    finally:
+        _clear_job_group(sc)
+    assert counts == {"jde/F0101": want["F0101"], "jde/F4211": want["F4211"]}
+    assert len(st.getJobIdsForGroup("test:ingest_bronze")) == len(W.SOURCES)
+    assert set(st.getJobIdsForGroup(None)) == ungrouped
+
+
+def test_read_back_uses_the_written_schema_until_another_commit(spark, tmp_path):
+    """A table written whole by this process reads back with its recorded
+    schema (no footer-merge job, same schema as inference, partition
+    column typed as inference types it); once any other writer commits
+    to the path, the read-back infers again."""
+    from data_warehouse_migration_spark.sources.writers import read_back, write_parquet
+
+    path = str(tmp_path / "t")
+    df = spark.range(5).select(
+        F.col("id").cast("int").alias("a"), F.lit("x").alias("b"),
+        F.lit("2024-01-01").alias("d"),
+    )
+    write_parquet(df, path, partition_by=["d"])
+    sc, st = spark.sparkContext, spark.sparkContext.statusTracker()
+    sc.setJobGroup("test:read_back", "read_back")
+    try:
+        schema = read_back(spark, path).schema
+    finally:
+        _clear_job_group(sc)
+    assert st.getJobIdsForGroup("test:read_back") == []
+    assert schema == spark.read.parquet(path).schema
+    assert schema["d"].dataType.simpleString() == "date"
+
+    # another writer replaces the table with a different schema
+    spark.range(3).select(F.col("id").alias("z")).write.mode("overwrite").parquet(path)
+    assert read_back(spark, path).columns == ["z"]
+    # an append keeps no record: the next read-back infers
+    write_parquet(df.drop("d"), path)
+    write_parquet(spark.range(2).select(F.col("id").cast("int").alias("a"),
+                                        F.lit(1).alias("c")),
+                  path, mode="append")
+    got = read_back(spark, path)
+    assert got.schema == spark.read.parquet(path).schema

@@ -117,6 +117,82 @@ def test_scd2_second_run_and_pit_attribution(spark, warehouse):
         assert fact2.filter(F.col("CustomerKey") == new_key).count() == 0
 
 
+
+#: Jobs per stage of one night on the ``generate_landing`` fixture, as
+#: upper bounds. Every read of a table the chain wrote passes the
+#: recorded schema (no footer-merge job), the Bronze row counts come
+#: from the write, and the verification counts from the Parquet
+#: footers, so one more inference read or count fails here.
+NIGHT_JOB_BUDGET = {
+    "ingest_bronze": 2,
+    "silver_clean_f4211": 1,
+    "silver_clean_f0101": 1,
+    "gold_dim_date": 1,
+    "gold_dim_customer": 3,
+    "gold_fact_sales": 4,
+    "verification": 3,
+}
+
+
+def test_nightly_job_budget_schemas_and_footer_counts(spark, tmp_path):
+    import os
+
+    from data_warehouse_migration_spark.sources.readers import parquet_row_count
+    from data_warehouse_migration_spark.sources.registry import ingest_bronze
+    from data_warehouse_migration_spark.sources.writers import read_back
+
+    root = str(tmp_path)
+    landed = generate_landing(root, n_customers=30, n_orders=90, seed=5)
+    layout = MedallionLayout(root)
+    sc, st = spark.sparkContext, spark.sparkContext.statusTracker()
+    ungrouped = set(st.getJobIdsForGroup(None))
+    for night, now in enumerate([T1, T2]):
+        calls = {
+            "ingest_bronze": lambda: ingest_bronze(spark, layout, W.SOURCES, str(now.date())),
+            "silver_clean_f4211": lambda: W.silver_clean_f4211(spark, layout),
+            "silver_clean_f0101": lambda: W.silver_clean_f0101(spark, layout),
+            "gold_dim_date": lambda: W.gold_dim_date(spark, layout),
+            "gold_dim_customer": lambda: W.gold_dim_customer(spark, layout, now),
+            "gold_fact_sales": lambda: W.gold_fact_sales(spark, layout, now),
+            "verification": lambda: W.verification(spark, layout),
+        }
+        jobs = {}
+        try:
+            for stage, call in calls.items():
+                group = f"budget{night}:{stage}"
+                sc.setJobGroup(group, stage)
+                out = call()
+                jobs[stage] = len(st.getJobIdsForGroup(group))
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        over = {s: (n, NIGHT_JOB_BUDGET[s]) for s, n in jobs.items()
+                if n > NIGHT_JOB_BUDGET[s]}
+        assert not over, f"night {night}: jobs over budget {over}"
+        assert set(st.getJobIdsForGroup(None)) == ungrouped, "ungrouped jobs"
+
+    tables = {
+        "bronze F0101": layout.bronze("jde/F0101"),
+        "bronze F4211": layout.bronze("jde/F4211"),
+        "silver CleanSalesOrders": layout.silver("CleanSalesOrders"),
+        "silver CleanCustomers": layout.silver("CleanCustomers"),
+        "gold Dim_Date": layout.gold("Dim_Date"),
+        "gold Dim_Customer": layout.gold("Dim_Customer"),
+        "gold Fact_Sales": layout.gold("Fact_Sales"),
+    }
+    assert os.path.islink(tables["gold Dim_Customer"])
+    for name, path in tables.items():
+        inferred = spark.read.parquet(path)
+        assert read_back(spark, path).schema == inferred.schema, name
+        assert parquet_row_count(path) == inferred.count(), name
+    assert dict(read_back(spark, tables["bronze F0101"]).dtypes)["ingest_date"] == "date"
+    assert out["counts"] == {
+        "Dim_Date": parquet_row_count(tables["gold Dim_Date"]),
+        "Dim_Customer": landed["F0101"],
+        "Fact_Sales": spark.read.parquet(tables["gold Fact_Sales"]).count(),
+    }
+
 def test_orchestrator_retry_and_failure_hook():
     calls = {"n": 0}
 
